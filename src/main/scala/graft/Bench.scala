@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Benchmark main (driver contract): runs every declared query against
   * `SPARK_GRAFT_SF_DIR` and prints ONE JSON line with per-query and total
   * wall-clock seconds.
@@ -15,18 +13,7 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    // Default to every core on the host: the driver benches at local[32]
-    // and does not set SPARK_GRAFT_CPUS (round 1 silently ran local[4]).
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors().toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.engine.LocalSession("WARN")
 
     // Debug aid: SPARK_GRAFT_ONLY=q22_minhash_lsh,q13_join_agg benches a
     // subset without touching the driver-facing default (all queries).

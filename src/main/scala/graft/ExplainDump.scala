@@ -2,8 +2,6 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
-
 /** Dump `.explain("formatted")` for the named queries to files — the
   * round-16 plan evidence (`plans/r16/<query>_<suffix>.txt`). The plan is
   * captured POST-EXECUTION so AQE finalizes (same discipline as
@@ -20,16 +18,7 @@ object ExplainDump {
     val outDir = args.lift(2).getOrElse("plans/r16")
     val sfDir = args.lift(3).getOrElse(
       sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1"))
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors().toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.engine.LocalSession("ERROR")
     Files.createDirectories(Paths.get(outDir))
     names.foreach { name =>
       val df = SparkEntry.queries(name)(spark, sfDir)

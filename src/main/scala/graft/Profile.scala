@@ -1,7 +1,6 @@
 package graft
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart, SparkListenerStageCompleted}
-import org.apache.spark.sql.SparkSession
 
 /** Per-query job-level profiler (guide §1: measure first): runs the named
   * queries warm (one untimed pass, then N timed passes) and prints, for
@@ -17,16 +16,7 @@ object Profile {
     val names = args.headOption.getOrElse("q228_dedup_eval").split(",").toSeq
     val passes = args.lift(1).map(_.toInt).getOrElse(3)
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors().toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.engine.LocalSession("WARN")
 
     final case class Job(id: Int, desc: String, start: Long, var end: Long)
     val jobs = new java.util.concurrent.ConcurrentHashMap[Int, Job]()

@@ -140,6 +140,9 @@ object Analytics {
 
   private def selectCore(frame: DataFrame, targets: Seq[(String, Long)],
       ranksArePercentiles: Boolean, threshold: Long): Seq[(String, Long, Long)] = {
+    // the batched finish below keys its results by label
+    require(targets.map(_._1).distinct.size == targets.size,
+      s"selectCore: duplicate target labels in ${targets.map(_._1)}")
     val q = Clustering.truncate(frame)
     val head = q.agg(count(lit(1)), min("v"), max("v")).head
     val (nL, lo0, hi0) = (head.getLong(0), head.getLong(1), head.getLong(2))
@@ -204,9 +207,7 @@ object Analytics {
     // small brackets): every target still needing a bounded take runs as
     // one branch of a single union job instead of one Spark job each (a
     // 16-target call used to pay 16 finish jobs; now 1). Branch labels
-    // are the target stats — unique by construction at every call site
-    // (and a duplicated (stat, rank) pair would collapse to the same
-    // value anyway).
+    // are the target stats, required unique above.
     val need = narrowed.filter { case (_, _, lo, hi, _) => lo != hi }
     val fetched: Map[String, Long] =
       if (need.isEmpty) Map.empty

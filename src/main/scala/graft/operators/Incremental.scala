@@ -4,7 +4,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.{Column, DataFrame}
 
-import graft.engine.{QueryDef, Tables}
+import graft.engine.{CatalogGate, QueryDef, Tables}
 
 /** Incremental aggregation [EXT, north star]: the partial-aggregate
   * merge pattern. At 100 TB no pipeline re-reads history to refresh a
@@ -304,8 +304,7 @@ object Incremental {
       |FROM u GROUP BY 1 ORDER BY 1""".stripMargin) { (s, d) =>
     val dir = graft.engine.Staging.scratch("graft-layout-gate", "q211_travel")
       .getAbsolutePath
-    val part = Tables.part(s, d).select(col("p_partkey"),
-      (col("p_retailprice").cast("decimal(12,2)") * 100).cast(LongType).as("cents"))
+    val part = CatalogGate.partCents(s, d).toDF("p_partkey", "cents")
     graft.sources.Versioned.create(
       part.filter(col("p_partkey") % 3 =!= 0), dir)
     graft.sources.Versioned.upsert(s, dir, "p_partkey",
@@ -364,9 +363,7 @@ object Incremental {
     val prevTfb = s.conf.getOption("graft.versioned.targetFileBytes")
     s.conf.set("graft.versioned.shardEntries", "2")
     try {
-      val part = Tables.part(s, d).select(col("p_partkey"),
-        (col("p_retailprice").cast("decimal(12,2)") * 100).cast(LongType)
-          .as("cents"))
+      val part = CatalogGate.partCents(s, d).toDF("p_partkey", "cents")
       graft.sources.Versioned.create(
         part.filter(col("p_partkey") % 3 =!= 0).repartition(5), dir)
       // pin the rewrite file-size target to ~1/4 of the CURRENT table's
@@ -533,8 +530,7 @@ object Incremental {
       |GROUP BY 1 ORDER BY 1""".stripMargin) { (s, d) =>
     val dir = graft.engine.Staging.scratch("graft-layout-gate", "q222_purge")
       .getAbsolutePath
-    val part = Tables.part(s, d).select(col("p_partkey"),
-      (col("p_retailprice").cast("decimal(12,2)") * 100).cast(LongType).as("cents"))
+    val part = CatalogGate.partCents(s, d).toDF("p_partkey", "cents")
     graft.sources.Versioned.create(
       part.filter(col("p_partkey") % 3 =!= 0), dir)
     graft.sources.Versioned.upsert(s, dir, "p_partkey",
@@ -736,9 +732,7 @@ object Incremental {
       |FROM u GROUP BY 1, 2 ORDER BY 1""".stripMargin) { (s, d) =>
     val dir = graft.engine.Staging.scratch("graft-layout-gate", "q247_rename")
       .getAbsolutePath
-    val part = Tables.part(s, d).select(col("p_partkey"),
-      (col("p_retailprice").cast("decimal(12,2)") * 100).cast(LongType)
-        .as("price_cents"))
+    val part = CatalogGate.partCents(s, d).toDF("p_partkey", "price_cents")
     graft.sources.Versioned.create(
       part.filter(col("p_partkey") % 3 =!= 0), dir)
     graft.sources.Versioned.renameColumn(s, dir, "price_cents", "unit_cents")
@@ -814,8 +808,7 @@ object Incremental {
       |ORDER BY from_v, to_v, change_type""".stripMargin) { (s, d) =>
     val dir = graft.engine.Staging.scratch("graft-layout-gate", "q251_diff")
       .getAbsolutePath
-    val part = Tables.part(s, d).select(col("p_partkey"),
-      (col("p_retailprice").cast("decimal(12,2)") * 100).cast(LongType).as("cents"))
+    val part = CatalogGate.partCents(s, d).toDF("p_partkey", "cents")
     graft.sources.Versioned.create(
       part.filter(col("p_partkey") % 3 =!= 0), dir)
     graft.sources.Versioned.upsert(s, dir, "p_partkey",
@@ -869,8 +862,7 @@ object Incremental {
       |ORDER BY from_v, k""".stripMargin) { (s, d) =>
     val dir = graft.engine.Staging.scratch("graft-layout-gate", "q255_dsar")
       .getAbsolutePath
-    val part = Tables.part(s, d).select(col("p_partkey"),
-      (col("p_retailprice").cast("decimal(12,2)") * 100).cast(LongType).as("cents"))
+    val part = CatalogGate.partCents(s, d).toDF("p_partkey", "cents")
     graft.sources.Versioned.create(
       part.filter(col("p_partkey") % 3 =!= 0), dir)
     graft.sources.Versioned.upsert(s, dir, "p_partkey",
@@ -984,9 +976,7 @@ object Incremental {
       |FROM u GROUP BY 1 ORDER BY 1""".stripMargin) { (s, d) =>
     val dir = graft.engine.Staging.scratch("graft-layout-gate", "q268_evolve")
       .getAbsolutePath
-    val part = Tables.part(s, d).select(col("p_partkey").as("k"),
-      (col("p_retailprice").cast("decimal(12,2)") * 100).cast(LongType)
-        .as("cents"))
+    val part = CatalogGate.partCents(s, d)
     graft.sources.Versioned.create(part.filter(col("k") % 3 =!= 0), dir) // v1
     graft.sources.Versioned.addColumn(s, dir, "tier", "bigint")          // v2
     graft.sources.Versioned.append(part.filter(col("k") % 3 === 0)
@@ -1039,14 +1029,8 @@ object Incremental {
       |  UNION ALL SELECT 'head', COUNT(*), SUM(cents) FROM p)
       |SELECT phase, CAST(n AS BIGINT) AS n, CAST(s AS BIGINT) AS sum_cents
       |FROM u ORDER BY phase""".stripMargin) { (s, d) =>
-    val wh = graft.engine.Staging.scratch("graft-catalog-gate", "q276_sql")
-      .getAbsolutePath
-    s.conf.set("spark.sql.catalog.graft_cat", "graft.sources.v2.GraftCatalog")
-    s.conf.set("spark.sql.catalog.graft_cat.warehouse", wh)
-    Tables.part(s, d).select(col("p_partkey").as("k"),
-      (col("p_retailprice").cast("decimal(12,2)") * 100).cast(LongType)
-        .as("cents"))
-      .createOrReplaceTempView("q276_src")
+    val g = CatalogGate(s, "q276_sql")
+    CatalogGate.partCents(s, d).createOrReplaceTempView("q276_src")
     s.sql("CREATE NAMESPACE IF NOT EXISTS graft_cat.gate")
     s.sql("CREATE TABLE graft_cat.gate.t (k BIGINT, cents BIGINT)")
     s.sql("INSERT INTO graft_cat.gate.t " +
@@ -1054,21 +1038,16 @@ object Incremental {
     Thread.sleep(5) // distinct commit milliseconds for the AS OF read
     s.sql("INSERT INTO graft_cat.gate.t " +
       "SELECT k, cents FROM q276_src WHERE k % 2 = 1")             // v2
-    val t1 = graft.sources.Versioned.commitTimes(s, s"$wh/gate/t").head._2
+    val t1 = graft.sources.Versioned.commitTimes(s, s"${g.wh}/gate/t").head._2
     val ts = java.time.LocalDateTime.ofInstant(
       java.time.Instant.ofEpochMilli(t1), java.time.ZoneOffset.UTC)
       .format(java.time.format.DateTimeFormatter
         .ofPattern("yyyy-MM-dd HH:mm:ss.SSS"))
-    def read(phase: String, from: String) = s.sql(
-      s"SELECT '$phase' AS phase, CAST(COUNT(*) AS BIGINT) AS n, " +
-        s"CAST(SUM(cents) AS BIGINT) AS sum_cents FROM $from")
-    Seq(
-      read("v1", "graft_cat.gate.t VERSION AS OF 1"),
-      read("v2", "graft_cat.gate.t VERSION AS OF 2"),
-      read("asof_v1", s"graft_cat.gate.t TIMESTAMP AS OF '$ts UTC'"),
-      read("head", "graft_cat.gate.t"))
-      .reduce(_ unionByName _)
-      .orderBy("phase")
+    CatalogGate.phases(
+      g.read("v1", "graft_cat.gate.t VERSION AS OF 1"),
+      g.read("v2", "graft_cat.gate.t VERSION AS OF 2"),
+      g.read("asof_v1", s"graft_cat.gate.t TIMESTAMP AS OF '$ts UTC'"),
+      g.read("head", "graft_cat.gate.t"))
   }
 
   // q277 — MERGE-ON-READ DELETES (round-13 item #2, the missing scale
@@ -1104,9 +1083,7 @@ object Incremental {
       |FROM u ORDER BY version""".stripMargin) { (s, d) =>
     val dir = graft.engine.Staging.scratch("graft-layout-gate", "q277_mor")
       .getAbsolutePath
-    val part = Tables.part(s, d).select(col("p_partkey").as("k"),
-      (col("p_retailprice").cast("decimal(12,2)") * 100).cast(LongType)
-        .as("cents"))
+    val part = CatalogGate.partCents(s, d)
     graft.sources.Versioned.create(part.repartition(4), dir)           // v1
     graft.sources.Versioned.deleteKeysMor(s, dir, "k",
       part.filter(col("k") % 7 === 0).select("k"))                     // v2
@@ -1156,14 +1133,8 @@ object Incremental {
       |  UNION ALL SELECT 'v4', COUNT(*), SUM(cents) FROM v3)
       |SELECT phase, CAST(n AS BIGINT) AS n, CAST(s AS BIGINT) AS sum_cents
       |FROM u ORDER BY phase""".stripMargin) { (s, d) =>
-    val wh = graft.engine.Staging.scratch("graft-catalog-gate", "q282_maint")
-      .getAbsolutePath
-    s.conf.set("spark.sql.catalog.graft_cat", "graft.sources.v2.GraftCatalog")
-    s.conf.set("spark.sql.catalog.graft_cat.warehouse", wh)
-    Tables.part(s, d).select(col("p_partkey").as("k"),
-      (col("p_retailprice").cast("decimal(12,2)") * 100).cast(LongType)
-        .as("cents"))
-      .createOrReplaceTempView("q282_src")
+    val g = CatalogGate(s, "q282_maint")
+    CatalogGate.partCents(s, d).createOrReplaceTempView("q282_src")
     s.sql("CREATE TABLE graft_cat.m (k BIGINT, cents BIGINT)")
     s.sql("INSERT INTO graft_cat.m SELECT * FROM q282_src WHERE k % 2 = 0") // v1
     s.sql("INSERT INTO graft_cat.m SELECT * FROM q282_src WHERE k % 2 = 1") // v2
@@ -1173,15 +1144,10 @@ object Incremental {
     require(v4 == 4L, s"optimize must commit version 4, got $v4")
     require(s.sql("CALL graft_cat.system.history('m')").count() == 4L,
       "history must list all four versions")
-    def read(phase: String, from: String) = s.sql(
-      s"SELECT '$phase' AS phase, CAST(COUNT(*) AS BIGINT) AS n, " +
-        s"CAST(SUM(cents) AS BIGINT) AS sum_cents FROM $from")
-    Seq(read("v1", "graft_cat.m VERSION AS OF 1"),
-      read("v2", "graft_cat.m VERSION AS OF 2"),
-      read("v3", "graft_cat.m VERSION AS OF 3"),
-      read("v4", "graft_cat.m"))
-      .reduce(_ unionByName _)
-      .orderBy("phase")
+    CatalogGate.phases(g.read("v1", "graft_cat.m VERSION AS OF 1"),
+      g.read("v2", "graft_cat.m VERSION AS OF 2"),
+      g.read("v3", "graft_cat.m VERSION AS OF 3"),
+      g.read("v4", "graft_cat.m"))
   }
 
   // q278 — TYPE WIDENING through era manifests (round-13 item #3,
@@ -1217,9 +1183,7 @@ object Incremental {
       |FROM u ORDER BY phase""".stripMargin) { (s, d) =>
     val dir = graft.engine.Staging.scratch("graft-layout-gate", "q278_widen")
       .getAbsolutePath
-    val part = Tables.part(s, d).select(col("p_partkey").as("k"),
-      (col("p_retailprice").cast("decimal(12,2)") * 100).cast(LongType)
-        .as("cents"),
+    val part = CatalogGate.partCents(s, d,
       col("p_retailprice").cast("decimal(10,2)").as("price"))
     // v1: the NARROW era — cents fits int, price fits decimal(10,2)
     graft.sources.Versioned.create(
@@ -1279,11 +1243,9 @@ object Incremental {
       |FROM u ORDER BY phase""".stripMargin) { (s, d) =>
     val dir = graft.engine.Staging.scratch("graft-layout-gate", "q281_partevo")
       .getAbsolutePath
-    val part = Tables.part(s, d).select(col("p_partkey").as("k"),
+    val part = CatalogGate.partCents(s, d,
       concat(lit("g"), (col("p_partkey") % 7).cast("string")).as("grp"),
-      concat(lit("c"), (col("p_partkey") % 3).cast("string")).as("cat"),
-      (col("p_retailprice").cast("decimal(12,2)") * 100).cast(LongType)
-        .as("cents"))
+      concat(lit("c"), (col("p_partkey") % 3).cast("string")).as("cat"))
     graft.sources.Versioned.createPartitioned(
       part.filter(col("k") % 2 === 0), dir, "grp")                 // v1: by grp
     graft.sources.Versioned.appendPartitioned(
@@ -1297,13 +1259,8 @@ object Incremental {
     require(k1 * 7 == t1, s"v1 grp prune must keep 1 of 7 files ($k1/$t1)")
     require(k2 < t2 && k3 < t3 && k2 + k3 < t2 + t3,
       s"both spec eras must prune ($k2/$t2 grp, $k3/$t3 cat)")
-    def agg(df: org.apache.spark.sql.DataFrame, phase: String) =
-      df.agg(count(lit(1)).as("n"),
-        sum("cents").cast(LongType).as("sum_cents"))
-        .select(lit(phase).as("phase"), col("n"), col("sum_cents"))
-    agg(v1g, "v1_grp").unionByName(agg(v2g, "v2_grp"))
-      .unionByName(agg(v2c, "v2_cat"))
-      .orderBy("phase")
+    CatalogGate.phases(CatalogGate.phaseOf("v1_grp", v1g),
+      CatalogGate.phaseOf("v2_grp", v2g), CatalogGate.phaseOf("v2_cat", v2c))
   }
 
   // q283 — SQL UPDATE + group-based DELETE (the row-level write
@@ -1338,14 +1295,8 @@ object Incremental {
       |  UNION ALL SELECT 'v3', COUNT(*), SUM(cents) FROM v3)
       |SELECT phase, CAST(n AS BIGINT) AS n, CAST(s AS BIGINT) AS sum_cents
       |FROM u ORDER BY phase""".stripMargin) { (s, d) =>
-    val wh = graft.engine.Staging.scratch("graft-catalog-gate", "q283_upd")
-      .getAbsolutePath
-    s.conf.set("spark.sql.catalog.graft_cat", "graft.sources.v2.GraftCatalog")
-    s.conf.set("spark.sql.catalog.graft_cat.warehouse", wh)
-    Tables.part(s, d).select(col("p_partkey").as("k"),
-      (col("p_retailprice").cast("decimal(12,2)") * 100).cast(LongType)
-        .as("cents"))
-      .createOrReplaceTempView("q283_src")
+    val g = CatalogGate(s, "q283_upd")
+    CatalogGate.partCents(s, d).createOrReplaceTempView("q283_src")
     // the UPDATE's key range = the lowest ~1/8 of the keyspace, so at
     // ANY scale it co-locates into ~1 of the 8 range-clustered files
     val cut = Tables.part(s, d).agg(max(col("p_partkey"))).head.getLong(0) / 8
@@ -1355,7 +1306,7 @@ object Incremental {
     s.sql("INSERT INTO graft_cat.u " +
       "SELECT /*+ REPARTITION_BY_RANGE(8, k) */ k, cents FROM q283_src") // v1
     s.sql(s"UPDATE graft_cat.u SET cents = cents + 500 WHERE k <= $cut") // v2
-    val dir = s"$wh/u"
+    val dir = s"${g.wh}/u"
     val f1 = graft.sources.Versioned.manifestOf(s, dir, 1).entries.map(_._1).toSet
     val f2 = graft.sources.Versioned.manifestOf(s, dir, 2).entries.map(_._1).toSet
     require((f1 diff f2).size <= 2 && (f1 intersect f2).size >= 6,
@@ -1365,14 +1316,9 @@ object Incremental {
     // Filter exists for it) → group-based COW delete, same machinery
     s.sql("DELETE FROM graft_cat.u " +
       "WHERE endswith(CAST(k AS STRING), '7')")                          // v3
-    def read(phase: String, from: String) = s.sql(
-      s"SELECT '$phase' AS phase, CAST(COUNT(*) AS BIGINT) AS n, " +
-        s"CAST(SUM(cents) AS BIGINT) AS sum_cents FROM $from")
-    Seq(read("v1", "graft_cat.u VERSION AS OF 1"),
-      read("v2", "graft_cat.u VERSION AS OF 2"),
-      read("v3", "graft_cat.u"))
-      .reduce(_ unionByName _)
-      .orderBy("phase")
+    CatalogGate.phases(g.read("v1", "graft_cat.u VERSION AS OF 1"),
+      g.read("v2", "graft_cat.u VERSION AS OF 2"),
+      g.read("v3", "graft_cat.u"))
   }
 
   // q284 — SQL MERGE INTO (the upsert every warehouse user writes):
@@ -1405,14 +1351,8 @@ object Incremental {
       |  UNION ALL SELECT 'head', COUNT(*), SUM(cents) FROM head)
       |SELECT phase, CAST(n AS BIGINT) AS n, CAST(s AS BIGINT) AS sum_cents
       |FROM u ORDER BY phase""".stripMargin) { (s, d) =>
-    val wh = graft.engine.Staging.scratch("graft-catalog-gate", "q284_merge")
-      .getAbsolutePath
-    s.conf.set("spark.sql.catalog.graft_cat", "graft.sources.v2.GraftCatalog")
-    s.conf.set("spark.sql.catalog.graft_cat.warehouse", wh)
-    Tables.part(s, d).select(col("p_partkey").as("k"),
-      (col("p_retailprice").cast("decimal(12,2)") * 100).cast(LongType)
-        .as("cents"))
-      .createOrReplaceTempView("q284_src")
+    val g = CatalogGate(s, "q284_merge")
+    CatalogGate.partCents(s, d).createOrReplaceTempView("q284_src")
     // source keys = the lowest ~1/4 of the keyspace → ~2 of the 8
     // range-clustered files contain matches at ANY scale
     val cut = Tables.part(s, d).agg(max(col("p_partkey"))).head.getLong(0) / 4
@@ -1426,19 +1366,14 @@ object Incremental {
       WHEN MATCHED AND s.del THEN DELETE
       WHEN MATCHED THEN UPDATE SET cents = s.cents
       WHEN NOT MATCHED THEN INSERT (k, cents) VALUES (s.k, s.cents)""")  // v2
-    val dir = s"$wh/mg"
+    val dir = s"${g.wh}/mg"
     val f1 = graft.sources.Versioned.manifestOf(s, dir, 1).entries.map(_._1).toSet
     val f2 = graft.sources.Versioned.manifestOf(s, dir, 2).entries.map(_._1).toSet
     require((f1 intersect f2).size >= 4,
       s"the runtime group filter must carry non-matching files by " +
         s"reference: shared ${(f1 intersect f2).size} of ${f1.size}")
-    def read(phase: String, from: String) = s.sql(
-      s"SELECT '$phase' AS phase, CAST(COUNT(*) AS BIGINT) AS n, " +
-        s"CAST(SUM(cents) AS BIGINT) AS sum_cents FROM $from")
-    Seq(read("v1", "graft_cat.mg VERSION AS OF 1"),
-      read("head", "graft_cat.mg"))
-      .reduce(_ unionByName _)
-      .orderBy("phase")
+    CatalogGate.phases(g.read("v1", "graft_cat.mg VERSION AS OF 1"),
+      g.read("head", "graft_cat.mg"))
   }
 
   // q285 — MANIFEST COLUMN STATS (Iceberg's manifest-stats idea,
@@ -1476,14 +1411,8 @@ object Incremental {
       |  UNION ALL SELECT 'all', COUNT(*), SUM(cents) FROM b)
       |SELECT phase, CAST(n AS BIGINT) AS n, CAST(s AS BIGINT) AS sum_cents
       |FROM u ORDER BY phase""".stripMargin) { (s, d) =>
-    val wh = graft.engine.Staging.scratch("graft-catalog-gate", "q285_stats")
-      .getAbsolutePath
-    s.conf.set("spark.sql.catalog.graft_cat", "graft.sources.v2.GraftCatalog")
-    s.conf.set("spark.sql.catalog.graft_cat.warehouse", wh)
-    Tables.part(s, d).select(col("p_partkey").as("k"),
-      (col("p_retailprice").cast("decimal(12,2)") * 100).cast(LongType)
-        .as("cents"))
-      .createOrReplaceTempView("q285_src")
+    val g = CatalogGate(s, "q285_stats")
+    CatalogGate.partCents(s, d).createOrReplaceTempView("q285_src")
     val mx = Tables.part(s, d).agg(max(col("p_partkey"))).head.getLong(0)
     val cut = mx / 8
     s.sql("CREATE TABLE graft_cat.st (k BIGINT, cents BIGINT)")
@@ -1494,7 +1423,7 @@ object Incremental {
     s.sql("ALTER TABLE graft_cat.st RENAME COLUMN k TO id")              // v2
     s.sql("INSERT INTO graft_cat.st SELECT /*+ REPARTITION_BY_RANGE(8, id) */ " +
       s"k + $mx AS id, cents + 11 FROM q285_src")                        // v3
-    val dir = s"$wh/st"
+    val dir = s"${g.wh}/st"
     // library surface: both eras prune by pure manifest arithmetic
     val (_, keptLow, total) =
       graft.sources.Versioned.readStatsSkipping(s, dir, 3, "id", 1, cut)
@@ -1506,17 +1435,11 @@ object Incremental {
       s"manifest stats must exclude era-0 files from the high range, kept $keptHigh")
     // SQL surface: the catalog scan prunes through the same machinery —
     // a range query plans over the pruned file set (zero footer IO)
-    val lowFiles = s.sql("SELECT COUNT(DISTINCT _file) FROM graft_cat.st " +
-      s"WHERE id BETWEEN 1 AND $cut").head.getLong(0)
-    require(lowFiles <= 2, s"SQL range scan read $lowFiles files, expected <=2")
-    def read(phase: String, cond: String) = s.sql(
-      s"SELECT '$phase' AS phase, CAST(COUNT(*) AS BIGINT) AS n, " +
-        s"CAST(SUM(cents) AS BIGINT) AS sum_cents FROM graft_cat.st WHERE $cond")
-    Seq(read("low", s"id BETWEEN 1 AND $cut"),
-      read("high", s"id > $mx"),
-      read("all", "id IS NOT NULL"))
-      .reduce(_ unionByName _)
-      .orderBy("phase")
+    g.requireFiles("graft_cat.st", s"id BETWEEN 1 AND $cut",
+      "SQL range scan must read <=2 files")(_ <= 2)
+    CatalogGate.phases(g.read("low", "graft_cat.st", s"id BETWEEN 1 AND $cut"),
+      g.read("high", "graft_cat.st", s"id > $mx"),
+      g.read("all", "graft_cat.st", "id IS NOT NULL"))
   }
 
   // q287 — MERGE-ON-READ SQL UPDATE/DELETE (SupportsDelta, the
@@ -1553,14 +1476,8 @@ object Incremental {
       |  UNION ALL SELECT 'v4', COUNT(*), SUM(cents) FROM v3)
       |SELECT phase, CAST(n AS BIGINT) AS n, CAST(s AS BIGINT) AS sum_cents
       |FROM u ORDER BY phase""".stripMargin) { (s, d) =>
-    val wh = graft.engine.Staging.scratch("graft-catalog-gate", "q287_mor")
-      .getAbsolutePath
-    s.conf.set("spark.sql.catalog.graft_cat", "graft.sources.v2.GraftCatalog")
-    s.conf.set("spark.sql.catalog.graft_cat.warehouse", wh)
-    Tables.part(s, d).select(col("p_partkey").as("k"),
-      (col("p_retailprice").cast("decimal(12,2)") * 100).cast(LongType)
-        .as("cents"))
-      .createOrReplaceTempView("q287_src")
+    val g = CatalogGate(s, "q287_mor")
+    CatalogGate.partCents(s, d).createOrReplaceTempView("q287_src")
     val cut = Tables.part(s, d).agg(max(col("p_partkey"))).head.getLong(0) / 8
     s.sql("CREATE TABLE graft_cat.mo (k BIGINT, cents BIGINT) " +
       "TBLPROPERTIES('graft.merge.mode'='mor','graft.key'='k')")
@@ -1568,7 +1485,7 @@ object Incremental {
       "SELECT /*+ REPARTITION_BY_RANGE(8, k) */ k, cents FROM q287_src") // v1
     s.sql(s"UPDATE graft_cat.mo SET cents = cents + 500 WHERE k <= $cut") // v2
     s.sql("DELETE FROM graft_cat.mo WHERE k % 10 = 7")                    // v3
-    val dir = s"$wh/mo"
+    val dir = s"${g.wh}/mo"
     val f1 = graft.sources.Versioned.manifestOf(s, dir, 1).entries.map(_._1).toSet
     val m2 = graft.sources.Versioned.manifestOf(s, dir, 2)
     val m3 = graft.sources.Versioned.manifestOf(s, dir, 3)
@@ -1581,15 +1498,10 @@ object Incremental {
     require(v4 == 4L &&
       graft.sources.Versioned.manifestOf(s, dir, 4).dvs.isEmpty,
       "optimize must physically retire the sidecars")
-    def read(phase: String, from: String) = s.sql(
-      s"SELECT '$phase' AS phase, CAST(COUNT(*) AS BIGINT) AS n, " +
-        s"CAST(SUM(cents) AS BIGINT) AS sum_cents FROM $from")
-    Seq(read("v1", "graft_cat.mo VERSION AS OF 1"),
-      read("v2", "graft_cat.mo VERSION AS OF 2"),
-      read("v3", "graft_cat.mo VERSION AS OF 3"),
-      read("v4", "graft_cat.mo"))
-      .reduce(_ unionByName _)
-      .orderBy("phase")
+    CatalogGate.phases(g.read("v1", "graft_cat.mo VERSION AS OF 1"),
+      g.read("v2", "graft_cat.mo VERSION AS OF 2"),
+      g.read("v3", "graft_cat.mo VERSION AS OF 3"),
+      g.read("v4", "graft_cat.mo"))
   }
 
   // q288 — NAMED VERSION TAGS (Iceberg tags: a stable ref for audits /
@@ -1614,34 +1526,22 @@ object Incremental {
       |  UNION ALL SELECT 'head', COUNT(*), SUM(cents) FROM p)
       |SELECT phase, CAST(n AS BIGINT) AS n, CAST(s AS BIGINT) AS sum_cents
       |FROM u ORDER BY phase""".stripMargin) { (s, d) =>
-    val wh = graft.engine.Staging.scratch("graft-catalog-gate", "q288_tags")
-      .getAbsolutePath
-    s.conf.set("spark.sql.catalog.graft_cat", "graft.sources.v2.GraftCatalog")
-    s.conf.set("spark.sql.catalog.graft_cat.warehouse", wh)
-    Tables.part(s, d).select(col("p_partkey").as("k"),
-      (col("p_retailprice").cast("decimal(12,2)") * 100).cast(LongType)
-        .as("cents"))
-      .createOrReplaceTempView("q288_src")
+    val g = CatalogGate(s, "q288_tags")
+    CatalogGate.partCents(s, d).createOrReplaceTempView("q288_src")
     s.sql("CREATE TABLE graft_cat.tg (k BIGINT, cents BIGINT)")
     s.sql("INSERT INTO graft_cat.tg SELECT * FROM q288_src WHERE k % 2 = 0") // v1
     s.sql("INSERT INTO graft_cat.tg SELECT * FROM q288_src WHERE k % 2 = 1") // v2
     s.sql("CALL graft_cat.system.tag('tg', 'baseline', 1)")
     s.sql("CALL graft_cat.system.optimize('tg', 2)")                         // v3
     s.sql("CALL graft_cat.system.vacuum('tg', 1)")
-    val dir = s"$wh/tg"
-    val left = graft.sources.Versioned.versions(s, dir)
+    val left = graft.sources.Versioned.versions(s, s"${g.wh}/tg")
     require(left == Seq(1L, 3L),
       s"vacuum must keep the head AND the tagged v1, drop v2 — got $left")
     val gone = scala.util.Try(
       s.sql("SELECT * FROM graft_cat.tg VERSION AS OF 2").collect())
     require(gone.isFailure, "the untagged middle version must be unreadable")
-    def read(phase: String, from: String) = s.sql(
-      s"SELECT '$phase' AS phase, CAST(COUNT(*) AS BIGINT) AS n, " +
-        s"CAST(SUM(cents) AS BIGINT) AS sum_cents FROM $from")
-    Seq(read("baseline", "graft_cat.tg VERSION AS OF 'baseline'"),
-      read("head", "graft_cat.tg"))
-      .reduce(_ unionByName _)
-      .orderBy("phase")
+    CatalogGate.phases(g.read("baseline", "graft_cat.tg VERSION AS OF 'baseline'"),
+      g.read("head", "graft_cat.tg"))
   }
 
   // q290 — COUNT(*) FROM THE MANIFEST (aggregate pushdown on the
@@ -1669,20 +1569,12 @@ object Incremental {
       |    WHERE k % 9 <> 0 AND k % 2 = 0)
       |SELECT phase, CAST(n AS BIGINT) AS n FROM u ORDER BY phase""".stripMargin) {
     (s, d) =>
-    val wh = graft.engine.Staging.scratch("graft-catalog-gate", "q290_count")
-      .getAbsolutePath
-    s.conf.set("spark.sql.catalog.graft_cat", "graft.sources.v2.GraftCatalog")
-    s.conf.set("spark.sql.catalog.graft_cat.warehouse", wh)
-    Tables.part(s, d).select(col("p_partkey").as("k"),
-      (col("p_retailprice").cast("decimal(12,2)") * 100).cast(LongType)
-        .as("cents"))
-      .createOrReplaceTempView("q290_src")
+    val g = CatalogGate(s, "q290_count")
+    CatalogGate.partCents(s, d).createOrReplaceTempView("q290_src")
     s.sql("CREATE TABLE graft_cat.ct (k BIGINT, cents BIGINT)")
     s.sql("INSERT INTO graft_cat.ct SELECT k, cents FROM q290_src")      // v1
-    val dir = s"$wh/ct"
-    graft.sources.Versioned.deleteKeysMor(s, dir, "k",
-      Tables.part(s, d).select((col("p_partkey")).as("k"))
-        .filter(col("k") % 9 === 0))                                     // v2
+    graft.sources.Versioned.deleteKeysMor(s, s"${g.wh}/ct", "k",
+      s.sql("SELECT k FROM q290_src WHERE k % 9 = 0"))                   // v2
     val bare = s.sql("SELECT COUNT(*) AS n FROM graft_cat.ct")
     val filtered = s.sql(
       "SELECT COUNT(*) AS n FROM graft_cat.ct WHERE k % 2 = 0")
@@ -1737,14 +1629,8 @@ object Incremental {
       |  UNION ALL SELECT 'head', COUNT(*), SUM(cents) FROM head)
       |SELECT phase, CAST(n AS BIGINT) AS n, CAST(s AS BIGINT) AS sum_cents
       |FROM u ORDER BY phase""".stripMargin) { (s, d) =>
-    val wh = graft.engine.Staging.scratch("graft-catalog-gate", "q291_mor_merge")
-      .getAbsolutePath
-    s.conf.set("spark.sql.catalog.graft_cat", "graft.sources.v2.GraftCatalog")
-    s.conf.set("spark.sql.catalog.graft_cat.warehouse", wh)
-    Tables.part(s, d).select(col("p_partkey").as("k"),
-      (col("p_retailprice").cast("decimal(12,2)") * 100).cast(LongType)
-        .as("cents"))
-      .createOrReplaceTempView("q291_src")
+    val g = CatalogGate(s, "q291_mor_merge")
+    CatalogGate.partCents(s, d).createOrReplaceTempView("q291_src")
     val cut = Tables.part(s, d).agg(max(col("p_partkey"))).head.getLong(0) / 4
     s.sql("CREATE TABLE graft_cat.mm (k BIGINT, cents BIGINT) " +
       "TBLPROPERTIES('graft.merge.mode'='mor','graft.key'='k')")
@@ -1757,7 +1643,7 @@ object Incremental {
       WHEN MATCHED AND s.del THEN DELETE
       WHEN MATCHED THEN UPDATE SET cents = s.cents
       WHEN NOT MATCHED THEN INSERT (k, cents) VALUES (s.k, s.cents)""")  // v2
-    val dir = s"$wh/mm"
+    val dir = s"${g.wh}/mm"
     val f1 = graft.sources.Versioned.manifestOf(s, dir, 1).entries.map(_._1).toSet
     val m2 = graft.sources.Versioned.manifestOf(s, dir, 2)
     val f2 = m2.entries.map(_._1).toSet
@@ -1768,13 +1654,8 @@ object Incremental {
       "mor MERGE must land matched changes as delete-sidecar rows")
     require(f2.size > f1.size,
       "mor MERGE must append insert files for new + updated rows")
-    def read(phase: String, from: String) = s.sql(
-      s"SELECT '$phase' AS phase, CAST(COUNT(*) AS BIGINT) AS n, " +
-        s"CAST(SUM(cents) AS BIGINT) AS sum_cents FROM $from")
-    Seq(read("v1", "graft_cat.mm VERSION AS OF 1"),
-      read("head", "graft_cat.mm"))
-      .reduce(_ unionByName _)
-      .orderBy("phase")
+    CatalogGate.phases(g.read("v1", "graft_cat.mm VERSION AS OF 1"),
+      g.read("head", "graft_cat.mm"))
   }
 
   // q292 — STRING AND DECIMAL MANIFEST STATS (closing q285's kind
@@ -1810,16 +1691,11 @@ object Incremental {
       |  UNION ALL SELECT 'all', COUNT(*), SUM(cents) FROM p)
       |SELECT phase, CAST(n AS BIGINT) AS n, CAST(s AS BIGINT) AS sum_cents
       |FROM u ORDER BY phase""".stripMargin) { (s, d) =>
-    val wh = graft.engine.Staging.scratch("graft-catalog-gate", "q292_strstats")
-      .getAbsolutePath
-    s.conf.set("spark.sql.catalog.graft_cat", "graft.sources.v2.GraftCatalog")
-    s.conf.set("spark.sql.catalog.graft_cat.warehouse", wh)
+    val g = CatalogGate(s, "q292_strstats")
     // nm doubles the name past the 16-code-point truncation width, so
     // every recorded string bound in this gate IS the truncated form
-    Tables.part(s, d).select(
+    CatalogGate.partCents(s, d,
       concat(col("p_name"), lit(" "), col("p_name")).as("nm"),
-      (col("p_retailprice").cast("decimal(12,2)") * 100).cast(LongType)
-        .as("cents"),
       col("p_retailprice").cast("decimal(12,2)").as("price"))
       .createOrReplaceTempView("q292_src")
     // one table clustered by the string, one by the decimal — each
@@ -1844,28 +1720,17 @@ object Incremental {
     // the doubled names are 20+ chars — every recorded bound below is
     // the truncated form; the prunes only work if those bounds are
     // sound AND tight
-    val nmFiles = s.sql("SELECT COUNT(DISTINCT _file) FROM graft_cat.sn " +
-      "WHERE nm >= 'm' AND nm < 'o'").head.getLong(0)
-    require(nmFiles <= 4,
-      s"string-range scan planned $nmFiles of 16 files, expected <=4")
-    val prFiles = s.sql("SELECT COUNT(DISTINCT _file) FROM graft_cat.sp " +
-      s"WHERE price <= $cutLit").head.getLong(0)
-    require(prFiles <= 4,
-      s"decimal-range scan planned $prFiles of 16 files, expected <=4")
+    g.requireFiles("graft_cat.sn", "nm >= 'm' AND nm < 'o'",
+      "string-range scan must plan <=4 of 16 files")(_ <= 4)
+    g.requireFiles("graft_cat.sp", s"price <= $cutLit",
+      "decimal-range scan must plan <=4 of 16 files")(_ <= 4)
     // and the unclustered column fails OPEN in the same table (wide
     // envelopes keep everything — never wrong, just unpruned)
-    val openFiles = s.sql("SELECT COUNT(DISTINCT _file) FROM graft_cat.sn " +
-      s"WHERE price <= $cutLit").head.getLong(0)
-    require(openFiles >= 8,
-      s"wide envelopes must fail open, kept only $openFiles")
-    def read(phase: String, table: String, cond: String) = s.sql(
-      s"SELECT '$phase' AS phase, CAST(COUNT(*) AS BIGINT) AS n, " +
-        s"CAST(SUM(cents) AS BIGINT) AS sum_cents FROM $table WHERE $cond")
-    Seq(read("nm_range", "graft_cat.sn", "nm >= 'm' AND nm < 'o'"),
-      read("price_low", "graft_cat.sp", s"price <= $cutLit"),
-      read("all", "graft_cat.sn", "nm IS NOT NULL"))
-      .reduce(_ unionByName _)
-      .orderBy("phase")
+    g.requireFiles("graft_cat.sn", s"price <= $cutLit",
+      "wide envelopes must fail open to >=8 files")(_ >= 8)
+    CatalogGate.phases(g.read("nm_range", "graft_cat.sn", "nm >= 'm' AND nm < 'o'"),
+      g.read("price_low", "graft_cat.sp", s"price <= $cutLit"),
+      g.read("all", "graft_cat.sn", "nm IS NOT NULL"))
   }
 
   // q293 — PARTITION PRUNING ON THE SQL CATALOG SCAN (composing q281's
@@ -1899,16 +1764,11 @@ object Incremental {
       |  UNION ALL SELECT 'all', COUNT(*), SUM(cents) FROM p)
       |SELECT phase, CAST(n AS BIGINT) AS n, CAST(s AS BIGINT) AS sum_cents
       |FROM u ORDER BY phase""".stripMargin) { (s, d) =>
-    val wh = graft.engine.Staging.scratch("graft-catalog-gate", "q293_pprune")
-      .getAbsolutePath
-    s.conf.set("spark.sql.catalog.graft_cat", "graft.sources.v2.GraftCatalog")
-    s.conf.set("spark.sql.catalog.graft_cat.warehouse", wh)
-    val df = Tables.part(s, d).select(col("p_partkey").as("k"),
-      (col("p_retailprice").cast("decimal(12,2)") * 100).cast(LongType)
-        .as("cents"),
+    val g = CatalogGate(s, "q293_pprune")
+    val df = CatalogGate.partCents(s, d,
       concat(lit("c"), col("p_partkey") % 5).as("cat"),
       concat(lit("b"), col("p_partkey") % 3).as("band"))
-    val dir = s"$wh/pe"
+    val dir = s"${g.wh}/pe"
     // era 0: partitioned by cat (5 leaf files); era 1 of the SPEC (not
     // the schema): evolved to partition by band (3 leaf files) — the
     // q281 scenario, now consumed through SQL text
@@ -1916,27 +1776,18 @@ object Incremental {
       df.filter(col("k") % 2 === 0), dir, "cat")                         // v1
     graft.sources.Versioned.appendPartitioned(
       df.filter(col("k") % 2 === 1), dir, "band")                        // v2
-    def files(cond: String): Long = s.sql(
-      s"SELECT COUNT(DISTINCT _file) FROM graft_cat.pe WHERE $cond")
-      .head.getLong(0)
     // 5 cat-era files + 3 band-era files on disk; each predicate must
     // prune ITS era exactly and carry the other era whole (fail open)
-    require(files("cat = 'c2'") == 4L,
-      s"cat predicate must plan 1 cat-file + 3 band-files, got ${files("cat = 'c2'")}")
-    require(files("band = 'b1'") == 6L,
-      s"band predicate must plan 5 cat-files + 1 band-file, got ${files("band = 'b1'")}")
-    require(files("cat = 'c2' AND band = 'b1'") == 2L,
-      "the conjunction must prune BOTH eras: " +
-        files("cat = 'c2' AND band = 'b1'"))
-    def read(phase: String, cond: String) = s.sql(
-      s"SELECT '$phase' AS phase, CAST(COUNT(*) AS BIGINT) AS n, " +
-        s"CAST(SUM(cents) AS BIGINT) AS sum_cents FROM graft_cat.pe WHERE $cond")
-    Seq(read("cat2", "cat = 'c2'"),
-      read("band1", "band = 'b1'"),
-      read("both", "cat = 'c2' AND band = 'b1'"),
-      read("all", "k IS NOT NULL"))
-      .reduce(_ unionByName _)
-      .orderBy("phase")
+    g.requireFiles("graft_cat.pe", "cat = 'c2'", 4L,
+      "cat predicate must plan 1 cat-file + 3 band-files")
+    g.requireFiles("graft_cat.pe", "band = 'b1'", 6L,
+      "band predicate must plan 5 cat-files + 1 band-file")
+    g.requireFiles("graft_cat.pe", "cat = 'c2' AND band = 'b1'", 2L,
+      "the conjunction must prune BOTH eras")
+    CatalogGate.phases(g.read("cat2", "graft_cat.pe", "cat = 'c2'"),
+      g.read("band1", "graft_cat.pe", "band = 'b1'"),
+      g.read("both", "graft_cat.pe", "cat = 'c2' AND band = 'b1'"),
+      g.read("all", "graft_cat.pe", "k IS NOT NULL"))
   }
 
   // q294 — SQL METADATA TABLES (the Iceberg suffixed-identifier
@@ -1971,20 +1822,14 @@ object Incremental {
       |  UNION ALL SELECT 'tag_gold', 2, 0, '')
       |SELECT phase, CAST(a AS BIGINT) AS a, CAST(b AS BIGINT) AS b, tag
       |FROM u ORDER BY phase""".stripMargin) { (s, d) =>
-    val wh = graft.engine.Staging.scratch("graft-catalog-gate", "q294_meta")
-      .getAbsolutePath
-    s.conf.set("spark.sql.catalog.graft_cat", "graft.sources.v2.GraftCatalog")
-    s.conf.set("spark.sql.catalog.graft_cat.warehouse", wh)
-    Tables.part(s, d).select(col("p_partkey").as("k"),
-      (col("p_retailprice").cast("decimal(12,2)") * 100).cast(LongType)
-        .as("cents"))
-      .createOrReplaceTempView("q294_src")
+    val g = CatalogGate(s, "q294_meta")
+    CatalogGate.partCents(s, d).createOrReplaceTempView("q294_src")
     s.sql("CREATE TABLE graft_cat.md (k BIGINT, cents BIGINT)")
     s.sql("INSERT INTO graft_cat.md SELECT /*+ REPARTITION(4) */ k, cents " +
       "FROM q294_src WHERE k % 2 = 0")                                   // v1
     s.sql("INSERT INTO graft_cat.md SELECT /*+ REPARTITION(2) */ k, cents " +
       "FROM q294_src WHERE k % 2 = 1")                                   // v2
-    graft.sources.Versioned.deleteKeysMor(s, s"$wh/md", "k",
+    graft.sources.Versioned.deleteKeysMor(s, s"${g.wh}/md", "k",
       s.sql("SELECT k FROM q294_src WHERE k % 2 = 0 AND k % 7 = 0"))     // v3
     s.sql("CALL graft_cat.system.tag('md', 'gold', 2)")
     // commit/creation timestamps are real (REQUIREd) but excluded from
@@ -2040,11 +1885,8 @@ object Incremental {
       |    (SELECT MIN(k) FROM p WHERE k % 7 <> 0), 0)
       |SELECT phase, CAST(a AS BIGINT) AS a, CAST(b AS BIGINT) AS b
       |FROM u ORDER BY phase""".stripMargin) { (s, d) =>
-    val wh = graft.engine.Staging.scratch("graft-catalog-gate", "q296_minmax")
-      .getAbsolutePath
-    s.conf.set("spark.sql.catalog.graft_cat", "graft.sources.v2.GraftCatalog")
-    s.conf.set("spark.sql.catalog.graft_cat.warehouse", wh)
-    Tables.part(s, d).select(col("p_partkey").as("k"),
+    val g = CatalogGate(s, "q296_minmax")
+    CatalogGate.partCents(s, d,
       col("p_retailprice").cast("decimal(12,2)").as("price"),
       col("p_name").as("nm"))
       .createOrReplaceTempView("q296_src")
@@ -2079,7 +1921,7 @@ object Incremental {
     // tombstoned extreme) — but never the answer
     s.sql("CREATE TABLE graft_cat.mx2 (k BIGINT)")
     s.sql("INSERT INTO graft_cat.mx2 SELECT k FROM q296_src")            // v1
-    graft.sources.Versioned.deleteKeysMor(s, s"$wh/mx2", "k",
+    graft.sources.Versioned.deleteKeysMor(s, s"${g.wh}/mx2", "k",
       s.sql("SELECT k FROM q296_src WHERE k % 7 = 0"))                   // v2
     val morPlan = plan("SELECT MIN(k) FROM graft_cat.mx2")
     require(morPlan.contains("HashAggregate") &&
@@ -2127,16 +1969,11 @@ object Incremental {
       |       CAST(SUM(p.cents) AS BIGINT) AS sum_cents
       |FROM p JOIN nation n ON p.k % 25 = n.n_nationkey
       |GROUP BY n.n_name ORDER BY nation""".stripMargin) { (s, d) =>
-    val wh = graft.engine.Staging.scratch("graft-catalog-gate", "q298_stats")
-      .getAbsolutePath
-    s.conf.set("spark.sql.catalog.graft_cat", "graft.sources.v2.GraftCatalog")
-    s.conf.set("spark.sql.catalog.graft_cat.warehouse", wh)
+    CatalogGate(s, "q298_stats")
     Tables.nation(s, d).createOrReplaceTempView("q298_nation")
     s.sql("CREATE TABLE graft_cat.nd (n_nationkey BIGINT, n_name STRING)")
     s.sql("INSERT INTO graft_cat.nd SELECT n_nationkey, n_name FROM q298_nation")
-    val fact = Tables.part(s, d).select(col("p_partkey").as("k"),
-      (col("p_retailprice").cast("decimal(12,2)") * 100).cast(LongType)
-        .as("cents"))
+    val fact = CatalogGate.partCents(s, d)
     val threshold = s.conf.get("spark.sql.autoBroadcastJoinThreshold")
     try {
       // 2 kB: the dim's manifest estimate (25 rows × 28 B) is under
@@ -2190,14 +2027,8 @@ object Incremental {
       |  UNION ALL SELECT 'ovw_c1', COUNT(*), SUM(cents) FROM p WHERE cat = 'c1')
       |SELECT phase, CAST(n AS BIGINT) AS n, CAST(s AS BIGINT) AS sum_cents
       |FROM u ORDER BY phase""".stripMargin) { (s, d) =>
-    val wh = graft.engine.Staging.scratch("graft-catalog-gate", "q299_pby")
-      .getAbsolutePath
-    s.conf.set("spark.sql.catalog.graft_cat", "graft.sources.v2.GraftCatalog")
-    s.conf.set("spark.sql.catalog.graft_cat.warehouse", wh)
-    Tables.part(s, d).select(col("p_partkey").as("k"),
-      (col("p_retailprice").cast("decimal(12,2)") * 100).cast(LongType)
-        .as("cents"),
-      concat(lit("c"), col("p_partkey") % 5).as("cat"))
+    val g = CatalogGate(s, "q299_pby")
+    CatalogGate.partCents(s, d, concat(lit("c"), col("p_partkey") % 5).as("cat"))
       .createOrReplaceTempView("q299_src")
     s.sql("CREATE TABLE graft_cat.pt (k BIGINT, cents BIGINT, cat STRING) " +
       "PARTITIONED BY (cat)")
@@ -2206,34 +2037,26 @@ object Incremental {
     // static-partition syntax: Spark fills the constant column
     s.sql("INSERT INTO graft_cat.pt PARTITION (cat = 'c9') " +
       "SELECT k, cents FROM q299_src WHERE k % 2 = 1")                   // v2
-    val dir = s"$wh/pt"
+    val dir = s"${g.wh}/pt"
     val m2 = graft.sources.Versioned.manifestOf(s, dir, 2)
     require(m2.entries.size == 6 && m2.ptags.size == 6,
       s"5 cat-value files + 1 static-partition file, all tagged: " +
         s"${m2.entries.size} entries, ${m2.ptags.size} tags")
-    def files(cond: String): Long = s.sql(
-      s"SELECT COUNT(DISTINCT _file) FROM graft_cat.pt WHERE $cond")
-      .head.getLong(0)
-    require(files("cat = 'c2'") == 1L,
-      s"a partition predicate must plan exactly its file: ${files("cat = 'c2'")}")
-    require(files("cat = 'c9'") == 1L,
-      s"the static-partition insert prunes exactly too: ${files("cat = 'c9'")}")
-    def read(phase: String, cond: String) = s.sql(
-      s"SELECT '$phase' AS phase, CAST(COUNT(*) AS BIGINT) AS n, " +
-        s"CAST(SUM(cents) AS BIGINT) AS sum_cents FROM graft_cat.pt WHERE $cond")
-    val preOvw = Seq(read("cat2", "cat = 'c2'"), read("c9", "cat = 'c9'"),
-      read("all", "cat IS NOT NULL")).map(_.collect().toSeq)
+    g.requireFiles("graft_cat.pt", "cat = 'c2'", 1L,
+      "a partition predicate must plan exactly its file")
+    g.requireFiles("graft_cat.pt", "cat = 'c9'", 1L,
+      "the static-partition insert prunes exactly too")
+    val preOvw = Seq(g.collect("cat2", "graft_cat.pt", "cat = 'c2'"),
+      g.collect("c9", "graft_cat.pt", "cat = 'c9'"),
+      g.collect("all", "graft_cat.pt", "cat IS NOT NULL"))
     // INSERT OVERWRITE keeps the partitioned layout
     s.sql("INSERT OVERWRITE graft_cat.pt SELECT k, cents, cat FROM q299_src") // v3
     val m3 = graft.sources.Versioned.manifestOf(s, dir, 3)
     require(m3.entries.size == 5 && m3.ptags.size == 5,
       s"OVERWRITE must re-lay 5 partition files: ${m3.entries.size}")
-    require(files("cat = 'c1'") == 1L, "post-overwrite pruning intact")
-    import s.implicits._
-    (preOvw.flatten.map(r => (r.getString(0), r.getLong(1), r.getLong(2))) :+ {
-      val r = read("ovw_c1", "cat = 'c1'").collect().head
-      (r.getString(0), r.getLong(1), r.getLong(2))
-    }).toDF("phase", "n", "sum_cents").orderBy("phase")
+    g.requireFiles("graft_cat.pt", "cat = 'c1'", 1L, "post-overwrite pruning intact")
+    CatalogGate.phases(
+      g.local(preOvw :+ g.collect("ovw_c1", "graft_cat.pt", "cat = 'c1'"): _*))
   }
 
   // q300 — PARTITION-SCOPED INSERT OVERWRITE (Delta's replaceWhere /
@@ -2275,19 +2098,13 @@ object Incremental {
       |  FROM p WHERE k >= (SELECT cut FROM c))
       |SELECT phase, CAST(n AS BIGINT) AS n, CAST(s AS BIGINT) AS sum_cents
       |FROM u ORDER BY phase""".stripMargin) { (s, d) =>
-    val wh = graft.engine.Staging.scratch("graft-catalog-gate", "q300_rwhere")
-      .getAbsolutePath
-    s.conf.set("spark.sql.catalog.graft_cat", "graft.sources.v2.GraftCatalog")
-    s.conf.set("spark.sql.catalog.graft_cat.warehouse", wh)
-    Tables.part(s, d).select(col("p_partkey").as("k"),
-      (col("p_retailprice").cast("decimal(12,2)") * 100).cast(LongType)
-        .as("cents"),
-      concat(lit("c"), col("p_partkey") % 5).as("cat"))
+    val g = CatalogGate(s, "q300_rwhere")
+    CatalogGate.partCents(s, d, concat(lit("c"), col("p_partkey") % 5).as("cat"))
       .createOrReplaceTempView("q300_src")
     s.sql("CREATE TABLE graft_cat.ow (k BIGINT, cents BIGINT, cat STRING) " +
       "PARTITIONED BY (cat)")
     s.sql("INSERT INTO graft_cat.ow SELECT k, cents, cat FROM q300_src")   // v1
-    val dir = s"$wh/ow"
+    val dir = s"${g.wh}/ow"
     val m1 = graft.sources.Versioned.manifestOf(s, dir, 1)
     // the day-repair: replace ONE partition's rows (cents doubled)
     s.sql("INSERT OVERWRITE graft_cat.ow PARTITION (cat = 'c2') " +
@@ -2306,11 +2123,8 @@ object Incremental {
         s"replacement, got fresh=$fresh")
     require(m2.ptags.exists(t => fresh(t._1) && t._2 == "cat" && t._3 == "c2"),
       "the replacement file must carry its #pfile tag (pruning survives)")
-    def files(cond: String): Long = s.sql(
-      s"SELECT COUNT(DISTINCT _file) FROM graft_cat.ow WHERE $cond")
-      .head.getLong(0)
-    require(files("cat = 'c2'") == 1L,
-      s"post-overwrite partition pruning intact: ${files("cat = 'c2'")}")
+    g.requireFiles("graft_cat.ow", "cat = 'c2'", 1L,
+      "post-overwrite partition pruning intact")
     // general replaceWhere (a RANGE condition, no partition layout) via
     // the DataFrame API: files whose stats envelope cannot contain a
     // match are carried by reference, the rest rewrite
@@ -2318,7 +2132,7 @@ object Incremental {
     s.sql("INSERT INTO graft_cat.ow2 " +
       "SELECT /*+ REPARTITION_BY_RANGE(8, k) */ k, cents FROM q300_src")   // v1
     val cut = Tables.part(s, d).agg(max(col("p_partkey"))).head.getLong(0) / 2
-    val dir2 = s"$wh/ow2"
+    val dir2 = s"${g.wh}/ow2"
     val m1b = graft.sources.Versioned.manifestOf(s, dir2, 1)
     s.sql(s"SELECT k, cents + 1 AS cents FROM q300_src WHERE k < $cut")
       .writeTo("graft_cat.ow2").overwrite(col("k") < lit(cut))             // v2
@@ -2331,17 +2145,12 @@ object Incremental {
       mustCarry.forall(m2b.entries.map(_._1).toSet),
       s"files provably outside the replace range must carry by name " +
         s"(range-laid: ${mustCarry.size} of ${m1b.entries.size})")
-    def read(phase: String, table: String, cond: String) = s.sql(
-      s"SELECT '$phase' AS phase, CAST(COUNT(*) AS BIGINT) AS n, " +
-        s"CAST(SUM(cents) AS BIGINT) AS sum_cents FROM $table WHERE $cond")
-    Seq(
-      read("c2_new", "graft_cat.ow", "cat = 'c2'"),
-      read("rest", "graft_cat.ow", "cat <> 'c2'"),
-      read("v1_c2", "graft_cat.ow VERSION AS OF 1", "cat = 'c2'"),
-      read("ow2_low", "graft_cat.ow2", s"k < $cut"),
-      read("ow2_high", "graft_cat.ow2", s"k >= $cut"))
-      .reduce(_ unionByName _)
-      .orderBy("phase")
+    CatalogGate.phases(
+      g.read("c2_new", "graft_cat.ow", "cat = 'c2'"),
+      g.read("rest", "graft_cat.ow", "cat <> 'c2'"),
+      g.read("v1_c2", "graft_cat.ow VERSION AS OF 1", "cat = 'c2'"),
+      g.read("ow2_low", "graft_cat.ow2", s"k < $cut"),
+      g.read("ow2_high", "graft_cat.ow2", s"k >= $cut"))
   }
 
   // q301 — RESTORE (the operational undo every Delta/Iceberg runbook
@@ -2376,14 +2185,8 @@ object Incremental {
       |  UNION ALL SELECT 'meta', 2, 5)
       |SELECT phase, CAST(n AS BIGINT) AS n, CAST(s AS BIGINT) AS sum_cents
       |FROM u ORDER BY phase""".stripMargin) { (s, d) =>
-    val wh = graft.engine.Staging.scratch("graft-catalog-gate", "q301_restore")
-      .getAbsolutePath
-    s.conf.set("spark.sql.catalog.graft_cat", "graft.sources.v2.GraftCatalog")
-    s.conf.set("spark.sql.catalog.graft_cat.warehouse", wh)
-    Tables.part(s, d).select(col("p_partkey").as("k"),
-      (col("p_retailprice").cast("decimal(12,2)") * 100).cast(LongType)
-        .as("cents"))
-      .createOrReplaceTempView("q301_src")
+    val g = CatalogGate(s, "q301_restore")
+    CatalogGate.partCents(s, d).createOrReplaceTempView("q301_src")
     s.sql("CREATE TABLE graft_cat.rs (k BIGINT, cents BIGINT)")
     s.sql("INSERT INTO graft_cat.rs SELECT k, cents FROM q301_src " +
       "WHERE k % 3 = 0")                                                 // v1
@@ -2395,7 +2198,7 @@ object Incremental {
     val undo = s.sql("CALL graft_cat.system.restore('rs', 2)").head      // v5
     require(undo.getLong(0) == 2L && undo.getLong(1) == 5L,
       s"restore must report (restored=2, new=5), got $undo")
-    val dir = s"$wh/rs"
+    val dir = s"${g.wh}/rs"
     val m2 = graft.sources.Versioned.manifestOf(s, dir, 2)
     val m5 = graft.sources.Versioned.manifestOf(s, dir, 5)
     require(m5.entries.toSet == m2.entries.toSet && m5.dvs == m2.dvs,
@@ -2403,18 +2206,11 @@ object Incremental {
         "(COW sharing — a restore is a metadata commit, never a rewrite)")
     require(graft.sources.Versioned.versions(s, dir) == Seq(1L, 2L, 3L, 4L, 5L),
       "history only grows — every version stays inspectable")
-    def read(phase: String, table: String) = s.sql(
-      s"SELECT '$phase' AS phase, CAST(COUNT(*) AS BIGINT) AS n, " +
-        s"CAST(SUM(cents) AS BIGINT) AS sum_cents FROM $table")
-    import s.implicits._
-    Seq(
-      read("head", "graft_cat.rs"),
-      read("v3", "graft_cat.rs VERSION AS OF 3"),
-      read("v4", "graft_cat.rs VERSION AS OF 4"))
-      .reduce(_ unionByName _)
-      .unionByName(Seq(("meta", undo.getLong(0), undo.getLong(1)))
-        .toDF("phase", "n", "sum_cents"))
-      .orderBy("phase")
+    CatalogGate.phases(
+      g.read("head", "graft_cat.rs"),
+      g.read("v3", "graft_cat.rs VERSION AS OF 3"),
+      g.read("v4", "graft_cat.rs VERSION AS OF 4"),
+      g.local(("meta", undo.getLong(0), undo.getLong(1))))
   }
 
   // q302 — NULL COUNTS IN MANIFEST STATS (the other half of real WHERE
@@ -2461,14 +2257,8 @@ object Incremental {
       |     FROM p WHERE k % 7 <> 0), 0)
       |SELECT phase, CAST(a AS BIGINT) AS a, CAST(b AS BIGINT) AS b
       |FROM u ORDER BY phase""".stripMargin) { (s, d) =>
-    val wh = graft.engine.Staging.scratch("graft-catalog-gate", "q302_nulls")
-      .getAbsolutePath
-    s.conf.set("spark.sql.catalog.graft_cat", "graft.sources.v2.GraftCatalog")
-    s.conf.set("spark.sql.catalog.graft_cat.warehouse", wh)
-    Tables.part(s, d).select(col("p_partkey").as("k"),
-      (col("p_retailprice").cast("decimal(12,2)") * 100).cast(LongType)
-        .as("cents"))
-      .createOrReplaceTempView("q302_src")
+    val g = CatalogGate(s, "q302_nulls")
+    CatalogGate.partCents(s, d).createOrReplaceTempView("q302_src")
     s.sql("CREATE TABLE graft_cat.nc (k BIGINT, v BIGINT)")
     // three files of KNOWN null shape: all-null / zero-null / mixed
     s.sql("INSERT INTO graft_cat.nc SELECT /*+ REPARTITION(1) */ k, " +
@@ -2478,13 +2268,10 @@ object Incremental {
     s.sql("INSERT INTO graft_cat.nc SELECT /*+ REPARTITION(1) */ k, " +
       "CASE WHEN k % 3 = 0 THEN NULL ELSE cents END FROM q302_src " +
       "WHERE k % 4 IN (2, 3)")                                           // v3
-    def files(cond: String): Long = s.sql(
-      s"SELECT COUNT(DISTINCT _file) FROM graft_cat.nc WHERE $cond")
-      .head.getLong(0)
-    require(files("v IS NULL") == 2L,
-      s"IS NULL must prune the zero-null file: ${files("v IS NULL")} of 3")
-    require(files("v IS NOT NULL") == 2L,
-      s"IS NOT NULL must prune the all-null file: ${files("v IS NOT NULL")}")
+    g.requireFiles("graft_cat.nc", "v IS NULL", 2L,
+      "IS NULL must prune the zero-null file of 3")
+    g.requireFiles("graft_cat.nc", "v IS NOT NULL", 2L,
+      "IS NOT NULL must prune the all-null file of 3")
     val pushed = s.sql(
       "SELECT COUNT(v), COUNT(*), MIN(v), MAX(v) FROM graft_cat.nc")
       .queryExecution.executedPlan.toString
@@ -2497,7 +2284,7 @@ object Incremental {
     s.sql("CREATE TABLE graft_cat.nc2 (k BIGINT, v BIGINT)")
     s.sql("INSERT INTO graft_cat.nc2 SELECT k, CASE WHEN k % 5 = 0 THEN " +
       "NULL ELSE cents END FROM q302_src")                               // v1
-    graft.sources.Versioned.deleteKeysMor(s, s"$wh/nc2", "k",
+    graft.sources.Versioned.deleteKeysMor(s, s"${g.wh}/nc2", "k",
       s.sql("SELECT k FROM q302_src WHERE k % 7 = 0"))                   // v2
     val morPlan = s.sql("SELECT COUNT(v) FROM graft_cat.nc2")
       .queryExecution.executedPlan.toString
@@ -2550,13 +2337,8 @@ object Incremental {
       |  UNION ALL SELECT 'all', COUNT(*), SUM(cents) FROM p)
       |SELECT phase, CAST(n AS BIGINT) AS n, CAST(s AS BIGINT) AS sum_cents
       |FROM u ORDER BY phase""".stripMargin) { (s, d) =>
-    val wh = graft.engine.Staging.scratch("graft-catalog-gate", "q303_multi")
-      .getAbsolutePath
-    s.conf.set("spark.sql.catalog.graft_cat", "graft.sources.v2.GraftCatalog")
-    s.conf.set("spark.sql.catalog.graft_cat.warehouse", wh)
-    val df = Tables.part(s, d).select(col("p_partkey").as("k"),
-      (col("p_retailprice").cast("decimal(12,2)") * 100).cast(LongType)
-        .as("cents"),
+    val g = CatalogGate(s, "q303_multi")
+    val df = CatalogGate.partCents(s, d,
       concat(lit("c"), col("p_partkey") % 5).as("cat"),
       concat(lit("b"), col("p_partkey") % 3).as("band"))
     df.createOrReplaceTempView("q303_src")
@@ -2565,7 +2347,7 @@ object Incremental {
       "PARTITIONED BY (cat, band)")
     s.sql("INSERT INTO graft_cat.mp SELECT k, cents, cat, band " +
       "FROM q303_src WHERE k % 2 = 0")                                   // v1
-    val dir = s"$wh/mp"
+    val dir = s"${g.wh}/mp"
     val m1 = graft.sources.Versioned.manifestOf(s, dir, 1)
     require(m1.entries.size == 15 && m1.ptags.size == 30,
       s"5 cats × 3 bands = 15 files, each tagged TWICE: " +
@@ -2575,32 +2357,21 @@ object Incremental {
     graft.sources.Versioned.appendPartitionedSpec(
       df.filter(col("k") % 2 === 1), dir,
       Seq(graft.sources.Versioned.PartField.Identity("band")))           // v2
-    def files(cond: String): Long = s.sql(
-      s"SELECT COUNT(DISTINCT _file) FROM graft_cat.mp WHERE $cond")
-      .head.getLong(0)
     // 15 two-axis files + 3 band-era files on disk
-    require(files("cat = 'c2'") == 6L,
-      s"cat predicate: 3 of 15 two-axis files + all 3 band-era files " +
-        s"(fail open), got ${files("cat = 'c2'")}")
-    require(files("band = 'b1'") == 6L,
-      s"band predicate prunes BOTH eras on the band axis: 5 + 1, " +
-        s"got ${files("band = 'b1'")}")
-    require(files("cat = 'c2' AND band = 'b1'") == 2L,
-      "the conjunction prunes both axes: 1 two-axis cell + 1 band-era " +
-        s"file, got ${files("cat = 'c2' AND band = 'b1'")}")
+    g.requireFiles("graft_cat.mp", "cat = 'c2'", 6L,
+      "cat predicate: 3 of 15 two-axis files + all 3 band-era files (fail open)")
+    g.requireFiles("graft_cat.mp", "band = 'b1'", 6L,
+      "band predicate prunes BOTH eras on the band axis: 5 + 1")
+    g.requireFiles("graft_cat.mp", "cat = 'c2' AND band = 'b1'", 2L,
+      "the conjunction prunes both axes: 1 two-axis cell + 1 band-era file")
     // t.files surfaces the multi-axis layout (comma-joined, spec order)
     require(s.sql("SELECT COUNT(*) FROM graft_cat.mp.files " +
       "WHERE partition_col = 'cat,band'").head.getLong(0) == 15L,
       "the two-axis files must report their full layout")
-    def read(phase: String, cond: String) = s.sql(
-      s"SELECT '$phase' AS phase, CAST(COUNT(*) AS BIGINT) AS n, " +
-        s"CAST(SUM(cents) AS BIGINT) AS sum_cents FROM graft_cat.mp WHERE $cond")
-    Seq(read("cat2", "cat = 'c2'"),
-      read("band1", "band = 'b1'"),
-      read("both", "cat = 'c2' AND band = 'b1'"),
-      read("all", "k IS NOT NULL"))
-      .reduce(_ unionByName _)
-      .orderBy("phase")
+    CatalogGate.phases(g.read("cat2", "graft_cat.mp", "cat = 'c2'"),
+      g.read("band1", "graft_cat.mp", "band = 'b1'"),
+      g.read("both", "graft_cat.mp", "cat = 'c2' AND band = 'b1'"),
+      g.read("all", "graft_cat.mp", "k IS NOT NULL"))
   }
 
   // q304 — TEMPORAL PARTITION TRANSFORMS (`PARTITIONED BY (days(ts))` /
@@ -2645,35 +2416,27 @@ object Incremental {
       |  UNION ALL SELECT 'all', COUNT(*), SUM(cents) FROM p)
       |SELECT phase, CAST(n AS BIGINT) AS n, CAST(s AS BIGINT) AS sum_cents
       |FROM u ORDER BY phase""".stripMargin) { (s, d) =>
-    val wh = graft.engine.Staging.scratch("graft-catalog-gate", "q304_temporal")
-      .getAbsolutePath
-    s.conf.set("spark.sql.catalog.graft_cat", "graft.sources.v2.GraftCatalog")
-    s.conf.set("spark.sql.catalog.graft_cat.warehouse", wh)
-    Tables.part(s, d).select(col("p_partkey").as("k"),
-      (col("p_retailprice").cast("decimal(12,2)") * 100).cast(LongType)
-        .as("cents"),
+    val g = CatalogGate(s, "q304_temporal")
+    CatalogGate.partCents(s, d,
       timestamp_micros((col("p_partkey") % 8) * lit(86400000000L) +
         col("p_partkey") * lit(1000000L)).as("ts"))
       .createOrReplaceTempView("q304_src")
     s.sql("CREATE TABLE graft_cat.tp (k BIGINT, cents BIGINT, ts TIMESTAMP) " +
       "PARTITIONED BY (days(ts))")
     s.sql("INSERT INTO graft_cat.tp SELECT k, cents, ts FROM q304_src")  // v1
-    val m1 = graft.sources.Versioned.manifestOf(s, s"$wh/tp", 1)
+    val m1 = graft.sources.Versioned.manifestOf(s, s"${g.wh}/tp", 1)
     require(m1.entries.size == 8 &&
       m1.ptags.forall(t => t._2 == "days(ts)") &&
       m1.ptags.map(_._3).toSet == (0 to 7).map(_.toString).toSet,
       s"8 day-files tagged days(ts)=0..7, got ${m1.ptags}")
-    def files(table: String, cond: String): Long = s.sql(
-      s"SELECT COUNT(DISTINCT _file) FROM graft_cat.$table WHERE $cond")
-      .head.getLong(0)
     val d23 = "ts BETWEEN TIMESTAMP '1970-01-03 00:00:00' " +
       "AND TIMESTAMP '1970-01-04 23:59:59'"
     val d5 = "ts BETWEEN TIMESTAMP '1970-01-06 00:00:00' " +
       "AND TIMESTAMP '1970-01-06 23:59:59'"
-    require(files("tp", d23) == 2L,
-      s"a 2-day range must read exactly its 2 day-files: ${files("tp", d23)}")
-    require(files("tp", d5) == 1L,
-      s"a 1-day range must read exactly its day-file: ${files("tp", d5)}")
+    g.requireFiles("graft_cat.tp", d23, 2L,
+      "a 2-day range must read exactly its 2 day-files")
+    g.requireFiles("graft_cat.tp", d5, 1L,
+      "a 1-day range must read exactly its day-file")
     // months × identity: both axes prune in one conjunct walk
     s.sql("CREATE TABLE graft_cat.tp2 " +
       "(k BIGINT, cents BIGINT, ts TIMESTAMP, cat STRING) " +
@@ -2683,17 +2446,11 @@ object Incremental {
       "'c' || CAST(k % 2 AS STRING) FROM q304_src")                      // v1
     val feb = "cat = 'c1' AND ts BETWEEN TIMESTAMP '1970-02-01 00:00:00' " +
       "AND TIMESTAMP '1970-02-28 23:59:59'"
-    require(files("tp2", feb) == 1L,
-      s"month × identity conjunction must read 1 of 6 files: " +
-        s"${files("tp2", feb)}")
-    def read(phase: String, table: String, cond: String) = s.sql(
-      s"SELECT '$phase' AS phase, CAST(COUNT(*) AS BIGINT) AS n, " +
-        s"CAST(SUM(cents) AS BIGINT) AS sum_cents FROM graft_cat.$table " +
-        s"WHERE $cond")
-    Seq(read("d23", "tp", d23), read("d5", "tp", d5),
-      read("feb_c1", "tp2", feb), read("all", "tp", "k IS NOT NULL"))
-      .reduce(_ unionByName _)
-      .orderBy("phase")
+    g.requireFiles("graft_cat.tp2", feb, 1L,
+      "month × identity conjunction must read 1 of 6 files")
+    CatalogGate.phases(g.read("d23", "graft_cat.tp", d23),
+      g.read("d5", "graft_cat.tp", d5), g.read("feb_c1", "graft_cat.tp2", feb),
+      g.read("all", "graft_cat.tp", "k IS NOT NULL"))
   }
 
   // q305 — ATOMIC CREATE OR REPLACE TABLE (StagingTableCatalog — the
@@ -2731,14 +2488,8 @@ object Incremental {
       |  UNION ALL SELECT 'fresh', COUNT(*), SUM(cents) FROM p WHERE k % 5 = 0)
       |SELECT phase, CAST(n AS BIGINT) AS n, CAST(s AS BIGINT) AS sum_cents
       |FROM u ORDER BY phase""".stripMargin) { (s, d) =>
-    val wh = graft.engine.Staging.scratch("graft-catalog-gate", "q305_cor")
-      .getAbsolutePath
-    s.conf.set("spark.sql.catalog.graft_cat", "graft.sources.v2.GraftCatalog")
-    s.conf.set("spark.sql.catalog.graft_cat.warehouse", wh)
-    Tables.part(s, d).select(col("p_partkey").as("k"),
-      (col("p_retailprice").cast("decimal(12,2)") * 100).cast(LongType)
-        .as("cents"),
-      concat(lit("c"), col("p_partkey") % 3).as("cat"))
+    val g = CatalogGate(s, "q305_cor")
+    CatalogGate.partCents(s, d, concat(lit("c"), col("p_partkey") % 3).as("cat"))
       .createOrReplaceTempView("q305_src")
     s.sql("CREATE TABLE graft_cat.cr (k BIGINT, cents BIGINT)")
     s.sql("INSERT INTO graft_cat.cr SELECT k, cents FROM q305_src " +
@@ -2748,7 +2499,7 @@ object Incremental {
     // schema-breaking CTAS-replace: ONE commit, new schema
     s.sql("CREATE OR REPLACE TABLE graft_cat.cr AS SELECT k, " +
       "cents * 2 AS c2 FROM q305_src WHERE k % 3 = 0")                   // v3
-    val dir = s"$wh/cr"
+    val dir = s"${g.wh}/cr"
     require(graft.sources.Versioned.versions(s, dir) == Seq(1L, 2L, 3L),
       "the replace must be exactly ONE commit on the same lineage")
     require(s.table("graft_cat.cr").columns.toSeq == Seq("k", "c2"),
@@ -2759,44 +2510,29 @@ object Incremental {
       "pre-replace versions keep their own schema under time travel")
     // phases COLLECT eagerly: a lazily-executed frame would re-resolve
     // the table head at materialization time, AFTER later replaces
-    def read(phase: String, sql: String): (String, Long, Long) = {
-      val r = s.sql(sql).head
-      (phase, r.getLong(0), if (r.isNullAt(1)) 0L else r.getLong(1))
-    }
-    val newHead = read("new_head",
-      "SELECT COUNT(*), CAST(SUM(c2) AS BIGINT) FROM graft_cat.cr")
-    val v2 = read("v2",
-      "SELECT COUNT(*), CAST(SUM(cents) AS BIGINT) FROM graft_cat.cr " +
-        "VERSION AS OF 2")
+    val newHead = g.collect("new_head", "(SELECT c2 AS cents FROM graft_cat.cr) h")
+    val v2 = g.collect("v2", "graft_cat.cr VERSION AS OF 2")
     // plain REPLACE (no AS SELECT): empty under the new schema, v3
     // still answers
     s.sql("CREATE OR REPLACE TABLE graft_cat.cr (k BIGINT, note STRING)") // v4
     require(graft.sources.Versioned.versions(s, dir) == Seq(1L, 2L, 3L, 4L),
       "the plain replace is one more commit")
     require(s.table("graft_cat.cr").columns.toSeq == Seq("k", "note"))
-    val empty = read("empty",
-      "SELECT COUNT(*), CAST(0 AS BIGINT) FROM graft_cat.cr")
+    val empty = ("empty", s.table("graft_cat.cr").count(), 0L)
     require(s.sql("SELECT COUNT(*) FROM graft_cat.cr VERSION AS OF 3")
       .head.getLong(0) > 0L, "the replaced-away version still answers")
     // partitioned CTAS-replace: tagged from the first commit
     s.sql("CREATE TABLE graft_cat.cr3 (other STRING)")
     s.sql("CREATE OR REPLACE TABLE graft_cat.cr3 PARTITIONED BY (cat) " +
       "AS SELECT k, cents, cat FROM q305_src")
-    require(s.sql("SELECT COUNT(DISTINCT _file) FROM graft_cat.cr3 " +
-      "WHERE cat = 'c1'").head.getLong(0) == 1L,
+    g.requireFiles("graft_cat.cr3", "cat = 'c1'", 1L,
       "a partitioned replace must prune from its first query")
-    val part = read("part_c1",
-      "SELECT COUNT(*), CAST(SUM(cents) AS BIGINT) FROM graft_cat.cr3 " +
-        "WHERE cat = 'c1'")
+    val part = g.collect("part_c1", "graft_cat.cr3", "cat = 'c1'")
     // CREATE OR REPLACE on a nonexistent table CREATES it
     s.sql("CREATE OR REPLACE TABLE graft_cat.cr2 AS " +
       "SELECT k, cents FROM q305_src WHERE k % 5 = 0")
-    val fresh = read("fresh",
-      "SELECT COUNT(*), CAST(SUM(cents) AS BIGINT) FROM graft_cat.cr2")
-    import s.implicits._
-    Seq(newHead, v2, empty, part, fresh)
-      .toDF("phase", "n", "sum_cents")
-      .orderBy("phase")
+    val fresh = g.collect("fresh", "graft_cat.cr2")
+    CatalogGate.phases(g.local(newHead, v2, empty, part, fresh))
   }
 
   // q306 — MERGE WITH SCHEMA EVOLUTION (the Spark 4 syntax; CDC feeds
@@ -2829,19 +2565,13 @@ object Incremental {
       |  FROM p WHERE k % 2 = 0 AND k % 4 <> 0)
       |SELECT phase, CAST(n AS BIGINT) AS n, CAST(s AS BIGINT) AS sum_cents
       |FROM u ORDER BY phase""".stripMargin) { (s, d) =>
-    val wh = graft.engine.Staging.scratch("graft-catalog-gate", "q306_mergevo")
-      .getAbsolutePath
-    s.conf.set("spark.sql.catalog.graft_cat", "graft.sources.v2.GraftCatalog")
-    s.conf.set("spark.sql.catalog.graft_cat.warehouse", wh)
-    Tables.part(s, d).select(col("p_partkey").as("k"),
-      (col("p_retailprice").cast("decimal(12,2)") * 100).cast(LongType)
-        .as("cents"))
-      .createOrReplaceTempView("q306_src")
+    val g = CatalogGate(s, "q306_mergevo")
+    CatalogGate.partCents(s, d).createOrReplaceTempView("q306_src")
     s.sql("CREATE TABLE graft_cat.se (k BIGINT, cents BIGINT) " +
       "TBLPROPERTIES('graft.key'='k','graft.merge.mode'='mor')")
     s.sql("INSERT INTO graft_cat.se SELECT /*+ REPARTITION_BY_RANGE(6, k) */ " +
       "k, cents FROM q306_src WHERE k % 2 = 0")                          // v1
-    val dir = s"$wh/se"
+    val dir = s"${g.wh}/se"
     val m1 = graft.sources.Versioned.manifestOf(s, dir, 1)
     // the CDC feed gained a column: matched rows update, new rows
     // insert, the schema evolves in the SAME statement
@@ -2863,14 +2593,9 @@ object Incremental {
       "a MOR merge-with-evolution rewrites NOTHING — every pre-merge " +
         "file carried byte-for-byte, the delta is sidecar + new files")
     require(m3.dvs.nonEmpty, "the matched updates commit as delta sidecars")
-    def read(phase: String, cond: String) = s.sql(
-      s"SELECT '$phase' AS phase, CAST(COUNT(*) AS BIGINT) AS n, " +
-        s"CAST(SUM(cents) AS BIGINT) AS sum_cents FROM graft_cat.se " +
-        s"WHERE $cond")
-    Seq(read("upd", "note = 'u'"), read("ins", "note = 'i'"),
-      read("kept", "note IS NULL"))
-      .reduce(_ unionByName _)
-      .orderBy("phase")
+    CatalogGate.phases(g.read("upd", "graft_cat.se", "note = 'u'"),
+      g.read("ins", "graft_cat.se", "note = 'i'"),
+      g.read("kept", "graft_cat.se", "note IS NULL"))
   }
 
   // q307 — WRITABLE BRANCHES / WRITE-AUDIT-PUBLISH (the Iceberg WAP
@@ -2908,14 +2633,8 @@ object Incremental {
       |  FROM p WHERE k % 3 IN (0, 1))
       |SELECT phase, CAST(n AS BIGINT) AS n, CAST(s AS BIGINT) AS sum_cents
       |FROM u ORDER BY phase""".stripMargin) { (s, d) =>
-    val wh = graft.engine.Staging.scratch("graft-catalog-gate", "q307_wap")
-      .getAbsolutePath
-    s.conf.set("spark.sql.catalog.graft_cat", "graft.sources.v2.GraftCatalog")
-    s.conf.set("spark.sql.catalog.graft_cat.warehouse", wh)
-    Tables.part(s, d).select(col("p_partkey").as("k"),
-      (col("p_retailprice").cast("decimal(12,2)") * 100).cast(LongType)
-        .as("cents"))
-      .createOrReplaceTempView("q307_src")
+    val g = CatalogGate(s, "q307_wap")
+    CatalogGate.partCents(s, d).createOrReplaceTempView("q307_src")
     s.sql("CREATE TABLE graft_cat.wb (k BIGINT, cents BIGINT)")
     s.sql("INSERT INTO graft_cat.wb SELECT k, cents FROM q307_src " +
       "WHERE k % 3 = 0")                                                 // v1
@@ -2924,14 +2643,9 @@ object Incremental {
     // audit writes land in the branch namespace — main cannot see them
     s.sql("INSERT INTO graft_cat.wb.branch_audit SELECT k, cents " +
       "FROM q307_src WHERE k % 3 = 1")
-    def agg(table: String): (Long, Long) = {
-      val r = s.sql(s"SELECT COUNT(*), CAST(SUM(cents) AS BIGINT) " +
-        s"FROM $table").head
-      (r.getLong(0), r.getLong(1))
-    }
-    val dir = s"$wh/wb"
-    val mainPre = agg("graft_cat.wb")
-    val branch = agg("graft_cat.wb.branch_audit")
+    val dir = s"${g.wh}/wb"
+    val mainPre = g.collect("main_pre", "graft_cat.wb")
+    val branch = g.collect("branch", "graft_cat.wb.branch_audit")
     require(graft.sources.Versioned.versions(s, dir) == Seq(1L),
       "branch writes must not create MAIN versions")
     val m1 = graft.sources.Versioned.manifestOf(s, dir, 1)
@@ -2940,19 +2654,14 @@ object Incremental {
     val m2 = graft.sources.Versioned.manifestOf(s, dir, 2)
     require(m1.entries.toSet.subsetOf(m2.entries.toSet),
       "pre-publish files carried BYTE-FOR-BYTE through the publish")
-    val mainPost = agg("graft_cat.wb")
+    val mainPost = g.collect("main_post", "graft_cat.wb")
     require(graft.sources.Versioned.branches(s, dir).isEmpty,
       "a published branch is dropped")
     // the SQL binding dissolves with the ref
     val gone = try { s.sql("SELECT * FROM graft_cat.wb.branch_audit")
       .collect(); false } catch { case _: Exception => true }
     require(gone, "t.branch_audit must stop resolving after the publish")
-    import s.implicits._
-    Seq(("main_pre", mainPre._1, mainPre._2),
-      ("branch", branch._1, branch._2),
-      ("main_post", mainPost._1, mainPost._2))
-      .toDF("phase", "n", "sum_cents")
-      .orderBy("phase")
+    CatalogGate.phases(g.local(mainPre, branch, mainPost))
   }
 
   // q309 — ROW-LEVEL DELETE ON A BRANCH HEAD (the audit-FIX verb the
@@ -2990,18 +2699,12 @@ object Incremental {
       |  FROM p WHERE k % 3 = 0 OR (k % 3 = 1 AND k % 9 <> 1))
       |SELECT phase, CAST(n AS BIGINT) AS n, CAST(s AS BIGINT) AS sum_cents
       |FROM u ORDER BY phase""".stripMargin) { (s, d) =>
-    val wh = graft.engine.Staging.scratch("graft-catalog-gate", "q309_bdel")
-      .getAbsolutePath
-    s.conf.set("spark.sql.catalog.graft_cat", "graft.sources.v2.GraftCatalog")
-    s.conf.set("spark.sql.catalog.graft_cat.warehouse", wh)
-    Tables.part(s, d).select(col("p_partkey").as("k"),
-      (col("p_retailprice").cast("decimal(12,2)") * 100).cast(LongType)
-        .as("cents"))
-      .createOrReplaceTempView("q309_src")
+    val g = CatalogGate(s, "q309_bdel")
+    CatalogGate.partCents(s, d).createOrReplaceTempView("q309_src")
     s.sql("CREATE TABLE graft_cat.wf (k BIGINT, cents BIGINT)")
     s.sql("INSERT INTO graft_cat.wf SELECT k, cents FROM q309_src " +
       "WHERE k % 3 = 0")                                                 // v1
-    val dir = s"$wh/wf"
+    val dir = s"${g.wh}/wf"
     require(s.sql("CALL graft_cat.system.branch('wf', 'audit')")
       .head.getLong(0) == 1L, "branch must report its base version")
     // the staging batch carries corrupted rows (negated cents) the
@@ -3028,22 +2731,12 @@ object Incremental {
         s"retired=$retired fresh=$fresh")
     require(graft.sources.Versioned.versions(s, dir) == Seq(1L),
       "neither staging nor fix may create MAIN versions")
-    def agg(phase: String, table: String) = s.sql(
-      s"SELECT '$phase' AS phase, CAST(COUNT(*) AS BIGINT) AS n, " +
-        s"CAST(SUM(cents) AS BIGINT) AS sum_cents FROM $table")
-    val mainPre = agg("main_pre", "graft_cat.wf").collect().head
-    val branchFixed = agg("branch_fixed", "graft_cat.wf.branch_audit")
-      .collect().head
+    val mainPre = g.collect("main_pre", "graft_cat.wf")
+    val branchFixed = g.collect("branch_fixed", "graft_cat.wf.branch_audit")
     require(s.sql("CALL graft_cat.system.fast_forward('wf', 'audit')")
       .head.getLong(0) == 2L, "publish is one main commit")              // v2
-    val mainPost = agg("main_post", "graft_cat.wf").collect().head
-    import s.implicits._
-    Seq((mainPre.getString(0), mainPre.getLong(1), mainPre.getLong(2)),
-      (branchFixed.getString(0), branchFixed.getLong(1),
-        branchFixed.getLong(2)),
-      (mainPost.getString(0), mainPost.getLong(1), mainPost.getLong(2)))
-      .toDF("phase", "n", "sum_cents")
-      .orderBy("phase")
+    val mainPost = g.collect("main_post", "graft_cat.wf")
+    CatalogGate.phases(g.local(mainPre, branchFixed, mainPost))
   }
 
   // q310 — `hours(ts)` / `years(ts)` PARTITION TRANSFORMS (completing
@@ -3085,13 +2778,8 @@ object Incremental {
       |  UNION ALL SELECT 'all', COUNT(*), SUM(cents) FROM p)
       |SELECT phase, CAST(n AS BIGINT) AS n, CAST(s AS BIGINT) AS sum_cents
       |FROM u ORDER BY phase""".stripMargin) { (s, d) =>
-    val wh = graft.engine.Staging.scratch("graft-catalog-gate", "q310_hy")
-      .getAbsolutePath
-    s.conf.set("spark.sql.catalog.graft_cat", "graft.sources.v2.GraftCatalog")
-    s.conf.set("spark.sql.catalog.graft_cat.warehouse", wh)
-    Tables.part(s, d).select(col("p_partkey").as("k"),
-      (col("p_retailprice").cast("decimal(12,2)") * 100).cast(LongType)
-        .as("cents"),
+    val g = CatalogGate(s, "q310_hy")
+    CatalogGate.partCents(s, d,
       timestamp_micros((col("p_partkey") % 6) * lit(3600000000L) +
         (col("p_partkey") % 60) * lit(1000000L)).as("hts"),
       timestamp_micros((col("p_partkey") % 3) * lit(372L * 86400000000L) +
@@ -3100,7 +2788,7 @@ object Incremental {
     s.sql("CREATE TABLE graft_cat.th (k BIGINT, cents BIGINT, ts TIMESTAMP) " +
       "PARTITIONED BY (hours(ts))")
     s.sql("INSERT INTO graft_cat.th SELECT k, cents, hts FROM q310_src") // v1
-    val mh = graft.sources.Versioned.manifestOf(s, s"$wh/th", 1)
+    val mh = graft.sources.Versioned.manifestOf(s, s"${g.wh}/th", 1)
     require(mh.entries.size == 6 &&
       mh.ptags.forall(t => t._2 == "hours(ts)") &&
       mh.ptags.map(_._3).toSet == (0 to 5).map(_.toString).toSet,
@@ -3108,34 +2796,26 @@ object Incremental {
     s.sql("CREATE TABLE graft_cat.ty (k BIGINT, cents BIGINT, ts TIMESTAMP) " +
       "PARTITIONED BY (years(ts))")
     s.sql("INSERT INTO graft_cat.ty SELECT k, cents, yts FROM q310_src") // v1
-    val my = graft.sources.Versioned.manifestOf(s, s"$wh/ty", 1)
+    val my = graft.sources.Versioned.manifestOf(s, s"${g.wh}/ty", 1)
     require(my.entries.size == 3 &&
       my.ptags.forall(t => t._2 == "years(ts)") &&
       my.ptags.map(_._3).toSet == Set("0", "1", "2"),
       s"3 year-files tagged years(ts)=0..2, got ${my.ptags}")
-    def files(table: String, cond: String): Long = s.sql(
-      s"SELECT COUNT(DISTINCT _file) FROM graft_cat.$table WHERE $cond")
-      .head.getLong(0)
     val h12 = "ts BETWEEN TIMESTAMP '1970-01-01 01:00:00' " +
       "AND TIMESTAMP '1970-01-01 02:59:59'"
     val h4 = "ts BETWEEN TIMESTAMP '1970-01-01 04:00:00' " +
       "AND TIMESTAMP '1970-01-01 04:59:59'"
     val y1 = "ts BETWEEN TIMESTAMP '1971-01-01 00:00:00' " +
       "AND TIMESTAMP '1971-12-31 23:59:59'"
-    require(files("th", h12) == 2L,
-      s"a 2-hour range must read exactly its 2 hour-files: ${files("th", h12)}")
-    require(files("th", h4) == 1L,
-      s"a 1-hour range must read exactly its hour-file: ${files("th", h4)}")
-    require(files("ty", y1) == 1L,
-      s"a 1-year range must read exactly its year-file: ${files("ty", y1)}")
-    def read(phase: String, table: String, cond: String) = s.sql(
-      s"SELECT '$phase' AS phase, CAST(COUNT(*) AS BIGINT) AS n, " +
-        s"CAST(SUM(cents) AS BIGINT) AS sum_cents FROM graft_cat.$table " +
-        s"WHERE $cond")
-    Seq(read("h12", "th", h12), read("h4", "th", h4),
-      read("y1", "ty", y1), read("all", "th", "k IS NOT NULL"))
-      .reduce(_ unionByName _)
-      .orderBy("phase")
+    g.requireFiles("graft_cat.th", h12, 2L,
+      "a 2-hour range must read exactly its 2 hour-files")
+    g.requireFiles("graft_cat.th", h4, 1L,
+      "a 1-hour range must read exactly its hour-file")
+    g.requireFiles("graft_cat.ty", y1, 1L,
+      "a 1-year range must read exactly its year-file")
+    CatalogGate.phases(g.read("h12", "graft_cat.th", h12),
+      g.read("h4", "graft_cat.th", h4), g.read("y1", "graft_cat.ty", y1),
+      g.read("all", "graft_cat.th", "k IS NOT NULL"))
   }
 
   // q311 — BRANCH ADDRESSING PARITY (q307 gave branches a write path
@@ -3172,30 +2852,20 @@ object Incremental {
       |  WHERE k % 3 IN (1, 2))
       |SELECT phase, CAST(n AS BIGINT) AS n, CAST(s AS BIGINT) AS sum_cents
       |FROM u ORDER BY phase""".stripMargin) { (s, d) =>
-    val root = graft.engine.Staging.scratch("graft-catalog-gate", "q311_baddr")
-    val wh = root.getAbsolutePath
-    s.conf.set("spark.sql.catalog.graft_cat", "graft.sources.v2.GraftCatalog")
-    s.conf.set("spark.sql.catalog.graft_cat.warehouse", wh)
-    Tables.part(s, d).select(col("p_partkey").as("k"),
-      (col("p_retailprice").cast("decimal(12,2)") * 100).cast(LongType)
-        .as("cents"))
-      .createOrReplaceTempView("q311_src")
+    val g = CatalogGate(s, "q311_baddr")
+    CatalogGate.partCents(s, d).createOrReplaceTempView("q311_src")
     s.sql("CREATE TABLE graft_cat.wg (k BIGINT, cents BIGINT)")
     s.sql("INSERT INTO graft_cat.wg SELECT k, cents FROM q311_src " +
       "WHERE k % 3 = 0")                                                 // v1
-    val dir = s"$wh/wg"
+    val dir = s"${g.wh}/wg"
     s.sql("CALL graft_cat.system.branch('wg', 'audit')")
     s.sql("INSERT INTO graft_cat.wg.branch_audit SELECT k, cents " +
       "FROM q311_src WHERE k % 3 = 1")                                   // b1
     s.sql("INSERT INTO graft_cat.wg.branch_audit SELECT k, cents " +
       "FROM q311_src WHERE k % 3 = 2")                                   // b2
     // (a) the branch head through time-travel syntax, main untouched
-    def agg(phase: String, from: String) = s.sql(
-      s"SELECT '$phase' AS phase, CAST(COUNT(*) AS BIGINT) AS n, " +
-        s"CAST(SUM(cents) AS BIGINT) AS sum_cents FROM $from")
-    val mainRow = agg("main", "graft_cat.wg").collect().head
-    val refRow = agg("branch_ref", "graft_cat.wg VERSION AS OF 'audit'")
-      .collect().head
+    val mainRow = g.collect("main", "graft_cat.wg")
+    val refRow = g.collect("branch_ref", "graft_cat.wg VERSION AS OF 'audit'")
     require(graft.sources.Versioned.versions(s, dir) == Seq(1L),
       "branch reads must not touch main's lineage")
     // (b) the branch COMMIT FEED — CDC shape: two batches, branch seqs
@@ -3205,7 +2875,7 @@ object Incremental {
       val q = StreamQueries.withEphemeralCheckpoint(s)(
         df.writeStream.format("memory").queryName(name)
           .option("checkpointLocation",
-            new java.io.File(root, s"ck_$name").getAbsolutePath)
+            new java.io.File(g.root, s"ck_$name").getAbsolutePath)
           .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
           .start())
       q.awaitTermination()
@@ -3220,17 +2890,9 @@ object Incremental {
     // bare table binding: the same rows under the table's own schema
     val bare = drain(s.readStream.table("graft_cat.wg.branch_audit"),
       "q311_feed_table").collect()
-    import s.implicits._
-    val feedCdc = (cdc.length.toLong,
-      cdc.map(_.getAs[Long]("cents")).sum)
-    val feedTable = (bare.length.toLong,
-      bare.map(_.getAs[Long]("cents")).sum)
-    Seq((mainRow.getString(0), mainRow.getLong(1), mainRow.getLong(2)),
-      (refRow.getString(0), refRow.getLong(1), refRow.getLong(2)),
-      ("feed_cdc", feedCdc._1, feedCdc._2),
-      ("feed_table", feedTable._1, feedTable._2))
-      .toDF("phase", "n", "sum_cents")
-      .orderBy("phase")
+    CatalogGate.phases(g.local(mainRow, refRow,
+      ("feed_cdc", cdc.length.toLong, cdc.map(_.getAs[Long]("cents")).sum),
+      ("feed_table", bare.length.toLong, bare.map(_.getAs[Long]("cents")).sum)))
   }
 
   // q313 — PARTITION-SPEC EVOLUTION AS A REQUIRED CONTRACT (q281
@@ -3267,13 +2929,8 @@ object Incremental {
       |  UNION ALL SELECT 'all', COUNT(*), SUM(cents) FROM p)
       |SELECT phase, CAST(n AS BIGINT) AS n, CAST(s AS BIGINT) AS sum_cents
       |FROM u ORDER BY phase""".stripMargin) { (s, d) =>
-    val wh = graft.engine.Staging.scratch("graft-catalog-gate", "q313_pevo")
-      .getAbsolutePath
-    s.conf.set("spark.sql.catalog.graft_cat", "graft.sources.v2.GraftCatalog")
-    s.conf.set("spark.sql.catalog.graft_cat.warehouse", wh)
-    Tables.part(s, d).select(col("p_partkey").as("k"),
-      (col("p_retailprice").cast("decimal(12,2)") * 100).cast(LongType)
-        .as("cents"),
+    val g = CatalogGate(s, "q313_pevo")
+    CatalogGate.partCents(s, d,
       concat(lit("c"), (col("p_partkey") % 2).cast("string")).as("cat"),
       concat(lit("r"), (col("p_partkey") % 3).cast("string")).as("region"))
       .createOrReplaceTempView("q313_src")
@@ -3282,7 +2939,7 @@ object Incremental {
       "PARTITIONED BY (cat)")
     s.sql("INSERT INTO graft_cat.pe SELECT * FROM q313_src " +
       "WHERE k % 5 < 2")                                                 // v1
-    val dir = s"$wh/pe"
+    val dir = s"${g.wh}/pe"
     // the evolution verb: ONE property write, no commit, no rewrite
     s.sql("ALTER TABLE graft_cat.pe " +
       "SET TBLPROPERTIES ('graft.partition'='region')")
@@ -3309,27 +2966,18 @@ object Incremental {
       .collect().map(r => (r.getString(0), r.getString(1))).toSet
     require(filesMeta.map(_._2) == Set("cat", "region"),
       s"t.files must show both spec eras: $filesMeta")
-    def files(cond: String): Long = s.sql(
-      s"SELECT COUNT(DISTINCT _file) FROM graft_cat.pe WHERE $cond")
-      .head.getLong(0)
     // one-axis predicates: exact on their own era, fail-open across
-    require(files("cat = 'c1'") == 4L,
-      s"cat=c1 reads 1 exact + 3 fail-open: ${files("cat = 'c1'")}")
-    require(files("region = 'r2'") == 3L,
-      s"region=r2 reads 1 exact + 2 fail-open: ${files("region = 'r2'")}")
+    g.requireFiles("graft_cat.pe", "cat = 'c1'", 4L,
+      "cat=c1 reads 1 exact + 3 fail-open")
+    g.requireFiles("graft_cat.pe", "region = 'r2'", 3L,
+      "region=r2 reads 1 exact + 2 fail-open")
     // the conjunction composes: each file prunes on ITS OWN axis
-    require(files("cat = 'c1' AND region = 'r2'") == 2L,
-      s"composed prune reads 1+1 files: " +
-        s"${files("cat = 'c1' AND region = 'r2'")}")
-    def read(phase: String, cond: String) = s.sql(
-      s"SELECT '$phase' AS phase, CAST(COUNT(*) AS BIGINT) AS n, " +
-        s"CAST(SUM(cents) AS BIGINT) AS sum_cents FROM graft_cat.pe " +
-        s"WHERE $cond")
-    Seq(read("c1", "cat = 'c1'"), read("r2", "region = 'r2'"),
-      read("c1r2", "cat = 'c1' AND region = 'r2'"),
-      read("all", "k IS NOT NULL"))
-      .reduce(_ unionByName _)
-      .orderBy("phase")
+    g.requireFiles("graft_cat.pe", "cat = 'c1' AND region = 'r2'", 2L,
+      "composed prune reads 1+1 files")
+    CatalogGate.phases(g.read("c1", "graft_cat.pe", "cat = 'c1'"),
+      g.read("r2", "graft_cat.pe", "region = 'r2'"),
+      g.read("c1r2", "graft_cat.pe", "cat = 'c1' AND region = 'r2'"),
+      g.read("all", "graft_cat.pe", "k IS NOT NULL"))
   }
 
   // q314 — `CALL system.cherry_pick` (the diverged-main publish
@@ -3364,29 +3012,20 @@ object Incremental {
       |  FROM p WHERE k % 4 IN (0, 1, 2))
       |SELECT phase, CAST(n AS BIGINT) AS n, CAST(s AS BIGINT) AS sum_cents
       |FROM u ORDER BY phase""".stripMargin) { (s, d) =>
-    val wh = graft.engine.Staging.scratch("graft-catalog-gate", "q314_cpick")
-      .getAbsolutePath
-    s.conf.set("spark.sql.catalog.graft_cat", "graft.sources.v2.GraftCatalog")
-    s.conf.set("spark.sql.catalog.graft_cat.warehouse", wh)
-    Tables.part(s, d).select(col("p_partkey").as("k"),
-      (col("p_retailprice").cast("decimal(12,2)") * 100).cast(LongType)
-        .as("cents"))
-      .createOrReplaceTempView("q314_src")
+    val g = CatalogGate(s, "q314_cpick")
+    CatalogGate.partCents(s, d).createOrReplaceTempView("q314_src")
     s.sql("CREATE TABLE graft_cat.wc (k BIGINT, cents BIGINT)")
     s.sql("INSERT INTO graft_cat.wc SELECT k, cents FROM q314_src " +
       "WHERE k % 4 = 0")                                                 // v1
-    val dir = s"$wh/wc"
+    val dir = s"${g.wh}/wc"
     s.sql("CALL graft_cat.system.branch('wc', 'audit')")
     s.sql("INSERT INTO graft_cat.wc.branch_audit SELECT k, cents " +
       "FROM q314_src WHERE k % 4 = 1")                                   // b1
-    def agg(phase: String, from: String) = s.sql(
-      s"SELECT '$phase' AS phase, CAST(COUNT(*) AS BIGINT) AS n, " +
-        s"CAST(SUM(cents) AS BIGINT) AS sum_cents FROM $from")
-    val mainPre = agg("main_pre", "graft_cat.wc").collect().head
+    val mainPre = g.collect("main_pre", "graft_cat.wc")
     // an UNRELATED producer append moves main past the branch base
     s.sql("INSERT INTO graft_cat.wc SELECT k, cents FROM q314_src " +
       "WHERE k % 4 = 2")                                                 // v2
-    val mainMoved = agg("main_moved", "graft_cat.wc").collect().head
+    val mainMoved = g.collect("main_moved", "graft_cat.wc")
     // the ancestor rule: fast_forward refuses, NOTHING moves
     val ff = try { s.sql("CALL graft_cat.system.fast_forward('wc', 'audit')")
       .collect(); None } catch { case e: Exception => Some(e) }
@@ -3408,13 +3047,8 @@ object Incremental {
       "exactly the branch's append-only delta publishes")
     require(graft.sources.Versioned.branches(s, dir).isEmpty,
       "a cherry-picked branch is dropped")
-    val published = agg("published", "graft_cat.wc").collect().head
-    import s.implicits._
-    Seq((mainPre.getString(0), mainPre.getLong(1), mainPre.getLong(2)),
-      (mainMoved.getString(0), mainMoved.getLong(1), mainMoved.getLong(2)),
-      (published.getString(0), published.getLong(1), published.getLong(2)))
-      .toDF("phase", "n", "sum_cents")
-      .orderBy("phase")
+    val published = g.collect("published", "graft_cat.wc")
+    CatalogGate.phases(g.local(mainPre, mainMoved, published))
   }
 
   // q315 — OPTIMIZE / OPTIMIZE ZORDER PRESERVE A `PARTITIONED BY`
@@ -3453,30 +3087,18 @@ object Incremental {
       |  UNION ALL SELECT 'all', COUNT(*), SUM(cents) FROM p)
       |SELECT phase, CAST(n AS BIGINT) AS n, CAST(s AS BIGINT) AS sum_cents
       |FROM u ORDER BY phase""".stripMargin) { (s, d) =>
-    val wh = graft.engine.Staging.scratch("graft-catalog-gate", "q315_popt")
-      .getAbsolutePath
-    s.conf.set("spark.sql.catalog.graft_cat", "graft.sources.v2.GraftCatalog")
-    s.conf.set("spark.sql.catalog.graft_cat.warehouse", wh)
-    Tables.part(s, d).select(col("p_partkey").as("k"),
-      (col("p_retailprice").cast("decimal(12,2)") * 100).cast(LongType)
-        .as("cents"),
+    val g = CatalogGate(s, "q315_popt")
+    CatalogGate.partCents(s, d,
       concat(lit("c"), (col("p_partkey") % 2).cast("string")).as("cat"))
       .createOrReplaceTempView("q315_src")
     s.sql("CREATE TABLE graft_cat.po (k BIGINT, cents BIGINT, cat STRING) " +
       "PARTITIONED BY (cat)")
     Seq(0, 1, 2).foreach(m => s.sql("INSERT INTO graft_cat.po " +
       s"SELECT * FROM q315_src WHERE k % 3 = $m"))               // v1..v3
-    val dir = s"$wh/po"
-    def files(table: String, cond: String): Long = s.sql(
-      s"SELECT COUNT(DISTINCT _file) FROM graft_cat.$table WHERE $cond")
-      .head.getLong(0)
-    require(files("po", "cat = 'c1'") == 3L,
-      s"3 commits lay 3 c1-files pre-compaction: ${files("po", "cat = 'c1'")}")
-    def read(phase: String, table: String, cond: String) = s.sql(
-      s"SELECT '$phase' AS phase, CAST(COUNT(*) AS BIGINT) AS n, " +
-        s"CAST(SUM(cents) AS BIGINT) AS sum_cents FROM graft_cat.$table " +
-        s"WHERE $cond")
-    val pre = read("c1_pre", "po", "cat = 'c1'").collect().head
+    val dir = s"${g.wh}/po"
+    g.requireFiles("graft_cat.po", "cat = 'c1'", 3L,
+      "3 commits lay 3 c1-files pre-compaction")
+    val pre = g.collect("c1_pre", "graft_cat.po", "cat = 'c1'")
     s.sql("CALL graft_cat.system.optimize('po', 4)")                     // v4
     val m4 = graft.sources.Versioned.manifestOf(s, dir, 4)
     require(m4.entries.size == 2 &&
@@ -3484,12 +3106,10 @@ object Incremental {
       m4.ptags.map(_._3).toSet == Set("c0", "c1"),
       s"compaction must land the layout invariant — one tagged file " +
         s"per value: ${m4.entries} / ${m4.ptags}")
-    require(files("po", "cat = 'c1'") == 1L,
-      s"post-compaction pruning reads exactly 1 file: " +
-        s"${files("po", "cat = 'c1'")}")
-    val post = read("c1_post", "po", "cat = 'c1'").collect().head
-    require(pre.getLong(1) == post.getLong(1) &&
-      pre.getLong(2) == post.getLong(2),
+    g.requireFiles("graft_cat.po", "cat = 'c1'", 1L,
+      "post-compaction pruning reads exactly 1 file")
+    val post = g.collect("c1_post", "graft_cat.po", "cat = 'c1'")
+    require(pre._2 == post._2 && pre._3 == post._3,
       "compaction is logically identical")
     // ZORDER within the layout: same invariant, z-clustered files
     s.sql("CREATE TABLE graft_cat.pz (k BIGINT, cents BIGINT, cat STRING) " +
@@ -3497,21 +3117,19 @@ object Incremental {
     Seq(0, 1).foreach(m => s.sql("INSERT INTO graft_cat.pz " +
       s"SELECT * FROM q315_src WHERE k % 2 = $m"))               // v1..v2
     s.sql("CALL graft_cat.system.optimize_zorder('pz', 8, 'k', 'cents')") // v3
-    val mz = graft.sources.Versioned.manifestOf(s, s"$wh/pz", 3)
+    val mz = graft.sources.Versioned.manifestOf(s, s"${g.wh}/pz", 3)
     require(mz.entries.size == 2 &&
       mz.ptags.map(_._3).toSet == Set("c0", "c1"),
       s"zorder must keep the layout invariant: ${mz.ptags}")
-    require(files("pz", "cat = 'c0'") == 1L,
+    g.requireFiles("graft_cat.pz", "cat = 'c0'", 1L,
       "zorder files prune on the partition axis")
     // c1_pre was COLLECTED before the compaction and REQUIREd equal to
     // the post-compaction answer above; emitting the live read twice
     // is therefore exact for both phases
-    Seq(read("c1_pre", "po", "cat = 'c1'"),
-      read("c1_post", "po", "cat = 'c1'"),
-      read("z_ab", "pz", "cat = 'c0' AND k % 7 < 2"),
-      read("all", "po", "k IS NOT NULL"))
-      .reduce(_ unionByName _)
-      .orderBy("phase")
+    CatalogGate.phases(g.read("c1_pre", "graft_cat.po", "cat = 'c1'"),
+      g.read("c1_post", "graft_cat.po", "cat = 'c1'"),
+      g.read("z_ab", "graft_cat.pz", "cat = 'c0' AND k % 7 < 2"),
+      g.read("all", "graft_cat.po", "k IS NOT NULL"))
   }
 
   // q316 — BRANCH STAGING ON A `PARTITIONED BY` TABLE (round 16 — the
@@ -3548,20 +3166,15 @@ object Incremental {
       |  UNION ALL SELECT 'all', COUNT(*), SUM(cents) FROM p)
       |SELECT phase, CAST(n AS BIGINT) AS n, CAST(s AS BIGINT) AS sum_cents
       |FROM u ORDER BY phase""".stripMargin) { (s, d) =>
-    val wh = graft.engine.Staging.scratch("graft-catalog-gate", "q316_bpart")
-      .getAbsolutePath
-    s.conf.set("spark.sql.catalog.graft_cat", "graft.sources.v2.GraftCatalog")
-    s.conf.set("spark.sql.catalog.graft_cat.warehouse", wh)
-    Tables.part(s, d).select(col("p_partkey").as("k"),
-      (col("p_retailprice").cast("decimal(12,2)") * 100).cast(LongType)
-        .as("cents"),
+    val g = CatalogGate(s, "q316_bpart")
+    CatalogGate.partCents(s, d,
       concat(lit("c"), (col("p_partkey") % 2).cast("string")).as("cat"))
       .createOrReplaceTempView("q316_src")
     s.sql("CREATE TABLE graft_cat.bp (k BIGINT, cents BIGINT, cat STRING) " +
       "PARTITIONED BY (cat)")
     s.sql("INSERT INTO graft_cat.bp SELECT * FROM q316_src " +
       "WHERE k % 3 = 0")                                                 // v1
-    val dir = s"$wh/bp"
+    val dir = s"${g.wh}/bp"
     s.sql("CALL graft_cat.system.branch('bp', 'audit')")
     s.sql("INSERT INTO graft_cat.bp.branch_audit SELECT * FROM q316_src " +
       "WHERE k % 3 = 1")                                                 // b1
@@ -3576,12 +3189,8 @@ object Incremental {
       stagedTags.map(_._3).toSet == Set("c0", "c1"),
       s"branch staging must lay one cat-tagged file per value: " +
         s"$stagedFiles / $stagedTags")
-    def agg(phase: String, from: String) = s.sql(
-      s"SELECT '$phase' AS phase, CAST(COUNT(*) AS BIGINT) AS n, " +
-        s"CAST(SUM(cents) AS BIGINT) AS sum_cents FROM $from")
-    val mainPre = agg("main_pre", "graft_cat.bp").collect().head
-    val branchRow = agg("branch", "graft_cat.bp.branch_audit")
-      .collect().head
+    val mainPre = g.collect("main_pre", "graft_cat.bp")
+    val branchRow = g.collect("branch", "graft_cat.bp.branch_audit")
     // unrelated producer traffic moves main; cherry_pick publishes
     s.sql("INSERT INTO graft_cat.bp SELECT * FROM q316_src " +
       "WHERE k % 3 = 2")                                                 // v2
@@ -3594,24 +3203,11 @@ object Incremental {
         .exists(_._2 == "cat")),
       s"EVERY published file keeps its tag — one per value per " +
         s"commit: ${m3.entries.size} files, tags ${m3.ptags}")
-    val c1Files = s.sql("SELECT COUNT(DISTINCT _file) FROM graft_cat.bp " +
-      "WHERE cat = 'c1'").head.getLong(0)
-    require(c1Files == 3L,
-      s"a partition-value query reads one file per commit (3 of 6): " +
-        s"$c1Files")
-    import s.implicits._
-    val pub = s.sql("SELECT CAST(COUNT(*) AS BIGINT) AS n, " +
-      "CAST(SUM(cents) AS BIGINT) AS sum_cents FROM graft_cat.bp " +
-      "WHERE cat = 'c1'").collect().head
-    val allRow = s.sql("SELECT CAST(COUNT(*) AS BIGINT) AS n, " +
-      "CAST(SUM(cents) AS BIGINT) AS sum_cents FROM graft_cat.bp")
-      .collect().head
-    Seq((mainPre.getString(0), mainPre.getLong(1), mainPre.getLong(2)),
-      (branchRow.getString(0), branchRow.getLong(1), branchRow.getLong(2)),
-      ("pub_c1", pub.getLong(0), pub.getLong(1)),
-      ("all", allRow.getLong(0), allRow.getLong(1)))
-      .toDF("phase", "n", "sum_cents")
-      .orderBy("phase")
+    g.requireFiles("graft_cat.bp", "cat = 'c1'", 3L,
+      "a partition-value query reads one file per commit (3 of 6)")
+    CatalogGate.phases(g.local(mainPre, branchRow,
+      g.collect("pub_c1", "graft_cat.bp", "cat = 'c1'"),
+      g.collect("all", "graft_cat.bp")))
   }
 
   // q317 — ROW-LEVEL VERBS PRESERVE A `PARTITIONED BY` LAYOUT (round
@@ -3653,19 +3249,14 @@ object Incremental {
       |  UNION ALL SELECT 'all', COUNT(*), SUM(cents) FROM f)
       |SELECT phase, CAST(n AS BIGINT) AS n, CAST(s AS BIGINT) AS sum_cents
       |FROM u ORDER BY phase""".stripMargin) { (s, d) =>
-    val wh = graft.engine.Staging.scratch("graft-catalog-gate", "q317_rlp")
-      .getAbsolutePath
-    s.conf.set("spark.sql.catalog.graft_cat", "graft.sources.v2.GraftCatalog")
-    s.conf.set("spark.sql.catalog.graft_cat.warehouse", wh)
-    Tables.part(s, d).select(col("p_partkey").as("k"),
-      (col("p_retailprice").cast("decimal(12,2)") * 100).cast(LongType)
-        .as("cents"),
+    val g = CatalogGate(s, "q317_rlp")
+    CatalogGate.partCents(s, d,
       concat(lit("c"), (col("p_partkey") % 2).cast("string")).as("cat"))
       .createOrReplaceTempView("q317_src")
     s.sql("CREATE TABLE graft_cat.pr (k BIGINT, cents BIGINT, cat STRING) " +
       "PARTITIONED BY (cat)")
     s.sql("INSERT INTO graft_cat.pr SELECT * FROM q317_src")             // v1
-    val dir = s"$wh/pr"
+    val dir = s"${g.wh}/pr"
     def layout(v: Long): (Int, Set[(String, String)]) = {
       val m = graft.sources.Versioned.manifestOf(s, dir, v)
       val tagOf = m.ptags.groupBy(_._1)
@@ -3674,14 +3265,12 @@ object Incremental {
           s"${m.entries.map(_._1).filterNot(tagOf.contains)}")
       (m.entries.size, m.ptags.map(t => (t._2, t._3)).toSet)
     }
-    def files(cond: String): Long = s.sql(
-      s"SELECT COUNT(DISTINCT _file) FROM graft_cat.pr WHERE $cond")
-      .head.getLong(0)
     // UPDATE: k%10=3 is always odd → only the c1 file rewrites, and it
     // re-clusters back to one tagged c1 file
     s.sql("UPDATE graft_cat.pr SET cents = cents + 1 WHERE k % 10 = 3")  // v2
-    require(layout(2) == ((2, Set(("cat", "c0"), ("cat", "c1")))),
-      s"update must re-tag the rewrite: ${layout(2)}")
+    val l2 = layout(2)
+    require(l2 == ((2, Set(("cat", "c0"), ("cat", "c1")))),
+      s"update must re-tag the rewrite: $l2")
     // a PARTITION-MOVING update: rows leave c1 for c0 — the rewrite
     // re-clusters by the NEW values, so both axes stay exact
     s.sql("UPDATE graft_cat.pr SET cat = 'c0' WHERE cat = 'c1' " +
@@ -3689,24 +3278,19 @@ object Incremental {
     val (n3, tags3) = layout(3)
     require(n3 == 3 && tags3 == Set(("cat", "c0"), ("cat", "c1")),
       s"moved rows land in a c0-tagged file: $n3 / $tags3")
-    require(files("cat = 'c1'") == 1L && files("cat = 'c0'") == 2L,
-      s"both axes prune exactly after the move: " +
-        s"c1=${files("cat = 'c1'")} c0=${files("cat = 'c0'")}")
+    g.requireFiles("graft_cat.pr", "cat = 'c1'", 1L,
+      "c1 prunes exactly after the move")
+    g.requireFiles("graft_cat.pr", "cat = 'c0'", 2L,
+      "c0 prunes exactly after the move")
     // DELETE (translatable predicate → the deleteWhere COW path)
     s.sql("DELETE FROM graft_cat.pr WHERE k % 10 = 7")                   // v4
     val (n4, tags4) = layout(4)
     require(tags4 == Set(("cat", "c0"), ("cat", "c1")),
       s"delete must re-tag the rewrite: $tags4")
-    require(files("cat = 'c1'") == 1L,
-      s"pruning exact after delete: ${files("cat = 'c1'")}")
-    def read(phase: String, cond: String) = s.sql(
-      s"SELECT '$phase' AS phase, CAST(COUNT(*) AS BIGINT) AS n, " +
-        s"CAST(SUM(cents) AS BIGINT) AS sum_cents FROM graft_cat.pr " +
-        s"WHERE $cond")
-    Seq(read("c0", "cat = 'c0'"), read("c1", "cat = 'c1'"),
-      read("all", "k IS NOT NULL"))
-      .reduce(_ unionByName _)
-      .orderBy("phase")
+    g.requireFiles("graft_cat.pr", "cat = 'c1'", 1L, "pruning exact after delete")
+    CatalogGate.phases(g.read("c0", "graft_cat.pr", "cat = 'c0'"),
+      g.read("c1", "graft_cat.pr", "cat = 'c1'"),
+      g.read("all", "graft_cat.pr", "k IS NOT NULL"))
   }
 
   val all: Seq[QueryDef] = Seq(q83IncrementalAgg, q93Scd2, q106NeardupProbe,

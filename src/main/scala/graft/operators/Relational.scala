@@ -498,7 +498,7 @@ object Relational {
       }
       scala.concurrent.Await.result(
         scala.concurrent.Future.sequence(setups),
-        scala.concurrent.duration.Duration(600, "s"))
+        scala.concurrent.duration.Duration.Inf)
     } finally pool.shutdown()
     val sql =
       """SELECT n_name,

@@ -4,7 +4,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.TimestampNTZType
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-import graft.engine.{QueryDef, Tables}
+import graft.engine.{CatalogGate, QueryDef, Tables}
 
 /** Structured Streaming paths on the driver's DuckDB correctness gate.
   *
@@ -616,9 +616,7 @@ object StreamQueries {
     val root = graft.engine.Staging.scratch("graft-stream-gate", "q273_follow")
     val dir = new java.io.File(root, "table").getAbsolutePath
     val cursor = new java.io.File(root, "cursor").getAbsolutePath
-    val part = Tables.part(s, d).select(col("p_partkey"),
-      (col("p_retailprice").cast("decimal(12,2)") * 100)
-        .cast("long").as("cents"))
+    val part = CatalogGate.partCents(s, d).toDF("p_partkey", "cents")
     val buf = scala.collection.mutable.ArrayBuffer
       .empty[(Long, Long, String, Long, Long, Long)]
     def drain(): Int = graft.streaming.EventStream.followVersionedChanges(
@@ -690,9 +688,7 @@ object StreamQueries {
     val root = graft.engine.Staging.scratch("graft-stream-gate", "q279_txn")
     val dir = new java.io.File(root, "table").getAbsolutePath
     val consumer = new java.io.File(root, "consumer").getAbsolutePath
-    val part = Tables.part(s, d).select(col("p_partkey"),
-      (col("p_retailprice").cast("decimal(12,2)") * 100)
-        .cast("long").as("cents"))
+    val part = CatalogGate.partCents(s, d).toDF("p_partkey", "cents")
     def transform(df: DataFrame, a: Long, b: Long): DataFrame =
       df.groupBy("change_type")
         .agg(count(lit(1)).as("n"),
@@ -773,9 +769,7 @@ object StreamQueries {
     val root = graft.engine.Staging.scratch("graft-stream-gate", "q280_source")
     val dir = new java.io.File(root, "table").getAbsolutePath
     val ck = new java.io.File(root, "ck").getAbsolutePath
-    val part = Tables.part(s, d).select(col("p_partkey"),
-      (col("p_retailprice").cast("decimal(12,2)") * 100)
-        .cast("long").as("cents"))
+    val part = CatalogGate.partCents(s, d).toDF("p_partkey", "cents")
     graft.sources.Versioned.create(
       part.filter(col("p_partkey") % 3 =!= 0), dir)               // v1
     graft.sources.Versioned.upsert(s, dir, "p_partkey",
@@ -852,9 +846,7 @@ object StreamQueries {
     val stage = new java.io.File(root, "stage").getAbsolutePath
     val dir = new java.io.File(root, "table").getAbsolutePath
     val ck = new java.io.File(root, "ck").getAbsolutePath
-    val part = Tables.part(s, d).select(col("p_partkey").as("k"),
-      (col("p_retailprice").cast("decimal(12,2)") * 100)
-        .cast("long").as("cents"))
+    val part = CatalogGate.partCents(s, d)
     // three deterministic slices, one parquet file each — with
     // maxFilesPerTrigger=1 each becomes its own epoch commit; the file
     // source admits oldest-mtime first, so mtimes are pinned
@@ -880,12 +872,8 @@ object StreamQueries {
     drain() // nothing new → no commit
     require(graft.sources.Versioned.versions(s, dir) == Seq(1L, 2L, 3L),
       "a drain with no new data must commit nothing")
-    (1L to 3L).map { v =>
-      graft.sources.Versioned.readVersion(s, dir, v)
-        .agg(count(lit(1)).as("n"), sum("cents").cast("long").as("sum_cents"))
-        .select(lit(s"v$v").as("phase"), col("n"), col("sum_cents"))
-    }.reduce(_ unionByName _)
-      .orderBy("phase")
+    CatalogGate.phases((1L to 3L).map(v =>
+      CatalogGate.phaseOf(s"v$v", graft.sources.Versioned.readVersion(s, dir, v))): _*)
   }
 
   // q289 — BATCH CHANGE READ of the versioned table (Delta's batch
@@ -925,9 +913,7 @@ object StreamQueries {
       |ORDER BY from_v, to_v, change_type""".stripMargin) { (s, d) =>
     val root = graft.engine.Staging.scratch("graft-stream-gate", "q289_batch")
     val dir = new java.io.File(root, "table").getAbsolutePath
-    val part = Tables.part(s, d).select(col("p_partkey"),
-      (col("p_retailprice").cast("decimal(12,2)") * 100)
-        .cast("long").as("cents"))
+    val part = CatalogGate.partCents(s, d).toDF("p_partkey", "cents")
     graft.sources.Versioned.create(
       part.filter(col("p_partkey") % 3 =!= 0), dir)               // v1
     graft.sources.Versioned.upsert(s, dir, "p_partkey",
@@ -988,13 +974,8 @@ object StreamQueries {
       |  UNION ALL SELECT 'v3', COUNT(*), SUM(cents) FROM p WHERE k % 3 = 2)
       |SELECT phase, CAST(n AS BIGINT) AS n, CAST(s AS BIGINT) AS sum_cents
       |FROM u ORDER BY phase""".stripMargin) { (s, d) =>
-    val root = graft.engine.Staging.scratch("graft-stream-gate", "q295_table")
-    s.conf.set("spark.sql.catalog.graft_cat", "graft.sources.v2.GraftCatalog")
-    s.conf.set("spark.sql.catalog.graft_cat.warehouse", root.getAbsolutePath)
-    Tables.part(s, d).select(col("p_partkey").as("k"),
-      (col("p_retailprice").cast("decimal(12,2)") * 100)
-        .cast("long").as("cents"))
-      .createOrReplaceTempView("q295_src")
+    val g = CatalogGate(s, "q295_table", "graft-stream-gate")
+    CatalogGate.partCents(s, d).createOrReplaceTempView("q295_src")
     s.sql("CREATE TABLE graft_cat.sx (k BIGINT, cents BIGINT)")
     (0 to 2).foreach(i => s.sql(
       s"INSERT INTO graft_cat.sx SELECT k, cents FROM q295_src WHERE k % 3 = $i"))
@@ -1014,17 +995,14 @@ object StreamQueries {
         ()
       }
       .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .option("checkpointLocation", new java.io.File(root, "ck").getAbsolutePath)
+      .option("checkpointLocation", new java.io.File(g.root, "ck").getAbsolutePath)
       .start())
     q.awaitTermination()
     require(buf.size == 3,
       s"three committed versions at one per trigger must drain as three " +
         s"bounded micro-batches, got ${buf.size}")
-    import s.implicits._
-    buf.toSeq.zipWithIndex
-      .map { case ((n, sum), i) => (s"v${i + 1}", n, sum) }
-      .toDF("phase", "n", "sum_cents")
-      .orderBy("phase")
+    CatalogGate.phases(g.local(buf.toSeq.zipWithIndex
+      .map { case ((n, sum), i) => (s"v${i + 1}", n, sum) }: _*))
   }
 
   // q297 — STREAMING WRITE BY TABLE NAME (`writeStream.toTable`, the
@@ -1056,17 +1034,12 @@ object StreamQueries {
       |  UNION ALL SELECT 'v3', COUNT(*), SUM(cents) FROM p)
       |SELECT phase, CAST(n AS BIGINT) AS n, CAST(s AS BIGINT) AS sum_cents
       |FROM u ORDER BY phase""".stripMargin) { (s, d) =>
-    val root = graft.engine.Staging.scratch("graft-stream-gate", "q297_totable")
-    val stage = new java.io.File(root, "stage").getAbsolutePath
-    val ck = new java.io.File(root, "ck").getAbsolutePath
-    s.conf.set("spark.sql.catalog.graft_cat", "graft.sources.v2.GraftCatalog")
-    s.conf.set("spark.sql.catalog.graft_cat.warehouse", root.getAbsolutePath)
-    val part = Tables.part(s, d).select(col("p_partkey").as("k"),
-      (col("p_retailprice").cast("decimal(12,2)") * 100)
-        .cast("long").as("cents"))
+    val g = CatalogGate(s, "q297_totable", "graft-stream-gate")
+    val stage = new java.io.File(g.root, "stage").getAbsolutePath
+    val ck = new java.io.File(g.root, "ck").getAbsolutePath
     new java.io.File(stage).mkdirs()
-    stageSliced(part, col("k") % 3, 3, new java.io.File(stage), root,
-      m => 1700000000000L + m * 60000L)
+    stageSliced(CatalogGate.partCents(s, d), col("k") % 3, 3,
+      new java.io.File(stage), g.root, m => 1700000000000L + m * 60000L)
     s.sql("CREATE TABLE graft_cat.ws (k BIGINT, cents BIGINT)")
     def drain(): Unit = {
       val q = withEphemeralCheckpoint(s)(s.readStream
@@ -1080,20 +1053,15 @@ object StreamQueries {
       q.awaitTermination()
     }
     drain()
-    val dir = s"$root/ws"
+    val dir = s"${g.wh}/ws"
     val vs = graft.sources.Versioned.versions(s, dir)
     require(vs == Seq(1L, 2L, 3L),
       s"three one-file epochs must land as three commits, got $vs")
     drain() // nothing new → no commit (the #txn watermark)
     require(graft.sources.Versioned.versions(s, dir) == Seq(1L, 2L, 3L),
       "a drain with no new data must commit nothing")
-    (1L to 3L).map { v =>
-      s.sql(s"SELECT CAST(COUNT(*) AS BIGINT) AS n, " +
-        s"CAST(SUM(cents) AS BIGINT) AS sum_cents " +
-        s"FROM graft_cat.ws VERSION AS OF $v")
-        .select(lit(s"v$v").as("phase"), col("n"), col("sum_cents"))
-    }.reduce(_ unionByName _)
-      .orderBy("phase")
+    CatalogGate.phases((1L to 3L).map(v =>
+      g.read(s"v$v", s"graft_cat.ws VERSION AS OF $v")): _*)
   }
 
   // q308 — STREAMING WRITES INTO A `PARTITIONED BY` TABLE (closing the
@@ -1135,18 +1103,14 @@ object StreamQueries {
       |    AND TIMESTAMP '1970-01-02 23:59:59')
       |SELECT phase, CAST(n AS BIGINT) AS n, CAST(s AS BIGINT) AS sum_cents
       |FROM u ORDER BY phase""".stripMargin) { (s, d) =>
-    val root = graft.engine.Staging.scratch("graft-stream-gate", "q308_part")
-    val stage = new java.io.File(root, "stage").getAbsolutePath
-    val ck = new java.io.File(root, "ck").getAbsolutePath
-    s.conf.set("spark.sql.catalog.graft_cat", "graft.sources.v2.GraftCatalog")
-    s.conf.set("spark.sql.catalog.graft_cat.warehouse", root.getAbsolutePath)
-    val part = Tables.part(s, d).select(col("p_partkey").as("k"),
-      (col("p_retailprice").cast("decimal(12,2)") * 100)
-        .cast("long").as("cents"),
+    val g = CatalogGate(s, "q308_part", "graft-stream-gate")
+    val stage = new java.io.File(g.root, "stage").getAbsolutePath
+    val ck = new java.io.File(g.root, "ck").getAbsolutePath
+    val part = CatalogGate.partCents(s, d,
       timestamp_micros((col("p_partkey") % 4) * lit(86400000000L) +
         col("p_partkey") * lit(1000000L)).as("ts"))
     new java.io.File(stage).mkdirs()
-    stageSliced(part, col("k") % 3, 3, new java.io.File(stage), root,
+    stageSliced(part, col("k") % 3, 3, new java.io.File(stage), g.root,
       m => 1700000000000L + m * 60000L)
     s.sql("CREATE TABLE graft_cat.sp (k BIGINT, cents BIGINT, ts TIMESTAMP) " +
       "PARTITIONED BY (days(ts))")
@@ -1162,7 +1126,7 @@ object StreamQueries {
       q.awaitTermination()
     }
     drain()
-    val dir = s"$root/sp"
+    val dir = s"${g.wh}/sp"
     val vs = graft.sources.Versioned.versions(s, dir)
     require(vs == Seq(1L, 2L, 3L),
       s"three one-file epochs must land as three commits, got $vs")
@@ -1185,24 +1149,14 @@ object StreamQueries {
     // the clustered commit exists to preserve
     val day1 = "ts BETWEEN TIMESTAMP '1970-01-02 00:00:00' " +
       "AND TIMESTAMP '1970-01-02 23:59:59'"
-    val day1Files = s.sql("SELECT COUNT(DISTINCT _file) " +
-      s"FROM graft_cat.sp WHERE $day1").head.getLong(0)
-    require(day1Files == 3L,
-      s"a 1-day range must read 1 file per epoch (3 of 12): $day1Files")
+    g.requireFiles("graft_cat.sp", day1, 3L,
+      "a 1-day range must read 1 file per epoch (3 of 12)")
     drain() // nothing new → no commit (the #txn watermark)
     require(graft.sources.Versioned.versions(s, dir) == Seq(1L, 2L, 3L),
       "a drain with no new data must commit nothing")
-    (1L to 3L).map { v =>
-      s.sql(s"SELECT CAST(COUNT(*) AS BIGINT) AS n, " +
-        s"CAST(SUM(cents) AS BIGINT) AS sum_cents " +
-        s"FROM graft_cat.sp VERSION AS OF $v")
-        .select(lit(s"v$v").as("phase"), col("n"), col("sum_cents"))
-    }.reduce(_ unionByName _)
-      .unionByName(s.sql(s"SELECT CAST(COUNT(*) AS BIGINT) AS n, " +
-        s"CAST(SUM(cents) AS BIGINT) AS sum_cents FROM graft_cat.sp " +
-        s"WHERE $day1")
-        .select(lit("day1").as("phase"), col("n"), col("sum_cents")))
-      .orderBy("phase")
+    CatalogGate.phases((1L to 3L).map(v =>
+      g.read(s"v$v", s"graft_cat.sp VERSION AS OF $v")) :+
+      g.read("day1", "graft_cat.sp", day1): _*)
   }
 
   // q318 — MOR-AWARE CHANGE FEED (closing the change stream's last
@@ -1244,18 +1198,13 @@ object StreamQueries {
       |  WHERE k % 3 = 0 AND k % 9 <> 0)
       |SELECT phase, CAST(n AS BIGINT) AS n, CAST(s AS BIGINT) AS sum_cents
       |FROM u ORDER BY phase""".stripMargin) { (s, d) =>
-    val root = graft.engine.Staging.scratch("graft-stream-gate", "q318_morcdc")
-    s.conf.set("spark.sql.catalog.graft_cat", "graft.sources.v2.GraftCatalog")
-    s.conf.set("spark.sql.catalog.graft_cat.warehouse", root.getAbsolutePath)
-    Tables.part(s, d).select(col("p_partkey").as("k"),
-      (col("p_retailprice").cast("decimal(12,2)") * 100)
-        .cast("long").as("cents"))
-      .createOrReplaceTempView("q318_src")
+    val g = CatalogGate(s, "q318_morcdc", "graft-stream-gate")
+    CatalogGate.partCents(s, d).createOrReplaceTempView("q318_src")
     s.sql("CREATE TABLE graft_cat.mc (k BIGINT, cents BIGINT) " +
       "TBLPROPERTIES('graft.key'='k','graft.merge.mode'='mor')")
     s.sql("INSERT INTO graft_cat.mc SELECT k, cents FROM q318_src " +
       "WHERE k % 3 = 0")                                                 // v1
-    val dir = s"${root.getAbsolutePath}/mc"
+    val dir = s"${g.wh}/mc"
     s.sql("DELETE FROM graft_cat.mc WHERE k % 9 = 0")                    // v2
     val m2 = graft.sources.Versioned.manifestOf(s, dir, 2)
     require(m2.dvs.nonEmpty && m2.entries ==
@@ -1265,24 +1214,15 @@ object StreamQueries {
     def feed(from: Int, to: Int) = s.read.format("graft-versioned")
       .option("path", dir).option("changesFrom", from)
       .option("changesTo", to).load()
-    def agg(phase: String, df: org.apache.spark.sql.DataFrame) = {
-      val r = df.agg(count(lit(1)), sum(col("cents"))).head
-      (phase, r.getLong(0), r.getLong(1))
-    }
     val p12 = feed(1, 2).collect()
     require(p12.forall(_.getAs[String]("_change_side") == "old"),
       "a sidecar-only pair is pure delete events")
     val p23 = feed(2, 3)
-    val del = agg("del", feed(1, 2))
-    val updOld = agg("upd_old", p23.filter(col("_change_side") === "old"))
-    val updNew = agg("upd_new", p23.filter(col("_change_side") === "new"))
-    val headR = s.sql("SELECT CAST(COUNT(*) AS BIGINT) AS n, " +
-      "CAST(SUM(cents) AS BIGINT) AS sum_cents FROM graft_cat.mc")
-      .collect().head
-    import s.implicits._
-    Seq(del, updOld, updNew, ("head", headR.getLong(0), headR.getLong(1)))
-      .toDF("phase", "n", "sum_cents")
-      .orderBy("phase")
+    import CatalogGate.{collectPhase, phaseOf}
+    CatalogGate.phases(g.local(collectPhase(phaseOf("del", feed(1, 2))),
+      collectPhase(phaseOf("upd_old", p23.filter(col("_change_side") === "old"))),
+      collectPhase(phaseOf("upd_new", p23.filter(col("_change_side") === "new"))),
+      g.collect("head", "graft_cat.mc")))
   }
 
   val all: Seq[QueryDef] = Seq(q150StreamCurate, q151StreamWindow,

@@ -184,4 +184,15 @@ class AnalyticsSpec extends AnyFunSuite {
         vals.toDF("v"), Seq("r301" -> 301L))
     }
   }
+
+  test("exactSelectRanks rejects duplicate target labels") {
+    import spark.implicits._
+    val vals = (1L to 50L).toDF("v")
+    // two ranks under one label would collapse to a single finish value
+    val e = intercept[IllegalArgumentException] {
+      graft.operators.Analytics.exactSelectRanks(
+        vals, Seq("p" -> 10L, "p" -> 40L), threshold = 5L)
+    }
+    assert(e.getMessage.contains("duplicate target labels"))
+  }
 }
