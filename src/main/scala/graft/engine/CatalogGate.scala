@@ -4,6 +4,8 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.LongType
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 
+import graft.sources.Versioned
+
 /** The shared harness of the versioned-table scenario gates
   * (`operators.Incremental`, `operators.StreamQueries`). A gate builds a
   * table history over `part`, checks its scenario, and answers with one
@@ -71,6 +73,24 @@ object CatalogGate {
     Tables.part(s, d).select(Seq(col("p_partkey").as("k"),
       (col("p_retailprice").cast("decimal(12,2)") * 100).cast(LongType)
         .as("cents")) ++ extra: _*)
+
+  /** Commits q211's three-version history of [[partCents]] (as
+    * `p_partkey`, `cents`) into the versioned table at `dir`: v1 creates
+    * the `p_partkey % 3 != 0` rows, v2 upserts the `% 5` ones bumped by
+    * 100000 and inserts the `% 3 == 0` ones, v3 deletes the `% 7` keys.
+    * Returns the source frame for the gate's own later steps.
+    */
+  def q211History(s: SparkSession, d: String, dir: String): DataFrame = {
+    val part = partCents(s, d).toDF("p_partkey", "cents")
+    Versioned.create(part.filter(col("p_partkey") % 3 =!= 0), dir)
+    Versioned.upsert(s, dir, "p_partkey",
+      part.filter(col("p_partkey") % 3 =!= 0 && col("p_partkey") % 5 === 0)
+        .withColumn("cents", col("cents") + 100000)
+        .unionByName(part.filter(col("p_partkey") % 3 === 0)))
+    Versioned.deleteKeys(s, dir, "p_partkey",
+      part.filter(col("p_partkey") % 7 === 0).select("p_partkey"))
+    part
+  }
 
   /** The `phase, n, sum_cents` aggregate of a DataFrame with `cents`. */
   def phaseOf(phase: String, df: DataFrame): DataFrame =

@@ -1033,17 +1033,15 @@ object Analytics {
     val cents = Tables.orders(s, d).select(col("o_orderkey"),
       (col("o_totalprice").cast("decimal(12,2)") * 100).cast("long").as("cents"))
     val n = cents.count()
-    val ends = ntileEnds(n, 8)
-    val starts = 1L +: ends.init.map(_ + 1L)
-    val ranks = (starts ++ ends).distinct
+    val buckets = ntileBuckets(n, 8)
+    val ranks = buckets.flatMap { case (first, last) => Seq(first, last) }.distinct
     val at: Map[Long, Long] = ranks.zip(
       compositeCutsAt(cents.select(col("cents").as("v"), col("o_orderkey")),
         Seq("v"), "o_orderkey", n, ranks)("v")).map {
       case (rk, (v, _)) => rk -> v
     }.toMap
-    val rows = (1 to 8).map { j =>
-      val size = ends(j - 1) - (if (j == 1) 0L else ends(j - 2))
-      (j.toLong, size, at(starts(j - 1)), at(ends(j - 1)))
+    val rows = buckets.zipWithIndex.map { case ((first, last), i) =>
+      (i + 1L, last - first + 1L, at(first), at(last))
     }
     import s.implicits._
     rows.toDF("bucket", "n", "lo", "hi").orderBy("bucket")
@@ -1095,6 +1093,14 @@ object Analytics {
     val base = total / n
     val rem = (total % n).toInt
     (1 to n).scanLeft(0L)((acc, j) => acc + base + (if (j <= rem) 1L else 0L)).tail
+  }
+
+  /** (first, last) 1-based rank of each NON-EMPTY ntile(n) bucket over
+    * N rows, in bucket order: when N < n, ntile emits only N one-row
+    * buckets, and a zero-row input emits none. */
+  private def ntileBuckets(total: Long, n: Int): Seq[(Long, Long)] = {
+    val ends = ntileEnds(total, n)
+    ends.zip(0L +: ends).collect { case (e, prev) if e > prev => (prev + 1L, e) }
   }
 
   /** Composite (value, key) order statistics at the given 1-based ranks
@@ -1221,7 +1227,9 @@ object Analytics {
           col("freq").cast("long").as("vf"),
           col("cents").as("vm")))
     val n = base.count()
-    val bounds = ntileEnds(n, 4).init // e1, e2, e3
+    // the last rank of every non-empty bucket but the final one: e1, e2,
+    // e3 for n >= 4, fewer for a smaller base, none for an empty one
+    val bounds = ntileBuckets(n, 4).map(_._2).dropRight(1)
     val metricCols = Seq("vr", "vf", "vm")
     val cuts = compositeCutsAt(base, metricCols, "k", n, bounds)
     // quartile = 1 + #{boundaries strictly below (v, key)}: broadcast
@@ -1229,7 +1237,7 @@ object Analytics {
     def quart(c: String): Column =
       cuts(c).map { case (vs, ks) =>
         when(col(c) > vs || (col(c) === vs && col("k") > ks), 1).otherwise(0)
-      }.reduce(_ + _) + 1
+      }.foldLeft(lit(1))(_ + _)
     base.select(col("k"), col("vm"),
         (quart("vr") * 100 + quart("vf") * 10 + quart("vm"))
           .cast("long").as("segment"))

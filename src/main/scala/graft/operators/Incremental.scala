@@ -270,15 +270,15 @@ object Incremental {
   }
 
   // q211 — TIME TRAVEL over the versioned table
-  // ([[graft.sources.Versioned]] — the manifest-based commit protocol
-  // [[graft.sources.Lake.upsertKeys]]'s doc names as the cure for its
-  // swap-in-place model): part becomes a 3-version table — v1 CREATE
-  // (p_partkey % 3 <> 0), v2 COW UPSERT (+1000.00 on %5==0 survivors,
-  // INSERT of the %3==0 keys), v3 COW DELETE (%7==0) — and the query
-  // reads ALL THREE VERSIONS back through their manifests, aggregating
-  // each. The oracle replays every version's row set closed-form from
-  // the modular rules, so a version that leaks a future mutation (or
-  // loses a shared file) cannot hash-match. Money rides DECIMAL cents.
+  // ([[graft.sources.Versioned]] — copy-on-write data files behind an
+  // atomic manifest commit): part becomes a 3-version table
+  // ([[CatalogGate.q211History]]) — v1 CREATE (p_partkey % 3 <> 0), v2
+  // COW UPSERT (+1000.00 on %5==0 survivors, INSERT of the %3==0 keys),
+  // v3 COW DELETE (%7==0) — and the query reads ALL THREE VERSIONS
+  // back through their manifests, aggregating each. The oracle replays
+  // every version's row set closed-form from the modular rules, so a
+  // version that leaks a future mutation (or loses a shared file)
+  // cannot hash-match. Money rides DECIMAL cents.
   // Scale shape: each mutation rewrites only key-matched files (COW);
   // reading version k is a plain parquet scan of its manifest's files —
   // time travel costs nothing at read time beyond the listing.
@@ -304,15 +304,7 @@ object Incremental {
       |FROM u GROUP BY 1 ORDER BY 1""".stripMargin) { (s, d) =>
     val dir = graft.engine.Staging.scratch("graft-layout-gate", "q211_travel")
       .getAbsolutePath
-    val part = CatalogGate.partCents(s, d).toDF("p_partkey", "cents")
-    graft.sources.Versioned.create(
-      part.filter(col("p_partkey") % 3 =!= 0), dir)
-    graft.sources.Versioned.upsert(s, dir, "p_partkey",
-      part.filter(col("p_partkey") % 3 =!= 0 && col("p_partkey") % 5 === 0)
-        .withColumn("cents", col("cents") + 100000)
-        .unionByName(part.filter(col("p_partkey") % 3 === 0)))
-    graft.sources.Versioned.deleteKeys(s, dir, "p_partkey",
-      part.filter(col("p_partkey") % 7 === 0).select("p_partkey"))
+    CatalogGate.q211History(s, d, dir)
     (1L to 3L).map { v =>
       graft.sources.Versioned.readVersion(s, dir, v)
         .agg(count(lit(1)).as("n_rows"),
@@ -530,15 +522,7 @@ object Incremental {
       |GROUP BY 1 ORDER BY 1""".stripMargin) { (s, d) =>
     val dir = graft.engine.Staging.scratch("graft-layout-gate", "q222_purge")
       .getAbsolutePath
-    val part = CatalogGate.partCents(s, d).toDF("p_partkey", "cents")
-    graft.sources.Versioned.create(
-      part.filter(col("p_partkey") % 3 =!= 0), dir)
-    graft.sources.Versioned.upsert(s, dir, "p_partkey",
-      part.filter(col("p_partkey") % 3 =!= 0 && col("p_partkey") % 5 === 0)
-        .withColumn("cents", col("cents") + 100000)
-        .unionByName(part.filter(col("p_partkey") % 3 === 0)))
-    graft.sources.Versioned.deleteKeys(s, dir, "p_partkey",
-      part.filter(col("p_partkey") % 7 === 0).select("p_partkey"))
+    val part = CatalogGate.q211History(s, d, dir)
     graft.sources.Versioned.purgeKeys(s, dir, "p_partkey",
       part.filter(col("p_partkey") % 11 === 0).select("p_partkey"))
     (1L to 3L).map { v =>
@@ -808,15 +792,7 @@ object Incremental {
       |ORDER BY from_v, to_v, change_type""".stripMargin) { (s, d) =>
     val dir = graft.engine.Staging.scratch("graft-layout-gate", "q251_diff")
       .getAbsolutePath
-    val part = CatalogGate.partCents(s, d).toDF("p_partkey", "cents")
-    graft.sources.Versioned.create(
-      part.filter(col("p_partkey") % 3 =!= 0), dir)
-    graft.sources.Versioned.upsert(s, dir, "p_partkey",
-      part.filter(col("p_partkey") % 3 =!= 0 && col("p_partkey") % 5 === 0)
-        .withColumn("cents", col("cents") + 100000)
-        .unionByName(part.filter(col("p_partkey") % 3 === 0)))
-    graft.sources.Versioned.deleteKeys(s, dir, "p_partkey",
-      part.filter(col("p_partkey") % 7 === 0).select("p_partkey"))
+    CatalogGate.q211History(s, d, dir)
     Seq((1L, 2L), (2L, 3L), (1L, 3L)).map { case (a, b) =>
       graft.sources.Versioned.changesBetween(s, dir, "p_partkey", a, b)
         .groupBy("change_type")
@@ -862,15 +838,7 @@ object Incremental {
       |ORDER BY from_v, k""".stripMargin) { (s, d) =>
     val dir = graft.engine.Staging.scratch("graft-layout-gate", "q255_dsar")
       .getAbsolutePath
-    val part = CatalogGate.partCents(s, d).toDF("p_partkey", "cents")
-    graft.sources.Versioned.create(
-      part.filter(col("p_partkey") % 3 =!= 0), dir)
-    graft.sources.Versioned.upsert(s, dir, "p_partkey",
-      part.filter(col("p_partkey") % 3 =!= 0 && col("p_partkey") % 5 === 0)
-        .withColumn("cents", col("cents") + 100000)
-        .unionByName(part.filter(col("p_partkey") % 3 === 0)))
-    graft.sources.Versioned.deleteKeys(s, dir, "p_partkey",
-      part.filter(col("p_partkey") % 7 === 0).select("p_partkey"))
+    val part = CatalogGate.q211History(s, d, dir)
     val subjects = part.filter(col("p_partkey") % 97 === 7).select("p_partkey")
     Seq((1L, 2L), (2L, 3L)).map { case (a, b) =>
       graft.sources.Versioned.changesBetween(s, dir, "p_partkey", a, b)

@@ -64,7 +64,8 @@ object StreamQueries {
     * filtered re-scans + coalesce(1) writes — guide §1.2/§2.4, the
     * same data read once instead of n times. The synthetic `__b`
     * column lives only in directory names; file contents are exactly
-    * `df`'s columns, as before.
+    * `df`'s columns, as before. Contract: every slice id in
+    * `0 until n` matches at least one row of `df`.
     */
   private def stageSliced(df: DataFrame, slice: org.apache.spark.sql.Column,
       n: Int, stageDir: java.io.File, root: java.io.File,
@@ -77,10 +78,12 @@ object StreamQueries {
     stageDir.mkdirs()
     (0 until n).foreach { b =>
       val dirB = new java.io.File(tmp, s"__b=$b")
-      val src = Option(dirB.listFiles())
+      val found = Option(dirB.listFiles())
         .flatMap(_.find(_.getName.endsWith(".parquet")))
-        .getOrElse(throw new IllegalStateException(
-          s"staging produced no file for slice $b under $dirB"))
+      // an empty slice writes no __b= directory at all
+      require(found.isDefined, s"slice $b matched no row: stageSliced " +
+        "needs every slice predicate to match at least one row")
+      val src = found.get
       val dst = new java.io.File(stageDir, s"slice$b.parquet")
       require(src.renameTo(dst), s"staging move failed for $src")
       require(dst.setLastModified(mtime(b)), s"mtime pin failed for $dst")
@@ -313,17 +316,17 @@ object StreamQueries {
   }
 
   // q166 — streaming CDC APPLY on the gate: the change-log sink
-  // ([[graft.streaming.EventStream.cdcApplyLatestStream]] — per-key
+  // ([[graft.streaming.EventStream.cdcApplyVersionedStream]] — per-key
   // keep-latest arbitration inside foreachBatch, then the SAME
-  // copy-on-write `Lake.upsertKeys` merge the batch path runs). Events
-  // are read as a change feed (key = user, payload = value, 'error'
-  // events are delete markers); the final LAKE STATE after the stream
-  // drains is deterministic on bounded input — last change per key
-  // wins, keys whose last change is a delete are absent — which is
+  // copy-on-write `Versioned.upsert` commit the batch path runs).
+  // Events are read as a change feed (key = user, payload = value,
+  // 'error' events are delete markers); the final TABLE STATE after the
+  // stream drains is deterministic on bounded input — last change per
+  // key wins, keys whose last change is a delete are absent — which is
   // exactly the latest-row-per-user SQL the oracle replays. This
   // verifies the sink's end state (merge + delete + arbitration), not
   // just emitted rows — the one streaming surface q150/q151/q156/q164
-  // could not cover.
+  // could not cover; q219 reads the same sink's per-batch versions.
   val q166StreamCdc: QueryDef = QueryDef.sql(
     "q166_stream_cdc",
     """WITH r AS (SELECT user_id, value, event_type,
@@ -337,20 +340,21 @@ object StreamQueries {
       .select(col("user_id"), col("value"), col("ts"), col("event_id"),
         (col("event_type") === "error").as("is_delete"))
     withEphemeralCheckpoint(s)(graft.streaming.EventStream
-      .cdcApplyLatestStream(changes, outDir, "user_id", "is_delete",
+      .cdcApplyVersionedStream(changes, outDir, "user_id", "is_delete",
         orderCols = Seq("ts", "event_id"))
       .option("checkpointLocation", ckDir)
       .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
       .start()
       .awaitTermination())
-    s.read.parquet(outDir).select("user_id", "value").orderBy("user_id")
+    graft.sources.Versioned.read(s, outDir)
+      .select("user_id", "value").orderBy("user_id")
   }
 
-  // q219 — streaming CDC into the VERSIONED TABLE: q166's keep-latest
-  // apply with [[graft.sources.Versioned]] as the sink, so every
-  // micro-batch is one manifest COMMIT and the table's version history
-  // is the stream's batch history — `readVersion(k)` is the exact state
-  // after batch k. The gate splits events into three files admitted one
+  // q219 — streaming CDC into the VERSIONED TABLE, version by version:
+  // q166's keep-latest apply sink commits every micro-batch as one
+  // manifest COMMIT, so the table's version history is the stream's
+  // batch history — `readVersion(k)` is the exact state after batch k.
+  // The gate splits events into three files admitted one
   // per batch (mtime-ordered, `maxFilesPerTrigger=1`), drains with
   // AvailableNow, then reads ALL THREE versions back and aggregates
   // each. Closed form: version v's state is, per user over batches ≤ v,
@@ -769,15 +773,7 @@ object StreamQueries {
     val root = graft.engine.Staging.scratch("graft-stream-gate", "q280_source")
     val dir = new java.io.File(root, "table").getAbsolutePath
     val ck = new java.io.File(root, "ck").getAbsolutePath
-    val part = CatalogGate.partCents(s, d).toDF("p_partkey", "cents")
-    graft.sources.Versioned.create(
-      part.filter(col("p_partkey") % 3 =!= 0), dir)               // v1
-    graft.sources.Versioned.upsert(s, dir, "p_partkey",
-      part.filter(col("p_partkey") % 3 =!= 0 && col("p_partkey") % 5 === 0)
-        .withColumn("cents", col("cents") + 100000)
-        .unionByName(part.filter(col("p_partkey") % 3 === 0)))    // v2
-    graft.sources.Versioned.deleteKeys(s, dir, "p_partkey",
-      part.filter(col("p_partkey") % 7 === 0).select("p_partkey")) // v3
+    CatalogGate.q211History(s, d, dir)
     val buf = scala.collection.mutable.ArrayBuffer
       .empty[(Long, Long, String, Long, Long, Long)]
     val q = withEphemeralCheckpoint(s)(s.readStream.format("graft-versioned")
@@ -913,15 +909,7 @@ object StreamQueries {
       |ORDER BY from_v, to_v, change_type""".stripMargin) { (s, d) =>
     val root = graft.engine.Staging.scratch("graft-stream-gate", "q289_batch")
     val dir = new java.io.File(root, "table").getAbsolutePath
-    val part = CatalogGate.partCents(s, d).toDF("p_partkey", "cents")
-    graft.sources.Versioned.create(
-      part.filter(col("p_partkey") % 3 =!= 0), dir)               // v1
-    graft.sources.Versioned.upsert(s, dir, "p_partkey",
-      part.filter(col("p_partkey") % 3 =!= 0 && col("p_partkey") % 5 === 0)
-        .withColumn("cents", col("cents") + 100000)
-        .unionByName(part.filter(col("p_partkey") % 3 === 0)))    // v2
-    graft.sources.Versioned.deleteKeys(s, dir, "p_partkey",
-      part.filter(col("p_partkey") % 7 === 0).select("p_partkey")) // v3
+    CatalogGate.q211History(s, d, dir)
     val batch = s.read.format("graft-versioned").option("path", dir)
       .option("changesFrom", 1).option("changesTo", 3).load()
     val keys = Seq("_from_v", "_to_v", "p_partkey")

@@ -351,263 +351,6 @@ object Lake {
       .write.mode("overwrite").parquet(outDir)
   }
 
-  /** Small-file compaction: rewrite a lake so each partition holds at
-    * most `filesPerPartition` files. Incremental appends (the reference
-    * writes one snapshot file per scrape round) accumulate small files
-    * whose per-file open/footer cost eventually dominates scans — the
-    * canonical 100 TB lake-maintenance op is this rewrite. repartition on
-    * the partition keys routes each output partition's rows to
-    * `filesPerPartition` tasks (salted so one huge leaf still splits),
-    * and the write is to a NEW directory + swap, never in place — a
-    * failed compaction must leave the live lake untouched.
-    */
-  /** Targeted row deletion [EXT]: remove every row whose `keyCol` value
-    * appears in `keys`, rewriting ONLY the parquet files that contain at
-    * least one hit — the right-to-erasure / bad-batch-retraction
-    * maintenance op. At 100 TB a delete of a few thousand keys touches a
-    * handful of files; rewriting the lake (or even one partition) for it
-    * is off the table, and this is the mechanism a table format's
-    * DELETE implements under the hood (copy-on-write flavor).
-    *
-    * Two phases:
-    *   1. Discovery — one column-pruned scan of `keyCol` +
-    *      `input_file_name()`, inner-joined against the broadcast key
-    *      set, aggregated to (file → hit count). Files with zero hits
-    *      are never read again, never rewritten, stay byte-identical.
-    *   2. Rewrite — per affected directory, the affected files (only)
-    *      are re-read, anti-joined against the broadcast keys, written
-    *      to an underscore tmp dir, then RENAMED IN BEFORE the old
-    *      files are deleted. That order is the loss-free choice: no row
-    *      ever exists only in the (reader-invisible, cleanup-deletable)
-    *      tmp dir. The cost is the honest one — a crash between the
-    *      renames and the old-file deletes leaves BOTH copies visible:
-    *      a rerun of the same delete removes the matched keys again,
-    *      but kept rows from the crashed pass stay duplicated until
-    *      [[repairDuplicates]] clears them. Without a commit protocol
-    *      some window must exist; losing rows is the unrecoverable
-    *      failure, duplicating them is the repairable one, so the order
-    *      here chooses the latter. A table format's atomic commit
-    *      removes the window entirely, not a different rewrite order.
-    *
-    * `keys` must be a single-column frame named `keyCol`, and `keyCol`
-    * must be a DATA column — deleting by a partition value is just a
-    * directory delete and needs none of this. Returns
-    * (directory, filesRewritten, rowsDeleted) per affected directory.
-    */
-  def deleteKeys(spark: SparkSession, baseDir: String,
-      keyCol: String, keys: DataFrame): Seq[(String, Int, Long)] = {
-    require(keys.columns.sameElements(Array(keyCol)),
-      s"keys must be a single '$keyCol' column, got ${keys.columns.mkString(",")}")
-    val fs = new org.apache.hadoop.fs.Path(baseDir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // a lake that does not exist yet holds nothing to delete (the CDC
-    // stream's very first batch lands on an empty directory)
-    if (!fs.exists(new org.apache.hadoop.fs.Path(baseDir))) return Seq.empty
-    // distinct: duplicate key values in the caller's frame must not
-    // multiply the per-file hit counts the report carries
-    val k = keys.distinct()
-    val hits = spark.read.parquet(baseDir)
-      .select(col(keyCol), input_file_name().as("_file"))
-      .join(broadcast(k), keyCol)
-      .groupBy("_file").agg(count(lit(1)).as("n"))
-      .collect()
-      .map(r => new org.apache.hadoop.fs.Path(
-        new java.net.URI(r.getString(0))) -> r.getLong(1))
-    hits.groupBy(_._1.getParent).toSeq.map { case (dir, files) =>
-      val tmp = new org.apache.hadoop.fs.Path(dir, "_delete_tmp")
-      // stale tmp from a crashed prior run is safe to drop: with the
-      // rename-first order below, tmp never holds the only copy of a row
-      fs.delete(tmp, true)
-      spark.read.parquet(files.map(_._1.toString): _*)
-        .join(broadcast(k), Seq(keyCol), "left_anti")
-        .repartition(files.length)
-        .write.mode("overwrite").parquet(tmp.toString)
-      val newFiles = fs.listStatus(tmp).filter(s =>
-        s.isFile && s.getPath.getName.endsWith(".parquet"))
-      // rename the cleaned files IN first, delete the old files after:
-      // a crash in between duplicates rows (rerun converges) but can
-      // never lose them — the delete-first order would
-      newFiles.foreach(f =>
-        fs.rename(f.getPath, new org.apache.hadoop.fs.Path(dir, f.getPath.getName)))
-      files.foreach { case (f, _) => fs.delete(f, false) }
-      fs.delete(tmp, true)
-      (dir.toString, files.length, files.map(_._2).sum)
-    }
-  }
-
-  private[sources] def notDeleted(changes: DataFrame, flag: String): DataFrame =
-    // NULL flag means "not deleted" (outer-joined change feeds produce
-    // them routinely); a bare !col would evaluate NULL and silently drop
-    // the row AFTER its key was already deleted — data loss, not a
-    // filter choice
-    changes.filter(!coalesce(col(flag), lit(false))).drop(flag)
-
-  /** Copy-on-write UPSERT (MERGE semantics without a table format):
-    * rows in `changes` replace same-key lake rows, new keys append,
-    * and rows flagged in `deleteFlag` are removed outright. Built by
-    * composition: phase 1 is [[deleteKeys]] over ALL change keys (the
-    * minimal-rewrite removal — only files containing a matched key are
-    * touched), phase 2 appends the surviving change rows as new files
-    * (`partitionCols` routes them into their partition directories).
-    * This is exactly the copy-on-write MERGE a table format runs, minus
-    * the atomic commit — a concurrent reader can observe phase 1
-    * without phase 2; the format's commit protocol is the cure.
-    *
-    * `changes` must carry the lake's data columns (plus the optional
-    * flag) and AT MOST ONE ROW PER KEY — DataFrames carry no row order,
-    * so "last change wins" cannot be decided here; compact the change
-    * source per key (by its own offset/ts) before calling. A NULL
-    * delete flag means "not deleted". Returns (per-directory delete
-    * report, rows appended).
-    */
-  def upsertKeys(spark: SparkSession, baseDir: String, keyCol: String,
-      changes: DataFrame, deleteFlag: Option[String] = None,
-      partitionCols: Seq[String] = Nil): (Seq[(String, Int, Long)], Long) = {
-    // evaluated three times below (key projection, count, append) —
-    // cache so a CDC micro-batch's upstream transform runs once
-    changes.persist()
-    try {
-      val report = deleteKeys(spark, baseDir, keyCol,
-        changes.select(keyCol).distinct())
-      val survivors = deleteFlag.fold(changes)(notDeleted(changes, _))
-      val n = survivors.count()
-      if (n > 0) {
-        val w = survivors.write.mode("append")
-        (if (partitionCols.nonEmpty) w.partitionBy(partitionCols: _*) else w)
-          .parquet(baseDir)
-      }
-      (report, n)
-    } finally changes.unpersist()
-  }
-
-  /** The promised repair for [[deleteKeys]]/[[upsertKeys]]'s crash
-    * window: rename-in-then-delete means a crash between the two leaves
-    * a cleaned file AND its original coexisting — every surviving row
-    * of that file duplicated, none lost. By default this repairs ONLY
-    * that crash shape: a file whose full row-multiset is contained in a
-    * sibling file is deleted (its every row survives in the sibling —
-    * row loss is impossible), and anything else is left untouched. A
-    * rerun converges — the op is idempotent.
-    *
-    * `collapseAll = true` opts into the blanket collapse of ALL exact
-    * full-row duplicates via `distinct()` across affected files.
-    * **DATA-LOSS WARNING**: a lake whose schema legitimately contains
-    * identical rows (no unique key — e.g. repeated scraped offers)
-    * loses those repeats under `collapseAll`; the default gate exists
-    * precisely so a routine "repair" cannot do that silently.
-    *
-    * Full-row identity (not key identity) is deliberate: the crash
-    * artifact is byte-identical copies, and collapsing by key here
-    * would silently resolve a genuine key conflict in an arbitrary
-    * direction. For key-conflict resolution, run the CDC compaction
-    * upstream and [[upsertKeys]] the result.
-    *
-    * Scale shape: the duplicate census is one keyed agg over a hash of
-    * the full row (map-side partial, shuffles only (hash, file) pairs);
-    * the containment self-join touches only hashes shared within a
-    * directory; the repair touches only affected files. Returns
-    * (directory, filesRemoved, duplicateRowsRemoved) per directory.
-    */
-  def repairDuplicates(spark: SparkSession, baseDir: String,
-      collapseAll: Boolean = false): Seq[(String, Int, Long)] = {
-    val fs = new org.apache.hadoop.fs.Path(baseDir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(new org.apache.hadoop.fs.Path(baseDir))) return Seq.empty
-    val lake = spark.read.parquet(baseDir)
-    val dataCols = lake.columns.toSeq
-    if (collapseAll) repairCollapseAll(spark, fs, lake, dataCols)
-    else {
-      // CRASH-EVIDENCE GATE (the default): only a file whose FULL
-      // row-multiset is contained in one sibling file can be a crash
-      // artifact of the rename-first rewrite (the cleaned twin renamed
-      // in, the original not yet deleted). Deleting the contained file
-      // removes exactly the duplicated copies and can never lose a row;
-      // a lake whose schema legitimately holds identical rows (repeated
-      // scraped offers — no unique key) shows only PARTIAL overlap or
-      // same-file repeats and is left untouched. For a blanket exact
-      // collapse, opt in with `collapseAll = true` (DATA LOSS for
-      // legitimately-repeated rows — see scaladoc).
-      val counts = lake
-        .select(sha2(to_json(struct(dataCols.map(col): _*)), 256).as("_h"),
-          input_file_name().as("_file"))
-        .groupBy("_h", "_file").agg(count(lit(1)).as("n"))
-        .withColumn("_dir", regexp_extract(col("_file"), "^(.*)/[^/]+$", 1))
-      val totals = counts.groupBy("_file").agg(sum("n").as("total"))
-      // A ⊆ B  ⇔  Σ_h min(n_A(h), n_B(h)) = |A| — the inner hash join
-      // touches only hashes shared across same-directory files, so the
-      // census self-join is bounded by the duplicated rows, not the lake
-      val edges = counts.as("a")
-        .join(counts.as("b"),
-          col("a._h") === col("b._h") && col("a._dir") === col("b._dir") &&
-            col("a._file") =!= col("b._file"))
-        .groupBy(col("a._file").as("cand"), col("b._file").as("host"))
-        .agg(sum(least(col("a.n"), col("b.n"))).as("shared"))
-        .join(totals.withColumnRenamed("_file", "cand")
-          .withColumnRenamed("total", "cand_total"), Seq("cand"))
-        .filter(col("shared") === col("cand_total"))
-        .select("cand", "host", "cand_total")
-        .collect()
-        .map(r => (r.getString(0), r.getString(1), r.getLong(2)))
-      // metadata-scale driver resolution: delete a contained file only
-      // while one of its hosts survives; mutual containment (identical
-      // multisets) tie-breaks by descending path, so exactly one twin
-      // remains
-      val deleted = scala.collection.mutable.LinkedHashMap.empty[String, Long]
-      edges.groupBy(_._1).toSeq.sortBy(_._1).reverse.foreach { case (cand, es) =>
-        if (!deleted.contains(cand) && es.exists(e => !deleted.contains(e._2)))
-          deleted(cand) = es.head._3
-      }
-      deleted.foreach { case (f, _) =>
-        fs.delete(new org.apache.hadoop.fs.Path(new java.net.URI(f)), false)
-      }
-      deleted.toSeq
-        .map { case (f, n) =>
-          (new org.apache.hadoop.fs.Path(new java.net.URI(f)).getParent.toString, n)
-        }
-        .groupBy(_._1).toSeq.sortBy(_._1)
-        .map { case (dir, fl) => (dir, fl.size, fl.map(_._2).sum) }
-    }
-  }
-
-  /** The opt-in blanket collapse behind [[repairDuplicates]]'
-    * `collapseAll = true`: rewrite every file holding an exact full-row
-    * duplicate with `distinct()` applied across the affected set.
-    */
-  private def repairCollapseAll(spark: SparkSession,
-      fs: org.apache.hadoop.fs.FileSystem, lake: DataFrame,
-      dataCols: Seq[String]): Seq[(String, Int, Long)] = {
-    // one row per (full-row hash, file): which files hold which rows;
-    // a row with >1 total copies marks every file holding it affected
-    val census = lake
-      .select(sha2(to_json(struct(dataCols.map(col): _*)), 256).as("_h"),
-        input_file_name().as("_file"))
-      .groupBy("_h", "_file").agg(count(lit(1)).as("n_in_file"))
-      .groupBy("_h").agg(
-        sum("n_in_file").as("n_total"),
-        collect_set(col("_file")).as("files"))
-      .filter(col("n_total") > 1)
-      .select(explode(col("files")).as("_file")).distinct()
-      .collect()
-      .map(r => new org.apache.hadoop.fs.Path(new java.net.URI(r.getString(0))))
-    census.groupBy(_.getParent).toSeq.map { case (dir, files) =>
-      val tmp = new org.apache.hadoop.fs.Path(dir, "_repair_tmp")
-      fs.delete(tmp, true)
-      val affected = spark.read.parquet(files.map(_.toString): _*)
-      val before = affected.count()
-      val cleaned = affected.distinct()
-      val after = cleaned.count()
-      cleaned.repartition(files.length)
-        .write.mode("overwrite").parquet(tmp.toString)
-      val newFiles = fs.listStatus(tmp).filter(s =>
-        s.isFile && s.getPath.getName.endsWith(".parquet"))
-      newFiles.foreach(f =>
-        fs.rename(f.getPath, new org.apache.hadoop.fs.Path(dir, f.getPath.getName)))
-      files.foreach(f => fs.delete(f, false))
-      fs.delete(tmp, true)
-      (dir.toString, files.length, before - after)
-    }
-  }
-
   /** JSONL training-data export — the delivery format most training
     * stacks consume (one JSON object per line; line-splittable, so any
     * downstream reader parallelizes over byte ranges). One codegen'd
@@ -655,25 +398,24 @@ object Lake {
       .option("ignoreSurroundingSpaces", "false")
       .xml(path)
 
-  /** Optimistic-concurrency commit protocol for the COW maintenance
-    * ops ([[upsertKeys]], [[deleteKeys]], [[compactSnapshots]],
-    * [[repairDuplicates]]), which are individually crash-safe
-    * (tmp-then-swap) but assumed a SINGLE writer: two concurrent
-    * writers could interleave their swaps and each lose the other's
-    * rewrite. `withCommit` makes the single-writer contract explicit
-    * and enforced: a writer claims the next commit slot in
-    * `baseDir/_graft_txn/` by ATOMIC create-if-absent of
-    * `v<k+1>.inprogress` (the same rename-if-absent discipline the
-    * `graft-offers` streaming sink's epoch markers use — atomic on
-    * HDFS and on the local FS's create(..., overwrite=false)), runs
-    * the mutation, then renames the claim to `v<k+1>.commit`. A loser
-    * whose claim hits an existing slot backs off and RETRIES FROM
-    * SCRATCH — its `op` is re-evaluated against the winner's committed
-    * state, the optimistic-concurrency contract — and a claim older
-    * than `staleClaimMs` (a crashed writer; the underlying op's crash
-    * window is already repairable, see [[repairDuplicates]]) is
-    * reclaimed rather than waited on forever. Exhausting `maxRetries`
-    * fails loudly — never an interleaved swap.
+  /** Optimistic-concurrency commit ledger: the single-writer lock of
+    * the versioned table ([[Versioned]]'s manifest commits, purges,
+    * tags, branches and drops, and the catalog's CREATE TABLE). Two
+    * writers that both read a table, mutate it and publish the result
+    * would each lose the other's change; `withCommit` serializes them.
+    * A writer claims the next commit slot in `baseDir/_graft_txn/` by
+    * ATOMIC create-if-absent of `v<k+1>.inprogress` (the same
+    * rename-if-absent discipline the `graft-offers` streaming sink's
+    * epoch markers use — atomic on HDFS and on the local FS's
+    * create(..., overwrite=false)), runs the mutation, then renames the
+    * claim to `v<k+1>.commit`. A loser whose claim hits an existing
+    * slot backs off and RETRIES FROM SCRATCH — its `op` is re-evaluated
+    * against the winner's committed state, the optimistic-concurrency
+    * contract — and a claim older than `staleClaimMs` (a crashed
+    * writer; the versioned table's tmp-then-rename manifest publish
+    * leaves at most orphaned data files behind) is reclaimed rather
+    * than waited on forever. Exhausting `maxRetries` fails loudly —
+    * never an interleaved commit.
     *
     * The underscore prefix keeps the ledger invisible to Spark scans,
     * like the sink's `_graft_commits`. The ledger is tiny (one empty
@@ -757,6 +499,16 @@ object Lake {
     stale.size
   }
 
+  /** Small-file compaction: rewrite a lake so each partition holds at
+    * most `filesPerPartition` files. Incremental appends (the reference
+    * writes one snapshot file per scrape round) accumulate small files
+    * whose per-file open/footer cost eventually dominates scans — the
+    * canonical 100 TB lake-maintenance op is this rewrite. repartition on
+    * the partition keys routes each output partition's rows to
+    * `filesPerPartition` tasks (salted so one huge leaf still splits),
+    * and the write is to a NEW directory + swap, never in place — a
+    * failed compaction must leave the live lake untouched.
+    */
   def compact(spark: SparkSession, baseDir: String, outDir: String,
       filesPerPartition: Int = 1): Unit = {
     val lake = spark.read.parquet(baseDir)

@@ -3,9 +3,9 @@ package graft.sources
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 
-/** VERSIONED TABLE layer (time travel) — the "table format's commit
-  * protocol" that [[Lake.upsertKeys]]'s doc names as the cure for its
-  * swap-in-place model, realized Delta-style with Spark-native pieces:
+/** VERSIONED TABLE layer (time travel) — the engine's one copy-on-write
+  * table, with a table format's atomic commit protocol realized
+  * Delta-style with Spark-native pieces:
   *
   *   - DATA FILES are immutable, written once under `dir/data/` with a
   *     commit-unique name prefix; a mutation never touches an existing
@@ -17,10 +17,11 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
   *     of any version are never affected by in-flight writers because
   *     the files they were handed are immutable.
   *   - COW upsert/delete rewrite ONLY the files containing matched keys
-  *     (the [[Lake.deleteKeys]] minimal-rewrite discipline) into NEW
-  *     files; the next manifest points at rewritten + untouched + fresh
-  *     appends. Untouched files are SHARED between manifests — an
-  *     upsert's storage cost is the affected files, not the table.
+  *     (the minimal-rewrite discipline: untouched files stay
+  *     byte-identical) into NEW files; the next manifest points at
+  *     rewritten + untouched + fresh appends. Untouched files are
+  *     SHARED between manifests — an upsert's storage cost is the
+  *     affected files, not the table.
   *   - Writers serialize through [[Lake.withCommit]]'s optimistic
   *     claim/commit ledger (atomic create-if-absent); the manifest
   *     rename itself is tmp-then-rename, so a crashed writer leaves at
@@ -500,18 +501,6 @@ object Versioned {
   def readAsOfTimestamp(spark: SparkSession, dir: String, tsMs: Long): DataFrame =
     readVersion(spark, dir, versionAsOf(spark, dir, tsMs))
 
-  /** EXACT live row count per version — the [[history]] /
-    * `t.history` arithmetic, now agreeing with the pushed COUNT(*) on
-    * ANY on-disk lineage: a version's rows = its entry totals minus
-    * the sidecar rows that TARGET one of its live entries (a row
-    * targeting a retired file is stale — the rewrite already shed it
-    * physically, so subtracting its recorded nDel would double-count).
-    * Cost: ZERO jobs for dv-free histories (pure driver arithmetic);
-    * otherwise ONE sidecar-only job shared across every version —
-    * per-(sidecar, target) row counts, collected driver-side bounded
-    * by (sidecars × files they target) PAIRS, not deleted rows —
-    * then per-version arithmetic against each manifest's live set.
-    */
   /** Per-target DISTINCT deleted-pair counts for one version's dv
     * sidecar SET, cached by the set's file signature — sidecar files
     * are IMMUTABLE once committed, so entries never invalidate, and
@@ -550,6 +539,19 @@ object Versioned {
     })
   }
 
+  /** EXACT live row count per version — the [[history]] /
+    * `t.history` arithmetic, which the pushed COUNT(*) also answers
+    * with, so both agree on ANY on-disk lineage: a version's rows =
+    * its entry totals minus the sidecar rows that TARGET one of its
+    * live entries (a row targeting a retired file is stale — the
+    * rewrite already shed it physically, so subtracting its recorded
+    * nDel would double-count).
+    * Cost: ZERO jobs for dv-free histories (pure driver arithmetic);
+    * otherwise ONE sidecar-only job shared across every version —
+    * per-(sidecar, target) row counts, collected driver-side bounded
+    * by (sidecars × files they target) PAIRS, not deleted rows —
+    * then per-version arithmetic against each manifest's live set.
+    */
   private[graft] def exactRowCounts(spark: SparkSession, dir: String,
       ms: Seq[(Long, Manifest)]): Map[Long, Long] =
     ms.map { case (v, m) =>
@@ -1521,19 +1523,6 @@ object Versioned {
         base.entries, dvs = base.dvs, ptags = base.ptags)
     }
 
-  /** COW MERGE commit: same-key rows replaced, `deleteFlag` rows
-    * removed, new keys appended — only files CONTAINING a matched key
-    * are rewritten (new files), everything else is carried by
-    * reference. `changes` must hold at most one row per key
-    * ([[Lake.upsertKeys]]'s contract, same reason).
-    */
-  /** The data-file names whose LIVE rows contain one of `keys` — the
-    * COW/MOR hit-detection scan. The file name is captured AT THE SCAN
-    * (readLive's fileCol) because an input_file_name above the DV
-    * anti-join would read blank post-shuffle; already-DV-deleted rows
-    * do not count as hits (deleting a dead row must not rewrite/mark a
-    * file).
-    */
   /** The COW-REWRITE write half, layout-aware (q317): on a declared
     * PARTITIONED BY layout the surviving rows re-cluster through the
     * partitioned writer and RE-TAG — a rewrite (upsert, DELETE,
@@ -1589,6 +1578,13 @@ object Versioned {
     }
   }
 
+  /** The data-file names whose LIVE rows contain one of `keys` — the
+    * COW/MOR hit-detection scan. The file name is captured AT THE SCAN
+    * (readLive's fileCol) because an input_file_name above the DV
+    * anti-join would read blank post-shuffle; already-DV-deleted rows
+    * do not count as hits (deleting a dead row must not rewrite/mark a
+    * file).
+    */
   private def hitFiles(spark: SparkSession, dir: String, base: Manifest,
       keyCol: String, k: DataFrame): Set[String] =
     if (base.entries.isEmpty) Set.empty
@@ -1651,13 +1647,29 @@ object Versioned {
         math.max(1L, (fileBytes + extraBytes) / targetBytes + 1L).toInt)
     }
 
+  private def notDeleted(changes: DataFrame, flag: String): DataFrame =
+    // NULL flag means "not deleted" (outer-joined change feeds produce
+    // them routinely); a bare !col would evaluate NULL and silently drop
+    // the row AFTER its key was already deleted — data loss, not a
+    // filter choice
+    changes.filter(!coalesce(col(flag), lit(false))).drop(flag)
+
+  /** COW MERGE commit: same-key rows replaced, `deleteFlag` rows
+    * removed, new keys appended — only files CONTAINING a matched key
+    * are rewritten (new files), everything else is carried by
+    * reference. `changes` must hold at most one row per key: DataFrames
+    * carry no row order, so "last change wins" cannot be decided here;
+    * compact the change source per key (by its own offset/ts) first, as
+    * [[graft.streaming.EventStream.cdcApplyVersionedStream]] does. A
+    * NULL delete flag means "not deleted".
+    */
   def upsert(spark: SparkSession, dir: String, keyCol: String,
       changes: DataFrame, deleteFlag: Option[String] = None): Long = {
     changes.persist()
     try commitManifest(spark, dir) { base =>
       val keys = changes.select(keyCol).distinct()
       val touched = hitFiles(spark, dir, base, keyCol, keys)
-      val survivors = deleteFlag.fold(changes)(Lake.notDeleted(changes, _))
+      val survivors = deleteFlag.fold(changes)(notDeleted(changes, _))
       val spec = partitionSpecOf(spark, dir)
       // COW-rewrite output sizing (guide §6 — small files hurt twice):
       // without it the rewrite's file count is its LINEAGE partitioning

@@ -1436,19 +1436,11 @@ final class VersionedScan(dir: String, version: Option[Long],
             spark.sparkContext.emptyRDD[Row]
           case Some(latest) if countStar =>
             // Aggregates from the MANIFEST — zero data files opened.
-            // COUNT(*): entry rows minus sidecar deletes. A sidecar's
-            // recorded nDel is only exact when none of its rows target
-            // a RETIRED file (current commits guarantee that via
-            // retireDvRows, but a table whose sidecars were carried
-            // through pre-reconcile COW rewrites still holds stale
-            // rows, and subtracting nDel would double-count them), so
-            // with sidecars present the subtrahend is computed by
-            // COUNTING THE SIDECAR ROWS THAT TARGET LIVE ENTRIES — a
-            // sidecar-only job (bounded by un-compacted deletes; AQE
-            // broadcasts the small side), still zero data-file opens,
-            // and exact on ANY on-disk lineage. The dv-free steady
-            // state (every table after OPTIMIZE) stays pure driver
-            // arithmetic with zero jobs.
+            // COUNT(*): [[Versioned.exactRowCounts]], the same count
+            // `history` reports — entry rows minus the sidecar deletes
+            // that target live entries, exact on ANY on-disk lineage;
+            // pure driver arithmetic with zero jobs when the version
+            // has no sidecars, else one cached sidecar-only job.
             // MIN/MAX: the stats envelope extremes ([[Versioned
             // .statsExtreme]]); pushability was proven at analysis
             // time, but the manifest is RE-read here, so a commit
@@ -1458,27 +1450,16 @@ final class VersionedScan(dir: String, version: Option[Long],
             // by a real scan instead: the plan stays "pushed", the
             // answer stays EXACT, only the zero-IO property degrades
             // for that race window.
-            val m = Versioned.manifestOf(spark, dir, version.getOrElse(latest))
+            val v = version.getOrElse(latest)
+            val m = Versioned.manifestOf(spark, dir, v)
             lazy val liveDf = {
               // one shared fallback frame for any agg the re-check
               // refuses (race window only)
-              Versioned.readVersion(spark, dir, version.getOrElse(latest))
+              Versioned.readVersion(spark, dir, v)
             }
             val values: Seq[Any] = pushedAggs.map {
               case VersionedScan.CountAll =>
-                val total = m.entries.map(_._2).sum
-                if (m.dvs.isEmpty) total
-                else {
-                  import spark.implicits._
-                  val dvTargets = spark.read
-                    .schema(Versioned.dataFileSchema(spark, dir,
-                      m.dvs.head.file))
-                    .parquet(m.dvs.map(r => s"$dir/data/${r.file}").distinct: _*)
-                    .select("__target")
-                  val liveNames = m.entries.map(_._1).toDF("__target")
-                  total - dvTargets.join(liveNames, Seq("__target"), "left_semi")
-                    .count()
-                }
+                Versioned.exactRowCounts(spark, dir, Seq(v -> m))(v)
               case VersionedScan.CountCol(c) =>
                 // rows − null counts; the same execution-time re-check
                 // discipline as MIN/MAX — a racing sidecar commit

@@ -494,68 +494,27 @@ object EventStream {
         graft.operators.Similarity.rpSignatures(batch), indexBands, threshold))
     }
 
-  /** CDC apply — a change stream (upserts + delete markers) continuously
-    * merged into a parquet lake: each micro-batch runs the SAME
-    * [[graft.sources.Lake.upsertKeys]] copy-on-write merge the batch
-    * path uses, so a streamed change log and a one-shot batch merge of
-    * the same changes land the identical lake state (modulo file
-    * layout). Batches apply in arrival order (foreachBatch's contract:
-    * sequential, never concurrent); WITHIN a micro-batch the source must
-    * deliver at most one row per key — upsertKeys cannot arbitrate
-    * duplicates (DataFrames carry no row order), so a non-compacted
-    * source needs a per-key keep-latest reduction (by its own offset/ts
-    * column) before this sink. `partitionCols` routes appended rows into
-    * a partitioned lake's directories.
-    *
-    * Returns the writer so the caller owns trigger/checkpoint options.
-    */
-  def cdcApplyStream(changes: DataFrame, baseDir: String, keyCol: String,
-      deleteFlag: String, partitionCols: Seq[String] = Nil)
-      : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    changes.writeStream.foreachBatch { (batch: DataFrame, _: Long) =>
-      graft.sources.Lake.upsertKeys(batch.sparkSession, baseDir, keyCol,
-        batch, deleteFlag = Some(deleteFlag), partitionCols = partitionCols)
-      ()
-    }
-
-  /** [[cdcApplyStream]] with the per-key keep-latest ARBITRATION built
-    * in: each micro-batch reduces to its LAST change per key (greatest
-    * `orderCols`, compared in order) before the merge, so a raw,
-    * non-compacted change feed — several updates to one key inside one
-    * batch — drives the sink directly instead of needing an upstream
-    * compaction. The reduction is a plain batch window inside
-    * foreachBatch (no stream-side state), so per-batch atomicity and
-    * the arrival-order apply contract are unchanged.
-    */
-  def cdcApplyLatestStream(changes: DataFrame, baseDir: String, keyCol: String,
-      deleteFlag: String, orderCols: Seq[String],
-      partitionCols: Seq[String] = Nil)
-      : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] = {
-    require(orderCols.nonEmpty, "keep-latest arbitration needs at least one order column")
-    changes.writeStream.foreachBatch { (batch: DataFrame, _: Long) =>
-      val w = org.apache.spark.sql.expressions.Window
-        .partitionBy(keyCol).orderBy(orderCols.map(col(_).desc): _*)
-      val latest = batch
-        .withColumn("__rn", row_number().over(w))
-        .filter(col("__rn") === 1).drop("__rn")
-      graft.sources.Lake.upsertKeys(batch.sparkSession, baseDir, keyCol,
-        latest, deleteFlag = Some(deleteFlag), partitionCols = partitionCols)
-      ()
-    }
-  }
-
-  /** [[cdcApplyLatestStream]] with the VERSIONED table as the sink
-    * ([[graft.sources.Versioned]]): every micro-batch's keep-latest
-    * upsert lands as ONE manifest commit, so the table's version history
-    * IS the stream's batch history — `readVersion(k)` is the exact state
-    * after batch k (q219 puts that on the oracle gate), replay/audit for
-    * free. Concurrency contract, precisely: the OCC ledger serializes
+  /** CDC apply — a change stream (upserts + delete markers)
+    * continuously merged into a [[graft.sources.Versioned]] table: each
+    * micro-batch reduces to its LAST change per key (greatest
+    * `orderCols`, compared in order) and lands as ONE
+    * [[graft.sources.Versioned.upsert]] manifest commit, so a raw,
+    * non-compacted change feed drives the sink directly, a streamed
+    * change log and a batch replay of the same per-batch upserts land
+    * the same table state, and the table's version history IS the
+    * stream's batch history — `readVersion(k)` is the exact state after
+    * batch k (q219 puts that on the oracle gate), replay/audit for free.
+    * Batches apply in arrival order (foreachBatch's contract:
+    * sequential, never concurrent); the keep-latest reduction is a
+    * plain batch window inside foreachBatch (no stream-side state), and
+    * a key whose latest change carries `deleteFlag` is removed.
+    * Concurrency contract, precisely: the OCC ledger serializes
     * MANIFEST COMMITS (this writer's upserts vs compaction vs vacuum's
     * locked pass), while this writer's data files written BEFORE its
     * commit are protected from a concurrent vacuum by the
-    * orphan-retention age window, not by the ledger. Same arbitration
-    * contract as the lake form: at most one change per key per batch
-    * after the window, delete flag wins by recency.
+    * orphan-retention age window, not by the ledger.
+    *
+    * Returns the writer so the caller owns trigger/checkpoint options.
     */
   def cdcApplyVersionedStream(changes: DataFrame, dir: String, keyCol: String,
       deleteFlag: String, orderCols: Seq[String])

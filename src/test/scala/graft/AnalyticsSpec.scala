@@ -159,6 +159,51 @@ class AnalyticsSpec extends AnyFunSuite {
     assert(scale.collect().toSeq === ref.collect().toSeq)
   }
 
+  /** A directory whose `orders.parquet` holds the first `n` sf0.001 orders. */
+  private def ordersFixture(n: Int): String = {
+    val dir = java.nio.file.Files.createTempDirectory("graft-orders").toString
+    graft.engine.Tables.orders(spark, sfDir).orderBy("o_orderkey").limit(n)
+      .coalesce(1).write.parquet(s"$dir/orders.parquet")
+    dir
+  }
+
+  test("ntile histograms emit only non-empty buckets on 5-row and 0-row orders") {
+    import org.apache.spark.sql.expressions.Window
+    import org.apache.spark.sql.functions._
+    for (n <- Seq(5, 0)) {
+      val d = ordersFixture(n)
+      val orders = graft.engine.Tables.orders(spark, d)
+      // q257: ntile(8) over n < 8 rows is n one-row buckets in
+      // (cents, key) order, each bucket's lo = hi = its row's cents
+      val cents = orders.select(col("o_orderkey"),
+          (col("o_totalprice").cast("decimal(12,2)") * 100).cast("long"))
+        .collect().map(r => (r.getLong(1), r.getLong(0))).sorted.map(_._1)
+      val hist = cents.zipWithIndex.map { case (c, i) => (i + 1L, 1L, c, c) }.toSeq
+      assert(Analytics.q257EquidepthHist.run(spark, d).collect()
+        .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3))).toSeq
+        === hist, s"q257 at $n rows")
+      // q263/q265 against the global-ntile window reference, whose ntile(4)
+      // over 5 customers is buckets of 2, 1, 1, 1 and over none is empty
+      val base = orders.groupBy("o_custkey").agg(
+        datediff(lit(java.sql.Date.valueOf("2002-01-01")),
+          max(col("o_orderdate")).cast("date")).as("rd"),
+        count(lit(1)).as("f"),
+        sum((col("o_totalprice").cast("decimal(12,2)") * 100).cast("long"))
+          .cast("long").as("m"))
+      def q(o: org.apache.spark.sql.Column*) =
+        ntile(4).over(Window.orderBy(o :+ col("o_custkey"): _*))
+      val rfm = base.select(col("o_custkey"), col("m"),
+          (q(col("rd").desc) * 100 + q(col("f")) * 10 + q(col("m")))
+            .cast("long").as("segment"))
+        .groupBy("segment").agg(count(lit(1)), sum("m").cast("long"),
+          min("o_custkey").cast("long"))
+        .orderBy("segment").collect().toSeq
+      assert(rfm.isEmpty == (n == 0))
+      assert(Analytics.q263Rfm.run(spark, d).collect().toSeq === rfm, s"q263 at $n rows")
+      assert(Analytics.q265RfmCuts.run(spark, d).collect().toSeq === rfm, s"q265 at $n rows")
+    }
+  }
+
   test("exactSelectRanks returns the exact k-th smallest for explicit ranks") {
     import spark.implicits._
     val rnd = new scala.util.Random(23)

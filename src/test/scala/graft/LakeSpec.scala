@@ -211,167 +211,27 @@ class LakeSpec extends AnyFunSuite {
     assert(spark.read.parquet(dir).count() == 20000)
   }
 
-  test("deleteKeys rewrites only hit files; others stay byte-identical") {
-    val s = spark
-    val dir = Files.createTempDirectory("graft-del").toString + "/data"
-    // 200 rows spread over 4 files; which file holds which keys is up to
-    // the hash partitioner — the spec discovers it rather than assumes it
-    (1L to 200L).toDF("id").withColumn("payload", col("id") * 7)
-      .repartition(4, col("id")).write.parquet(dir)
-    val fs = new org.apache.hadoop.fs.Path(dir)
-      .getFileSystem(s.sparkContext.hadoopConfiguration)
-    def snapshot() = fs.listStatus(new org.apache.hadoop.fs.Path(dir))
-      .filter(f => f.isFile && f.getPath.getName.endsWith(".parquet"))
-      .map(f => f.getPath.getName -> ((f.getLen, f.getModificationTime))).toMap
-    val before = snapshot()
-    val doomed = Seq(3L, 50L, 51L)
-    // which files actually hold the doomed keys (ground truth for "only
-    // hit files are rewritten")
-    val hitFiles = s.read.parquet(dir)
-      .select(col("id"), input_file_name().as("f"))
-      .filter(col("id").isin(doomed: _*))
-      .select("f").distinct().as[String].collect()
-      .map(u => new org.apache.hadoop.fs.Path(new java.net.URI(u)).getName).toSet
-
-    val report = Lake.deleteKeys(s, dir, "id", doomed.toDF("id"))
-
-    assert(report.map(_._3).sum == doomed.size, s"report=$report")
-    assert(report.map(_._2).sum == hitFiles.size)
-    val after = snapshot()
-    // untouched files: same name, length, and mtime
-    before.keys.filterNot(hitFiles).foreach { f =>
-      assert(after(f) == before(f), s"clean file $f was rewritten")
-    }
-    // hit files are gone, replaced by fresh ones
-    hitFiles.foreach(f => assert(!after.contains(f), s"hit file $f survived"))
-    // and the surviving data is exactly the anti-join
-    val left = s.read.parquet(dir).select("id", "payload")
-      .as[(Long, Long)].collect().toSet
-    val expected = (1L to 200L).filterNot(doomed.contains).map(i => i -> i * 7).toSet
-    assert(left == expected)
-    // no stale tmp
-    assert(!fs.exists(new org.apache.hadoop.fs.Path(dir, "_delete_tmp")))
-  }
-
-  test("deleteKeys spans partition leaves and preserves partition values") {
-    val s = spark
-    val base = Files.createTempDirectory("graft-del-part").toString + "/lake"
-    // one position key present in BOTH site leaves, plus per-leaf filler
-    val rows = Seq(("Shared", "jjit"), ("JOnly", "jjit"), ("Shared", "ppl"),
-      ("POnly", "ppl"))
-    Lake.writeSnapshot(rows.toDF("position", "site")
-      .withColumn("region", lit("waw")).withColumn("experience", lit("mid"))
-      .withColumn("snapshot_date", lit(java.sql.Date.valueOf("2026-08-13"))), base)
-    val report = Lake.deleteKeys(s, base, "position", Seq("Shared").toDF("position"))
-    // both leaves contained the key → both rewritten, 1 row deleted each
-    assert(report.size == 2 && report.forall(_._3 == 1L), s"report=$report")
-    val left = Lake.read(s, base).select("position", "site")
-      .as[(String, String)].collect().toSet
-    assert(left == Set(("JOnly", "jjit"), ("POnly", "ppl")),
-      "partition values must survive the in-leaf rewrite")
-  }
-
-  test("repairDuplicates undoes a simulated crash window, touches only affected files, idempotent") {
-    val s = spark
-    val dir = Files.createTempDirectory("graft-repair").toString + "/data"
-    (1L to 200L).toDF("id").withColumn("payload", col("id") * 3)
-      .repartition(4, col("id")).write.parquet(dir)
-    val fs = new org.apache.hadoop.fs.Path(dir)
-      .getFileSystem(s.sparkContext.hadoopConfiguration)
-    def files() = fs.listStatus(new org.apache.hadoop.fs.Path(dir))
-      .filter(f => f.isFile && f.getPath.getName.endsWith(".parquet"))
-      .map(f => f.getPath.getName -> ((f.getLen, f.getModificationTime))).toMap
-    val expected = s.read.parquet(dir).as[(Long, Long)].collect().toSet
-
-    // simulate the deleteKeys crash: one file's cleaned twin renamed in,
-    // original not yet deleted — every row of that file now exists twice
-    val victim = fs.listStatus(new org.apache.hadoop.fs.Path(dir))
-      .filter(f => f.isFile && f.getPath.getName.endsWith(".parquet")).head.getPath
-    val twin = new org.apache.hadoop.fs.Path(dir, "part-crash-twin.parquet")
-    org.apache.hadoop.fs.FileUtil.copy(fs, victim, fs, twin, false,
-      s.sparkContext.hadoopConfiguration)
-    val dupRows = s.read.parquet(victim.toString).count()
-    assert(s.read.parquet(dir).count() == 200 + dupRows)
-    val untouchedBefore = files().filterNot { case (n, _) =>
-      n == victim.getName || n == twin.getName }
-
-    val report = Lake.repairDuplicates(s, dir)
-    assert(report.map(_._3).sum == dupRows, s"report=$report")
-    // containment repair DELETES one of the twins — nothing is rewritten
-    assert(report.map(_._2).sum == 1)
-    assert(s.read.parquet(dir).as[(Long, Long)].collect().toSet == expected)
-    assert(s.read.parquet(dir).count() == 200)
-    // every surviving file (including the kept twin) stayed byte-identical
-    val after = files()
-    assert(after.size == untouchedBefore.size + 1)
-    untouchedBefore.foreach { case (n, sig) =>
-      assert(after(n) == sig, s"clean file $n was rewritten")
-    }
-    // rerun on a healthy lake: nothing to do
-    assert(Lake.repairDuplicates(s, dir).isEmpty)
-  }
-
-  test("repairDuplicates leaves legitimately-repeated rows alone unless opted in") {
-    val s = spark
-    val dir = Files.createTempDirectory("graft-repair-legit").toString + "/data"
-    // no unique key: row (1, 1) legitimately appears three times — twice
-    // inside file A, once in file B; neither file's multiset is contained
-    // in the other's (partial overlap ≠ crash evidence)
-    Seq((1L, 1L), (1L, 1L), (2L, 2L)).toDF("id", "v")
-      .coalesce(1).write.mode("append").parquet(dir)
-    Seq((1L, 1L), (3L, 3L)).toDF("id", "v")
-      .coalesce(1).write.mode("append").parquet(dir)
-    assert(s.read.parquet(dir).count() == 5)
-
-    // default: crash-gated — nothing qualifies, nothing changes
-    assert(Lake.repairDuplicates(s, dir).isEmpty)
-    assert(s.read.parquet(dir).count() == 5)
-
-    // explicit opt-in: blanket exact collapse (the documented data loss)
-    val report = Lake.repairDuplicates(s, dir, collapseAll = true)
-    assert(report.map(_._3).sum == 2, s"report=$report")
-    assert(s.read.parquet(dir).as[(Long, Long)].collect().sorted.toSeq ==
-      Seq((1L, 1L), (2L, 2L), (3L, 3L)))
-  }
-
-  test("upsertKeys merges update+insert+delete with minimal rewrite") {
-    val s = spark
-    val dir = Files.createTempDirectory("graft-upsert").toString + "/data"
-    (1L to 100L).toDF("id").withColumn("v", col("id") * 10)
-      .repartition(4, col("id")).write.parquet(dir)
-    val fs = new org.apache.hadoop.fs.Path(dir)
-      .getFileSystem(s.sparkContext.hadoopConfiguration)
-    def files() = fs.listStatus(new org.apache.hadoop.fs.Path(dir))
-      .filter(f => f.isFile && f.getPath.getName.endsWith(".parquet"))
-      .map(f => f.getPath.getName -> ((f.getLen, f.getModificationTime))).toMap
-    val before = files()
-    // update id=7 (v -> 777), insert id=101 (NULL flag — outer-joined
-    // change feeds produce those; must mean "not deleted"), delete id=8
-    val changes = Seq((7L, 777L, Some(false)), (101L, 1010L, None),
-      (8L, 0L, Some(true)))
-      .toDF("id", "v", "_deleted")
-    val (report, inserted) =
-      Lake.upsertKeys(s, dir, "id", changes, deleteFlag = Some("_deleted"))
-    assert(inserted == 2L) // the update row + the new row re-enter
-    assert(report.map(_._3).sum == 2L, s"2 old rows removed: $report")
-    val state = s.read.parquet(dir).as[(Long, Long)].collect().toMap
-    val expected = (1L to 100L).filterNot(Set(7L, 8L)).map(i => i -> i * 10).toMap +
-      (7L -> 777L) + (101L -> 1010L)
-    assert(state == expected)
-    // files not holding id 7 or 8 were never rewritten
-    val untouched = before.count { case (name, sig) => files().get(name).contains(sig) }
-    assert(untouched >= 2, "clean files must survive byte-identical")
+  /** Read-modify-write of an (id, v) table at `data`: read every row,
+    * apply `rows` on the driver, overwrite the table with the result.
+    * Two writers running it unprotected can both read the same state,
+    * and the later overwrite then loses the earlier one's rows.
+    */
+  private def rewriteWith(data: String, rows: Seq[(Long, Long)]): Unit = {
+    val state = spark.read.parquet(data).as[(Long, Long)].collect().toMap
+    (state ++ rows).toSeq.toDF("id", "v").coalesce(1)
+      .write.mode("overwrite").parquet(data)
   }
 
   test("withCommit: two concurrent writers serialize, loser retries, no lost rows") {
     val s = spark
-    val dir = Files.createTempDirectory("graft-occ").toString + "/data"
+    val dir = Files.createTempDirectory("graft-occ").toString + "/table"
+    val data = dir + "/data"
     (1L to 50L).toDF("id").withColumn("v", col("id") * 10)
-      .repartition(2, col("id")).write.parquet(dir)
-    // two writers upsert DISJOINT key sets concurrently; without the
-    // commit protocol their deleteKeys/append swaps can interleave and
-    // lose rewrites — with it, one wins each slot and the loser
-    // re-runs against the winner's committed state
+      .repartition(2, col("id")).write.parquet(data)
+    // two writers rewrite the table with DISJOINT key sets concurrently;
+    // without the commit protocol both can read the same state and the
+    // second overwrite drops the first writer's rows — with it, one wins
+    // each slot and the loser re-runs against the winner's committed state
     import scala.concurrent.{Await, Future}
     import scala.concurrent.duration._
     import scala.concurrent.ExecutionContext.Implicits.global
@@ -381,12 +241,12 @@ class LakeSpec extends AnyFunSuite {
     val fut = Future.traverse(writers) { rows =>
       Future {
         Lake.withCommit(s, dir) {
-          Lake.upsertKeys(s, dir, "id", rows.toDF("id", "v"))
+          rewriteWith(data, rows)
         }
       }
     }
     Await.result(fut, 120.seconds)
-    val state = s.read.parquet(dir).as[(Long, Long)].collect().toMap
+    val state = s.read.parquet(data).as[(Long, Long)].collect().toMap
     val expected = (1L to 50L).map(i => i -> i * 10).toMap ++
       writers.flatten.toMap
     assert(state == expected, "both writers' changes present, none lost")
@@ -400,8 +260,9 @@ class LakeSpec extends AnyFunSuite {
 
   test("withCommit: a crashed writer's stale claim is reclaimed; vacuumCommits bounds the ledger") {
     val s = spark
-    val dir = Files.createTempDirectory("graft-occ2").toString + "/data"
-    Seq((1L, 10L)).toDF("id", "v").write.parquet(dir)
+    val dir = Files.createTempDirectory("graft-occ2").toString + "/table"
+    val data = dir + "/data"
+    Seq((1L, 10L)).toDF("id", "v").write.parquet(data)
     val txn = new org.apache.hadoop.fs.Path(dir, "_graft_txn")
     val fs = txn.getFileSystem(s.sparkContext.hadoopConfiguration)
     fs.mkdirs(txn)
@@ -412,9 +273,9 @@ class LakeSpec extends AnyFunSuite {
     // with staleClaimMs = 0 it is reclaimed immediately and the writer
     // proceeds
     Lake.withCommit(s, dir, staleClaimMs = 0L) {
-      Lake.upsertKeys(s, dir, "id", Seq((2L, 20L)).toDF("id", "v"))
+      rewriteWith(data, Seq((2L, 20L)))
     }
-    assert(s.read.parquet(dir).count() == 2)
+    assert(s.read.parquet(data).count() == 2)
     assert(!fs.exists(orphan), "stale claim reclaimed")
     // grow the ledger, then vacuum down to the newest `keep`
     for (k <- 3L to 12L) Lake.withCommit(s, dir, staleClaimMs = 0L) { () }

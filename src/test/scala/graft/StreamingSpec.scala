@@ -557,13 +557,13 @@ class StreamingSpec extends AnyFunSuite {
     } finally q.stop()
   }
 
-  test("cdcApplyLatestStream arbitrates several changes per key inside one batch") {
+  test("cdcApplyVersionedStream arbitrates several changes per key inside one batch") {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val dir = Files.createTempDirectory("graft-cdc-latest").toString + "/lake"
+    val dir = Files.createTempDirectory("graft-cdc-latest").toString + "/table"
     // one batch, three keys, each with CONFLICTING changes — the raw
-    // form cdcApplyStream's contract forbids; the keep-latest sink must
-    // resolve each key by the highest seq
+    // form Versioned.upsert's one-row-per-key contract forbids; the
+    // keep-latest sink must resolve each key by the highest seq
     val b1 = Seq(
       (1L, 10L, 1L, false), (1L, 11L, 2L, false), // update ∘ update → 11
       (2L, 20L, 1L, false), (2L, 0L, 2L, true),   // delete last → absent
@@ -571,16 +571,16 @@ class StreamingSpec extends AnyFunSuite {
     // a later batch still applies in arrival order on top
     val b2 = Seq((1L, 0L, 3L, true), (4L, 40L, 1L, false))
     val mem = MemoryStream[(Long, Long, Long, Boolean)]
-    val q = EventStream.cdcApplyLatestStream(
+    val q = EventStream.cdcApplyVersionedStream(
       mem.toDF().toDF("id", "v", "seq", "_deleted"), dir, "id", "_deleted",
       orderCols = Seq("seq"))
       .outputMode("update").start()
     try {
       mem.addData(b1: _*); q.processAllAvailable()
-      assert(spark.read.parquet(dir).select("id", "v")
+      assert(graft.sources.Versioned.read(spark, dir).select("id", "v")
         .as[(Long, Long)].collect().toMap == Map(1L -> 11L, 3L -> 30L))
       mem.addData(b2: _*); q.processAllAvailable()
-      assert(spark.read.parquet(dir).select("id", "v")
+      assert(graft.sources.Versioned.read(spark, dir).select("id", "v")
         .as[(Long, Long)].collect().toMap == Map(3L -> 30L, 4L -> 40L))
     } finally q.stop()
   }
@@ -588,27 +588,29 @@ class StreamingSpec extends AnyFunSuite {
   test("cdc apply stream lands the same lake state as a batch merge") {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val dir = Files.createTempDirectory("graft-cdc").toString + "/lake"
+    val dir = Files.createTempDirectory("graft-cdc").toString + "/table"
     // change log: batch 1 inserts 3 keys; batch 2 updates one, deletes
     // one, inserts one — the final state exercises all three verbs
     val b1 = Seq((1L, 10L, false), (2L, 20L, false), (3L, 30L, false))
     val b2 = Seq((2L, 222L, false), (3L, 0L, true), (4L, 40L, false))
     val mem = MemoryStream[(Long, Long, Boolean)]
-    val q = EventStream.cdcApplyStream(
-      mem.toDF().toDF("id", "v", "_deleted"), dir, "id", "_deleted")
+    // one change per key per batch: the order column never arbitrates
+    val q = EventStream.cdcApplyVersionedStream(
+      mem.toDF().toDF("id", "v", "_deleted"), dir, "id", "_deleted",
+      orderCols = Seq("v"))
       .outputMode("update").start()
     try {
       mem.addData(b1: _*); q.processAllAvailable()
       mem.addData(b2: _*); q.processAllAvailable()
-      val streamed = spark.read.parquet(dir).select("id", "v")
+      val streamed = graft.sources.Versioned.read(spark, dir).select("id", "v")
         .as[(Long, Long)].collect().toMap
       assert(streamed == Map(1L -> 10L, 2L -> 222L, 4L -> 40L))
       // batch twin: replaying the same log with batch upserts agrees
-      val dir2 = Files.createTempDirectory("graft-cdc-b").toString + "/lake"
-      Seq(b1, b2).foreach(b => graft.sources.Lake.upsertKeys(
+      val dir2 = Files.createTempDirectory("graft-cdc-b").toString + "/table"
+      Seq(b1, b2).foreach(b => graft.sources.Versioned.upsert(
         spark, dir2, "id", b.toDF("id", "v", "_deleted"),
         deleteFlag = Some("_deleted")))
-      val batch = spark.read.parquet(dir2).select("id", "v")
+      val batch = graft.sources.Versioned.read(spark, dir2).select("id", "v")
         .as[(Long, Long)].collect().toMap
       assert(batch == streamed)
     } finally q.stop()
