@@ -1,7 +1,10 @@
 package graft.operators
 
 import org.apache.spark.broadcast.Broadcast
+import org.apache.spark.sql.catalyst.expressions.Literal
+import org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftshim.GraftSqlShim
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.util.sketch.BloomFilter
@@ -42,8 +45,16 @@ object BloomJoin {
     */
   def buildKeyBloom(build: DataFrame, keyCol: String,
       expectedKeys: Long, fpp: Double = 0.01): Broadcast[BloomFilter] = {
-    val bf = build.stat.bloomFilter(keyCol, math.max(expectedKeys, 1L), fpp)
-    build.sparkSession.sparkContext.broadcast(bf)
+    val n = math.max(expectedKeys, 1L)
+    // `stat.bloomFilter`'s own aggregation, run here because an EMPTY
+    // build side aggregates to NULL, which `stat.bloomFilter` hands to
+    // `BloomFilter.readFrom` (an NPE): no keys is an empty filter
+    val agg = new BloomFilterAggregate(GraftSqlShim.expression(col(keyCol)),
+      Literal(n), Literal(BloomFilter.optimalNumOfBits(n, fpp)))
+    val bytes = build.select(GraftSqlShim.column(agg.toAggregateExpression()))
+      .head().getAs[Array[Byte]](0)
+    build.sparkSession.sparkContext.broadcast(
+      if (bytes == null) BloomFilter.create(n, fpp) else BloomFilter.readFrom(bytes))
   }
 
   /** Broadcast-size ceiling for the sketch: 2^28 keys at 1 % fpp is a
@@ -92,7 +103,8 @@ object BloomJoin {
   // the PLAIN join: the Bloom pass must not change a single row. The
   // filter is sized from the catalog (estimateRows: parquet scan bytes /
   // conservative row width — scales with the data, no baked constant) so
-  // the build side runs exactly ONE job — the bloomFilter aggregation —
+  // the build side runs exactly ONE query — the bloomFilter aggregation
+  // (under AQE its shuffle and result stages run as two Spark jobs) —
   // with no sizing count() before it. At test scale the exact join broadcasts;
   // at 100 TB it becomes a shuffle join over the ~20 % of lineitem that
   // survives the probe, with the filter moving once per executor via

@@ -1154,7 +1154,7 @@ object StreamQueries {
   // path): a pair that ADDS sidecar rows now emits exactly the
   // deleted rows as `old`-side DELETE events — one executor partition
   // per targeted live file, reading the file + the new sidecars
-  // ([[ParquetGroups.dvKeySet]], the row-level scan machinery) and
+  // ([[VersionedFileReader]], the decode the row-level scan shares) and
   // keeping ONLY the keys the pair deleted; file-diff partitions emit
   // each side's LIVE rows (the side's own sidecars applied), so a
   // compaction after deletes streams as pure carries and an

@@ -321,10 +321,19 @@ object Versioned {
       .ParquetToSparkSchemaConverter(spark.sessionState.conf).convert(msg)
   }
 
-  /** [[footerSchema]] over a data-file NAME (the manifest entry key). */
-  private[graft] def dataFileSchema(spark: SparkSession, dir: String,
-      name: String): org.apache.spark.sql.types.StructType =
-    footerSchema(spark, s"$dir/data/$name")
+  /** The versioned layer's one driver-side read of manifest-listed
+    * files (data files or delete sidecars, by manifest NAME) from
+    * `dir/data/`, under `schema` or, by default, the first file's
+    * [[footerSchema]] — files of one era/sidecar group share a writer
+    * schema.
+    */
+  private[graft] def readDataFiles(spark: SparkSession, dir: String,
+      names: Seq[String],
+      schema: Option[org.apache.spark.sql.types.StructType] = None): DataFrame = {
+    val paths = names.map(n => s"$dir/data/$n")
+    spark.read.schema(schema.getOrElse(footerSchema(spark, paths.head)))
+      .parquet(paths: _*)
+  }
 
   /** Read a set of manifest entries under the LOGICAL schema of
     * `changes`: per era, read that era's files and apply every change
@@ -342,12 +351,10 @@ object Versioned {
       entries: Seq[(String, Long, Int)]): DataFrame = {
     val byEra = entries.groupBy(_._3).toSeq.sortBy(_._1)
     byEra.map { case (era, es) =>
-      val paths = es.map(e => s"$dir/data/${e._1}")
       // explicit footer schema: skips the per-read inference job (see
       // [[footerSchema]]); one footer speaks for the era, and the widen
       // foldLeft below normalizes any physically-mixed stragglers
-      val df = spark.read.schema(footerSchema(spark, paths.head))
-        .parquet(paths: _*)
+      val df = readDataFiles(spark, dir, es.map(_._1))
       // widen applies to EVERY era, not just pre-widen ones: the cast is
       // idempotent on already-widened files (Catalyst elides same-type
       // casts), and always applying it guarantees the declared logical
@@ -403,9 +410,7 @@ object Versioned {
     else dvs.groupBy(dv => currentName(dv.keyName, dv.gen, renames))
       .toSeq.sortBy(_._1)
       .foldLeft(df) { case (acc, (keyName, refs)) =>
-        val dv = spark.read
-          .schema(dataFileSchema(spark, dir, refs.head.file))
-          .parquet(refs.map(r => s"$dir/data/${r.file}"): _*)
+        val dv = readDataFiles(spark, dir, refs.map(_.file))
           .select(col("__target"), col("__key"))
         acc.join(dv,
           acc(fileCol) === dv("__target") && acc(keyName) === dv("__key"),
@@ -525,9 +530,7 @@ object Versioned {
     dvPairCache.getOrElseUpdate(sig, {
       refs.groupBy(r => (r.keyName, r.gen)).toSeq.sortBy(_._1)
         .map { case ((kn, _), rs) =>
-          spark.read
-            .schema(dataFileSchema(spark, dir, rs.head.file))
-            .parquet(rs.map(r => s"$dir/data/${r.file}").distinct: _*)
+          readDataFiles(spark, dir, rs.map(_.file).distinct)
             .select(col("__target"), lit(kn).as("__kn"),
               col("__key").cast("string").as("__k"))
         }
@@ -981,20 +984,6 @@ object Versioned {
     }.toArray)
   }
 
-  /** REPLACE-DATA commit for the SQL row-level operations (UPDATE /
-    * MERGE / group-based DELETE, [[graft.sources.v2.GraftRowLevelOperation]]):
-    * retire the files the operation's scan read, add the files its
-    * write staged, reconcile delete sidecars ([[retireDvRows]]).
-    * Concurrency: the staged rows were computed OUTSIDE this OCC block
-    * (Spark's ReplaceData executes scan + write before the commit), so
-    * a retry cannot re-derive them — instead the commit verifies the
-    * operation's pinned SNAPSHOT is still compatible: concurrent
-    * APPENDS commit fine (their rows were beyond the snapshot — the
-    * Delta WriteSerializable stance), while a concurrent rewrite of
-    * any snapshot file, a new delete sidecar, or a schema evolution
-    * fails the statement loudly (re-run it) rather than silently
-    * dropping the concurrent writer's effect.
-    */
   /** The snapshot-compatibility gate shared by [[commitReplace]] and
     * [[commitDelta]] — see commitReplace's isolation contract.
     */
@@ -1013,6 +1002,20 @@ object Versioned {
       conflict("a scanned data file (a concurrent rewrite)")
   }
 
+  /** REPLACE-DATA commit for the SQL row-level operations (UPDATE /
+    * MERGE / group-based DELETE, [[graft.sources.v2.GraftRowLevelOperation]]):
+    * retire the files the operation's scan read, add the files its
+    * write staged, reconcile delete sidecars ([[retireDvRows]]).
+    * Concurrency: the staged rows were computed OUTSIDE this OCC block
+    * (Spark's ReplaceData executes scan + write before the commit), so
+    * a retry cannot re-derive them — instead the commit verifies the
+    * operation's pinned SNAPSHOT is still compatible: concurrent
+    * APPENDS commit fine (their rows were beyond the snapshot — the
+    * Delta WriteSerializable stance), while a concurrent rewrite of
+    * any snapshot file, a new delete sidecar, or a schema evolution
+    * fails the statement loudly (re-run it) rather than silently
+    * dropping the concurrent writer's effect.
+    */
   private[graft] def commitReplace(spark: SparkSession, dir: String,
       snapshot: Option[Manifest], replaced: Set[String],
       added: Seq[(String, Long)],
@@ -1568,8 +1571,7 @@ object Versioned {
     if (spec.isEmpty || added.isEmpty) (added, Seq.empty)
     else {
       val out = writeDataLayout(
-        spark.read.schema(schema)
-          .parquet(added.map(a => s"$dir/data/${a._1}"): _*), dir, spec)
+        readDataFiles(spark, dir, added.map(_._1), Some(schema)), dir, spec)
       val fs = fsOf(spark, dir)
       added.foreach { case (f, _) =>
         fs.delete(new org.apache.hadoop.fs.Path(s"$dir/data/$f"), false)
@@ -1610,9 +1612,7 @@ object Versioned {
       dvs: Seq[DvRef], retired: Set[String]): Seq[DvRef] =
     if (dvs.isEmpty || retired.isEmpty) dvs
     else dvs.flatMap { ref =>
-      val survivors = spark.read
-        .schema(dataFileSchema(spark, dir, ref.file))
-        .parquet(s"$dir/data/${ref.file}")
+      val survivors = readDataFiles(spark, dir, Seq(ref.file))
         .filter(!col("__target").isInCollection(retired.toSeq))
       val n = survivors.count()
       if (n == ref.nDel) Some(ref) // no stale rows — sidecar carries as is
@@ -1940,9 +1940,7 @@ object Versioned {
       (mTo.dvs.toSet diff mFrom.dvs.toSet)
     val dvChanged: Set[String] =
       if (dvDelta.isEmpty) Set.empty
-      else spark.read
-        .schema(dataFileSchema(spark, dir, dvDelta.head.file))
-        .parquet(dvDelta.map(r => s"$dir/data/${r.file}").toSeq: _*)
+      else readDataFiles(spark, dir, dvDelta.toSeq.map(_.file).distinct)
         .select("__target").distinct().collect()
         .map(_.getString(0)).toSet
     // canonical payload order + types under the chosen rename mapping —
@@ -2037,9 +2035,7 @@ object Versioned {
       val hit: Set[String] = fileEra.toSeq.groupBy(_._2).flatMap {
         case (era, files) =>
           val pk = physicalName(keyCol, era, renames)
-          spark.read
-            .schema(dataFileSchema(spark, dir, files.head._1))
-            .parquet(files.map(f => s"$dir/data/${f._1}"): _*)
+          readDataFiles(spark, dir, files.map(_._1))
             .select(col(pk), input_file_name().as("_f"))
             .join(broadcast(k.withColumnRenamed(keyCol, pk)), pk)
             .select("_f").distinct().collect()
@@ -2053,9 +2049,7 @@ object Versioned {
       val replacement: Map[String, Seq[(String, Long, Int)]] = hit.map { f =>
         val era = fileEra(f)
         val pk = physicalName(keyCol, era, renames)
-        val cleaned = spark.read
-          .schema(dataFileSchema(spark, dir, f))
-          .parquet(s"$dir/data/$f")
+        val cleaned = readDataFiles(spark, dir, Seq(f))
           .join(broadcast(k.withColumnRenamed(keyCol, pk)), Seq(pk), "left_anti")
           .coalesce(1)
         f -> writeData(cleaned, dir).filter(_._2 > 0)
@@ -2078,9 +2072,7 @@ object Versioned {
       }.toSet
       val dvRewrite: Map[String, Option[(String, Long)]] = allDvRefs.flatMap {
         ref =>
-          val df = spark.read
-            .schema(dataFileSchema(spark, dir, ref.file))
-            .parquet(s"$dir/data/${ref.file}")
+          val df = readDataFiles(spark, dir, Seq(ref.file))
           val keyApplies = currentName(ref.keyName, ref.gen, renames) == keyCol
           val hasKey = keyApplies && df.join(
             broadcast(k.withColumnRenamed(keyCol, "__key")),
@@ -2491,15 +2483,6 @@ object Versioned {
     }
   }
 
-  /** The entry subset compatible with `column = one of values` under
-    * the manifest's PARTITION TAGS (`#pfile`, q281): a file tagged
-    * under this column keeps iff its tag value matches; a file tagged
-    * under ANOTHER column (a different partition-spec era) or untagged
-    * fails OPEN — exactly [[readPartitionPruned]]'s era logic, factored
-    * so the SQL catalog scan prunes by partition predicate too.
-    * `values` must be Spark's PATH-ESCAPED renderings; the caller skips
-    * the prune for values whose escaping differs from themselves.
-    */
   /** A tag's column name walked FORWARD into the current logical
     * schema: tags record the file's-own-era physical name (identity
     * tags the column, temporal tags the transform over it), so a later
@@ -2530,6 +2513,15 @@ object Versioned {
       }.toMap
   }
 
+  /** The entry subset compatible with `column = one of values` under
+    * the manifest's PARTITION TAGS (`#pfile`, q281): a file tagged
+    * under this column keeps iff its tag value matches; a file tagged
+    * under ANOTHER column (a different partition-spec era) or untagged
+    * fails OPEN — exactly [[readPartitionPruned]]'s era logic, factored
+    * so the SQL catalog scan prunes by partition predicate too.
+    * `values` must be Spark's PATH-ESCAPED renderings; the caller skips
+    * the prune for values whose escaping differs from themselves.
+    */
   private[graft] def ptagPrunedEntries(m: Manifest,
       entries: Seq[(String, Long, Int)], column: String,
       values: Set[String]): Seq[(String, Long, Int)] = {
@@ -2582,14 +2574,6 @@ object Versioned {
     (df, kept.size, m.entries.size)
   }
 
-  /** [[readVersion]] with manifest-stats file pruning by per-column
-    * bounds (conjunct semantics) — the SQL catalog's scan path: a
-    * translatable range/point predicate prunes files before the
-    * parquet scan is even planned. `fileCol` keeps the per-row file
-    * name (the `_file` metadata column). Bounds are NECESSARY
-    * conditions of the query's filter, so pruning is sound; the caller
-    * re-applies the full filter.
-    */
   /** The entry subset surviving ALL the manifest-level prunes — stats
     * bounds, partition tags, and null-count predicates (they COMPOSE:
     * each is a necessary-condition filter over the same entry list).
@@ -2616,6 +2600,14 @@ object Versioned {
     }
   }
 
+  /** [[readVersion]] with manifest-stats file pruning by per-column
+    * bounds (conjunct semantics) — the SQL catalog's scan path: a
+    * translatable range/point predicate prunes files before the
+    * parquet scan is even planned. `fileCol` keeps the per-row file
+    * name (the `_file` metadata column). Bounds are NECESSARY
+    * conditions of the query's filter, so pruning is sound; the caller
+    * re-applies the full filter.
+    */
   private[graft] def readVersionStatsPruned(spark: SparkSession, dir: String,
       v: Long, bounds: Seq[(String, Bound, Bound)],
       fileCol: Option[String] = None,
@@ -2681,23 +2673,6 @@ object Versioned {
     (df, kept.size, files.size)
   }
 
-  /** Retention: keep the newest `keepVersions` manifests, delete older
-    * manifests and every data file only they referenced; crashed
-    * writers' orphans — files NO manifest (kept or dropped) lists —
-    * are deleted only once older than `orphanAgeMs` (Delta's
-    * tombstone-retention pattern). The age guard exists because
-    * create/append/upsert land data files under `dir/data` BEFORE the
-    * manifest commit: a young unreferenced file may belong to an
-    * in-flight writer, and deleting it would leave that writer's
-    * about-to-land manifest pointing at nothing. Files referenced by a
-    * DROPPED manifest carry no such risk (they were committed, and
-    * their only referents are the manifests this same pass deletes),
-    * so they go immediately. The whole pass runs inside
-    * [[Lake.withCommit]]: the manifest set is stable between the
-    * reachability computation and the deletes, and no concurrent
-    * commit can interleave. Returns (manifestsRemoved,
-    * dataFilesRemoved).
-    */
   /** NAMED VERSION REFS (Iceberg tags): a stable name for one committed
     * version — `SELECT ... VERSION AS OF 'baseline'` via the SQL
     * catalog, and a PIN against [[vacuum]] (a tagged version survives
@@ -2709,18 +2684,6 @@ object Versioned {
   def tags(spark: SparkSession, dir: String): Map[String, Long] =
     tagsWithTimes(spark, dir).map { case (n, (v, _)) => n -> v }
 
-  /** Tags with their CREATION TIME (epoch-ms; None for tags written by
-    * the two-field pre-times format) — what an audit needs to answer
-    * "what did 'baseline' point at and when was it cut". Surfaced by
-    * the `t.tags` / `t.history` SQL metadata tables.
-    *
-    * CRASH RECOVERY: [[writeTags]] swaps `.tmp` → `_tags.tsv`; a crash
-    * between its delete and rename leaves only the tmp, whose content
-    * is the COMPLETE intended tag state — fall back to it rather than
-    * silently returning "no tags", which would let the next vacuum
-    * delete the formerly pinned versions (the exact failure the pin
-    * exists to prevent).
-    */
   /** Read one of the table's small CONTROL FILES (`_tags.tsv`,
     * `_props.tsv`) under the swap-crash recovery contract shared with
     * [[writeControlFile]]: the writer swaps `.tmp` → main, so a crash
@@ -2814,6 +2777,18 @@ object Versioned {
       writeControlFile(spark, dir, DroppedMarker, None)
     }
 
+  /** Tags with their CREATION TIME (epoch-ms; None for tags written by
+    * the two-field pre-times format) — what an audit needs to answer
+    * "what did 'baseline' point at and when was it cut". Surfaced by
+    * the `t.tags` / `t.history` SQL metadata tables.
+    *
+    * CRASH RECOVERY: [[writeTags]] swaps `.tmp` → `_tags.tsv`; a crash
+    * between its delete and rename leaves only the tmp, whose content
+    * is the COMPLETE intended tag state — fall back to it rather than
+    * silently returning "no tags", which would let the next vacuum
+    * delete the formerly pinned versions (the exact failure the pin
+    * exists to prevent).
+    */
   private[graft] def tagsWithTimes(spark: SparkSession, dir: String)
       : Map[String, (Long, Option[Long])] =
     readControlFile(spark, dir, "_tags.tsv")
@@ -3218,6 +3193,23 @@ object Versioned {
   def dropBranch(spark: SparkSession, dir: String, name: String): Unit =
     Lake.withCommit(spark, dir)(dropBranchInternal(spark, dir, name))
 
+  /** Retention: keep the newest `keepVersions` manifests, delete older
+    * manifests and every data file only they referenced; crashed
+    * writers' orphans — files NO manifest (kept or dropped) lists —
+    * are deleted only once older than `orphanAgeMs` (Delta's
+    * tombstone-retention pattern). The age guard exists because
+    * create/append/upsert land data files under `dir/data` BEFORE the
+    * manifest commit: a young unreferenced file may belong to an
+    * in-flight writer, and deleting it would leave that writer's
+    * about-to-land manifest pointing at nothing. Files referenced by a
+    * DROPPED manifest carry no such risk (they were committed, and
+    * their only referents are the manifests this same pass deletes),
+    * so they go immediately. The whole pass runs inside
+    * [[Lake.withCommit]]: the manifest set is stable between the
+    * reachability computation and the deletes, and no concurrent
+    * commit can interleave. Returns (manifestsRemoved,
+    * dataFilesRemoved).
+    */
   def vacuum(spark: SparkSession, dir: String, keepVersions: Int,
       orphanAgeMs: Long = 24L * 3600 * 1000): (Int, Int) =
     Lake.withCommit(spark, dir) {

@@ -2,7 +2,7 @@ package graft.sources.v2
 
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.connector.expressions.NamedReference
 import org.apache.spark.sql.connector.expressions.filter.Predicate
@@ -52,13 +52,14 @@ import graft.sources.Versioned
   *     [[SupportsRuntimeV2Filtering]] and why [[VersionedSqlTable]]
   *     exposes a `_file` metadata column.
   *
-  * The scan decodes candidate files executor-side through the public
-  * parquet-hadoop Group API with DRIVER-computed era recipes (rename
-  * mapping, added-later nulls, widened casts — the q280 machinery,
-  * shared via [[ParquetGroups]]), applies MOR delete sidecars as
-  * per-file key sets (a rewrite must not resurrect dv-deleted rows),
-  * and appends `_file` when asked. The write is a genuine V2
-  * [[BatchWrite]] whose executors write parquet through Spark's public
+  * The scan decodes candidate files executor-side through
+  * [[VersionedFileReader]], the decode the change feed shares: public
+  * parquet-hadoop Group API, DRIVER-computed era recipes (rename
+  * mapping, added-later nulls, widened casts), MOR delete sidecars
+  * applied as per-file key sets built from the sidecar paths (a
+  * rewrite must not resurrect dv-deleted rows), and `_file` appended
+  * when asked. The write is a genuine V2 [[BatchWrite]] whose
+  * executors write parquet through Spark's public
   * `ParquetWriteSupport` directly into `data/` under commit-unique
   * names (uncommitted files are unreachable orphans; vacuum's age
   * window protects in-flight writers), and whose driver-side commit is
@@ -176,8 +177,8 @@ final class RowLevelScanBuilder(op: GraftRowLevelOperation, dir: String)
 
 /** One whole-file group scan over the pinned snapshot. V2 `Batch` (one
   * [[InputPartition]] per live file) so `BatchScanExec` can apply the
-  * runtime `_file` IN-filter; era recipes and per-file dv key sets are
-  * computed driver-side at planning.
+  * runtime `_file` IN-filter; era recipes and dv sidecar paths are
+  * resolved driver-side at planning.
   */
 final class RowLevelScan(op: GraftRowLevelOperation, dir: String,
     required: StructType,
@@ -224,81 +225,21 @@ final class RowLevelScan(op: GraftRowLevelOperation, dir: String,
   private def planFor(m: Versioned.Manifest): Array[InputPartition] = {
     val live = m.entries.filter(e => candidates(e._1))
     op.replacedFiles = Some(live.map(_._1).toSet)
-    val renames = m.renames
     // MOR delete sidecars: per candidate file, the key values its
-    // rewrite must NOT resurrect. Two application shapes, chosen by
-    // the sidecars' TOTAL recorded row count (manifest arithmetic,
-    // zero IO): up to `graft.rowlevel.dvDriverLimit` (default 100k)
-    // rows, the driver collects them once and ships per-file key SETS
-    // inside the partitions (one small read, zero per-executor
-    // re-reads). Above it — a delete-heavy table between OPTIMIZE runs
-    // — the driver ships only the sidecar PATHS and each partition
-    // reader builds its own file's set executor-side (work ∝
-    // candidates × sidecar rows, distributed; driver memory stays
-    // O(paths), never O(deleted keys)).
-    val totalDvRows = m.dvs.map(_.nDel).sum
-    val dvDriverLimit = spark.conf.getOption("graft.rowlevel.dvDriverLimit")
-      .map(_.toLong).getOrElse(100000L)
-    val collectDriverSide = totalDvRows <= dvDriverLimit
-    val dvKeys: Map[String, Seq[(String, Array[Any])]] =
-      if (m.dvs.isEmpty || live.isEmpty || !collectDriverSide) Map.empty
-      else {
-        // group by (current key name, gen): sidecars of different gens
-        // can carry different PHYSICAL __key types (a widen between
-        // deletes), and one spark.read over mixed schemas would adopt
-        // an arbitrary file's; reading per gen and CASTING to the
-        // CURRENT logical type makes every collected member the same
-        // runtime class as the data-file decode below — an un-cast
-        // Integer in a Set beside decoded Longs would contains()-miss
-        // every row and silently resurrect MOR-deleted rows
-        import org.apache.spark.sql.functions.{col => fcol}
-        val collected: Seq[(String, String, Any)] = m.dvs.groupBy(dv =>
-            (Versioned.currentName(dv.keyName, dv.gen, renames), dv.gen))
-          .toSeq.flatMap { case ((keyName, _), refs) =>
-            val dt = op.currentSchema(keyName).dataType
-            val toCat = CatalystTypeConverters.createToCatalystConverter(dt)
-            spark.read
-              .schema(Versioned.dataFileSchema(spark, dir, refs.head.file))
-              .parquet(refs.map(r => s"$dir/data/${r.file}"): _*)
-              .select(fcol("__target"), fcol("__key").cast(dt).as("__key"))
-              .collect().toSeq
-              .map(r => (r.getString(0), keyName, toCat(r.get(1))))
-          }
-        collected.groupBy(_._1).map { case (f, rows) =>
-          f -> rows.groupBy(_._2).toSeq
-            .map { case (k, vs) => (k, vs.map(_._3).toArray) }
-        }
-      }
-    // the executor-side shape: per current key name, every sidecar
-    // path (the reader filters to its own __target and decodes __key
-    // under the CURRENT logical type via ParquetGroups — the same
-    // own-primitive branch that makes mixed-era data files decode)
-    val dvPaths: Seq[(String, Array[String])] =
-      if (m.dvs.isEmpty || live.isEmpty || collectDriverSide) Seq.empty
-      else m.dvs.groupBy(dv =>
-          Versioned.currentName(dv.keyName, dv.gen, renames))
-        .toSeq.sortBy(_._1)
-        .map { case (k, refs) =>
-          (k, refs.map(r => s"$dir/data/${r.file}").toArray)
-        }
-    val keyNames =
-      if (m.dvs.isEmpty || live.isEmpty) Seq.empty
-      else m.dvs.map(dv => Versioned.currentName(dv.keyName, dv.gen, renames))
-        .distinct
+    // rewrite must NOT resurrect. The driver ships only the sidecar
+    // PATHS and each reader builds its own file's key set
+    // executor-side, decoding __key under the CURRENT logical type
+    // (work ∝ candidates × sidecar rows, distributed; driver memory
+    // stays O(paths), never O(deleted keys))
+    val dvFilters = VersionedFileReader.dvFilters(dir, m.changes, m.dvs,
+      m.renames, op.currentSchema(_).dataType)
     val fields = Versioned.eraRecipes(m.changes,
       required.fields.toSeq.filter(_.name != VersionedSqlTable.FileCol)
         .map(f => (f.name, f.dataType)))
-    val keyFields = Versioned.eraRecipes(m.changes,
-      keyNames.map(n => (n, op.currentSchema(n).dataType)))
+    val wantFile = required.fieldNames.contains(VersionedSqlTable.FileCol)
     live.map { case (f, _, era) =>
-      RowLevelPartition(s"$dir/data/$f", f, era,
-        fields(era), required.fieldNames.contains(VersionedSqlTable.FileCol),
-        dvKeys.getOrElse(f, Seq.empty).map { case (k, vs) =>
-          (keyFields(era).find(_._1 == k).get, vs)
-        }.toArray,
-        dvPaths.map { case (k, paths) =>
-          (keyFields(era).find(_._1 == k).get, paths)
-        }.toArray)
+      RowLevelPartition(s"$dir/data/$f", f, fields(era), wantFile,
+        dvFilters(era))
     }.toArray
   }
 
@@ -338,16 +279,13 @@ object RowLevelScan {
 
 /** One candidate data file: absolute path, manifest name, era recipe
   * for the OUTPUT fields ((logical, physical-or-"", ddl)), whether to
-  * append `_file`, and the dv filter in one of two shapes — per key
-  * column, its era recipe plus EITHER the Catalyst-typed deleted
-  * values (driver-collected, the small-sidecar path) OR the sidecar
-  * parquet paths the reader scans for its own `__target` rows
-  * (the bounded executor-side path).
+  * append `_file`, and the dv filters — per key column, its era recipe
+  * plus the sidecar paths the reader scans for its own `__target` rows
+  * ([[VersionedFileReader.dvFilters]]).
   */
-final case class RowLevelPartition(path: String, name: String, era: Int,
+final case class RowLevelPartition(path: String, name: String,
     fields: Array[(String, String, String)], wantFile: Boolean,
-    dvFilters: Array[((String, String, String), Array[Any])],
-    dvPaths: Array[((String, String, String), Array[String])] = Array.empty)
+    dvFilters: Array[((String, String, String), Array[String])])
   extends InputPartition
 
 final class RowLevelReaderFactory(conf: SerializableConfiguration)
@@ -355,64 +293,9 @@ final class RowLevelReaderFactory(conf: SerializableConfiguration)
 
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] = {
     val p = partition.asInstanceOf[RowLevelPartition]
-    new PartitionReader[InternalRow] {
-      import org.apache.parquet.example.data.Group
-      import org.apache.parquet.hadoop.ParquetReader
-      import org.apache.parquet.hadoop.example.GroupReadSupport
-
-      private val reader: ParquetReader[Group] = ParquetReader
-        .builder(new GroupReadSupport(), new Path(p.path))
-        .withConf(conf.value)
-        .build()
-      private val types = p.fields.map(f => DataType.fromDDL(f._3))
-      private val dvSets = p.dvFilters.map { case (recipe, vs) =>
-        (recipe, DataType.fromDDL(recipe._3), vs.toSet)
-      } ++ p.dvPaths.map { case (recipe, paths) =>
-        // executor-built key set: scan the sidecars for THIS file's
-        // rows, decoding __key under the CURRENT logical type
-        // ([[ParquetGroups.dvKeySet]] branches on each sidecar's own
-        // primitive, so mixed-gen sidecars — a widen between deletes —
-        // land in one uniformly-typed set, same as the data-file
-        // decode below)
-        val dt = DataType.fromDDL(recipe._3)
-        (recipe, dt, ParquetGroups.dvKeySet(conf.value, paths, p.name, dt))
-      }
-      private var cur: InternalRow = _
-
-      private def decode(g: Group, physical: String, dt: DataType): Any =
-        if (physical.isEmpty || !g.getType.containsField(physical)) null
-        else {
-          val idx = g.getType.getFieldIndex(physical)
-          if (g.getFieldRepetitionCount(idx) == 0) null
-          else ParquetGroups.value(g, idx, dt)
-        }
-
-      override def next(): Boolean = {
-        var g = reader.read()
-        // dv-deleted rows never leave the reader: a row whose key value
-        // sits in a sidecar set is skipped (null key never matches — a
-        // dv key is a real value by construction)
-        while (g != null && dvSets.exists { case ((_, phys, _), dt, set) =>
-          val v = decode(g, phys, dt)
-          v != null && set.contains(v)
-        }) g = reader.read()
-        if (g == null) { cur = null; false }
-        else {
-          val n = p.fields.length
-          val arr = new Array[Any](n + (if (p.wantFile) 1 else 0))
-          var i = 0
-          while (i < n) {
-            arr(i) = decode(g, p.fields(i)._2, types(i))
-            i += 1
-          }
-          if (p.wantFile) arr(n) = UTF8String.fromString(p.name)
-          cur = new GenericInternalRow(arr)
-          true
-        }
-      }
-      override def get(): InternalRow = cur
-      override def close(): Unit = reader.close()
-    }
+    new VersionedFileReader(conf.value, p.path, p.fields, p.dvFilters,
+      dvOnly = false,
+      if (p.wantFile) Array(UTF8String.fromString(p.name)) else Array.empty)
   }
 }
 
@@ -558,110 +441,6 @@ final class ParquetRowWriterFactory(dataDir: String, token: String,
   override def createWriter(partitionId: Int, taskId: Long): DataWriter[InternalRow] =
     ParquetRowWriters.writer(dataDir,
       f"$token-part-$partitionId%05d-$taskId.parquet", conf)
-}
-
-/** Group-API primitive extraction under a LOGICAL Spark type — shared
-  * by the streaming source (q280) and the row-level operation scan.
-  * Branches on the file's OWN primitive so mixed-era (widened)
-  * histories decode without per-era reader code.
-  */
-private[v2] object ParquetGroups {
-  import org.apache.parquet.example.data.Group
-
-  /** The deleted-key SET one target data file must filter by: scan the
-    * sidecar parquets for rows whose `__target` is `target`, decoding
-    * `__key` under the CURRENT logical type (each sidecar's own
-    * primitive — mixed-gen sidecars land in one uniformly-typed set).
-    * Shared by the row-level scan and the q318 MOR-aware change
-    * stream.
-    */
-  def dvKeySet(conf: org.apache.hadoop.conf.Configuration,
-      paths: Array[String], target: String, dt: DataType): Set[Any] = {
-    import org.apache.parquet.hadoop.ParquetReader
-    import org.apache.parquet.hadoop.example.GroupReadSupport
-    val set = scala.collection.mutable.HashSet.empty[Any]
-    paths.foreach { sp =>
-      val r = ParquetReader
-        .builder(new GroupReadSupport(), new Path(sp))
-        .withConf(conf).build()
-      try {
-        var g = r.read()
-        // resolve the field indexes once per sidecar file — the
-        // schema is constant across one reader's rows, and this
-        // loop is the candidates × sidecar-rows hot path
-        var ti = -1
-        var ki = -1
-        while (g != null) {
-          if (ti < 0) {
-            ti = g.getType.getFieldIndex("__target")
-            ki = g.getType.getFieldIndex("__key")
-          }
-          if (g.getString(ti, 0) == target)
-            set += ParquetGroups.value(g, ki, dt)
-          g = r.read()
-        }
-      } finally r.close()
-    }
-    set.toSet
-  }
-
-  def value(g: Group, idx: Int, dt: DataType): Any = {
-    import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName._
-    val typ = g.getType.getType(idx).asPrimitiveType()
-    val prim = typ.getPrimitiveTypeName
-    dt match {
-      case LongType | TimestampType | TimestampNTZType => prim match {
-        case INT64 => g.getLong(idx, 0)
-        case INT32 => g.getInteger(idx, 0).toLong
-        // legacy parquet timestamps (a file written without the MICROS
-        // session conf): 8-byte LE nanos-of-day + 4-byte LE Julian day
-        case INT96 if dt != LongType =>
-          val b = g.getInt96(idx, 0).getBytes
-          val buf = java.nio.ByteBuffer.wrap(b)
-            .order(java.nio.ByteOrder.LITTLE_ENDIAN)
-          val nanos = buf.getLong
-          val julian = buf.getInt
-          (julian - 2440588L) * 86400000000L + nanos / 1000L
-        case other => throw new IllegalStateException(
-          s"cannot widen $other to ${dt.catalogString}")
-      }
-      case IntegerType | DateType => g.getInteger(idx, 0)
-      case ShortType => g.getInteger(idx, 0).toShort
-      case ByteType => g.getInteger(idx, 0).toByte
-      case DoubleType => prim match {
-        case DOUBLE => g.getDouble(idx, 0)
-        case FLOAT => g.getFloat(idx, 0).toDouble
-        case INT32 => g.getInteger(idx, 0).toDouble
-        case other => throw new IllegalStateException(
-          s"cannot widen $other to double")
-      }
-      case FloatType => g.getFloat(idx, 0)
-      case BooleanType => g.getBoolean(idx, 0)
-      case StringType => UTF8String.fromString(g.getString(idx, 0))
-      case BinaryType => g.getBinary(idx, 0).getBytes
-      case d: DecimalType =>
-        // unscaled by the file's physical encoding; scale from the
-        // file's own annotation (widening preserves scale, so it
-        // matches the logical type's)
-        val ann = typ.getLogicalTypeAnnotation match {
-          case a: org.apache.parquet.schema.LogicalTypeAnnotation.DecimalLogicalTypeAnnotation => a
-          case other => throw new IllegalStateException(
-            s"decimal column backed by non-decimal parquet annotation $other")
-        }
-        val unscaled = prim match {
-          case INT32 => java.math.BigInteger.valueOf(g.getInteger(idx, 0).toLong)
-          case INT64 => java.math.BigInteger.valueOf(g.getLong(idx, 0))
-          case FIXED_LEN_BYTE_ARRAY | BINARY =>
-            new java.math.BigInteger(g.getBinary(idx, 0).getBytes)
-          case other => throw new IllegalStateException(
-            s"cannot decode $other as decimal")
-        }
-        Decimal(new java.math.BigDecimal(unscaled, ann.getScale),
-          d.precision, d.scale)
-      case other => throw new IllegalStateException(
-        s"unsupported column type ${other.catalogString}")
-    }
-  }
 }
 
 /** MERGE-ON-READ row-level writes (q287) — the delta-based

@@ -5,7 +5,6 @@ import java.util
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.read.streaming.{MicroBatchStream, Offset}
@@ -41,10 +40,11 @@ import graft.sources.Versioned
   * carry to drop (exactly the q273/q280 arbitration, now distributed
   * over one partition PER CHANGED FILE instead of a driver loop).
   *
-  * The executor readers decode parquet through the public
-  * parquet-hadoop Group API (no Spark-internal reader classes), with
-  * the era recipe (rename mapping, added-later nulls, widened casts)
-  * computed DRIVER-side at planning and shipped per file — so mixed-era
+  * The executor readers ([[VersionedFileReader]], shared with the
+  * row-level scan) decode parquet through the public parquet-hadoop
+  * Group API (no Spark-internal reader classes), with the era recipe
+  * (rename mapping, added-later nulls, widened casts) computed
+  * DRIVER-side at planning and shipped per file — so mixed-era
   * histories stream correctly. Loud-failure contracts, in the Delta
   * streaming-source tradition:
   *   - a schema-evolution commit AFTER stream start fails the stream
@@ -223,17 +223,14 @@ final class VersionedStreamTable(dir: String, startingVersion: Option[Long],
               s"of $dir in order (have ${vs.mkString(",")})")
           val dataFields = out.fields.toSeq
             .dropRight(VersionedStreamTable.MetaCols.size)
-          val recipeFor = Versioned.eraRecipes(changes0,
-            dataFields.map(f => (f.name, f.dataType)))
           val hconf = new org.apache.spark.util.SerializableConfiguration(
             spark.sessionState.newHadoopConf())
           new org.apache.spark.sql.connector.read.Batch {
             override def planInputPartitions(): Array[InputPartition] =
               VersionedChanges.partitions(spark, dir, from, to, changes0,
-                recipeFor, Versioned.versions(spark, dir),
+                dataFields, Versioned.versions(spark, dir),
                 p => if (p == 0L) Versioned.Manifest(Seq.empty, Seq.empty)
-                  else Versioned.manifestOf(spark, dir, p),
-                kn => dataFields.find(_.name == kn).map(_.dataType))
+                  else Versioned.manifestOf(spark, dir, p))
             override def createReaderFactory(): PartitionReaderFactory =
               new VersionedChangeReaderFactory(hconf)
           }
@@ -361,21 +358,10 @@ final class VersionedChangeStream(dir: String, startingVersion: Option[Long],
 
   override def reportLatestOffset(): Offset = VersionOffset(trueLatest)
 
-  /** The per-file era recipe ([[Versioned.eraRecipes]], shared with the
-    * row-level operation scan): for each stream data column, the file's
-    * PHYSICAL column name ("" if the column was added after the file's
-    * era — reads as NULL). Widen needs no entry: the reader converts by
-    * the file's own primitive and the column's LOGICAL type.
-    */
-  private val recipeFor: Int => Array[(String, String, String)] =
-    Versioned.eraRecipes(changes0,
-      dataFields.map(f => (f.name, f.dataType)).toSeq)
-
   override def planInputPartitions(start: Offset, end: Offset): Array[InputPartition] = {
     val ps = VersionedChanges.partitions(spark, dir,
       start.asInstanceOf[VersionOffset].v, end.asInstanceOf[VersionOffset].v,
-      changes0, recipeFor, points, manifestAt,
-      kn => dataFields.find(_.name == kn).map(_.dataType))
+      changes0, dataFields, points, manifestAt)
     if (!bare) ps
     else {
       ps.collectFirst {
@@ -406,51 +392,44 @@ final class VersionedChangeStream(dir: String, startingVersion: Option[Long],
 private[v2] object VersionedChanges {
   /** `points`/`manifestAt` select the lineage: main versions (0 = the
     * empty pre-first-commit base) or — the q311 branch stream — branch
-    * seqs (0 = the branch's base manifest).
+    * seqs (0 = the branch's base manifest). Each file decodes under its
+    * era recipe ([[Versioned.eraRecipes]]) for the stream's data
+    * columns: the file's PHYSICAL column name ("" if the column was
+    * added after the file's era — reads as NULL); widen needs no entry,
+    * the reader converts by the file's own primitive and the column's
+    * LOGICAL type.
     *
     * MOR-AWARE (q318 — previously any dv-carrying pair failed with
     * "not readable as file diffs"): each side emits its LIVE rows —
     * file-diff partitions carry the side's own sidecar paths, and the
     * executor skips rows whose key sits in a sidecar set targeting its
-    * file ([[ParquetGroups.dvKeySet]], the row-level scan machinery) —
-    * and a pair that ADDS sidecar rows additionally emits those rows
-    * as `old`-side DELETE events ([[VersionedChangePartition.dvOnly]]:
-    * read the targeted file, emit ONLY rows whose key the new sidecars
-    * delete). Scan cost stays ∝ changed data: dv-free pairs (the
-    * steady state) attach nothing; a dv pair costs the targeted files
-    * + sidecar reads — the same executor-side shape the row-level
-    * scan documents. Compaction-after-deletes pairs (OPTIMIZE
-    * retiring dvs) now stream correctly: the old side's raw rows are
-    * filtered by the OLD side's sidecars, so an already-deleted row
-    * never re-emits as a second delete.
+    * file ([[VersionedFileReader]], the decode the row-level scan
+    * shares) — and a pair that ADDS sidecar rows additionally emits
+    * those rows as `old`-side DELETE events
+    * ([[VersionedChangePartition.dvOnly]]: read the targeted file, emit
+    * ONLY rows whose key the new sidecars delete). Scan cost stays ∝
+    * changed data: dv-free pairs (the steady state) attach nothing; a
+    * dv pair costs the targeted files + sidecar reads.
+    * Compaction-after-deletes pairs (OPTIMIZE retiring dvs) now stream
+    * correctly: the old side's raw rows are filtered by the OLD side's
+    * sidecars, so an already-deleted row never re-emits as a second
+    * delete.
     */
   def partitions(spark: SparkSession, dir: String, from: Long, to: Long,
       changes0: Seq[(Int, String, String, String)],
-      recipeFor: Int => Array[(String, String, String)],
+      dataFields: Seq[StructField],
       points: Seq[Long],
-      manifestAt: Long => Versioned.Manifest,
-      keyTypeOf: String => Option[DataType] = _ => None): Array[InputPartition] = {
+      manifestAt: Long => Versioned.Manifest): Array[InputPartition] = {
     val vs = points.filter(v => v > from && v <= to)
-    // (current key name, era) → recipe for decoding that key in files
-    // of that era; the key's LOGICAL type comes from the stream schema
-    val keyRecipeCache = scala.collection.mutable.Map
-      .empty[String, Int => Array[(String, String, String)]]
-    def keyRecipe(kn: String, era: Int): (String, String, String) =
-      keyRecipeCache.getOrElseUpdate(kn, {
-        val dt = keyTypeOf(kn).getOrElse(throw new IllegalStateException(
-          s"MOR delete key column '$kn' of $dir is not in the stream " +
-            "schema — dropped after deletes? redefine the source"))
-        Versioned.eraRecipes(changes0, Seq(kn -> dt))
-      })(era).head
-    def dvFiltersFor(m: Versioned.Manifest, refs: Seq[Versioned.DvRef],
-        era: Int): Array[((String, String, String), Array[String])] =
-      if (refs.isEmpty) Array.empty
-      else refs.groupBy(d => Versioned.currentName(d.keyName, d.gen,
-          m.renames)).toSeq.sortBy(_._1)
-        .map { case (kn, rs) =>
-          (keyRecipe(kn, era),
-            rs.map(r => s"$dir/data/${r.file}").distinct.toArray)
-        }.toArray
+    val recipeFor = Versioned.eraRecipes(changes0,
+      dataFields.map(f => (f.name, f.dataType)))
+    // the key's LOGICAL type comes from the stream schema
+    def dvFiltersOf(m: Versioned.Manifest, refs: Seq[Versioned.DvRef]) =
+      VersionedFileReader.dvFilters(dir, changes0, refs, m.renames, kn =>
+        dataFields.find(_.name == kn).map(_.dataType).getOrElse(
+          throw new IllegalStateException(s"MOR delete key column '$kn' " +
+            s"of $dir is not in the stream schema — dropped after " +
+            "deletes? redefine the source")))
     (vs.foldLeft((from, Seq.empty[VersionedChangePartition])) {
       case ((prev, acc), v) =>
         val mA = manifestAt(prev)
@@ -467,11 +446,13 @@ private[v2] object VersionedChanges {
             "to adopt the new schema")
         val aFiles = mA.entries.map(_._1).toSet
         val bFiles = mB.entries.map(_._1).toSet
-        def parts(m: Versioned.Manifest, other: Set[String], side: String) =
+        def parts(m: Versioned.Manifest, other: Set[String], side: String) = {
+          val dvFilters = dvFiltersOf(m, m.dvs)
           m.entries.filterNot(en => other(en._1)).map { case (f, _, era) =>
             VersionedChangePartition(s"$dir/data/$f", side, prev, v,
-              recipeFor(era), dvFiltersFor(m, m.dvs, era))
+              recipeFor(era), dvFilters(era))
           }
+        }
         // sidecar rows ADDED at this pair: the MOR deletes — emit the
         // deleted rows of each targeted live file as old-side events.
         // One small driver read resolves which files the new sidecars
@@ -481,17 +462,14 @@ private[v2] object VersionedChanges {
         val dvParts =
           if (newDvs.isEmpty) Seq.empty
           else {
-            val targets = spark.read
-              .schema(Versioned.dataFileSchema(spark, dir,
-                newDvs.head.file))
-              .parquet(newDvs.map(r => s"$dir/data/${r.file}")
-                .distinct: _*)
+            val targets = Versioned.readDataFiles(spark, dir,
+                newDvs.map(_.file).distinct)
               .select("__target").distinct().collect()
               .map(_.getString(0)).toSet
+            val dvFilters = dvFiltersOf(mB, newDvs)
             mB.entries.filter(e => targets(e._1)).map { case (f, _, era) =>
               VersionedChangePartition(s"$dir/data/$f", "old", prev, v,
-                recipeFor(era), dvFiltersFor(mB, newDvs, era),
-                dvOnly = true)
+                recipeFor(era), dvFilters(era), dvOnly = true)
             }
           }
         (v, acc ++ parts(mA, bFiles, "old") ++ parts(mB, aFiles, "new")
@@ -521,77 +499,10 @@ final class VersionedChangeReaderFactory(
 
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] = {
     val p = partition.asInstanceOf[VersionedChangePartition]
-    new PartitionReader[InternalRow] {
-      import org.apache.parquet.example.data.Group
-      import org.apache.parquet.hadoop.ParquetReader
-      import org.apache.parquet.hadoop.example.GroupReadSupport
-
-      private val reader: ParquetReader[Group] = ParquetReader
-        .builder(new GroupReadSupport(), new Path(p.file))
-        .withConf(conf.value)
-        .build()
-      private val types =
-        p.fields.map(f => DataType.fromDDL(f._3))
-      // the side's MOR filter (q318): per key column, the deleted-key
-      // set targeting THIS file — normal partitions SKIP those rows
-      // (live-row semantics), dvOnly partitions emit ONLY them (the
-      // delete events). Empty on dv-free lineages — zero cost.
-      private val fileName = new Path(p.file).getName
-      private val dvSets = p.dvFilters.map { case (recipe, paths) =>
-        val dt = DataType.fromDDL(recipe._3)
-        (recipe, dt, ParquetGroups.dvKeySet(conf.value, paths, fileName, dt))
-      }
-      private var cur: InternalRow = _
-
-      private def inDv(g: Group): Boolean =
-        dvSets.exists { case ((_, phys, _), dt, set) =>
-          val v =
-            if (phys.isEmpty || !g.getType.containsField(phys)) null
-            else {
-              val idx = g.getType.getFieldIndex(phys)
-              if (g.getFieldRepetitionCount(idx) == 0) null
-              else ParquetGroups.value(g, idx, dt)
-            }
-          v != null && set.contains(v)
-        }
-
-      // Group-API extraction under the LOGICAL type — the widen cast
-      // happens in [[ParquetGroups.value]] (a file's int32 surfaces as
-      // the stream's bigint), branching on the file's OWN primitive so
-      // mixed-era histories decode without per-era reader code.
-      override def next(): Boolean = {
-        var g = reader.read()
-        // dvOnly: keep exactly the deleted rows; otherwise skip them
-        while (g != null && (if (p.dvOnly) !inDv(g)
-          else dvSets.nonEmpty && inDv(g))) g = reader.read()
-        if (g == null) { cur = null; false }
-        else {
-          val n = p.fields.length
-          val arr = new Array[Any](n + (if (includeMeta) 3 else 0))
-          var i = 0
-          while (i < n) {
-            val phys = p.fields(i)._2
-            arr(i) =
-              if (phys.isEmpty || !g.getType.containsField(phys)) null
-              else {
-                val idx = g.getType.getFieldIndex(phys)
-                if (g.getFieldRepetitionCount(idx) == 0) null
-                else ParquetGroups.value(g, idx, types(i))
-              }
-            i += 1
-          }
-          if (includeMeta) {
-            arr(n) = UTF8String.fromString(p.side)
-            arr(n + 1) = p.fromV
-            arr(n + 2) = p.toV
-          }
-          cur = new GenericInternalRow(arr)
-          true
-        }
-      }
-      override def get(): InternalRow = cur
-      override def close(): Unit = reader.close()
-    }
+    new VersionedFileReader(conf.value, p.file, p.fields, p.dvFilters,
+      p.dvOnly,
+      if (includeMeta) Array(UTF8String.fromString(p.side), p.fromV, p.toV)
+      else Array.empty)
   }
 }
 
@@ -698,8 +609,8 @@ final class VersionedStreamingWrite(dir: String, writeSchema: StructType,
       // OCC re-check stays authoritative against a zombie driver racing
       // live traffic.
       if (!Versioned.epochCommitted(spark, dir, queryId, epochId)) {
-        val df = spark.read.schema(writeSchema)
-          .parquet(added.map(a => s"$dir/data/${a._1}"): _*)
+        val df = Versioned.readDataFiles(spark, dir, added.map(_._1),
+          Some(writeSchema))
         val (entries, tags) =
           Versioned.writeDataPartitioned(df, dir, partitionSpec)
         if (Versioned.commitStreamingEpoch(spark, dir, queryId, epochId,

@@ -56,6 +56,18 @@ class BloomJoinSpec extends AnyFunSuite {
     assert(bloomed === plain)
   }
 
+  test("an empty build side yields an empty filter and an empty bloom-pruned join") {
+    val build = spark.range(0).select(col("id").as("k"))
+    val bloom = BloomJoin.buildKeyBloom(build, "k", expectedKeys = 100)
+    assert((0L until 1000L).forall(k => !bloom.value.mightContainLong(k)),
+      "a filter over no keys must admit no probe key")
+    val probe = spark.range(1000).select(col("id").as("p"))
+    val plain = probe.join(build, col("p") === col("k")).count()
+    val bloomed = BloomJoin.bloomPrune(probe, col("p"), bloom)
+      .join(build, col("p") === col("k")).count()
+    assert(plain === 0L && bloomed === plain)
+  }
+
   test("estimateRows on a stats-less plan returns a modest default, not the cap") {
     import org.apache.spark.sql.Row
     import org.apache.spark.sql.types.{LongType, StructField, StructType}

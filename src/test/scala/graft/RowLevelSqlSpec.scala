@@ -389,28 +389,6 @@ class RowLevelSqlSpec extends AnyFunSuite {
     assert(spark.sql(s"SELECT count(*) FROM $cat.t").as[Long].head() == 18L)
   }
 
-  test("sidecars over the driver limit build their key sets executor-side") {
-    val wh = useWarehouse("dvlimit")
-    spark.sql(s"CREATE TABLE $cat.t (k INT, v STRING)")
-    spark.sql(s"INSERT INTO $cat.t SELECT CAST(id AS INT), concat('v', id) " +
-      "FROM range(1, 21)")                                           // v1
-    val dir = s"$wh/t"
-    Versioned.deleteKeysMor(spark, dir, "k", Seq(5, 6).toDF("k"))    // v2
-    // widen too: the executor path's ParquetGroups decode must coerce
-    // the sidecar's INT32 __key to the current BIGINT as well
-    spark.sql(s"ALTER TABLE $cat.t ALTER COLUMN k TYPE BIGINT")      // v3
-    spark.conf.set("graft.rowlevel.dvDriverLimit", "0")
-    try {
-      spark.sql(s"UPDATE $cat.t SET v = upper(v) WHERE k <= 10")     // v4
-      val rows = spark.sql(
-        s"SELECT k, v FROM $cat.t WHERE k BETWEEN 4 AND 7 ORDER BY k")
-        .as[(Long, String)].collect().toSeq
-      assert(rows == Seq((4L, "V4"), (7L, "V7")),
-        s"executor-built dv sets must exclude k=5,6: $rows")
-      assert(spark.sql(s"SELECT count(*) FROM $cat.t").as[Long].head() == 18L)
-    } finally spark.conf.unset("graft.rowlevel.dvDriverLimit")
-  }
-
   test("ALTER TABLE SET TBLPROPERTIES closes the key-rename loop; CALL purge erases") {
     val wh = useWarehouse("props")
     spark.sql(s"CREATE TABLE $cat.t (k BIGINT, v STRING) " +
