@@ -450,11 +450,12 @@ object Incremental {
       .orderBy("o_orderpriority")
   }
 
-  // q218 — FILE SKIPPING by parquet footer stats over the versioned
-  // table ([[graft.sources.Versioned.readRangeSkipping]] — the
-  // Iceberg/Delta data-skipping read: list the version's files, read
-  // FOOTER column envelopes only, scan just the overlapping files).
-  // orders lands range-sorted by o_orderkey (8 files with tight
+  // q218 — RANGE SKIPPING over the versioned table
+  // ([[graft.sources.Versioned.readRangeSkipping]] — the Iceberg/Delta
+  // data-skipping read: keep the version's files whose column envelope
+  // overlaps the range, scan just those; the envelopes are the q285
+  // manifest stats, recorded once at commit, so the prune opens no
+  // file). orders lands range-sorted by o_orderkey (8 files with tight
   // envelopes — the layout that makes skipping bite; an unsorted write
   // degrades to reading everything, never to wrong answers, the
   // fail-open stats contract), then a key-range slice [max/4, max/2]
@@ -1344,19 +1345,19 @@ object Incremental {
       g.read("head", "graft_cat.mg"))
   }
 
-  // q285 — MANIFEST COLUMN STATS (Iceberg's manifest-stats idea,
-  // pricing out q218's footer walk): every commit records each NEW
-  // file's per-column min/max envelope in its manifest ENTRY LINE (one
-  // footer read at commit time, when the footer is hot; stats shard
-  // with the entries), so range/point predicates prune files as PURE
-  // MANIFEST ARITHMETIC — zero file IO at read time. q218's footer
-  // skipping costs one footer read per file per query: at a million
-  // files that walk IS the query; here the same prune is free. Wired
-  // into all three read surfaces: `readStatsSkipping` (library),
-  // the SQL catalog scan (accepted conjuncts → bounds → entry prune
-  // before the parquet scan is planned), and the q283/q284 row-level
-  // op scan (static candidate pruning ahead of the runtime group
-  // filter). Era-aware (stats live under PHYSICAL names; renames walk
+  // q285 — MANIFEST COLUMN STATS (Iceberg's manifest-stats idea):
+  // every commit records each NEW file's per-column min/max envelope
+  // in its manifest ENTRY LINE (one footer read at commit time, when
+  // the footer is hot; stats shard with the entries), so range/point
+  // predicates prune files as PURE MANIFEST ARITHMETIC — zero file IO
+  // at read time. Re-reading footers per query would cost one footer
+  // read per file: at a million files that walk IS the query; here the
+  // same prune is free. Wired into all three read surfaces through the
+  // one manifest prune: `readStatsSkipping` (library, also q218's
+  // `readRangeSkipping`), the SQL catalog scan (accepted conjuncts →
+  // bounds → entry prune before the parquet scan is planned), and the
+  // q283/q284 row-level op scan (static candidate pruning ahead of the
+  // runtime group filter). Era-aware (stats live under PHYSICAL names; renames walk
   // back per era; a column added after a file's era prunes that file
   // SOUNDLY — its rows are all NULL); everything else fails open.
   // The body REQUIREs real pruning on both eras and on the SQL path;

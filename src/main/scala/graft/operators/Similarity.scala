@@ -718,11 +718,17 @@ object Similarity {
     * (vec 0 doubles as the query) from the quantized frame — 16 rows,
     * bounded by construction, the q102 model-artifact pattern — and
     * derive the per-subspace codebooks plus the query's 4×16 ADC
-    * distance table (exact integer d²).
+    * distance table (exact integer d²). Minimum input: vec_id 0..15
+    * must all be present — a smaller corpus fails the `require`.
     */
   private def pqModel(q: DataFrame): (Array[Array[Array[Long]]], Array[Array[Long]]) = {
     val byId = q.filter(col("vec_id") < 16).select("vec_id", "q").collect()
       .map(r => r.getLong(0) -> r.getSeq[Long](1).toArray).toMap
+    val missing = (0L until 16L).filterNot(byId.contains)
+    require(missing.isEmpty,
+      "product quantization needs embeddings vec_id 0..15 (the 16 " +
+        "codebook source vectors; vec 0 is also the query), missing " +
+        missing.mkString(", "))
     val cb = Array.tabulate(4, 16)((sp, code) =>
       byId(code.toLong).slice(sp * 16, sp * 16 + 16))
     def d2(a: Array[Long], b: Array[Long]): Long =

@@ -725,8 +725,14 @@ object StreamQueries {
     require(ran == 1 && skipped == 1,
       s"recovery must skip the published pair and run the new one " +
         s"(got ran=$ran skipped=$skipped)")
-    // the answer comes from the SINK — a duplicate pair doubles it
-    s.read.parquet(s"$consumer/out/v*")
+    // the answer comes from the SINK — a duplicate pair doubles it. The
+    // published `out/v<to>` dirs are listed and read as explicit paths:
+    // a glob path sends FileStreamSink's metadata probe after the
+    // literal glob, which logs a FileNotFoundException on every run
+    val out = new org.apache.hadoop.fs.Path(consumer, "out")
+    val published = out.getFileSystem(s.sparkContext.hadoopConfiguration)
+      .listStatus(out).map(_.getPath).filter(_.getName.startsWith("v"))
+    s.read.parquet(published.map(_.toString).sorted.toIndexedSeq: _*)
       .filter(col("n") > 0)
       .orderBy("from_v", "to_v", "change_type")
   }

@@ -108,16 +108,15 @@ object Versioned {
     * at commit time (one footer read per freshly-written file, inside
     * [[commitManifest]]) and carried by reference forever after, so
     * range/point predicates prune files as a pure MANIFEST operation
-    * with ZERO file IO at read time. [[readRangeSkipping]]'s footer
-    * walk costs one footer read per file per query — at a million
-    * files that walk IS the query; stats in the manifest make the same
-    * prune free. Stats ride the ENTRY LINE (4th field), so they shard
-    * with the entries and shard reuse stays byte-stable (a file's
-    * stats are a pure function of its immutable bytes). Files without
-    * stats (pre-stats manifests, unsupported column types) simply
-    * never prune — fail open, the q281 discipline.
-    */
-  /** `txns`: per-streaming-query idempotence watermarks (`#txn` lines;
+    * with ZERO file IO at read time ([[prunedEntries]]; re-reading
+    * footers per query would cost one footer read per file — at a
+    * million files that walk IS the query). Stats ride the ENTRY LINE
+    * (4th field), so they shard with the entries and shard reuse stays
+    * byte-stable (a file's stats are a pure function of its immutable
+    * bytes). Files without stats (pre-stats manifests, unsupported
+    * column types) simply never prune — fail open, the q281 discipline.
+    *
+    * `txns`: per-streaming-query idempotence watermarks (`#txn` lines;
     * the Delta txnAppId/txnVersion pattern) — queryId → the highest
     * epoch whose sink commit landed. Carried forward on EVERY commit;
     * a replayed epoch (crash between the sink's commit and the
@@ -443,41 +442,47 @@ object Versioned {
     */
   def readVersion(spark: SparkSession, dir: String, v: Long): DataFrame = {
     val m = manifestOf(spark, dir, v)
-    if (m.entries.isEmpty) {
-      import org.apache.spark.sql.types.{DataType, StructField, StructType}
-      // the staged path records the declared schema as metadata-only
-      // adds, so the empty version carries ITS OWN shape — walk the
-      // change list (later renames/drops/widens apply in order); a
-      // legacy zero-entry manifest without changes falls back to the
-      // CURRENT _schema.ddl
-      val schema: StructType =
-        if (m.changes.nonEmpty)
-          StructType(m.changes.sortBy(_._1)
-            .foldLeft(Vector.empty[StructField]) {
-              case (acc, (_, "add", n, ddl)) =>
-                acc :+ StructField(n, DataType.fromDDL(ddl))
-              case (acc, (_, "rename", o, n)) =>
-                acc.map(f => if (f.name == o) f.copy(name = n) else f)
-              case (acc, (_, "drop", n, _)) => acc.filterNot(_.name == n)
-              case (acc, (_, "widen", n, ddl)) => acc.map(f =>
-                if (f.name == n) f.copy(dataType = DataType.fromDDL(ddl))
-                else f)
-              case (acc, _) => acc
-            })
-        else {
-          val fs = fsOf(spark, dir)
-          val p = new org.apache.hadoop.fs.Path(dir, "_schema.ddl")
-          if (!fs.exists(p))
-            throw new IllegalStateException(
-              s"version $v of $dir lists no files and no _schema.ddl " +
-                "describes its shape")
-          StructType.fromDDL(readTextFile(fs, p))
-        }
-      return spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-    }
-    if (m.dvs.isEmpty) readEntries(spark, dir, m.changes, m.entries)
+    if (m.entries.isEmpty) emptyFrame(spark, dir, m)
+    else if (m.dvs.isEmpty) readEntries(spark, dir, m.changes, m.entries)
     else readLive(spark, dir, m, m.entries)
+  }
+
+  /** A zero-entry manifest's rows (main version or branch head): the
+    * empty frame under the shape the manifest itself declares.
+    */
+  private def emptyFrame(spark: SparkSession, dir: String,
+      m: Manifest): DataFrame = {
+    import org.apache.spark.sql.types.{DataType, StructField, StructType}
+    // the staged path records the declared schema as metadata-only
+    // adds, so the empty version carries ITS OWN shape — walk the
+    // change list (later renames/drops/widens apply in order); a
+    // legacy zero-entry manifest without changes falls back to the
+    // CURRENT _schema.ddl
+    val schema: StructType =
+      if (m.changes.nonEmpty)
+        StructType(m.changes.sortBy(_._1)
+          .foldLeft(Vector.empty[StructField]) {
+            case (acc, (_, "add", n, ddl)) =>
+              acc :+ StructField(n, DataType.fromDDL(ddl))
+            case (acc, (_, "rename", o, n)) =>
+              acc.map(f => if (f.name == o) f.copy(name = n) else f)
+            case (acc, (_, "drop", n, _)) => acc.filterNot(_.name == n)
+            case (acc, (_, "widen", n, ddl)) => acc.map(f =>
+              if (f.name == n) f.copy(dataType = DataType.fromDDL(ddl))
+              else f)
+            case (acc, _) => acc
+          })
+      else {
+        val fs = fsOf(spark, dir)
+        val p = new org.apache.hadoop.fs.Path(dir, "_schema.ddl")
+        if (!fs.exists(p))
+          throw new IllegalStateException(
+            s"a manifest of $dir lists no files and no _schema.ddl " +
+              "describes its shape")
+        StructType.fromDDL(readTextFile(fs, p))
+      }
+    spark.createDataFrame(
+      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
   }
 
   /** The latest committed version. */
@@ -908,8 +913,8 @@ object Versioned {
     * reference; pre-stats files stay statless forever (a metadata-only
     * commit on a million-file legacy table must not suddenly read a
     * million footers).
-    */
-  /** `epilogue` runs inside the SAME ledger slot after the manifest
+    *
+    * `epilogue` runs inside the SAME ledger slot after the manifest
     * rename lands — for cleanup that must not let another writer
     * interleave (fastForward's branch drop: a branch append slipping
     * between publish and drop would be silently deleted otherwise).
@@ -1368,9 +1373,8 @@ object Versioned {
     * column (a different spec era) or not tagged at all fail OPEN —
     * then apply the residual filter, so the answer is exact regardless
     * of how much pruning fired. Returns (frame, filesKept, filesTotal).
-    * The prune is a MANIFEST operation — zero file IO before the
-    * surviving scans (footer skipping opens footers; this opens
-    * nothing).
+    * The prune is a MANIFEST operation ([[ptagPrunedEntries]]) — zero
+    * file IO before the surviving scans.
     */
   def readPartitionPruned(spark: SparkSession, dir: String, v: Long,
       column: String, value: String): (DataFrame, Int, Int) = {
@@ -1384,18 +1388,9 @@ object Versioned {
     val rendered = org.apache.spark.sql.catalyst.catalog
       .ExternalCatalogUtils.escapePathName(value)
     val m = manifestOf(spark, dir, v)
-    val tagOf = ptagMapOf(m)
-    val kept = m.entries.filter(e =>
-      tagOf.getOrElse(e._1, Map.empty).get(column) match {
-        case Some(pv) => pv == rendered // this era: exact
-        case None => true // other era / untagged / rewritten: fail open
-      })
-    val df =
-      if (kept.isEmpty)
-        readVersion(spark, dir, v).filter(col(column) === lit(value)).limit(0)
-      else readLive(spark, dir, m, kept)
-        .filter(col(column).cast("string") === lit(value))
-    (df, kept.size, m.entries.size)
+    val (df, kept, total) = readPruned(spark, dir, m,
+      prunedEntries(m)(ptagFilters = Seq(column -> Set(rendered))))
+    (df.filter(col(column).cast("string") === lit(value)), kept, total)
   }
 
   /** METADATA-ONLY column rename (schema evolution without rewrite —
@@ -1812,12 +1807,7 @@ object Versioned {
         // of the rest, only files whose stats envelope AND partition
         // tags admit a matching row are scanned for hits (both prunes
         // are necessary-condition filters — sound whatever cond does)
-        val statKept = bounds.foldLeft(rest) { case (es, (c, lo, hi)) =>
-          statsPrunedEntries(base, es, c, lo, hi)
-        }
-        val candidates = eqValues.foldLeft(statKept) { case (es, (c, vs)) =>
-          ptagPrunedEntries(base, es, c, vs)
-        }
+        val candidates = prunedEntries(base)(bounds, eqValues, entries = rest)
         val touched: Set[String] =
           if (candidates.isEmpty) Set.empty
           else readLive(spark, dir, base, candidates, Some("__graft_hit_f"))
@@ -1888,22 +1878,6 @@ object Versioned {
         }, ptags = base.ptags)
     }
 
-  /** RIGHT-TO-BE-FORGOTTEN purge: remove `keys` from EVERY version —
-    * the one operation that may rewrite HISTORY, because erasure law
-    * outranks the immutability contract (time travel must stop
-    * resurrecting the data subject). Each data file containing a
-    * matched key is rewritten ONCE (1:1, coalesced) and every manifest
-    * that referenced it is repointed in place — version NUMBERS and all
-    * untouched files survive, so audit lineage and file sharing are
-    * preserved; emptied files drop out of their manifests; the old
-    * bytes are deleted last. Runs inside the OCC ledger like any
-    * writer. Manifest replacement is delete+rename with the content
-    * already safely in the tmp file — a crash between the two leaves a
-    * missing manifest whose `.tmp` sibling holds the full content
-    * (recoverable, never silent loss; the rename goes through the
-    * Hadoop FS so the local ChecksumFileSystem's .crc sidecars stay
-    * consistent). Returns (filesRewritten, versionsTouched).
-    */
   /** CDC READ between two committed versions WITHOUT a change log —
     * COW + immutable files make the diff a MANIFEST operation: a file
     * listed by both versions is byte-identical, so its rows cannot have
@@ -2018,6 +1992,22 @@ object Versioned {
       case (name, (_, o, n)) => if (name == n) o else name
     }
 
+  /** RIGHT-TO-BE-FORGOTTEN purge: remove `keys` from EVERY version —
+    * the one operation that may rewrite HISTORY, because erasure law
+    * outranks the immutability contract (time travel must stop
+    * resurrecting the data subject). Each data file containing a
+    * matched key is rewritten ONCE (1:1, coalesced) and every manifest
+    * that referenced it is repointed in place — version NUMBERS and all
+    * untouched files survive, so audit lineage and file sharing are
+    * preserved; emptied files drop out of their manifests; the old
+    * bytes are deleted last. Runs inside the OCC ledger like any
+    * writer. Manifest replacement is delete+rename with the content
+    * already safely in the tmp file — a crash between the two leaves a
+    * missing manifest whose `.tmp` sibling holds the full content
+    * (recoverable, never silent loss; the rename goes through the
+    * Hadoop FS so the local ChecksumFileSystem's .crc sidecars stay
+    * consistent). Returns (filesRewritten, versionsTouched).
+    */
   def purgeKeys(spark: SparkSession, dir: String, keyCol: String,
       keys: DataFrame): (Int, Int) =
     Lake.withCommit(spark, dir) {
@@ -2275,7 +2265,7 @@ object Versioned {
 
   /** OPTIMIZE … ZORDER BY (colA, colB): [[optimize]]'s compaction with
     * the rewrite range-partitioned and sorted by the 32-bit Morton
-    * interleave ([[Lake.zorderKey]]), so parquet footer min/max
+    * interleave ([[Lake.zorderKey]]), so the files' min/max stats
     * envelopes tighten on BOTH columns and [[readRangeSkipping]] prunes
     * on either — Delta's OPTIMIZE ZORDER, expressed as one commit. The
     * sort key never reaches the files; old versions keep their files
@@ -2324,24 +2314,25 @@ object Versioned {
       }
     }
 
-  /** FILE SKIPPING by parquet footer statistics (the Iceberg/Delta
-    * data-skipping read path, on real metadata): for a range predicate
-    * on `column`, read each manifest file's FOOTER (parquet-hadoop
-    * `ParquetFileReader` — row-group column statistics, never data
-    * pages), keep only files whose [min, max] envelope overlaps
-    * [lo, hi], and scan just those. Soundness is the parquet stats
-    * contract (a value outside every row group's envelope cannot exist
-    * in the file); effectiveness is the layout's job — a range-sorted
-    * or z-ordered write gives tight per-file envelopes, an unsorted one
-    * degenerates to reading everything (never to wrong answers).
-    * Returns the pruned DataFrame with the residual predicate applied.
-    *
-    * At 100 TB the footer walk itself becomes a job (millions of
-    * files): the same loop runs as a parallelized metadata scan, or the
-    * envelopes are lifted into the manifest at commit time — the read
-    * contract here (list → envelope-filter → scan survivors) is
-    * unchanged either way.
+  /** Per-entry lookup of logical `column`'s manifest [[ColStat]],
+    * the era resolution every stats consumer shares: stats are
+    * recorded under PHYSICAL names at write time, so the logical name
+    * walks back through each entry's era (rename walk). None: the
+    * column was ADDED after the entry's era, so every row there reads
+    * NULL. Some(None): the file records no stat for it (legacy
+    * manifest, unsupported type). Some(Some(stat)) otherwise.
     */
+  private def eraStat(m: Manifest, column: String)
+      : ((String, Long, Int)) => Option[Option[ColStat]] = {
+    val recipe = eraRecipes(m.changes,
+      Seq(column -> org.apache.spark.sql.types.LongType))
+    (e: (String, Long, Int)) => {
+      val phys = recipe(e._3).head._2
+      if (phys.isEmpty) None
+      else Some(m.fstats.get(e._1).flatMap(decodeStats(_).get(phys)))
+    }
+  }
+
   /** The entry subset whose MANIFEST STATS envelope can contain rows
     * with `column` ∈ [lo, hi] — zero file IO ([[Manifest.fstats]]).
     * Era-aware: stats are recorded under PHYSICAL names at write time,
@@ -2354,16 +2345,10 @@ object Versioned {
   private[graft] def statsPrunedEntries(m: Manifest,
       entries: Seq[(String, Long, Int)], column: String,
       lo: Bound, hi: Bound): Seq[(String, Long, Int)] = {
-    val recipe = eraRecipes(m.changes,
-      Seq(column -> org.apache.spark.sql.types.LongType))
-    entries.filter { case (f, _, era) =>
-      val phys = recipe(era).head._2
-      if (phys.isEmpty) false // added after this era: all-NULL
-      else m.fstats.get(f).flatMap(s => decodeStats(s).get(phys)) match {
-        case Some(st) => statsOverlap(st.kind, st.mn, st.mx, lo, hi)
-        case None => true
-      }
-    }
+    val stat = eraStat(m, column)
+    // added after this era: all-NULL, never in range; no stat: kept
+    entries.filter(e => stat(e).fold(false)(_.forall(st =>
+      statsOverlap(st.kind, st.mn, st.mx, lo, hi))))
   }
 
   /** The entry subset that can contain a LIVE row satisfying
@@ -2380,17 +2365,10 @@ object Versioned {
   private[graft] def nullPrunedEntries(m: Manifest,
       entries: Seq[(String, Long, Int)], column: String,
       wantNull: Boolean): Seq[(String, Long, Int)] = {
-    val recipe = eraRecipes(m.changes,
-      Seq(column -> org.apache.spark.sql.types.LongType))
-    entries.filter { case (f, rows, era) =>
-      val phys = recipe(era).head._2
-      if (phys.isEmpty) wantNull // pre-column era: every row NULL
-      else m.fstats.get(f).flatMap(s => decodeStats(s).get(phys))
-        .flatMap(_.nulls) match {
-        case Some(n) => if (wantNull) n > 0 else n < rows
-        case None => true
-      }
-    }
+    val stat = eraStat(m, column)
+    // pre-column era: every row NULL; no null count: kept
+    entries.filter(e => stat(e).fold(wantNull)(_.flatMap(_.nulls).forall(n =>
+      if (wantNull) n > 0 else n < e._2)))
   }
 
   /** COUNT(column) — the non-null row count — answered EXACTLY from
@@ -2401,16 +2379,12 @@ object Versioned {
     * contributes 0) or carries a recorded null count. None → the
     * caller falls back to a real scan.
     */
-  private[graft] def statsNonNullCount(m: Manifest, column: String,
-      dt: org.apache.spark.sql.types.DataType): Option[Long] = {
+  private[graft] def statsNonNullCount(m: Manifest,
+      column: String): Option[Long] = {
     if (m.dvs.nonEmpty) return None
-    val recipe = eraRecipes(m.changes, Seq(column -> dt))
-    val per = m.entries.map { case (f, rows, era) =>
-      val phys = recipe(era).head._2
-      if (phys.isEmpty) Some(0L)
-      else m.fstats.get(f).flatMap(s => decodeStats(s).get(phys))
-        .flatMap(_.nulls).map(n => rows - n)
-    }
+    val stat = eraStat(m, column)
+    val per = m.entries.map(e =>
+      stat(e).fold(Option(0L))(_.flatMap(_.nulls).map(e._2 - _)))
     if (per.exists(_.isEmpty)) None else Some(per.flatten.sum)
   }
 
@@ -2448,22 +2422,19 @@ object Versioned {
       case _ => Set.empty
     }
     if (okKinds.isEmpty) return None
-    val recipe = eraRecipes(m.changes, Seq(column -> dt))
-    val candidates = m.entries.map { case (f, rows, era) =>
-      val phys = recipe(era).head._2
-      if (phys.isEmpty) Some(None) // pre-column era: all NULL, no vote
-      else m.fstats.get(f).flatMap(s => decodeStats(s).get(phys)) match {
-        case Some(st) if okKinds(st.kind) =>
-          try Some(Some(BigDecimal(if (isMin) st.mn else st.mx)))
-          catch { case _: NumberFormatException => None }
-        // an ALL-NULL file (nulls == rows, provable from the null
-        // count alone) contributes nothing to MIN/MAX — exactly SQL's
-        // null-skipping semantics, so it votes "nothing" rather than
-        // refusing the push
-        case Some(st) if st.nulls.contains(rows) => Some(None)
-        case _ => None // statless / wrong-kind file may hold the extreme
-      }
-    }
+    val stat = eraStat(m, column)
+    val candidates = m.entries.map(e => stat(e) match {
+      case None => Some(None) // pre-column era: all NULL, no vote
+      case Some(Some(st)) if okKinds(st.kind) =>
+        try Some(Some(BigDecimal(if (isMin) st.mn else st.mx)))
+        catch { case _: NumberFormatException => None }
+      // an ALL-NULL file (nulls == rows, provable from the null
+      // count alone) contributes nothing to MIN/MAX — exactly SQL's
+      // null-skipping semantics, so it votes "nothing" rather than
+      // refusing the push
+      case Some(Some(st)) if st.nulls.contains(e._2) => Some(None)
+      case _ => None // statless / wrong-kind file may hold the extreme
+    })
     if (candidates.exists(_.isEmpty)) None
     else {
       val votes = candidates.flatMap(_.get)
@@ -2517,8 +2488,8 @@ object Versioned {
     * the manifest's PARTITION TAGS (`#pfile`, q281): a file tagged
     * under this column keeps iff its tag value matches; a file tagged
     * under ANOTHER column (a different partition-spec era) or untagged
-    * fails OPEN — exactly [[readPartitionPruned]]'s era logic, factored
-    * so the SQL catalog scan prunes by partition predicate too.
+    * fails OPEN — the era logic [[readPartitionPruned]] and the SQL
+    * catalog scan's partition-predicate prune share.
     * `values` must be Spark's PATH-ESCAPED renderings; the caller skips
     * the prune for values whose escaping differs from themselves.
     */
@@ -2553,40 +2524,23 @@ object Versioned {
       })
   }
 
-  /** ZERO-IO range read off the manifest stats — [[readRangeSkipping]]
-    * semantics with the footer walk priced out: that walk costs one
-    * footer read per candidate file per query, which at a million
-    * files IS the query; here the prune is pure manifest arithmetic
-    * (the stats were paid for once, at commit). Returns
-    * (rows, filesKept, filesTotal). MOR sidecars apply (a deleted row
-    * must not resurrect through the skipping path); the residual
-    * filter keeps the answer exact whatever the prune kept.
-    */
-  def readStatsSkipping(spark: SparkSession, dir: String, v: Long,
-      column: String, lo: Long, hi: Long): (DataFrame, Int, Int) = {
-    val m = manifestOf(spark, dir, v)
-    val kept = statsPrunedEntries(m, m.entries, column,
-      Bound.Num(BigDecimal(lo)), Bound.Num(BigDecimal(hi)))
-    val df =
-      if (kept.isEmpty)
-        readVersion(spark, dir, v).filter(col(column).between(lo, hi)).limit(0)
-      else readLive(spark, dir, m, kept).filter(col(column).between(lo, hi))
-    (df, kept.size, m.entries.size)
-  }
-
   /** The entry subset surviving ALL the manifest-level prunes — stats
-    * bounds, partition tags, and null-count predicates (they COMPOSE:
-    * each is a necessary-condition filter over the same entry list).
-    * Shared by the pruned read below and the SQL scan's statistics
-    * estimate.
+    * bounds, partition tags, temporal tag ranges and null-count
+    * predicates (they COMPOSE: each is a necessary-condition filter
+    * over the same entry list) — of `entries`, by default every entry
+    * of `m`. The one place the prunes combine: the pruned reads
+    * ([[readPruned]]'s callers), the SQL scan's statistics estimate,
+    * the row-level scan's static candidates and [[overwriteWhere]]'s
+    * hit scan all prune through it.
     */
-  private[graft] def prunedEntries(m: Manifest,
-      bounds: Seq[(String, Bound, Bound)],
-      ptagFilters: Seq[(String, Set[String])],
+  private[graft] def prunedEntries(m: Manifest)(
+      bounds: Seq[(String, Bound, Bound)] = Seq.empty,
+      ptagFilters: Seq[(String, Set[String])] = Seq.empty,
       nullPreds: Seq[(String, Boolean)] = Seq.empty,
-      tagRanges: Seq[(String, Long, Long)] = Seq.empty)
+      tagRanges: Seq[(String, Long, Long)] = Seq.empty,
+      entries: Seq[(String, Long, Int)] = m.entries)
       : Seq[(String, Long, Int)] = {
-    val statKept = bounds.foldLeft(m.entries) { case (es, (c, lo, hi)) =>
+    val statKept = bounds.foldLeft(entries) { case (es, (c, lo, hi)) =>
       statsPrunedEntries(m, es, c, lo, hi)
     }
     val ptagKept = ptagFilters.foldLeft(statKept) { case (es, (c, vs)) =>
@@ -2600,78 +2554,54 @@ object Versioned {
     }
   }
 
-  /** [[readVersion]] with manifest-stats file pruning by per-column
-    * bounds (conjunct semantics) — the SQL catalog's scan path: a
-    * translatable range/point predicate prunes files before the
-    * parquet scan is even planned. `fileCol` keeps the per-row file
-    * name (the `_file` metadata column). Bounds are NECESSARY
-    * conditions of the query's filter, so pruning is sound; the caller
-    * re-applies the full filter.
+  /** The one pruned read of a manifest (main version or branch head):
+    * the LIVE rows of `kept` (a [[prunedEntries]] result — delete
+    * sidecars apply, so a deleted row never resurrects through a
+    * pruned path), `fileCol` keeping each row's data-file name (the
+    * `_file` metadata column). Returns (frame, filesKept, filesTotal).
+    * A zero-entry manifest reads as its declared-schema empty frame
+    * ([[emptyFrame]], `fileCol` ""); a prune that keeps nothing reads
+    * the full live frame with `limit(0)`, so the shape is the
+    * manifest's either way. Prunes are necessary conditions only: the
+    * caller re-applies its full filter.
     */
-  private[graft] def readVersionStatsPruned(spark: SparkSession, dir: String,
-      v: Long, bounds: Seq[(String, Bound, Bound)],
-      fileCol: Option[String] = None,
-      ptagFilters: Seq[(String, Set[String])] = Seq.empty,
-      nullPreds: Seq[(String, Boolean)] = Seq.empty,
-      tagRanges: Seq[(String, Long, Long)] = Seq.empty): DataFrame = {
+  private[graft] def readPruned(spark: SparkSession, dir: String,
+      m: Manifest, kept: Seq[(String, Long, Int)],
+      fileCol: Option[String] = None): (DataFrame, Int, Int) = {
+    val df =
+      if (m.entries.isEmpty) {
+        val empty = emptyFrame(spark, dir, m)
+        fileCol.fold(empty)(fc => empty.withColumn(fc, lit("")))
+      } else if (kept.isEmpty) readLive(spark, dir, m, m.entries, fileCol).limit(0)
+      else readLive(spark, dir, m, kept, fileCol)
+    (df, kept.size, m.entries.size)
+  }
+
+  /** RANGE SKIPPING (the Iceberg/Delta data-skipping read) — the rows
+    * of version `v` with `column` in [lo, hi], reading only the files
+    * whose MANIFEST STATS envelope overlaps the range
+    * ([[statsPrunedEntries]]: pure manifest arithmetic, zero file IO at
+    * read time — each file's footer was read once, at commit, by
+    * [[statsOf]]). `readStatsSkipping` and `readRangeSkipping` are the
+    * same read under two names. Effectiveness is the layout's job: a
+    * range-sorted or z-ordered write gives tight per-file envelopes, an
+    * unsorted one degenerates to reading everything (never to wrong
+    * answers); an envelope spans the whole file, so a file is kept if
+    * any of its row groups may match. Delete sidecars apply, and the
+    * residual filter keeps the answer exact whatever the prune kept.
+    * Returns (rows, filesKept, filesTotal).
+    */
+  def readStatsSkipping(spark: SparkSession, dir: String, v: Long,
+      column: String, lo: Long, hi: Long): (DataFrame, Int, Int) = {
     val m = manifestOf(spark, dir, v)
-    if (m.entries.isEmpty) {
-      // a staged-REPLACE empty version: the declared-schema empty frame
-      val empty = readVersion(spark, dir, v)
-      return fileCol.fold(empty)(fc => empty.withColumn(fc, lit("")))
-    }
-    val kept = prunedEntries(m, bounds, ptagFilters, nullPreds, tagRanges)
-    if (kept.isEmpty) readLive(spark, dir, m, m.entries, fileCol).limit(0)
-    else readLive(spark, dir, m, kept, fileCol)
+    val (df, kept, total) = readPruned(spark, dir, m, prunedEntries(m)(
+      bounds = Seq((column, Bound.Num(BigDecimal(lo)), Bound.Num(BigDecimal(hi))))))
+    (df.filter(col(column).between(lo, hi)), kept, total)
   }
 
   def readRangeSkipping(spark: SparkSession, dir: String, v: Long,
-      column: String, lo: Long, hi: Long): (DataFrame, Int, Int) = {
-    val conf = spark.sparkContext.hadoopConfiguration
-    val manifest = manifestOf(spark, dir, v)
-    val eraOf = manifest.entries.map(e => e._1 -> e._3).toMap
-    val files = manifest.entries.map(_._1)
-    val kept = files.filter { name =>
-      val p = new org.apache.hadoop.fs.Path(s"$dir/data/$name")
-      val reader = openFooter(conf, p)
-      try {
-        val md = reader.getFooter.getBlocks
-        // the footer sees PHYSICAL names — map the logical column into
-        // this file's schema era
-        val fileSchema = reader.getFooter.getFileMetaData.getSchema
-        val phys = physicalName(column, eraOf(name), manifest.renames)
-        if (!fileSchema.containsField(phys))
-          // the column was ADDED after this file's era: every row here
-          // reads it as NULL, and NULL never satisfies a range
-          // predicate — skipping is SOUND, not just an optimization
-          false
-        else {
-        val idx = fileSchema.getFieldIndex(phys)
-        // overlap iff SOME row group's envelope intersects [lo, hi];
-        // a missing/empty stats object fails open (file kept) — stats
-        // are an optimization, never a correctness gate
-        (0 until md.size).exists { b =>
-          val st = md.get(b).getColumns.get(idx).getStatistics
-          if (st == null || st.isEmpty) true
-          else {
-            val mn = st.genericGetMin.asInstanceOf[Number].longValue
-            val mx = st.genericGetMax.asInstanceOf[Number].longValue
-            mx >= lo && mn <= hi
-          }
-        }
-        }
-      } finally reader.close()
-    }
-    val df =
-      if (kept.isEmpty)
-        readVersion(spark, dir, v).filter(col(column).between(lo, hi)).limit(0)
-      // readLive: a MOR-deleted row must not resurrect through the
-      // skipping path (DV files are sidecars, never manifest entries)
-      else readLive(spark, dir, manifest,
-        manifest.entries.filter(e => kept.contains(e._1)))
-        .filter(col(column).between(lo, hi))
-    (df, kept.size, files.size)
-  }
+      column: String, lo: Long, hi: Long): (DataFrame, Int, Int) =
+    readStatsSkipping(spark, dir, v, column, lo, hi)
 
   /** NAMED VERSION REFS (Iceberg tags): a stable name for one committed
     * version — `SELECT ... VERSION AS OF 'baseline'` via the SQL
@@ -2933,29 +2863,6 @@ object Versioned {
     if (m.dvs.isEmpty && fileCol.isEmpty)
       readEntries(spark, dir, m.changes, m.entries)
     else readLive(spark, dir, m, m.entries, fileCol)
-  }
-
-  /** [[readBranch]] with the manifest-level prunes the MAIN scan gets
-    * (q316's read half): stats bounds, partition tags, null counts,
-    * and temporal tag ranges compose over the BRANCH HEAD's manifest —
-    * branch manifests carry fstats and (since q316) `#pfile` tags, so
-    * an audit query with a WHERE reads O(matching files) of a staged
-    * terabyte, not all of it. Returns (frame, filesKept, filesTotal);
-    * the caller re-applies its full filter (prunes are
-    * necessary-condition only).
-    */
-  private[graft] def readBranchPruned(spark: SparkSession, dir: String,
-      name: String, bounds: Seq[(String, Bound, Bound)],
-      ptagFilters: Seq[(String, Set[String])],
-      nullPreds: Seq[(String, Boolean)],
-      tagRanges: Seq[(String, Long, Long)],
-      fileCol: Option[String] = None): (DataFrame, Int, Int) = {
-    val (m, _) = branchHead(spark, dir, name)
-    val kept = prunedEntries(m, bounds, ptagFilters, nullPreds, tagRanges)
-    val df =
-      if (kept.isEmpty) readLive(spark, dir, m, m.entries, fileCol).limit(0)
-      else readLive(spark, dir, m, kept, fileCol)
-    (df, kept.size, m.entries.size)
   }
 
   /** Append-only branch commit — serialized through the SAME ledger as

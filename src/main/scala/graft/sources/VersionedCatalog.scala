@@ -981,25 +981,12 @@ final class VersionedBranchTable(tableName: String, dir: String,
             override def sqlContext: SQLContext = context
             override def schema: StructType = required
             override def buildScan(): RDD[Row] = {
-              // `_file` (metadata column) captured AT the scan — the
-              // q309 DELETE's runtime group filter projects it
-              val fileCol =
-                if (required.fieldNames.contains(VersionedSqlTable.FileCol))
-                  Some(VersionedSqlTable.FileCol)
-                else None
-              val (base, _, _) = Versioned.readBranchPruned(
-                context.sparkSession, dir, branch,
-                VersionedScan.boundsOf(accepted),
-                VersionedScan.eqValuesOf(accepted),
-                VersionedScan.nullPredsOf(accepted),
+              val spark = context.sparkSession
+              VersionedScan.prunedScan(spark, dir,
+                Versioned.branchHead(spark, dir, branch)._1, accepted,
                 VersionedScan.temporalRangesOf(
                   VersionedScan.boundsOf(accepted), schemaNow),
-                fileCol)
-              val df = accepted.flatMap(VersionedScan.toColumn)
-                .foldLeft(base)(_.filter(_))
-              (if (required.isEmpty) df
-               else df.select(required.fieldNames.map(col).toIndexedSeq: _*))
-                .rdd
+                required).rdd
             }
           }.asInstanceOf[T]
       }
@@ -1242,7 +1229,7 @@ final class VersionedScanBuilder(dir: String, version: Option[Long],
           // (no sidecars, every entry's null count recorded)
           case VersionedScan.CountCol(c) =>
             full.fieldNames.contains(c) && manifestNow.exists(m =>
-              Versioned.statsNonNullCount(m, c, full(c).dataType).isDefined)
+              Versioned.statsNonNullCount(m, c).isDefined)
           case VersionedScan.CountAll => true
         }
       }
@@ -1329,7 +1316,7 @@ final class VersionedScan(dir: String, version: Option[Long],
       case None => (0L, 1L)
       case Some(latest) =>
         val m = Versioned.manifestOf(spark, dir, version.getOrElse(latest))
-        val kept = Versioned.prunedEntries(m,
+        val kept = Versioned.prunedEntries(m)(
           VersionedScan.boundsOf(accepted), VersionedScan.eqValuesOf(accepted),
           VersionedScan.nullPredsOf(accepted), tagRanges)
         val n = math.max(0L, kept.map(_._2).sum - m.dvs.map(_.nDel).sum)
@@ -1463,11 +1450,8 @@ final class VersionedScan(dir: String, version: Option[Long],
               case VersionedScan.CountCol(c) =>
                 // rows − null counts; the same execution-time re-check
                 // discipline as MIN/MAX — a racing sidecar commit
-                // degrades to the real count, never to a wrong answer.
-                // The fallback's count type follows the ORIGINAL
-                // column, so the era-aware read serves it
-                Versioned.statsNonNullCount(m, c,
-                  org.apache.spark.sql.types.LongType).getOrElse(
+                // degrades to the real count, never to a wrong answer
+                Versioned.statsNonNullCount(m, c).getOrElse(
                   liveDf.agg(org.apache.spark.sql.functions.count(col(c)))
                     .head.getLong(0))
               case VersionedScan.MinOf(c) =>
@@ -1483,40 +1467,44 @@ final class VersionedScan(dir: String, version: Option[Long],
             }
             spark.sparkContext.parallelize(Seq(Row(values: _*)), 1)
           case Some(latest) =>
-            val v = version.getOrElse(latest)
-            // `_file` (metadata column) must be captured AT the scan —
-            // kept through the dv anti-join, where an outer
-            // input_file_name() would read blank post-shuffle
-            val fileCol =
-              if (required.fieldNames.contains(VersionedSqlTable.FileCol))
-                Some(VersionedSqlTable.FileCol)
-              else None
-            // manifest-level file pruning, ZERO file IO before the
-            // parquet scan is planned, on three composed axes: (a)
-            // column-stats bounds implied by the accepted conjuncts
-            // (numeric/decimal/date/timestamp/string domains), (b)
-            // PARTITION TAGS for equality conjuncts (`#pfile`, the
-            // q281 era-aware logic — files of another spec era fail
-            // open), (c) NULL COUNTS for IS [NOT] NULL conjuncts
-            // (incl. the IsNotNull Spark injects under every
-            // equality/range filter). The filters are then re-applied
-            // in full, so all prunes are pure optimizations
-            val base = Versioned.readVersionStatsPruned(spark, dir, v,
-              VersionedScan.boundsOf(accepted), fileCol,
-              VersionedScan.eqValuesOf(accepted),
-              VersionedScan.nullPredsOf(accepted), tagRanges)
-            val filtered = accepted.flatMap(VersionedScan.toColumn)
-              .foldLeft(base)(_.filter(_))
-            val pruned =
-              if (required.isEmpty) filtered // COUNT(*): no columns needed
-              else filtered.select(required.fieldNames.map(col).toIndexedSeq: _*)
-            pruned.rdd
+            VersionedScan.prunedScan(spark, dir,
+              Versioned.manifestOf(spark, dir, version.getOrElse(latest)),
+              accepted, tagRanges, required).rdd
         }
       }
     }.asInstanceOf[T]
 }
 
 object VersionedScan {
+
+  /** The SQL read of one resolved manifest — a main version or a
+    * branch head (q316: branch manifests carry stats and `#pfile`
+    * tags, so an audit WHERE reads O(matching files) of a staged
+    * table). Prunes files by the accepted conjuncts
+    * ([[Versioned.prunedEntries]], ZERO file IO before the parquet
+    * scan is planned): column-stats bounds (numeric/decimal/date/
+    * timestamp/string domains), PARTITION TAGS for equality conjuncts
+    * (the q281 era-aware logic — files of another spec era fail open),
+    * temporal tag ranges, and NULL COUNTS for IS [NOT] NULL conjuncts
+    * (incl. the IsNotNull Spark injects under every equality/range
+    * filter). Reads the kept files ([[Versioned.readPruned]]),
+    * re-applies the accepted filters in full (every prune is a pure
+    * optimization) and selects the required columns. `_file` (the
+    * metadata column) is captured AT the scan and kept through the dv
+    * anti-join, where an outer input_file_name() would read blank
+    * post-shuffle.
+    */
+  private[v2] def prunedScan(spark: SparkSession, dir: String,
+      m: Versioned.Manifest, accepted: Array[Filter],
+      tagRanges: Seq[(String, Long, Long)], required: StructType): DataFrame = {
+    val kept = Versioned.prunedEntries(m)(boundsOf(accepted),
+      eqValuesOf(accepted), nullPredsOf(accepted), tagRanges)
+    val (base, _, _) = Versioned.readPruned(spark, dir, m, kept,
+      Some(VersionedSqlTable.FileCol).filter(required.fieldNames.contains))
+    val filtered = accepted.flatMap(toColumn).foldLeft(base)(_.filter(_))
+    if (required.isEmpty) filtered // COUNT(*): no columns needed
+    else filtered.select(required.fieldNames.map(col).toIndexedSeq: _*)
+  }
 
   /** One pushed aggregate expression ([[VersionedScanBuilder]]). */
   private[v2] sealed trait PushedAgg
@@ -1738,16 +1726,6 @@ object VersionedScan {
     }
   }
 
-  /** Per-column EQUALITY value sets implied by the pushed conjuncts,
-    * for PARTITION-TAG pruning ([[Versioned.ptagPrunedEntries]]) —
-    * each literal renders through Spark's OWN partition-path escaping
-    * (`ExternalCatalogUtils.escapePathName`, the function that named
-    * the leaf directories the tags were read from), so the compare is
-    * exact for every value — an ad-hoc "path-special" blacklist here
-    * would drift from Spark's real escape set (it did: DEL) and a
-    * missed escape would wrongly PRUNE a same-column tag, which is not
-    * fail-open.
-    */
   /** A literal rendered the way the partitioned writer's leaf
     * directories (and hence the `#pfile` tags) render it — Spark's OWN
     * path escaping, so tag comparisons are exact for every value.
@@ -1782,13 +1760,22 @@ object VersionedScan {
     filters.nonEmpty && filters.forall(proved)
   }
 
+  /** Per-column EQUALITY value sets implied by the pushed conjuncts,
+    * for PARTITION-TAG pruning ([[Versioned.ptagPrunedEntries]]) —
+    * each literal renders through Spark's OWN partition-path escaping
+    * (`ExternalCatalogUtils.escapePathName`, the function that named
+    * the leaf directories the tags were read from), so the compare is
+    * exact for every value — an ad-hoc "path-special" blacklist here
+    * would drift from Spark's real escape set (it did: DEL) and a
+    * missed escape would wrongly PRUNE a same-column tag, which is not
+    * fail-open.
+    */
   private[v2] def eqValuesOf(filters: Array[Filter])
       : Seq[(String, Set[String])] = {
-    def render(v: Any): Option[String] = renderTagValue(v)
     val perFilter: Seq[(String, Set[String])] = filters.toSeq.flatMap {
-      case EqualTo(a, v) => render(v).map(s => (a, Set(s)))
+      case EqualTo(a, v) => renderTagValue(v).map(s => (a, Set(s)))
       case In(a, vs) if vs.nonEmpty =>
-        val rs = vs.toSeq.flatMap(render)
+        val rs = vs.toSeq.flatMap(renderTagValue)
         if (rs.length == vs.length) Some((a, rs.toSet)) else None
       case _ => None
     }

@@ -192,10 +192,8 @@ final class RowLevelScan(op: GraftRowLevelOperation, dir: String,
     * runtime `_file` group filter ([[filter]]).
     */
   @volatile private var candidates: Set[String] =
-    op.snapshot.map(m =>
-      bounds.foldLeft(m.entries) { case (es, (c, lo, hi)) =>
-        Versioned.statsPrunedEntries(m, es, c, lo, hi)
-      }.map(_._1).toSet).getOrElse(Set.empty)
+    op.snapshot.map(m => Versioned.prunedEntries(m)(bounds).map(_._1).toSet)
+      .getOrElse(Set.empty)
 
   override def readSchema(): StructType = required
   override def toBatch: Batch = this

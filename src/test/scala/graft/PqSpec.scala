@@ -222,4 +222,20 @@ class PqSpec extends AnyFunSuite {
     // a drop means the encode/LUT geometry broke, not harder data.
     assert(rec >= 0.4, s"residual IVFADC within-cluster recall@10: $rec")
   }
+
+  test("a 5-row embeddings table fails every PQ path with its minimum-input contract") {
+    val tiny = graft.engine.Staging.scratch("graft-pq-spec", "tiny").getAbsolutePath
+    Tables.embeddings(spark, sfDir).orderBy("vec_id").limit(5)
+      .write.mode("overwrite").parquet(s"$tiny/embeddings.parquet")
+    val paths = Seq[(String, () => Any)](
+      "q197" -> (() => Similarity.q197PqAdc.run(spark, tiny)),
+      "q202" -> (() => Similarity.q202IvfPq.run(spark, tiny)),
+      "ivfAdcResidual" -> (() => Similarity.ivfAdcResidual(spark, tiny, 10)))
+    for ((name, run) <- paths) {
+      val e = intercept[IllegalArgumentException](run())
+      assert(e.getMessage.contains("needs embeddings vec_id 0..15") &&
+        e.getMessage.endsWith("missing 5, 6, 7, 8, 9, 10, 11, 12, 13, 14, 15"),
+        s"$name: ${e.getMessage}")
+    }
+  }
 }

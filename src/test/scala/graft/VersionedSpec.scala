@@ -70,8 +70,9 @@ class VersionedSpec extends AnyFunSuite {
       s"branch staging lays one tagged file per value: ${bh.ptags}")
     // an audit READ with a partition filter prunes through the branch
     // head's manifest (tags + stats compose like the main scan)
-    val (pdf, bkept, btotal) = Versioned.readBranchPruned(spark, dir,
-      "audit", Seq.empty, Seq(("cat", Set("c1"))), Seq.empty, Seq.empty)
+    val (bhNow, _) = Versioned.branchHead(spark, dir, "audit")
+    val (pdf, bkept, btotal) = Versioned.readPruned(spark, dir, bhNow,
+      Versioned.prunedEntries(bhNow)(ptagFilters = Seq(("cat", Set("c1")))))
     assert(bkept == 2 && btotal == 4,
       s"branch read prunes to the c1 files: $bkept of $btotal")
     assert(pdf.filter(col("cat") === "c1").count() == 49L)
@@ -204,7 +205,7 @@ class VersionedSpec extends AnyFunSuite {
       .as[(Long, String)].collect().toSet === before)
   }
 
-  test("footer-stats skipping prunes sorted layouts and fails open on unsorted ones") {
+  test("range skipping prunes sorted layouts and fails open on unsorted ones") {
     val dir = freshDir("skip")
     val rows = (1L to 400L).map(k => (k, k * 3)).toDF("k", "v")
     Versioned.create(
@@ -226,6 +227,17 @@ class VersionedSpec extends AnyFunSuite {
     val (df3, kept3, _) =
       Versioned.readRangeSkipping(spark, dir, 1L, "k", 5000L, 6000L)
     assert(kept3 === 0 && df3.count() === 0)
+    // decimal column: bounds compare by value, not by the unscaled
+    // longs parquet stores (amt = k/4, so [3, 5] is k in 12..20)
+    val dirDec = freshDir("skip-decimal")
+    Versioned.create(rows.select(col("k"),
+      (col("k").cast("decimal(10,2)") / 4).cast("decimal(10,2)").as("amt"))
+      .repartitionByRange(8, col("k")).sortWithinPartitions("k"), dirDec)
+    val (dfDec, keptDec, totalDec) =
+      Versioned.readRangeSkipping(spark, dirDec, 1L, "amt", 3L, 5L)
+    assert(totalDec === 8 && keptDec === 1,
+      s"read $keptDec of $totalDec files for amt in [3, 5]")
+    assert(dfDec.select("k").as[Long].collect().toSet === (12L to 20L).toSet)
   }
 
   test("purgeKeys erases a key from every version, leaves the rest byte-intact") {
@@ -612,7 +624,7 @@ class VersionedSpec extends AnyFunSuite {
     assert(dvKeys === Set(21L, 28L))
   }
 
-  test("footer skipping composes with MOR deletes (no resurrection)") {
+  test("range skipping composes with MOR deletes (no resurrection)") {
     val dir = freshDir("morskip")
     val rows = (1L to 256L).map(k => (k, s"v$k")).toDF("k", "payload")
     Versioned.create(rows.repartitionByRange(4, col("k"))
@@ -647,8 +659,7 @@ class VersionedSpec extends AnyFunSuite {
     assert(Versioned.nullPrunedEntries(m, m.entries, "nope",
       wantNull = true).size == 3)
     // COUNT(v) = rows − nulls, exact: 0 + 10 + 6
-    assert(Versioned.statsNonNullCount(m, "v",
-      org.apache.spark.sql.types.LongType).contains(16L))
+    assert(Versioned.statsNonNullCount(m, "v").contains(16L))
     // MIN/MAX push tolerates the all-null file (it votes nothing)
     assert(Versioned.statsExtreme(m, "v",
       org.apache.spark.sql.types.LongType, isMin = true).contains(110L))
@@ -658,8 +669,7 @@ class VersionedSpec extends AnyFunSuite {
     // COUNT = 0 exactly, IS NOT NULL prunes everything, IS NULL nothing
     Versioned.addColumn(spark, dir, "w", "bigint")                     // v4
     val m4 = Versioned.manifestOf(spark, dir, 4)
-    assert(Versioned.statsNonNullCount(m4, "w",
-      org.apache.spark.sql.types.LongType).contains(0L))
+    assert(Versioned.statsNonNullCount(m4, "w").contains(0L))
     assert(Versioned.nullPrunedEntries(m4, m4.entries, "w",
       wantNull = false).isEmpty)
     assert(Versioned.nullPrunedEntries(m4, m4.entries, "w",
@@ -668,8 +678,7 @@ class VersionedSpec extends AnyFunSuite {
     // unknown to the manifest) — never the answer
     Versioned.deleteKeysMor(spark, dir, "k", Seq(15L).toDF("k"))       // v5
     val m5 = Versioned.manifestOf(spark, dir, 5)
-    assert(Versioned.statsNonNullCount(m5, "v",
-      org.apache.spark.sql.types.LongType).isEmpty)
+    assert(Versioned.statsNonNullCount(m5, "v").isEmpty)
     // pruning stays sound under sidecars (necessary-condition filters)
     assert(Versioned.nullPrunedEntries(m5, m5.entries, "v",
       wantNull = true).size == 2)
