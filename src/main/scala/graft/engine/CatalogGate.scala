@@ -92,6 +92,18 @@ object CatalogGate {
     part
   }
 
+  /** Requires `df`'s executed plan (forced once) to contain every marker
+    * of `has` and none of `lacks`. A failure states `why`, names each
+    * missing or forbidden marker and prints the plan.
+    */
+  def requirePlan(df: DataFrame, has: Seq[String], lacks: Seq[String],
+      why: String): Unit = {
+    val plan = df.queryExecution.executedPlan.toString
+    val wrong = has.filterNot(plan.contains).map(m => s"missing '$m'") ++
+      lacks.filter(plan.contains).map(m => s"forbidden '$m'")
+    require(wrong.isEmpty, s"$why (${wrong.mkString(", ")}):\n$plan")
+  }
+
   /** The `phase, n, sum_cents` aggregate of a DataFrame with `cents`. */
   def phaseOf(phase: String, df: DataFrame): DataFrame =
     df.agg(count(lit(1)).as("n"), sum("cents").cast(LongType).as("sum_cents"))

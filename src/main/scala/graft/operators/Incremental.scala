@@ -1547,15 +1547,12 @@ object Incremental {
     val bare = s.sql("SELECT COUNT(*) AS n FROM graft_cat.ct")
     val filtered = s.sql(
       "SELECT COUNT(*) AS n FROM graft_cat.ct WHERE k % 2 = 0")
-    val barePlan = bare.queryExecution.executedPlan.toString
-    require(barePlan.contains("PushedAggregates: [COUNT(*)]") &&
-      !barePlan.contains("HashAggregate"),
-      s"a bare COUNT(*) must answer from the manifest — no aggregation " +
-        s"over data:\n$barePlan")
-    val filtPlan = filtered.queryExecution.executedPlan.toString
-    require(filtPlan.contains("HashAggregate") &&
-      !filtPlan.contains("PushedAggregates: [COUNT"),
-      s"a filtered COUNT must fall back to the real scan:\n$filtPlan")
+    CatalogGate.requirePlan(bare, Seq("PushedAggregates: [COUNT(*)]"),
+      Seq("HashAggregate"),
+      "a bare COUNT(*) must answer from the manifest — no aggregation over data")
+    CatalogGate.requirePlan(filtered, Seq("HashAggregate"),
+      Seq("PushedAggregates: [COUNT"),
+      "a filtered COUNT must fall back to the real scan")
     def phase(name: String, df: org.apache.spark.sql.DataFrame) =
       df.select(lit(name).as("phase"), col("n").cast(LongType).as("n"))
     phase("v1_full",
@@ -1866,22 +1863,19 @@ object Incremental {
     s.sql("ALTER TABLE graft_cat.mx ALTER COLUMN k TYPE BIGINT")         // v2
     s.sql("INSERT INTO graft_cat.mx SELECT /*+ REPARTITION_BY_RANGE(8, k) */ " +
       s"k + $mx, price, nm FROM q296_src")                               // v3
-    def plan(sql: String): String =
-      s.sql(sql).queryExecution.executedPlan.toString
-    val pushedHead = plan(
-      "SELECT COUNT(*), MIN(k), MAX(k), MIN(price), MAX(price) FROM graft_cat.mx")
-    require(pushedHead.contains("MIN(k)") && pushedHead.contains("MAX(price)") &&
-      pushedHead.contains("PushedAggregates") &&
-      !pushedHead.contains("HashAggregate"),
-      s"the clean min/max list must answer from the manifest:\n$pushedHead")
-    val pushedV1 = plan("SELECT MAX(k) FROM graft_cat.mx VERSION AS OF 1")
-    require(pushedV1.contains("PushedAggregates") &&
-      !pushedV1.contains("HashAggregate"),
-      s"time travel pins its own manifest's envelopes:\n$pushedV1")
+    CatalogGate.requirePlan(s.sql(
+      "SELECT COUNT(*), MIN(k), MAX(k), MIN(price), MAX(price) FROM graft_cat.mx"),
+      Seq("MIN(k)", "MAX(price)", "PushedAggregates"), Seq("HashAggregate"),
+      "the clean min/max list must answer from the manifest")
+    CatalogGate.requirePlan(
+      s.sql("SELECT MAX(k) FROM graft_cat.mx VERSION AS OF 1"),
+      Seq("PushedAggregates"), Seq("HashAggregate"),
+      "time travel pins its own manifest's envelopes")
     // string min plans a SortAggregate (min over UTF8String is not
     // hash-aggregable here) — the point is the REAL aggregate over
     // data, not its physical flavor
-    val strPlan = plan("SELECT MIN(nm) FROM graft_cat.mx")
+    val strPlan = s.sql("SELECT MIN(nm) FROM graft_cat.mx")
+      .queryExecution.executedPlan.toString
     require((strPlan.contains("HashAggregate") ||
       strPlan.contains("SortAggregate")) &&
       !strPlan.contains("PushedAggregates"),
@@ -1892,10 +1886,9 @@ object Incremental {
     s.sql("INSERT INTO graft_cat.mx2 SELECT k FROM q296_src")            // v1
     graft.sources.Versioned.deleteKeysMor(s, s"${g.wh}/mx2", "k",
       s.sql("SELECT k FROM q296_src WHERE k % 7 = 0"))                   // v2
-    val morPlan = plan("SELECT MIN(k) FROM graft_cat.mx2")
-    require(morPlan.contains("HashAggregate") &&
-      !morPlan.contains("PushedAggregates: [MIN"),
-      s"a table with delete sidecars must fall back for MIN/MAX:\n$morPlan")
+    CatalogGate.requirePlan(s.sql("SELECT MIN(k) FROM graft_cat.mx2"),
+      Seq("HashAggregate"), Seq("PushedAggregates: [MIN"),
+      "a table with delete sidecars must fall back for MIN/MAX")
     def row(phase: String, sql: String) = s.sql(sql).select(
       lit(phase).as("phase"),
       col("a").cast(LongType).as("a"), col("b").cast(LongType).as("b"))
@@ -1956,10 +1949,9 @@ object Incremental {
           sum("cents").cast(LongType).as("sum_cents"))
         .select(col("nation"), col("n"), col("sum_cents"))
         .orderBy("nation")
-      val init = joined.queryExecution.executedPlan.toString
-      require(init.contains("BroadcastHashJoin"),
-        s"the 25-row catalog dim must broadcast from its manifest " +
-          s"estimate in the INITIAL plan:\n$init")
+      CatalogGate.requirePlan(joined, Seq("BroadcastHashJoin"), Seq.empty,
+        "the 25-row catalog dim must broadcast from its manifest " +
+          "estimate in the INITIAL plan")
       joined
     } finally
       s.conf.set("spark.sql.autoBroadcastJoinThreshold", threshold)
@@ -2241,13 +2233,11 @@ object Incremental {
       "IS NULL must prune the zero-null file of 3")
     g.requireFiles("graft_cat.nc", "v IS NOT NULL", 2L,
       "IS NOT NULL must prune the all-null file of 3")
-    val pushed = s.sql(
-      "SELECT COUNT(v), COUNT(*), MIN(v), MAX(v) FROM graft_cat.nc")
-      .queryExecution.executedPlan.toString
-    require(pushed.contains("COUNT(v)") && pushed.contains("PushedAggregates") &&
-      !pushed.contains("HashAggregate") && !pushed.contains("SortAggregate"),
-      s"COUNT(col)+MIN/MAX must answer from the manifest — the all-null " +
-        s"file votes nothing instead of refusing the push:\n$pushed")
+    CatalogGate.requirePlan(
+      s.sql("SELECT COUNT(v), COUNT(*), MIN(v), MAX(v) FROM graft_cat.nc"),
+      Seq("COUNT(v)", "PushedAggregates"), Seq("HashAggregate", "SortAggregate"),
+      "COUNT(col)+MIN/MAX must answer from the manifest — the all-null " +
+        "file votes nothing instead of refusing the push")
     // MOR sidecars block the push (a dv-deleted row's nullness is
     // unknown to the manifest) — but never the answer
     s.sql("CREATE TABLE graft_cat.nc2 (k BIGINT, v BIGINT)")
@@ -2255,11 +2245,9 @@ object Incremental {
       "NULL ELSE cents END FROM q302_src")                               // v1
     graft.sources.Versioned.deleteKeysMor(s, s"${g.wh}/nc2", "k",
       s.sql("SELECT k FROM q302_src WHERE k % 7 = 0"))                   // v2
-    val morPlan = s.sql("SELECT COUNT(v) FROM graft_cat.nc2")
-      .queryExecution.executedPlan.toString
-    require(morPlan.contains("HashAggregate") &&
-      !morPlan.contains("PushedAggregates: [COUNT(v)"),
-      s"a table with delete sidecars must fall back for COUNT(col):\n$morPlan")
+    CatalogGate.requirePlan(s.sql("SELECT COUNT(v) FROM graft_cat.nc2"),
+      Seq("HashAggregate"), Seq("PushedAggregates: [COUNT(v)"),
+      "a table with delete sidecars must fall back for COUNT(col)")
     def row(phase: String, sql: String) = s.sql(sql).select(
       lit(phase).as("phase"),
       col("a").cast(LongType).as("a"), col("b").cast(LongType).as("b"))
@@ -2641,7 +2629,7 @@ object Incremental {
   // the operation's snapshot is the branch head, the scan prunes
   // candidates through the branch manifest's stats + the runtime
   // `_file` group filter, and the commit is the next branch manifest
-  // ([[graft.sources.Versioned.commitReplaceBranch]]): only files
+  // ([[graft.sources.Versioned.commitReplace]] on the branch): only files
   // containing matches rewrite, main never sees a byte until
   // fast_forward. UPDATE/MERGE on a branch stay unsupported by design
   // (DESCRIBE states it via graft.branch.verbs): DELETE + re-INSERT

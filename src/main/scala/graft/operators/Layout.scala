@@ -195,9 +195,11 @@ object Layout {
       |GROUP BY o_orderstatus
       |ORDER BY o_orderstatus""".stripMargin) { (s, d) =>
     val dir = Staging.scratch("graft-layout-gate", "q210_orc").getAbsolutePath
-    Tables.orders(s, d)
-      .write.mode("overwrite").partitionBy("o_orderpriority").orc(s"$dir/orders")
-    s.read.orc(s"$dir/orders")
+    val orders = Tables.orders(s, d)
+    orders.write.mode("overwrite").partitionBy("o_orderpriority").orc(s"$dir/orders")
+    // read back under the schema just written: zero-row input leaves no
+    // partition directory to infer a schema from
+    s.read.schema(orders.schema).orc(s"$dir/orders")
       .filter(col("o_orderpriority") === "1-URGENT" && col("o_totalprice") > 50000)
       .groupBy("o_orderstatus")
       .agg(count(lit(1)).as("n_orders"),
@@ -288,15 +290,16 @@ object Layout {
       |GROUP BY 1 ORDER BY 1""".stripMargin) { (s, d) =>
     import s.implicits._
     val dir = Staging.scratch("graft-layout-gate", "q214_dpp").getAbsolutePath
-    Tables.lineitem(s, d)
+    val fact = Tables.lineitem(s, d)
       .select(col("l_quantity"), month(col("l_shipdate")).as("ship_month"))
-      .write.mode("overwrite").partitionBy("ship_month").parquet(s"$dir/fact")
+    fact.write.mode("overwrite").partitionBy("ship_month").parquet(s"$dir/fact")
     // the dim must be a FILE relation: a literal LocalRelation's filter
     // constant-folds away and the DPP rule no longer sees a selective
     // predicate to derive the runtime subquery from
     (1 to 12).map(m => (m, s"Q${(m - 1) / 3 + 1}")).toDF("m", "season")
       .write.mode("overwrite").parquet(s"$dir/seasons")
-    s.read.parquet(s"$dir/fact")
+    // the written schema, not inference (zero-row input: no partitions)
+    s.read.schema(fact.schema).parquet(s"$dir/fact")
       .join(broadcast(s.read.parquet(s"$dir/seasons")
         .filter(col("season") === "Q2")),
         col("ship_month") === col("m"))

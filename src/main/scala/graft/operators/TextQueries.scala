@@ -18,11 +18,6 @@ import graft.functions.TextOps
   */
 object TextQueries {
 
-  /** Synthetic pracuj.pl-style salary text per lineitem row; key is unique
-    * (l_linenumber < 10). Variants cycle through the reference parser's
-    * branches (transform_data.py:129-180): range, single value with comma
-    * decimal, foreign currency with passthrough period, and no-salary.
-    */
   /** Shared base: (key, variant, thousands-grouped g1/g2) per lineitem
     * row — the single source both the salary-text and span constructions
     * derive from (their oracle CTEs mirror it).
@@ -39,6 +34,11 @@ object TextQueries {
       .selectExpr("key", "v", s"${grp("n1")} AS g1", s"${grp("n2")} AS g2")
   }
 
+  /** Synthetic pracuj.pl-style salary text per lineitem row; key is unique
+    * (l_linenumber < 10). Variants cycle through the reference parser's
+    * branches (transform_data.py:129-180): range, single value with comma
+    * decimal, foreign currency with passthrough period, and no-salary.
+    */
   private def syntheticSalary(s: SparkSession, d: String): DataFrame = {
     salaryBase(s, d)
       .selectExpr("key",

@@ -50,18 +50,36 @@ object Versioned {
     new org.apache.hadoop.fs.Path(dir, "_manifests")
 
   /** Committed versions, ascending (empty for a non-table). */
-  def versions(spark: SparkSession, dir: String): Seq[Long] = {
+  def versions(spark: SparkSession, dir: String): Seq[Long] =
+    listPoints(spark, dir, ManifestRe)
+
+  /** The points of the manifests in `_manifests` whose names `re`
+    * matches (its one group is the point), ascending.
+    */
+  private def listPoints(spark: SparkSession, dir: String,
+      re: scala.util.matching.Regex): Seq[Long] = {
     val fs = fsOf(spark, dir)
     val md = manifestDir(dir)
     if (!fs.exists(md)) Seq.empty
     else fs.listStatus(md).toSeq.flatMap(_.getPath.getName match {
-      case ManifestRe(k) => Some(k.toLong)
+      case re(k) => Some(k.toLong)
       case _ => None
     }).sorted
   }
 
   def latestVersion(spark: SparkSession, dir: String): Option[Long] =
     versions(spark, dir).lastOption
+
+  /** One MERGE-ON-READ delete commit's sidecar reference (`#dv` line):
+    * `file` is a parquet under `data/` holding (__target, __key) rows —
+    * the keys deleted from each still-live data file — applied at read
+    * as an anti-join ([[applyDvs]]). `gen` is the schema-change
+    * generation at delete time, so `keyName` can be mapped forward
+    * through later renames; `nDel` is the sidecar's row count (for
+    * [[history]] under the keyed-unique contract).
+    */
+  private[graft] final case class DvRef(
+      gen: Int, keyName: String, file: String, nDel: Long)
 
   /** A manifest: SCHEMA CHANGES (generation, kind, a, b — metadata-only
     * evolution, the Iceberg name-mapping idea without column IDs) plus
@@ -76,8 +94,8 @@ object Versioned {
     * Physical column layouts are frozen at write time; reading applies
     * every change with generation > era in generation order, so old
     * files surface under the current logical schema with zero rewrite.
-    */
-  /** `shards`: MANIFEST-OF-MANIFESTS structure (the 100 TB scaling move
+    *
+    * `shards`: MANIFEST-OF-MANIFESTS structure (the 100 TB scaling move
     * the header names — a million-file table cannot rewrite a
     * million-line manifest per commit). Each shard is an IMMUTABLE
     * `_manifests/s-<token>.shard` file holding entry lines; the
@@ -91,19 +109,8 @@ object Versioned {
     * Append-heavy histories accumulate one small shard per commit;
     * [[optimize]]'s full rewrite produces all-new entries and hence
     * re-shards at the bound — shard compaction rides data compaction.
-    */
-  /** One MERGE-ON-READ delete commit's sidecar reference (`#dv` line):
-    * `file` is a parquet under `data/` holding (__target, __key) rows —
-    * the keys deleted from each still-live data file — applied at read
-    * as an anti-join ([[applyDvs]]). `gen` is the schema-change
-    * generation at delete time, so `keyName` can be mapped forward
-    * through later renames; `nDel` is the sidecar's row count (for
-    * [[history]] under the keyed-unique contract).
-    */
-  private[graft] final case class DvRef(
-      gen: Int, keyName: String, file: String, nDel: Long)
-
-  /** `fstats`: per-file COLUMN STATS (file → [[FileStats]] encoding),
+    *
+    * `fstats`: per-file COLUMN STATS (file → [[FileStats]] encoding),
     * the Iceberg manifest-stats idea — min/max envelopes recorded ONCE
     * at commit time (one footer read per freshly-written file, inside
     * [[commitManifest]]) and carried by reference forever after, so
@@ -199,7 +206,7 @@ object Versioned {
 
   private[graft] def manifestOf(spark: SparkSession, dir: String, v: Long): Manifest = {
     val fs = fsOf(spark, dir)
-    val p = new org.apache.hadoop.fs.Path(manifestDir(dir), f"v$v%09d.manifest")
+    val p = new org.apache.hadoop.fs.Path(manifestDir(dir), Main.fileName(v))
     require(fs.exists(p), s"version $v does not exist under $dir")
     manifestAtPath(fs, dir, p)
   }
@@ -222,6 +229,76 @@ object Versioned {
     Manifest(changes, inline ++ shards.flatMap(_._2.map(_._1)),
       shards.map { case (n, es) => (n, es.map(_._1)) }, ms, dvs, ptags,
       stats ++ shards.flatMap(_._2.flatMap(_._2)), txns)
+  }
+
+  /** A LINEAGE of the table: main's committed versions, or one
+    * write-audit-publish branch's commits ([[createBranch]]). It owns
+    * everything that differs between the two — a point's manifest file
+    * name, how the points are listed, what point 0 means, and where the
+    * head is — so the manifest commit ([[commitManifest]]), the read of
+    * a resolved manifest, the SQL scan and the change feed each have
+    * one body serving both.
+    */
+  private[graft] sealed trait Lineage {
+    /** The manifest file name of point `p` ≥ 1. */
+    def fileName(p: Long): String
+
+    /** Committed points, ascending (point 0 is never listed). */
+    def points(spark: SparkSession, dir: String): Seq[Long]
+
+    /** Point `p`'s manifest. */
+    def manifestAt(spark: SparkSession, dir: String, p: Long): Manifest
+
+    /** The head point; None only before main's first commit. */
+    def headPoint(spark: SparkSession, dir: String): Option[Long]
+
+    /** `@<branch>` for a branch, empty for main — table and scan names. */
+    def label: String
+
+    /** (head manifest, head point). */
+    final def head(spark: SparkSession, dir: String): Option[(Manifest, Long)] =
+      headPoint(spark, dir).map(p => (manifestAt(spark, dir, p), p))
+  }
+
+  /** Main: `v<n>.manifest`; point 0 is the empty pre-first-commit
+    * manifest (a change feed from 0 carries the whole oldest version).
+    */
+  private[graft] case object Main extends Lineage {
+    def fileName(p: Long): String = f"v$p%09d.manifest"
+    def points(spark: SparkSession, dir: String): Seq[Long] =
+      versions(spark, dir)
+    def manifestAt(spark: SparkSession, dir: String, p: Long): Manifest =
+      if (p == 0L) Manifest(Seq.empty, Seq.empty) else manifestOf(spark, dir, p)
+    def headPoint(spark: SparkSession, dir: String): Option[Long] =
+      latestVersion(spark, dir)
+    def label: String = ""
+  }
+
+  /** A branch: `b-<seq>-<name>.manifest`; point 0 is the BASE (the main
+    * version the branch was cut from), so an unwritten branch's head is
+    * its base. A dropped or published branch has no lineage: listing
+    * its points fails loudly.
+    */
+  private[graft] final case class Branch(name: String) extends Lineage {
+    def fileName(p: Long): String = f"b-$p%09d-$name.manifest"
+    private def base(spark: SparkSession, dir: String): Long =
+      branches(spark, dir).getOrElse(name,
+        throw new IllegalArgumentException(
+          s"no branch '$name' on $dir (have ${branches(spark, dir)
+            .keys.toSeq.sorted.mkString(", ")}) — dropped or published; " +
+            "a stream over it cannot continue (redefine the source)"))
+    def points(spark: SparkSession, dir: String): Seq[Long] = {
+      base(spark, dir)
+      listPoints(spark, dir, ("""b-(\d{9})-""" +
+        java.util.regex.Pattern.quote(name) + """\.manifest""").r)
+    }
+    def manifestAt(spark: SparkSession, dir: String, p: Long): Manifest =
+      if (p == 0L) manifestOf(spark, dir, base(spark, dir))
+      else manifestAtPath(fsOf(spark, dir), dir,
+        new org.apache.hadoop.fs.Path(manifestDir(dir), fileName(p)))
+    def headPoint(spark: SparkSession, dir: String): Option[Long] =
+      Some(points(spark, dir).lastOption.getOrElse(0L))
+    def label: String = s"@$name"
   }
 
   private def renderEntry(e: (String, Long, Int),
@@ -440,14 +517,25 @@ object Versioned {
     * same operation; a zero-entry manifest WITHOUT a ddl (hand-rolled)
     * still fails loudly.
     */
-  def readVersion(spark: SparkSession, dir: String, v: Long): DataFrame = {
-    val m = manifestOf(spark, dir, v)
-    if (m.entries.isEmpty) emptyFrame(spark, dir, m)
-    else if (m.dvs.isEmpty) readEntries(spark, dir, m.changes, m.entries)
-    else readLive(spark, dir, m, m.entries)
-  }
+  def readVersion(spark: SparkSession, dir: String, v: Long): DataFrame =
+    readManifest(spark, dir, manifestOf(spark, dir, v))
 
-  /** A zero-entry manifest's rows (main version or branch head): the
+  /** The live rows of one resolved manifest (a main version or a
+    * branch point): a zero-entry manifest reads as its
+    * [[emptyFrame]], a dv-free one as a plain era-aware read, anything
+    * else through its delete sidecars. `fileCol`, when set, keeps each
+    * row's data-file name ("" on the empty frame).
+    */
+  private[graft] def readManifest(spark: SparkSession, dir: String,
+      m: Manifest, fileCol: Option[String] = None): DataFrame =
+    if (m.entries.isEmpty) {
+      val empty = emptyFrame(spark, dir, m)
+      fileCol.fold(empty)(fc => empty.withColumn(fc, lit("")))
+    } else if (m.dvs.isEmpty && fileCol.isEmpty)
+      readEntries(spark, dir, m.changes, m.entries)
+    else readLive(spark, dir, m, m.entries, fileCol)
+
+  /** A zero-entry manifest's rows (main version or branch point): the
     * empty frame under the shape the manifest itself declares.
     */
   private def emptyFrame(spark: SparkSession, dir: String,
@@ -902,10 +990,13 @@ object Versioned {
     } catch { case _: NumberFormatException => true }
   }
 
-  /** Atomically commit the next version's manifest; returns it. Runs
-    * inside [[Lake.withCommit]], so concurrent committers retry with
-    * the winner's version visible (their `build` is re-evaluated).
-    * `build` maps the previous manifest (renames + era'd entries) to
+  /** Atomically commit `lineage`'s next manifest; returns its point (a
+    * main version, or a branch-local seq). The one publish of a
+    * manifest: main and branch commits alike serialize through
+    * [[Lake.withCommit]], so concurrent committers retry with the
+    * winner's point visible (their `build` is re-evaluated), and a
+    * branch writer never interleaves a half-state with a main writer.
+    * `build` maps the head manifest (renames + era'd entries) to
     * the next one — renames carry forward unless `build` changes them.
     * Column stats attach HERE, centrally: every entry new to this
     * commit gets its footer read once ([[statsOf]] — the footer is
@@ -920,14 +1011,13 @@ object Versioned {
     * between publish and drop would be silently deleted otherwise).
     */
   private def commitManifest(spark: SparkSession, dir: String,
-      epilogue: () => Unit = () => ())(
+      lineage: Lineage = Main, epilogue: () => Unit = () => ())(
       build: Manifest => Manifest): Long =
     Lake.withCommit(spark, dir) {
       val fs = fsOf(spark, dir)
-      val prev = latestVersion(spark, dir)
-      val base = prev.map(manifestOf(spark, dir, _))
-        .getOrElse(Manifest(Seq.empty, Seq.empty))
-      val next = prev.getOrElse(0L) + 1
+      val (base, prev) = lineage.head(spark, dir)
+        .getOrElse((lineage.manifestAt(spark, dir, 0L), 0L))
+      val next = prev + 1
       val built = build(base)
       // AFTER build: a staged CREATE's prepare() may legitimately HEAL
       // a crashed drop's marker inside this very slot; every other
@@ -945,17 +1035,31 @@ object Versioned {
         txns = base.txns ++ built.txns)
       val manifest = shardManifest(spark, dir, base, statted)
         .copy(commitMs = Some(System.currentTimeMillis()))
-      val md = manifestDir(dir)
-      fs.mkdirs(md)
-      val tmp = new org.apache.hadoop.fs.Path(md, f"v$next%09d.tmp")
-      val out = fs.create(tmp, true)
-      try out.write(renderManifest(manifest).getBytes("UTF-8"))
-      finally out.close()
-      require(fs.rename(tmp, new org.apache.hadoop.fs.Path(md, f"v$next%09d.manifest")),
-        s"manifest rename failed for v$next")
+      fs.mkdirs(manifestDir(dir))
+      writeManifest(fs, dir, lineage.fileName(next), manifest)
       epilogue()
       next
     }
+
+  /** Land `m` as `_manifests/<name>` via a tmp file and one rename, so
+    * a reader sees a whole manifest or none. `replace` (a purge
+    * rewriting a version in place) deletes the existing file just
+    * before the rename — a Hadoop rename never overwrites; the rename
+    * goes through the Hadoop FS on every scheme, since a java.nio move
+    * would strand the local ChecksumFileSystem's .crc sidecar and
+    * poison the next manifest read.
+    */
+  private def writeManifest(fs: org.apache.hadoop.fs.FileSystem, dir: String,
+      name: String, m: Manifest, replace: Boolean = false): Unit = {
+    val md = manifestDir(dir)
+    val tmp = new org.apache.hadoop.fs.Path(md,
+      name.stripSuffix(".manifest") + ".tmp")
+    val out = fs.create(tmp, true)
+    try out.write(renderManifest(m).getBytes("UTF-8")) finally out.close()
+    val target = new org.apache.hadoop.fs.Path(md, name)
+    if (replace) fs.delete(target, false)
+    require(fs.rename(tmp, target), s"manifest rename failed for $name")
+  }
 
   /** Tag freshly-written files with the CURRENT schema era (their
     * physical column names are the logical names as of `renames`).
@@ -1020,12 +1124,20 @@ object Versioned {
     * any snapshot file, a new delete sidecar, or a schema evolution
     * fails the statement loudly (re-run it) rather than silently
     * dropping the concurrent writer's effect.
+    * On a BRANCH lineage this is the audit-fix verb of the
+    * write-audit-publish flow (q309): SQL `DELETE FROM t.branch_<name>`
+    * rewrites only the branch files containing matches and commits the
+    * next branch manifest; main never sees a byte until fast_forward.
+    * Retired branch files stay referenced by earlier branch manifests
+    * (all live vacuum roots) until the branch dissolves, then age out
+    * as orphans.
     */
   private[graft] def commitReplace(spark: SparkSession, dir: String,
       snapshot: Option[Manifest], replaced: Set[String],
       added: Seq[(String, Long)],
-      addedTags: Seq[(String, String, String)] = Seq.empty): Long =
-    commitManifest(spark, dir) { base =>
+      addedTags: Seq[(String, String, String)] = Seq.empty,
+      lineage: Lineage = Main): Long =
+    commitManifest(spark, dir, lineage) { base =>
       requireSnapshotCompatible(dir, base, snapshot)
       Manifest(base.changes,
         base.entries.filterNot(e => replaced(e._1)) ++
@@ -2103,35 +2215,25 @@ object Versioned {
           val updated = m.entries.flatMap { case e @ (f, _, _) =>
             if (hit(f)) replacement(f) else Seq(e)
           }
-          val md = manifestDir(dir)
-          val tmp = new org.apache.hadoop.fs.Path(md, f"v$v%09d.tmp")
-          val out = fs.create(tmp, true)
           // re-shard against the version's OWN shard structure: shards
           // untouched by the purge are reused byte-identical, only the
           // shards holding hit files rewrite (orphaned originals fall to
           // the aged vacuum)
-          try out.write(renderManifest(
-              shardManifest(spark, dir, m,
-                Manifest(m.changes, updated, dvs = newDvs,
-                  ptags = m.ptags.filterNot(t => hit(t._1)),
-                  // column stats REPOINT to the 1:1 purge replacements:
-                  // a purge only removes rows, so the old envelope is a
-                  // sound superset for the rewritten file
-                  fstats = m.fstats.flatMap { case (f, st) =>
-                    if (!hit(f)) Some(f -> st)
-                    else replacement(f).headOption.map(_._1 -> st)
-                  }, txns = m.txns))
-                // a purge rewrites history IN PLACE — the version keeps
-                // its original commit time
-                .copy(commitMs = m.commitMs))
-            .getBytes("UTF-8"))
-          finally out.close()
-          val target = new org.apache.hadoop.fs.Path(md, f"v$v%09d.manifest")
-          // through the Hadoop FS on every scheme — a java.nio move
-          // would strand the local ChecksumFileSystem's .crc sidecar
-          // and poison the next manifest read
-          fs.delete(target, false)
-          require(fs.rename(tmp, target), s"manifest replace failed for v$v")
+          writeManifest(fs, dir, Main.fileName(v),
+            shardManifest(spark, dir, m,
+              Manifest(m.changes, updated, dvs = newDvs,
+                ptags = m.ptags.filterNot(t => hit(t._1)),
+                // column stats REPOINT to the 1:1 purge replacements:
+                // a purge only removes rows, so the old envelope is a
+                // sound superset for the rewritten file
+                fstats = m.fstats.flatMap { case (f, st) =>
+                  if (!hit(f)) Some(f -> st)
+                  else replacement(f).headOption.map(_._1 -> st)
+                }, txns = m.txns))
+              // a purge rewrites history IN PLACE — the version keeps
+              // its original commit time
+              .copy(commitMs = m.commitMs),
+            replace = true)
         }
       }
       // the purged bytes leave the disk only after no manifest points at them
@@ -2569,10 +2671,8 @@ object Versioned {
       m: Manifest, kept: Seq[(String, Long, Int)],
       fileCol: Option[String] = None): (DataFrame, Int, Int) = {
     val df =
-      if (m.entries.isEmpty) {
-        val empty = emptyFrame(spark, dir, m)
-        fileCol.fold(empty)(fc => empty.withColumn(fc, lit("")))
-      } else if (kept.isEmpty) readLive(spark, dir, m, m.entries, fileCol).limit(0)
+      if (m.entries.isEmpty) readManifest(spark, dir, m, fileCol)
+      else if (kept.isEmpty) readLive(spark, dir, m, m.entries, fileCol).limit(0)
       else readLive(spark, dir, m, kept, fileCol)
     (df, kept.size, m.entries.size)
   }
@@ -2803,73 +2903,21 @@ object Versioned {
       base
     }
 
-  private def branchManifestPath(dir: String, name: String, seq: Long) =
-    new org.apache.hadoop.fs.Path(manifestDir(dir),
-      f"b-$seq%09d-$name.manifest")
-
-  /** Branch-local commit sequence numbers, ascending (empty = no
-    * branch writes yet — the head is the base version's manifest).
-    */
-  private[graft] def branchSeqs(spark: SparkSession, dir: String,
-      name: String): Seq[Long] = {
-    val fs = fsOf(spark, dir)
-    val md = manifestDir(dir)
-    val Re = ("""b-(\d{9})-""" + java.util.regex.Pattern.quote(name) +
-      """\.manifest""").r
-    if (!fs.exists(md)) Seq.empty
-    else fs.listStatus(md).toSeq.flatMap(_.getPath.getName match {
-      case Re(k) => Some(k.toLong)
-      case _ => None
-    }).sorted
-  }
-
-  /** (head manifest, branch-local seq — 0 when unwritten). */
+  /** (head manifest, branch-local seq — 0 when unwritten: the base). */
   private[graft] def branchHead(spark: SparkSession, dir: String,
-      name: String): (Manifest, Long) = {
-    val base = branches(spark, dir).getOrElse(name,
-      throw new IllegalArgumentException(
-        s"no branch '$name' on $dir (have ${branches(spark, dir)
-          .keys.toSeq.sorted.mkString(", ")})"))
-    branchSeqs(spark, dir, name).lastOption match {
-      case Some(k) =>
-        (manifestAtPath(fsOf(spark, dir), dir,
-          branchManifestPath(dir, name, k)), k)
-      case None => (manifestOf(spark, dir, base), 0L)
-    }
-  }
-
-  /** One point of a branch's lineage as a manifest: seq 0 is the BASE
-    * (the main version the branch was cut from), seq ≥ 1 the branch's
-    * own commits — what the q311 branch stream walks.
-    */
-  private[graft] def branchManifestAt(spark: SparkSession, dir: String,
-      name: String, seq: Long): Manifest =
-    if (seq == 0L) {
-      val base = branches(spark, dir).getOrElse(name,
-        throw new IllegalArgumentException(
-          s"no branch '$name' on $dir — dropped or published; " +
-            "redefine the stream"))
-      manifestOf(spark, dir, base)
-    } else manifestAtPath(fsOf(spark, dir), dir,
-      branchManifestPath(dir, name, seq))
+      name: String): (Manifest, Long) =
+    Branch(name).head(spark, dir).get // a branch head always exists
 
   /** The branch head's live rows (audits read here). `fileCol` keeps
-    * each row's data-file name — the `_file` metadata column the q309
-    * branch DELETE's runtime group filter projects.
+    * each row's data-file name.
     */
   def readBranch(spark: SparkSession, dir: String, name: String,
-      fileCol: Option[String] = None): DataFrame = {
-    val (m, _) = branchHead(spark, dir, name)
-    if (m.dvs.isEmpty && fileCol.isEmpty)
-      readEntries(spark, dir, m.changes, m.entries)
-    else readLive(spark, dir, m, m.entries, fileCol)
-  }
+      fileCol: Option[String] = None): DataFrame =
+    readManifest(spark, dir, branchHead(spark, dir, name)._1, fileCol)
 
-  /** Append-only branch commit — serialized through the SAME ledger as
-    * main commits (a branch writer and a main writer never interleave
-    * half-states), stats attached and shards reused exactly like a
-    * main append, but the manifest lands in the branch namespace: main
-    * readers cannot see it. Returns the branch-local sequence number.
+  /** Append-only branch commit — the main append's manifest publish
+    * ([[commitManifest]]) on the branch lineage: main readers cannot
+    * see it. Returns the branch-local sequence number.
     */
   def appendToBranch(df: DataFrame, dir: String, name: String): Long = {
     val spark = df.sparkSession
@@ -2883,73 +2931,10 @@ object Versioned {
       case spec if spec.nonEmpty => writeDataPartitioned(df, dir, spec)
       case _ => (writeData(df, dir), Seq.empty)
     }
-    Lake.withCommit(spark, dir) {
-      val (head, k) = branchHead(spark, dir, name)
-      val built = Manifest(head.changes,
-        head.entries ++ tagged(entries, head.changes),
-        dvs = head.dvs, ptags = head.ptags ++ tags)
-      commitBranchManifest(spark, dir, name, head, k, built,
-        entries.map(_._1))
-    }
+    commitManifest(spark, dir, Branch(name))(head =>
+      Manifest(head.changes, head.entries ++ tagged(entries, head.changes),
+        dvs = head.dvs, ptags = head.ptags ++ tags))
   }
-
-  /** The branch-namespace half of [[commitManifest]]'s tail: attach
-    * stats for `freshFiles`, shard against the branch head, land
-    * `b-<k+1>-<name>.manifest` via tmp + rename. Caller holds the
-    * ledger slot.
-    */
-  private def commitBranchManifest(spark: SparkSession, dir: String,
-      name: String, head: Manifest, k: Long, built: Manifest,
-      freshFiles: Seq[String]): Long = {
-    requireNotDropped(spark, dir)
-    val fs = fsOf(spark, dir)
-    val live = built.entries.map(_._1).toSet
-    val statted = built.copy(
-      fstats = (head.fstats ++
-        statsOf(spark, dir, freshFiles)).filter(kv => live(kv._1)),
-      txns = head.txns)
-    val manifest = shardManifest(spark, dir, head, statted)
-      .copy(commitMs = Some(System.currentTimeMillis()))
-    val next = k + 1
-    val tmp = new org.apache.hadoop.fs.Path(manifestDir(dir),
-      f"b-$next%09d-$name.tmp")
-    fs.mkdirs(manifestDir(dir))
-    val out = fs.create(tmp, true)
-    try out.write(renderManifest(manifest).getBytes("UTF-8"))
-    finally out.close()
-    require(fs.rename(tmp, branchManifestPath(dir, name, next)),
-      s"branch manifest rename failed for $name@$next")
-    next
-  }
-
-  /** REPLACE-DATA commit on a BRANCH HEAD — the audit-fix verb the
-    * write-audit-publish flow exists for (q309): SQL `DELETE FROM
-    * t.branch_<name>` rewrites only the branch files containing
-    * matches, commits the next branch manifest, and main never sees a
-    * byte until fast_forward. Same snapshot-compatibility gate as the
-    * main-lineage [[commitReplace]], checked against the branch head
-    * RE-RESOLVED inside the ledger slot — a concurrent branch append
-    * is compatible (its rows were outside the snapshot), a concurrent
-    * rewrite/publish/drop of the branch fails the statement loudly.
-    * Retired branch files stay referenced by earlier branch manifests
-    * (all live vacuum roots) until the branch dissolves, then age out
-    * as orphans.
-    */
-  private[graft] def commitReplaceBranch(spark: SparkSession, dir: String,
-      name: String, snapshot: Option[Manifest], replaced: Set[String],
-      added: Seq[(String, Long)],
-      addedTags: Seq[(String, String, String)] = Seq.empty): Long =
-    Lake.withCommit(spark, dir) {
-      val (head, k) = branchHead(spark, dir, name)
-      requireSnapshotCompatible(dir, head, snapshot)
-      val built = Manifest(head.changes,
-        head.entries.filterNot(e => replaced(e._1)) ++
-          tagged(added, head.changes),
-        dvs = retireDvRows(spark, dir, head.dvs, replaced),
-        ptags = head.ptags.filterNot(t => replaced(t._1)) ++ addedTags)
-      commitBranchManifest(spark, dir, name, head, k, built,
-        added.map(_._1))
-    }
 
   private final class AlreadyPublished(val v: Long) extends RuntimeException
 
@@ -3089,8 +3074,9 @@ object Versioned {
     val b = branches(spark, dir)
     require(b.contains(name), s"no branch '$name' on $dir " +
       s"(have ${b.keys.toSeq.sorted.mkString(", ")})")
-    branchSeqs(spark, dir, name).foreach(k =>
-      fs.delete(branchManifestPath(dir, name, k), false))
+    val lineage = Branch(name)
+    lineage.points(spark, dir).foreach(k => fs.delete(
+      new org.apache.hadoop.fs.Path(manifestDir(dir), lineage.fileName(k)), false))
     writeBranches(spark, dir, b - name)
   }
 
@@ -3136,9 +3122,8 @@ object Versioned {
       // BRANCH manifests are live roots too — an unpublished audit's
       // files and shards must survive retention
       val keptManifests = kept.map(manifestOf(spark, dir, _)) ++
-        branches(spark, dir).keys.toSeq.flatMap(n =>
-          branchSeqs(spark, dir, n).map(k =>
-            manifestAtPath(fs, dir, branchManifestPath(dir, n, k))))
+        branches(spark, dir).keys.toSeq.map(Branch).flatMap(b =>
+          b.points(spark, dir).map(b.manifestAt(spark, dir, _)))
       val droppedManifests = dropped.map(manifestOf(spark, dir, _))
       // DV sidecars live in data/ and are reachable through #dv lines —
       // they follow exactly the data files' retention rule
@@ -3154,7 +3139,7 @@ object Versioned {
         droppedManifests.flatMap(_.shards.map(_._1)).toSet
       dropped.foreach { v =>
         fs.delete(new org.apache.hadoop.fs.Path(
-          manifestDir(dir), f"v$v%09d.manifest"), false)
+          manifestDir(dir), Main.fileName(v)), false)
       }
       val cutoff = System.currentTimeMillis() - orphanAgeMs
       // shard files follow the data files' rule: referenced only by

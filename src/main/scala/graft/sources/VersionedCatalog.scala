@@ -172,17 +172,15 @@ final class GraftCatalog extends TableCatalog with SupportsNamespaces
     }
   }
 
-  /** `VERSION AS OF <v>` — the pinned table reads exactly that
-    * manifest; a version that never committed (or was vacuumed) fails
-    * loudly here, at analysis time.
-    */
-  /** `VERSION AS OF x` — a number resolves directly; a name resolves
-    * as a TAG first ([[Versioned.tags]]), then as a BRANCH
-    * ([[Versioned.branches]] — q311: the branch HEAD reads through the
-    * time-travel syntax, the Iceberg branch-ref convention; live — it
-    * follows branch commits — where a tag is a pinned version).
-    * Precedence number > tag > branch is spec-pinned; a dropped
-    * branch stops resolving with a loud error naming both ref kinds.
+  /** `VERSION AS OF x` — a number resolves directly and the pinned
+    * table reads exactly that manifest; a name resolves as a TAG first
+    * ([[Versioned.tags]]), then as a BRANCH ([[Versioned.branches]] —
+    * q311: the branch HEAD reads through the time-travel syntax, the
+    * Iceberg branch-ref convention; live — it follows branch commits —
+    * where a tag is a pinned version). Precedence number > tag > branch
+    * is spec-pinned. A version that never committed (or was vacuumed)
+    * fails loudly here, at analysis time; a dropped branch stops
+    * resolving with a loud error naming both ref kinds.
     */
   override def loadTable(ident: Identifier, version: String): Table = {
     if (!tableExists(ident)) throw new NoSuchTableException(ident)
@@ -515,6 +513,20 @@ object VersionedSqlTable {
     */
   val FileCol = "_file"
 
+  /** `_file` as a metadata column of a table (main or branch) whose
+    * data schema is `schema` — shadowed if a data column claims the
+    * name, per the SupportsMetadataColumns contract.
+    */
+  private[v2] def fileColumn(schema: StructType)
+      : Array[org.apache.spark.sql.connector.catalog.MetadataColumn] =
+    if (schema.fieldNames.contains(FileCol)) Array.empty
+    else Array(new org.apache.spark.sql.connector.catalog.MetadataColumn {
+      override def name(): String = FileCol
+      override def dataType(): DataType = org.apache.spark.sql.types.StringType
+      override def isNullable: Boolean = false
+      override def comment(): String = "data file name (manifest entry)"
+    })
+
   /** Read a table's persisted `graft.*` TBLPROPERTIES —
     * [[Versioned.readControlFile]]'s swap-crash recovery contract, so
     * a crash mid-rewrite never silently degrades a MOR table to COW.
@@ -633,17 +645,8 @@ final class VersionedSqlTable(tableName: String, dir: String,
     }
   }
 
-  /** `_file` (shadowed if a data column claims the name, per the
-    * SupportsMetadataColumns contract).
-    */
   override def metadataColumns(): Array[org.apache.spark.sql.connector.catalog.MetadataColumn] =
-    if (schema().fieldNames.contains(VersionedSqlTable.FileCol)) Array.empty
-    else Array(new org.apache.spark.sql.connector.catalog.MetadataColumn {
-      override def name(): String = VersionedSqlTable.FileCol
-      override def dataType(): DataType = org.apache.spark.sql.types.StringType
-      override def isNullable: Boolean = false
-      override def comment(): String = "data file name (manifest entry)"
-    })
+    VersionedSqlTable.fileColumn(schema())
 
   /** SQL `DELETE FROM ... WHERE` — accepted only when EVERY conjunct
     * translates ([[VersionedScan.toColumn]]); Spark then calls
@@ -712,7 +715,8 @@ final class VersionedSqlTable(tableName: String, dir: String,
       TableCapability.STREAMING_WRITE)
 
   override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
-    new VersionedScanBuilder(dir, pinnedVersion, schema(), options)
+    new VersionedScanBuilder(dir, Versioned.Main, pinnedVersion, schema(),
+      options)
 
   /** The declared partition spec (`PARTITIONED BY` at CREATE → the
     * `graft.partition` property) — reported so DESCRIBE/SHOW surface
@@ -856,19 +860,17 @@ final class GraftStagedTable(cat: GraftCatalog, ident: Identifier,
   * for the audit; `DELETE FROM t.branch_audit WHERE ...` (q309) is the
   * AUDIT-FIX verb — a copy-on-write rewrite of only the branch files
   * containing matches, committed as the next branch manifest
-  * ([[Versioned.commitReplaceBranch]]), main untouched until
-  * fast_forward. UPDATE/MERGE stay unsupported by design (stated in
+  * ([[Versioned.commitReplace]] on the branch lineage), main untouched
+  * until fast_forward. UPDATE/MERGE stay unsupported by design (stated in
   * DESCRIBE via the `graft.branch.verbs` property): an audit stages
   * exactly what it intends to publish — bad rows are DELETEd and
   * corrected rows re-INSERTed, which composes the two supported verbs
   * without inheriting the full row-level matrix into the staging area.
-  * SELECT filters prune through the branch head's manifest exactly
-  * like the main scan (stats bounds + partition tags + null counts +
-  * temporal ranges — branch manifests carry fstats, and q316 staging
-  * tags branch files, so an audit WHERE reads O(matching files) of a
-  * staged terabyte); the row-level DELETE's own scan prunes through
-  * the same manifest plus the runtime `_file` group filter, exactly
-  * like main-table DELETEs.
+  * SELECT is the main table's scan on the branch lineage (branch
+  * manifests carry fstats, and q316 staging tags branch files, so an
+  * audit WHERE reads O(matching files) of a staged terabyte); the
+  * row-level DELETE's own scan prunes through the same manifest plus
+  * the runtime `_file` group filter, exactly like main-table DELETEs.
   */
 final class VersionedBranchTable(tableName: String, dir: String,
     branch: String) extends Table with SupportsRead with SupportsWrite
@@ -895,17 +897,8 @@ final class VersionedBranchTable(tableName: String, dir: String,
         "unsupported — re-stage corrected rows instead")).asJava
   }
 
-  /** `_file` — the row-level DELETE groups by it (same contract as
-    * [[VersionedSqlTable.metadataColumns]]).
-    */
   override def metadataColumns(): Array[org.apache.spark.sql.connector.catalog.MetadataColumn] =
-    if (schema().fieldNames.contains(VersionedSqlTable.FileCol)) Array.empty
-    else Array(new org.apache.spark.sql.connector.catalog.MetadataColumn {
-      override def name(): String = VersionedSqlTable.FileCol
-      override def dataType(): DataType = org.apache.spark.sql.types.StringType
-      override def isNullable: Boolean = false
-      override def comment(): String = "data file name (branch manifest entry)"
-    })
+    VersionedSqlTable.fileColumn(schema())
 
   override def newRowLevelOperationBuilder(
       info: org.apache.spark.sql.connector.write.RowLevelOperationInfo)
@@ -917,80 +910,16 @@ final class VersionedBranchTable(tableName: String, dir: String,
         "(DELETE the bad rows and re-INSERT corrected ones; see the " +
         "graft.branch.verbs table property)")
     new GraftRowLevelOperationBuilder(tableName, dir, info,
-      branch = Some(branch))
+      lineage = Versioned.Branch(branch))
   }
 
+  /** The branch head's manifest prunes, answers COUNT/MIN/MAX and
+    * estimates statistics exactly as a main version's does;
+    * `readStream.table` streams the branch's commit feed (q311).
+    */
   override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
-    new ScanBuilder with SupportsPushDownRequiredColumns
-        with SupportsPushDownFilters {
-      private var required: StructType = schema()
-      private var accepted: Array[Filter] = Array.empty
-      override def pruneColumns(requiredSchema: StructType): Unit =
-        required = requiredSchema
-      // same contract as the main table's scan: translatable conjuncts
-      // prune BRANCH files through the branch head's manifest (stats
-      // bounds + partition tags + null counts + temporal ranges — q316
-      // staging tags branch files, so an audit WHERE reads O(matching
-      // files) of a staged terabyte) and are re-applied inside; every
-      // filter stays residual for Spark's own re-check
-      override def pushFilters(filters: Array[Filter]): Array[Filter] = {
-        accepted = filters.filter(f => VersionedScan.toColumn(f).isDefined)
-        filters
-      }
-      override def pushedFilters(): Array[Filter] = accepted
-      override def build(): Scan = new V1Scan {
-        override def readSchema(): StructType = required
-        override def description(): String =
-          s"graft-versioned branch $dir@$branch " +
-            s"PushedFilters: [${accepted.mkString(", ")}]"
-
-        /** `spark.readStream.table("t.branch_<name>")` (q311) — the
-          * branch's commit feed by NAME: offsets are branch seqs (0 =
-          * the base), each batch the staged rows of one branch commit
-          * — the audit feed, in `bare` mode under the table's own
-          * schema. A q309 branch DELETE removes files, so a stream
-          * crossing that pair fails loudly (the main-table
-          * appends-only contract); a published/dropped branch fails at
-          * the next offset resolution.
-          */
-        override def toMicroBatchStream(checkpointLocation: String)
-            : org.apache.spark.sql.connector.read.streaming.MicroBatchStream = {
-          required.fields.foreach { f =>
-            require(VersionedStreamTable.Supported.exists(
-              _.isInstance(f.dataType)),
-              s"cannot stream column '${f.name}' of type " +
-                s"${f.dataType.catalogString} — the flat interchange set " +
-                "is integral/fp/boolean/string/binary/date/timestamp")
-          }
-          new VersionedChangeStream(dir,
-            Some(Option(options.get("startingVersion")).map(_.toLong)
-              .getOrElse(0L)),
-            required,
-            Versioned.branchHead(spark, dir, branch)._1.changes,
-            Option(options.get("maxVersionsPerTrigger")).map { s =>
-              val m = s.toInt
-              require(m > 0, s"maxVersionsPerTrigger must be positive, got $m")
-              m
-            },
-            bare = true, branch = Some(branch))
-        }
-
-        override def toV1TableScan[T <: BaseRelation with TableScan](
-            context: SQLContext): T =
-          new BaseRelation with TableScan {
-            override def sqlContext: SQLContext = context
-            override def schema: StructType = required
-            override def buildScan(): RDD[Row] = {
-              val spark = context.sparkSession
-              VersionedScan.prunedScan(spark, dir,
-                Versioned.branchHead(spark, dir, branch)._1, accepted,
-                VersionedScan.temporalRangesOf(
-                  VersionedScan.boundsOf(accepted), schemaNow),
-                required).rdd
-            }
-          }.asInstanceOf[T]
-      }
-    }
+    new VersionedScanBuilder(dir, Versioned.Branch(branch), None, schema(),
+      options)
 
   override def newWriteBuilder(info: LogicalWriteInfo): WriteBuilder =
     new WriteBuilder {
@@ -1164,10 +1093,12 @@ final class VersionedMetaTable(tableName: String, dir: String,
   * classic "how big is this table" question costs one metadata read at
   * any scale. Spark only offers the pushdown when every filter was
   * fully consumed; since this scan keeps all filters residual, any
-  * WHERE clause automatically falls back to the real scan.
+  * WHERE clause automatically falls back to the real scan. One builder
+  * serves main and branch tables: it reads `lineage`'s head, or the
+  * `pinned` point (`VERSION AS OF`).
   */
-final class VersionedScanBuilder(dir: String, version: Option[Long],
-    full: StructType,
+final class VersionedScanBuilder(dir: String, lineage: Versioned.Lineage,
+    pinned: Option[Long], full: StructType,
     options: CaseInsensitiveStringMap = CaseInsensitiveStringMap.empty())
     extends ScanBuilder
     with SupportsPushDownRequiredColumns with SupportsPushDownFilters
@@ -1205,12 +1136,8 @@ final class VersionedScanBuilder(dir: String, version: Option[Long],
   // parse, shard reads included at manifest-of-manifests scale), so
   // both the manifest and the per-Aggregation verdict memoize —
   // planning pays ONE metadata read here, not one per callback
-  private lazy val manifestNow: Option[Versioned.Manifest] = {
-    val spark = SparkSession.active
-    Versioned.latestVersion(spark, dir)
-      .map(latest => Versioned.manifestOf(spark, dir,
-        version.getOrElse(latest)))
-  }
+  private lazy val manifestNow: Option[Versioned.Manifest] =
+    VersionedScan.resolve(SparkSession.active, dir, lineage, pinned).map(_._1)
   private var lastAgg: AnyRef = _
   private var lastVerdict: Option[Seq[VersionedScan.PushedAgg]] = None
 
@@ -1249,7 +1176,7 @@ final class VersionedScanBuilder(dir: String, version: Option[Long],
   }
 
   override def build(): Scan =
-    new VersionedScan(dir, version,
+    new VersionedScan(dir, lineage, pinned,
       // with aggregates pushed, the scan's output IS the aggregate
       // schema (Spark zips the relation output positionally)
       if (pushedAggs.nonEmpty)
@@ -1280,8 +1207,8 @@ final class VersionedScanBuilder(dir: String, version: Option[Long],
   * filters applied, so the inner plan is an ordinary pushdown-bearing
   * parquet scan.
   */
-final class VersionedScan(dir: String, version: Option[Long],
-    required: StructType, accepted: Array[Filter],
+final class VersionedScan(dir: String, lineage: Versioned.Lineage,
+    pinned: Option[Long], required: StructType, accepted: Array[Filter],
     pushedAggs: Seq[VersionedScan.PushedAgg] = Seq.empty,
     options: CaseInsensitiveStringMap = CaseInsensitiveStringMap.empty(),
     tagRanges: Seq[(String, Long, Long)] = Seq.empty)
@@ -1312,10 +1239,9 @@ final class VersionedScan(dir: String, version: Option[Long],
   // scan instance is per-query, so one manifest read serves them all
   private lazy val estimated: org.apache.spark.sql.connector.read.Statistics = {
     val spark = SparkSession.active
-    val (rows, width) = Versioned.latestVersion(spark, dir) match {
+    val (rows, width) = VersionedScan.resolve(spark, dir, lineage, pinned) match {
       case None => (0L, 1L)
-      case Some(latest) =>
-        val m = Versioned.manifestOf(spark, dir, version.getOrElse(latest))
+      case Some((m, _)) =>
         val kept = Versioned.prunedEntries(m)(
           VersionedScan.boundsOf(accepted), VersionedScan.eqValuesOf(accepted),
           VersionedScan.nullPredsOf(accepted), tagRanges)
@@ -1365,13 +1291,18 @@ final class VersionedScan(dir: String, version: Option[Long],
     * silently skipped it: start AFTER the rewrite
     * (`startingVersion` ≥ its version, which the error names) or
     * consume the path-based CDC feed, which represents removals.
+    *
+    * On a BRANCH table (q311) the offsets are branch seqs (0 = the
+    * base), each batch the staged rows of one branch commit — the
+    * audit feed; a q309 branch DELETE removes files, so a stream
+    * crossing that pair fails loudly, and a published/dropped branch
+    * fails at the next offset resolution.
     */
   override def toMicroBatchStream(checkpointLocation: String)
       : org.apache.spark.sql.connector.read.streaming.MicroBatchStream = {
-    require(version.isEmpty,
+    require(pinned.isEmpty,
       s"cannot stream a time-travel read of $dir — streams follow the head")
-    val spark = SparkSession.active
-    val latest = Versioned.latestVersion(spark, dir).getOrElse(
+    val (head, _) = lineage.head(SparkSession.active, dir).getOrElse(
       throw new IllegalStateException(
         s"$dir has no committed version to stream from"))
     required.fields.foreach { f =>
@@ -1383,18 +1314,18 @@ final class VersionedScan(dir: String, version: Option[Long],
     new VersionedChangeStream(dir,
       Some(Option(options.get("startingVersion")).map(_.toLong).getOrElse(0L)),
       required,
-      Versioned.manifestOf(spark, dir, latest).changes,
+      head.changes,
       Option(options.get("maxVersionsPerTrigger")).map { s =>
         val m = s.toInt
         require(m > 0, s"maxVersionsPerTrigger must be positive, got $m")
         m
       },
-      bare = true)
+      bare = true, lineage = lineage)
   }
 
   override def description(): String =
-    s"graft-versioned $dir" +
-      version.fold("")(v => s" VERSION AS OF $v") +
+    s"graft-versioned $dir${lineage.label}" +
+      pinned.fold("")(v => s" VERSION AS OF $v") +
       (if (pushedAggs.isEmpty) "" else pushedAggs.map {
         case VersionedScan.CountAll => "COUNT(*)"
         case VersionedScan.CountCol(c) => s"COUNT($c)"
@@ -1411,7 +1342,7 @@ final class VersionedScan(dir: String, version: Option[Long],
       override def schema: StructType = required
       override def buildScan(): RDD[Row] = {
         val spark = context.sparkSession
-        Versioned.latestVersion(spark, dir) match {
+        VersionedScan.resolve(spark, dir, lineage, pinned) match {
           case None if countStar =>
             // a created-but-never-committed table: COUNT=0 and
             // MIN/MAX=NULL are the exact SQL answers
@@ -1421,7 +1352,7 @@ final class VersionedScan(dir: String, version: Option[Long],
             }: _*)), 1)
           case None => // created, never committed: a legitimate empty table
             spark.sparkContext.emptyRDD[Row]
-          case Some(latest) if countStar =>
+          case Some((m, v)) if countStar =>
             // Aggregates from the MANIFEST — zero data files opened.
             // COUNT(*): [[Versioned.exactRowCounts]], the same count
             // `history` reports — entry rows minus the sidecar deletes
@@ -1437,13 +1368,9 @@ final class VersionedScan(dir: String, version: Option[Long],
             // by a real scan instead: the plan stays "pushed", the
             // answer stays EXACT, only the zero-IO property degrades
             // for that race window.
-            val v = version.getOrElse(latest)
-            val m = Versioned.manifestOf(spark, dir, v)
-            lazy val liveDf = {
-              // one shared fallback frame for any agg the re-check
-              // refuses (race window only)
-              Versioned.readVersion(spark, dir, v)
-            }
+            // one shared fallback frame for any agg the re-check
+            // refuses (race window only)
+            lazy val liveDf = Versioned.readManifest(spark, dir, m)
             val values: Seq[Any] = pushedAggs.map {
               case VersionedScan.CountAll =>
                 Versioned.exactRowCounts(spark, dir, Seq(v -> m))(v)
@@ -1466,16 +1393,24 @@ final class VersionedScan(dir: String, version: Option[Long],
                     .head.get(0))
             }
             spark.sparkContext.parallelize(Seq(Row(values: _*)), 1)
-          case Some(latest) =>
-            VersionedScan.prunedScan(spark, dir,
-              Versioned.manifestOf(spark, dir, version.getOrElse(latest)),
-              accepted, tagRanges, required).rdd
+          case Some((m, _)) =>
+            VersionedScan.prunedScan(spark, dir, m, accepted, tagRanges,
+              required).rdd
         }
       }
     }.asInstanceOf[T]
 }
 
 object VersionedScan {
+
+  /** The scanned (manifest, point): the pinned point, else the
+    * lineage's head — None before main's first commit.
+    */
+  private[v2] def resolve(spark: SparkSession, dir: String,
+      lineage: Versioned.Lineage, pinned: Option[Long])
+      : Option[(Versioned.Manifest, Long)] =
+    pinned.fold(lineage.head(spark, dir))(p =>
+      Some((lineage.manifestAt(spark, dir, p), p)))
 
   /** The SQL read of one resolved manifest — a main version or a
     * branch head (q316: branch manifests carry stats and `#pfile`

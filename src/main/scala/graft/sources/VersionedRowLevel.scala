@@ -79,37 +79,34 @@ import graft.sources.Versioned
 final class GraftRowLevelOperationBuilder(tableName: String, dir: String,
     info: RowLevelOperationInfo,
     morKey: Option[String] = None,
-    branch: Option[String] = None) extends RowLevelOperationBuilder {
+    lineage: Versioned.Lineage = Versioned.Main) extends RowLevelOperationBuilder {
   override def build(): RowLevelOperation = morKey match {
     case Some(k) => new GraftDeltaOperation(tableName, dir, info.command, k)
     case None => new GraftRowLevelOperation(tableName, dir, info.command,
-      branch)
+      lineage)
   }
 }
 
 sealed class GraftRowLevelOperation(tableName: String, dir: String,
     cmd: RowLevelOperation.Command,
-    private[v2] val branch: Option[String] = None) extends RowLevelOperation {
+    private[v2] val lineage: Versioned.Lineage = Versioned.Main)
+    extends RowLevelOperation {
 
   private def spark: SparkSession = SparkSession.active
 
-  /** The pinned snapshot: every piece of table state the scan consumed.
-    * Commit-time conflict detection compares against it. With `branch`
-    * set, the snapshot (and the commit, [[Versioned.commitReplaceBranch]])
-    * is the BRANCH HEAD — the q309 audit-fix DELETE: main's lineage is
-    * never consulted and never touched.
+  /** The pinned snapshot: every piece of table state the scan consumed —
+    * the lineage's head (on a branch, the q309 audit-fix DELETE: main's
+    * lineage is never consulted and never touched). Commit-time
+    * conflict detection compares against it. None before main's first
+    * commit.
     */
-  private[v2] val snapshot: Option[Versioned.Manifest] = branch match {
-    case Some(b) => Some(Versioned.branchHead(spark, dir, b)._1)
-    case None =>
-      Versioned.latestVersion(spark, dir).map(Versioned.manifestOf(spark, dir, _))
-  }
+  private[v2] val snapshot: Option[Versioned.Manifest] =
+    lineage.head(spark, dir).map(_._1)
 
-  private[v2] val currentSchema: StructType = (branch, snapshot) match {
-    case (Some(b), _) => Versioned.readBranch(spark, dir, b).schema
-    case (None, Some(_)) => Versioned.read(spark, dir).schema
-    case (None, None) => new VersionedSqlTable(tableName, dir, None).schema()
-  }
+  // before main's first commit: the SQL table's declared schema
+  private[v2] val currentSchema: StructType = snapshot.fold(
+    new VersionedSqlTable(tableName, dir, None).schema())(
+    Versioned.readManifest(spark, dir, _).schema)
 
   /** Set by [[RowLevelScan.planInputPartitions]]: the data files the
     * scan actually read after runtime group filtering — exactly the
@@ -330,14 +327,8 @@ final class ReplaceDataBatchWrite(op: GraftRowLevelOperation, dir: String,
     // table; identity on plain tables
     val (clustered, tags) =
       Versioned.reclusterForLayout(spark, dir, added, tableSchema)
-    op.branch match {
-      case Some(b) =>
-        Versioned.commitReplaceBranch(spark, dir, b, op.snapshot, replaced,
-          clustered, tags)
-      case None =>
-        Versioned.commitReplace(spark, dir, op.snapshot, replaced,
-          clustered, tags)
-    }
+    Versioned.commitReplace(spark, dir, op.snapshot, replaced, clustered,
+      tags, op.lineage)
     ()
   }
 

@@ -65,10 +65,13 @@ final class VersionedStreamSource extends TableProvider with DataSourceRegister 
     Option(options.get("path")).getOrElse(throw new IllegalArgumentException(
       "graft-versioned requires option(\"path\", <table dir>)"))
 
+  /** `option("branch", name)` streams that branch's lineage (q311). */
+  private def lineageOf(branch: String): Versioned.Lineage =
+    Option(branch).fold[Versioned.Lineage](Versioned.Main)(Versioned.Branch)
+
   override def inferSchema(options: CaseInsensitiveStringMap): StructType =
     VersionedStreamTable.streamSchema(
-      SparkSession.active, dirOf(options),
-      Option(options.get("branch")))
+      SparkSession.active, dirOf(options), lineageOf(options.get("branch")))
 
   // the WRITE path hands us the query's schema (a sink to a fresh dir
   // has no table to infer from); the READ path still infers
@@ -79,14 +82,17 @@ final class VersionedStreamSource extends TableProvider with DataSourceRegister 
     new VersionedStreamTable(
       Option(properties.get("path")).getOrElse(throw new IllegalArgumentException(
         "graft-versioned requires option(\"path\", <table dir>)")),
-      Option(properties.get("startingVersion")).map(_.toLong),
+      // default start: the current version on main; 0 (the base — the
+      // audit feed) on a branch
+      Option(properties.get("startingVersion")).map(_.toLong)
+        .orElse(Option(properties.get("branch")).map(_ => 0L)),
       Option(properties.get("maxVersionsPerTrigger")).map { s =>
         val m = s.toInt
         require(m > 0, s"maxVersionsPerTrigger must be positive, got $m")
         m
       },
       Option(schema),
-      Option(properties.get("branch")))
+      lineageOf(properties.get("branch")))
 }
 
 object VersionedStreamTable {
@@ -102,14 +108,10 @@ object VersionedStreamTable {
     classOf[DateType], classOf[TimestampType], classOf[TimestampNTZType])
 
   def streamSchema(spark: SparkSession, dir: String,
-      branch: Option[String] = None): StructType = {
-    val logical = branch match {
-      case Some(b) => Versioned.readBranch(spark, dir, b).schema
-      case None =>
-        val latest = Versioned.latestVersion(spark, dir).getOrElse(
-          throw new IllegalStateException(s"$dir is not a versioned table"))
-        Versioned.readVersion(spark, dir, latest).schema
-    }
+      lineage: Versioned.Lineage = Versioned.Main): StructType = {
+    val (head, _) = lineage.head(spark, dir).getOrElse(
+      throw new IllegalStateException(s"$dir is not a versioned table"))
+    val logical = Versioned.readManifest(spark, dir, head).schema
     logical.fields.foreach { f =>
       require(Supported.exists(_.isInstance(f.dataType)),
         s"graft-versioned cannot stream column '${f.name}' of type " +
@@ -123,7 +125,7 @@ object VersionedStreamTable {
 final class VersionedStreamTable(dir: String, startingVersion: Option[Long],
     maxVersionsPerTrigger: Option[Int] = None,
     externalSchema: Option[StructType] = None,
-    branch: Option[String] = None)
+    lineage: Versioned.Lineage = Versioned.Main)
     extends Table with SupportsRead
     with org.apache.spark.sql.connector.catalog.SupportsWrite {
   // the stream's SCHEMA BASELINE, pinned EAGERLY when the source is
@@ -133,22 +135,15 @@ final class VersionedStreamTable(dir: String, startingVersion: Option[Long],
   // table on a not-yet-created dir (the sink's CREATE case), which the
   // read path rejects below. A branch baseline is the branch HEAD's
   // (== its base's — branches never evolve schema).
-  private val changes0AtDefinition: Option[Seq[(Int, String, String, String)]] = {
-    val spark = SparkSession.active
-    branch match {
-      case Some(b) => Some(Versioned.branchHead(spark, dir, b)._1.changes)
-      case None => Versioned.latestVersion(spark, dir)
-        .map(v => Versioned.manifestOf(spark, dir, v).changes)
-    }
-  }
+  private val changes0AtDefinition: Option[Seq[(Int, String, String, String)]] =
+    lineage.head(SparkSession.active, dir).map(_._1.changes)
   private def changes0 = changes0AtDefinition.getOrElse(
     throw new IllegalStateException(s"$dir is not a versioned table"))
   override def name(): String =
-    s"graft-versioned(`$dir`)" + branch.fold("")(b => s"@$b")
+    s"graft-versioned(`$dir`)" + lineage.label
   override def schema(): StructType =
-    if (branch.isDefined ||
-      Versioned.latestVersion(SparkSession.active, dir).isDefined)
-      VersionedStreamTable.streamSchema(SparkSession.active, dir, branch)
+    if (lineage.headPoint(SparkSession.active, dir).isDefined)
+      VersionedStreamTable.streamSchema(SparkSession.active, dir, lineage)
     else externalSchema.getOrElse(throw new IllegalStateException(
       s"$dir is not a versioned table"))
   override def capabilities(): util.Set[TableCapability] =
@@ -165,7 +160,7 @@ final class VersionedStreamTable(dir: String, startingVersion: Option[Long],
   override def newWriteBuilder(
       info: org.apache.spark.sql.connector.write.LogicalWriteInfo)
       : org.apache.spark.sql.connector.write.WriteBuilder = {
-    require(branch.isEmpty,
+    require(lineage == Versioned.Main,
       s"graft-versioned sink: streaming INTO a branch is not supported — " +
         "branches stage batch audits (INSERT INTO t.branch_<name>); " +
         "stream into the table and branch from the result instead")
@@ -195,7 +190,7 @@ final class VersionedStreamTable(dir: String, startingVersion: Option[Long],
           s"graft-versioned $dir change stream"
         override def toMicroBatchStream(checkpointLocation: String): MicroBatchStream =
           new VersionedChangeStream(dir, startingVersion, out, changes0,
-            maxVersionsPerTrigger, branch = branch)
+            maxVersionsPerTrigger, lineage = lineage)
 
         /** BATCH change read (Delta's batch readChangeFeed):
           * `spark.read.format("graft-versioned").option("path", dir)
@@ -205,7 +200,7 @@ final class VersionedStreamTable(dir: String, startingVersion: Option[Long],
           */
         override def toBatch: org.apache.spark.sql.connector.read.Batch = {
           val spark = SparkSession.active
-          require(branch.isEmpty,
+          require(lineage == Versioned.Main,
             "batch change reads address MAIN versions — for a branch's " +
               "rows read t.branch_<name> (or Versioned.readBranch); for " +
               "its commit feed use readStream with option(\"branch\", ...)")
@@ -228,9 +223,7 @@ final class VersionedStreamTable(dir: String, startingVersion: Option[Long],
           new org.apache.spark.sql.connector.read.Batch {
             override def planInputPartitions(): Array[InputPartition] =
               VersionedChanges.partitions(spark, dir, from, to, changes0,
-                dataFields, Versioned.versions(spark, dir),
-                p => if (p == 0L) Versioned.Manifest(Seq.empty, Seq.empty)
-                  else Versioned.manifestOf(spark, dir, p))
+                dataFields, Versioned.Main)
             override def createReaderFactory(): PartitionReaderFactory =
               new VersionedChangeReaderFactory(hconf)
           }
@@ -262,7 +255,7 @@ final class VersionedChangeStream(dir: String, startingVersion: Option[Long],
     changes0: Seq[(Int, String, String, String)],
     maxVersionsPerTrigger: Option[Int] = None,
     bare: Boolean = false,
-    branch: Option[String] = None) extends MicroBatchStream
+    lineage: Versioned.Lineage = Versioned.Main) extends MicroBatchStream
     with org.apache.spark.sql.connector.read.streaming.SupportsTriggerAvailableNow {
 
   private def spark = SparkSession.active
@@ -273,51 +266,30 @@ final class VersionedChangeStream(dir: String, startingVersion: Option[Long],
     if (bare) out.fields.toSeq
     else out.fields.toSeq.dropRight(VersionedStreamTable.MetaCols.size)
 
-  /** The streamed LINEAGE (q311): main's committed versions, or — with
-    * `branch` set — the branch's commit seqs, where offset 0 is the
-    * BASE the branch was cut from. A branch stream is the AUDIT FEED:
-    * the default start 0 emits the branch's own writes (pair (0,1) =
-    * first staged batch), never the base snapshot — main streams the
-    * base. A dropped/published branch fails the stream loudly at the
-    * next offset resolution (the ref is gone; redefine the stream).
+  /** The streamed LINEAGE (q311): main's committed versions, or a
+    * branch's commit seqs, where offset 0 is the BASE the branch was
+    * cut from. A branch stream is the AUDIT FEED: a start at 0 emits
+    * the branch's own writes (pair (0,1) = first staged batch), never
+    * the base snapshot — main streams the base. A dropped/published
+    * branch fails the stream loudly at the next offset resolution (the
+    * ref is gone; redefine the stream).
     */
-  private def points: Seq[Long] = branch match {
-    case None => Versioned.versions(spark, dir)
-    case Some(b) =>
-      require(Versioned.branches(spark, dir).contains(b),
-        s"no branch '$b' on $dir — dropped or published; the branch " +
-          "stream cannot continue (redefine the source)")
-      Versioned.branchSeqs(spark, dir, b)
-  }
-
-  /** Resolve one lineage point to its manifest: 0 = the empty
-    * pre-first-commit base (main) / the branch base (branch mode).
-    */
-  private def manifestAt(p: Long): Versioned.Manifest = branch match {
-    case None =>
-      if (p == 0L) Versioned.Manifest(Seq.empty, Seq.empty)
-      else Versioned.manifestOf(spark, dir, p)
-    case Some(b) => Versioned.branchManifestAt(spark, dir, b, p)
-  }
+  private def points: Seq[Long] = lineage.points(spark, dir)
 
   override def initialOffset(): Offset = {
     val vs = points
-    val start = startingVersion.getOrElse(
-      if (branch.isDefined) 0L else vs.last)
+    val start = startingVersion.getOrElse(vs.last)
     // 0 = "from before the first commit" (the Delta startingVersion=0
     // shape): the first micro-batch carries the whole oldest version.
-    // In branch mode 0 is the branch base — the audit feed's zero
+    // On a branch 0 is the branch base — the audit feed's zero
     require(start == 0L || vs.contains(start),
       s"startingVersion $start does not exist in $dir (have ${vs.mkString(",")})")
     VersionOffset(start)
   }
   override def deserializeOffset(json: String): Offset =
     VersionOffset(json.trim.toLong)
-  private def trueLatest: Long = branch match {
-    case None => Versioned.latestVersion(spark, dir).getOrElse(
-      throw new IllegalStateException(s"$dir is not a versioned table"))
-    case Some(_) => points.lastOption.getOrElse(0L)
-  }
+  private def trueLatest: Long = lineage.headPoint(spark, dir).getOrElse(
+    throw new IllegalStateException(s"$dir is not a versioned table"))
 
   override def latestOffset(): Offset = VersionOffset(trueLatest)
 
@@ -361,7 +333,7 @@ final class VersionedChangeStream(dir: String, startingVersion: Option[Long],
   override def planInputPartitions(start: Offset, end: Offset): Array[InputPartition] = {
     val ps = VersionedChanges.partitions(spark, dir,
       start.asInstanceOf[VersionOffset].v, end.asInstanceOf[VersionOffset].v,
-      changes0, dataFields, points, manifestAt)
+      changes0, dataFields, lineage)
     if (!bare) ps
     else {
       ps.collectFirst {
@@ -390,7 +362,7 @@ final class VersionedChangeStream(dir: String, startingVersion: Option[Long],
   * cost ∝ changed data, never table size.
   */
 private[v2] object VersionedChanges {
-  /** `points`/`manifestAt` select the lineage: main versions (0 = the
+  /** `lineage` selects the walked points: main versions (0 = the
     * empty pre-first-commit base) or — the q311 branch stream — branch
     * seqs (0 = the branch's base manifest). Each file decodes under its
     * era recipe ([[Versioned.eraRecipes]]) for the stream's data
@@ -418,9 +390,9 @@ private[v2] object VersionedChanges {
   def partitions(spark: SparkSession, dir: String, from: Long, to: Long,
       changes0: Seq[(Int, String, String, String)],
       dataFields: Seq[StructField],
-      points: Seq[Long],
-      manifestAt: Long => Versioned.Manifest): Array[InputPartition] = {
-    val vs = points.filter(v => v > from && v <= to)
+      lineage: Versioned.Lineage): Array[InputPartition] = {
+    val vs = lineage.points(spark, dir).filter(v => v > from && v <= to)
+    def manifestAt(p: Long) = lineage.manifestAt(spark, dir, p)
     val recipeFor = Versioned.eraRecipes(changes0,
       dataFields.map(f => (f.name, f.dataType)))
     // the key's LOGICAL type comes from the stream schema

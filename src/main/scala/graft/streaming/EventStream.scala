@@ -554,15 +554,27 @@ object EventStream {
   def followVersionedChanges(spark: SparkSession, dir: String,
       cursorPath: String, keyCol: String)(
       process: (DataFrame, Long, Long) => Unit): Int = {
-    val p = new org.apache.hadoop.fs.Path(cursorPath)
+    val (from, pending, writeCursor) = followCursor(spark, dir,
+      new org.apache.hadoop.fs.Path(cursorPath))
+    var prev = from
+    pending.foreach { v =>
+      process(graft.sources.Versioned.changesBetween(spark, dir, keyCol, prev, v),
+        prev, v)
+      writeCursor(v) // only after process returned — at-least-once
+      prev = v
+    }
+    pending.size
+  }
+
+  /** The versioned-change followers' shared cursor at `p`: returns
+    * (the cursor's version, the versions of `dir` after it, the cursor
+    * advance). A fresh consumer starts AT the first version (initial
+    * state is not a change — the Delta convention: stream from the
+    * cursor on). The advance writes `<p>.tmp` and renames it over `p`.
+    */
+  private def followCursor(spark: SparkSession, dir: String,
+      p: org.apache.hadoop.fs.Path): (Long, Seq[Long], Long => Unit) = {
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    def readCursor(): Option[Long] =
-      if (!fs.exists(p)) None
-      else {
-        val in = fs.open(p)
-        try Some(scala.io.Source.fromInputStream(in, "UTF-8").mkString.trim.toLong)
-        finally in.close()
-      }
     def writeCursor(v: Long): Unit = {
       val tmp = new org.apache.hadoop.fs.Path(p.getParent, p.getName + ".tmp")
       val out = fs.create(tmp, true)
@@ -572,23 +584,16 @@ object EventStream {
     }
     val vs = graft.sources.Versioned.versions(spark, dir)
     require(vs.nonEmpty, s"$dir is not a versioned table")
-    // a fresh consumer starts AT the first version (initial state is
-    // not a change — the Delta convention: stream from the cursor on)
-    val from = readCursor().getOrElse {
-      writeCursor(vs.head)
-      vs.head
-    }
+    val from =
+      if (!fs.exists(p)) { writeCursor(vs.head); vs.head }
+      else {
+        val in = fs.open(p)
+        try scala.io.Source.fromInputStream(in, "UTF-8").mkString.trim.toLong
+        finally in.close()
+      }
     require(vs.contains(from),
       s"cursor version $from was vacuumed from $dir — reseed the consumer")
-    val pending = vs.filter(_ > from)
-    var prev = from
-    pending.foreach { v =>
-      process(graft.sources.Versioned.changesBetween(spark, dir, keyCol, prev, v),
-        prev, v)
-      writeCursor(v) // only after process returned — at-least-once
-      prev = v
-    }
-    pending.size
+    (from, vs.filter(_ > from), writeCursor)
   }
 
   /** EXACTLY-ONCE CDC consumption (the transactional upgrade of
@@ -620,33 +625,14 @@ object EventStream {
       transform: (DataFrame, Long, Long) => DataFrame): (Int, Int) = {
     val rootP = new org.apache.hadoop.fs.Path(consumerRoot)
     val fs = rootP.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val cursorP = new org.apache.hadoop.fs.Path(rootP, "cursor")
     val outP = new org.apache.hadoop.fs.Path(rootP, "out")
     fs.mkdirs(outP)
-    def readCursor(): Option[Long] =
-      if (!fs.exists(cursorP)) None
-      else {
-        val in = fs.open(cursorP)
-        try Some(scala.io.Source.fromInputStream(in, "UTF-8")
-          .mkString.trim.toLong)
-        finally in.close()
-      }
-    def writeCursor(v: Long): Unit = {
-      val tmp = new org.apache.hadoop.fs.Path(rootP, "cursor.tmp")
-      val out = fs.create(tmp, true)
-      try out.write(v.toString.getBytes("UTF-8")) finally out.close()
-      fs.delete(cursorP, false)
-      require(fs.rename(tmp, cursorP), s"cursor advance failed for $cursorP")
-    }
-    val vs = graft.sources.Versioned.versions(spark, dir)
-    require(vs.nonEmpty, s"$dir is not a versioned table")
-    val from = readCursor().getOrElse { writeCursor(vs.head); vs.head }
-    require(vs.contains(from),
-      s"cursor version $from was vacuumed from $dir — reseed the consumer")
+    val (from, pending, writeCursor) = followCursor(spark, dir,
+      new org.apache.hadoop.fs.Path(rootP, "cursor"))
     var prev = from
     var ran = 0
     var skipped = 0
-    vs.filter(_ > from).foreach { v =>
+    pending.foreach { v =>
       val published = new org.apache.hadoop.fs.Path(outP, s"v$v")
       if (fs.exists(published)) skipped += 1 // crash landed after publish
       else {

@@ -6,7 +6,8 @@ import graft.engine.CatalogGate
 
 /** The scenario-gate fixture ([[graft.engine.CatalogGate]]) on a tiny
   * two-version catalog table: the phase read's schema and time travel,
-  * the part source, and a file-count check that reports what it saw.
+  * the part source, and the file-count and plan-shape checks that
+  * report what they saw.
   */
 class CatalogGateSpec extends AnyFunSuite {
   private lazy val spark = SparkTestSession.spark
@@ -59,5 +60,19 @@ class CatalogGateSpec extends AnyFunSuite {
     }
     assert(bound.getMessage.endsWith("at most one file: planned 2 files"),
       bound.getMessage)
+  }
+
+  test("a plan-shape check names each missing and forbidden marker and prints the plan") {
+    val df = gate.read("all", "graft_cat.tv")
+    CatalogGate.requirePlan(df, Seq("HashAggregate"), Seq("BroadcastHashJoin"),
+      "a SUM aggregates over data")
+    val e = intercept[IllegalArgumentException] {
+      CatalogGate.requirePlan(df, Seq("BroadcastHashJoin", "HashAggregate"),
+        Seq("HashAggregate"), "shape under test")
+    }
+    assert(e.getMessage.contains("shape under test (missing 'BroadcastHashJoin', " +
+      "forbidden 'HashAggregate'):\n"), e.getMessage)
+    assert(e.getMessage.contains(df.queryExecution.executedPlan.toString),
+      e.getMessage)
   }
 }

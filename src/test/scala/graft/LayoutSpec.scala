@@ -122,6 +122,15 @@ class LayoutSpec extends AnyFunSuite {
       s"no dynamic partition pruning on the fact scan:\n$plan")
   }
 
+  test("q210 and q214 answer zero rows on zero-row orders and lineitem") {
+    val d = java.nio.file.Files.createTempDirectory("layout_spec_empty").toString
+    Seq("orders", "lineitem").foreach(t =>
+      Tables.table(spark, sfDir, t).limit(0).write.parquet(s"$d/$t.parquet"))
+    Seq(Layout.q210OrcRoundtrip, Layout.q214Dpp).foreach { q =>
+      assert(q.run(spark, d).collect().isEmpty, q.name)
+    }
+  }
+
   test("a degenerate single-cell box reads exactly one bucket") {
     val meta = Layout.ZMeta("x", "y", 6, 6, 1000, 1000)
     val b = Layout.bucketsFor(meta, 64, 127, 128, 191) // one cell each axis

@@ -456,6 +456,13 @@ class VersionedCatalogSpec extends AnyFunSuite {
     // main never saw any of it
     assert(Versioned.versions(spark, dir) == Seq(1L))
     assert(spark.sql(s"SELECT count(*) FROM $cat.t").as[Long].head() == 5L)
+    // a branch read is the main scan on the branch lineage: a bare
+    // COUNT(*) answers from the branch head's manifest, exactly
+    val branchCount = spark.sql(s"SELECT COUNT(*) FROM $cat.t.branch_audit")
+    val branchPlan = branchCount.queryExecution.executedPlan.toString
+    assert(branchPlan.contains("PushedAggregates: [COUNT(*)]"), branchPlan)
+    assert(branchCount.as[Long].head() ==
+      Versioned.readBranch(spark, dir, "audit").count())
     // vacuum at zero orphan age: every branch manifest is a live root,
     // so BOTH the retired pre-delete file and the COW rewrite survive
     Versioned.vacuum(spark, dir, 1, orphanAgeMs = 0L)
