@@ -30,6 +30,13 @@ final class CatalogGate private (s: SparkSession, val root: java.io.File) {
       s"CAST(SUM(cents) AS BIGINT) AS sum_cents FROM $from" +
       (if (cond.isEmpty) "" else s" WHERE $cond"))
 
+  /** A `phase, a, b` row: `sql`'s `a` and `b` columns as BIGINT — the
+    * answer shape of the aggregate-pushdown gates (q296, q302).
+    */
+  def readAB(phase: String, sql: String): DataFrame = s.sql(sql).select(
+    lit(phase).as("phase"),
+    col("a").cast(LongType).as("a"), col("b").cast(LongType).as("b"))
+
   /** [[read]], collected now — for a phase a later commit would move. */
   def collect(phase: String, from: String, cond: String = ""): (String, Long, Long) =
     CatalogGate.collectPhase(read(phase, from, cond))

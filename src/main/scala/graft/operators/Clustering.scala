@@ -294,6 +294,8 @@ object Clustering {
     * rounds with an 8-row driver sync each) ending in the FINAL
     * assignment frame (vec_id, e, cid, dist) — shared by q102 (which
     * aggregates it) and q144 (which prunes within its clusters).
+    * Minimum input: at least one of the seed vectors vec_id 0..7 — one
+    * cluster per seed present.
     */
   private def kmeansAssignedFinal(s: SparkSession, d: String): DataFrame = {
     // materialize the quantized input ONCE (checkpoint-dir aware, like
@@ -320,6 +322,9 @@ object Clustering {
     var centroids: Seq[(Long, Seq[Long])] = q.filter(col("vec_id") < 8)
       .orderBy("vec_id").collect()
       .map(r => (r.getLong(0), r.getSeq[Long](1))).toSeq
+    require(centroids.nonEmpty,
+      "k-means seeds its centroids from embeddings vec_id 0..7, and none " +
+        "of them is present")
 
     for (_ <- 1 to kIters) {
       val aggs = count(lit(1)).as("n") +:

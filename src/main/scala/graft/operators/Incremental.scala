@@ -1889,18 +1889,13 @@ object Incremental {
     CatalogGate.requirePlan(s.sql("SELECT MIN(k) FROM graft_cat.mx2"),
       Seq("HashAggregate"), Seq("PushedAggregates: [MIN"),
       "a table with delete sidecars must fall back for MIN/MAX")
-    def row(phase: String, sql: String) = s.sql(sql).select(
-      lit(phase).as("phase"),
-      col("a").cast(LongType).as("a"), col("b").cast(LongType).as("b"))
-    Seq(
-      row("v1", "SELECT MIN(k) AS a, MAX(k) AS b FROM graft_cat.mx VERSION AS OF 1"),
-      row("head", "SELECT MIN(k) AS a, MAX(k) AS b FROM graft_cat.mx"),
-      row("price", "SELECT CAST(MIN(price) * 100 AS BIGINT) AS a, " +
+    CatalogGate.phases(
+      g.readAB("v1", "SELECT MIN(k) AS a, MAX(k) AS b FROM graft_cat.mx VERSION AS OF 1"),
+      g.readAB("head", "SELECT MIN(k) AS a, MAX(k) AS b FROM graft_cat.mx"),
+      g.readAB("price", "SELECT CAST(MIN(price) * 100 AS BIGINT) AS a, " +
         "CAST(MAX(price) * 100 AS BIGINT) AS b FROM graft_cat.mx"),
-      row("cnt", "SELECT COUNT(*) AS a, 0 AS b FROM graft_cat.mx"),
-      row("mor_min", "SELECT MIN(k) AS a, 0 AS b FROM graft_cat.mx2"))
-      .reduce(_ unionByName _)
-      .orderBy("phase")
+      g.readAB("cnt", "SELECT COUNT(*) AS a, 0 AS b FROM graft_cat.mx"),
+      g.readAB("mor_min", "SELECT MIN(k) AS a, 0 AS b FROM graft_cat.mx2"))
   }
 
   // q298 — MANIFEST STATISTICS DRIVE JOIN PLANNING (the estimate the
@@ -2248,19 +2243,14 @@ object Incremental {
     CatalogGate.requirePlan(s.sql("SELECT COUNT(v) FROM graft_cat.nc2"),
       Seq("HashAggregate"), Seq("PushedAggregates: [COUNT(v)"),
       "a table with delete sidecars must fall back for COUNT(col)")
-    def row(phase: String, sql: String) = s.sql(sql).select(
-      lit(phase).as("phase"),
-      col("a").cast(LongType).as("a"), col("b").cast(LongType).as("b"))
-    Seq(
-      row("is_null", "SELECT COUNT(*) AS a, SUM(k) AS b FROM graft_cat.nc " +
+    CatalogGate.phases(
+      g.readAB("is_null", "SELECT COUNT(*) AS a, SUM(k) AS b FROM graft_cat.nc " +
         "WHERE v IS NULL"),
-      row("not_null", "SELECT COUNT(*) AS a, SUM(v) AS b FROM graft_cat.nc " +
+      g.readAB("not_null", "SELECT COUNT(*) AS a, SUM(v) AS b FROM graft_cat.nc " +
         "WHERE v IS NOT NULL"),
-      row("cnt", "SELECT COUNT(v) AS a, COUNT(*) AS b FROM graft_cat.nc"),
-      row("minmax", "SELECT MIN(v) AS a, MAX(v) AS b FROM graft_cat.nc"),
-      row("mor_cnt", "SELECT COUNT(v) AS a, 0 AS b FROM graft_cat.nc2"))
-      .reduce(_ unionByName _)
-      .orderBy("phase")
+      g.readAB("cnt", "SELECT COUNT(v) AS a, COUNT(*) AS b FROM graft_cat.nc"),
+      g.readAB("minmax", "SELECT MIN(v) AS a, MAX(v) AS b FROM graft_cat.nc"),
+      g.readAB("mor_cnt", "SELECT COUNT(v) AS a, 0 AS b FROM graft_cat.nc2"))
   }
 
   // q303 — MULTI-COLUMN `PARTITIONED BY` (generalizing q299's

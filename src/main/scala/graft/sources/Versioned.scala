@@ -521,56 +521,68 @@ object Versioned {
     readManifest(spark, dir, manifestOf(spark, dir, v))
 
   /** The live rows of one resolved manifest (a main version or a
-    * branch point): a zero-entry manifest reads as its
-    * [[emptyFrame]], a dv-free one as a plain era-aware read, anything
+    * branch point): a zero-entry manifest reads as an empty frame under
+    * its [[schemaOf]], a dv-free one as a plain era-aware read, anything
     * else through its delete sidecars. `fileCol`, when set, keeps each
     * row's data-file name ("" on the empty frame).
     */
   private[graft] def readManifest(spark: SparkSession, dir: String,
       m: Manifest, fileCol: Option[String] = None): DataFrame =
     if (m.entries.isEmpty) {
-      val empty = emptyFrame(spark, dir, m)
+      val empty = emptyOf(spark, schemaOf(spark, dir, m))
       fileCol.fold(empty)(fc => empty.withColumn(fc, lit("")))
     } else if (m.dvs.isEmpty && fileCol.isEmpty)
       readEntries(spark, dir, m.changes, m.entries)
     else readLive(spark, dir, m, m.entries, fileCol)
 
-  /** A zero-entry manifest's rows (main version or branch point): the
-    * empty frame under the shape the manifest itself declares.
+  /** The LOGICAL schema [[readManifest]] reads `m` under, planned from
+    * the manifest without a read of its files. A zero-entry manifest
+    * carries its own shape: the staged path records the declared schema
+    * as metadata-only adds, so its change list is walked in order (later
+    * renames/drops/widens apply); a legacy zero-entry manifest without
+    * changes — and main's point 0, before the first commit — takes the
+    * table's [[declaredSchema]]. Any other manifest's schema is the
+    * era-aware read of the FIRST entry of each era: [[readEntries]]
+    * reads every era under that file's footer, so the per-era frames and
+    * their unionByName are the full read's, nullability included.
     */
-  private def emptyFrame(spark: SparkSession, dir: String,
-      m: Manifest): DataFrame = {
+  private[graft] def schemaOf(spark: SparkSession, dir: String,
+      m: Manifest): org.apache.spark.sql.types.StructType = {
     import org.apache.spark.sql.types.{DataType, StructField, StructType}
-    // the staged path records the declared schema as metadata-only
-    // adds, so the empty version carries ITS OWN shape — walk the
-    // change list (later renames/drops/widens apply in order); a
-    // legacy zero-entry manifest without changes falls back to the
-    // CURRENT _schema.ddl
-    val schema: StructType =
-      if (m.changes.nonEmpty)
-        StructType(m.changes.sortBy(_._1)
-          .foldLeft(Vector.empty[StructField]) {
-            case (acc, (_, "add", n, ddl)) =>
-              acc :+ StructField(n, DataType.fromDDL(ddl))
-            case (acc, (_, "rename", o, n)) =>
-              acc.map(f => if (f.name == o) f.copy(name = n) else f)
-            case (acc, (_, "drop", n, _)) => acc.filterNot(_.name == n)
-            case (acc, (_, "widen", n, ddl)) => acc.map(f =>
-              if (f.name == n) f.copy(dataType = DataType.fromDDL(ddl))
-              else f)
-            case (acc, _) => acc
-          })
-      else {
-        val fs = fsOf(spark, dir)
-        val p = new org.apache.hadoop.fs.Path(dir, "_schema.ddl")
-        if (!fs.exists(p))
-          throw new IllegalStateException(
-            s"a manifest of $dir lists no files and no _schema.ddl " +
-              "describes its shape")
-        StructType.fromDDL(readTextFile(fs, p))
-      }
+    if (m.entries.nonEmpty)
+      readEntries(spark, dir, m.changes,
+        m.entries.groupBy(_._3).values.map(_.head).toSeq).schema
+    else if (m.changes.isEmpty) declaredSchema(spark, dir)
+    else StructType(m.changes.sortBy(_._1)
+      .foldLeft(Vector.empty[StructField]) {
+        case (acc, (_, "add", n, ddl)) =>
+          acc :+ StructField(n, DataType.fromDDL(ddl))
+        case (acc, (_, "rename", o, n)) =>
+          acc.map(f => if (f.name == o) f.copy(name = n) else f)
+        case (acc, (_, "drop", n, _)) => acc.filterNot(_.name == n)
+        case (acc, (_, "widen", n, ddl)) => acc.map(f =>
+          if (f.name == n) f.copy(dataType = DataType.fromDDL(ddl))
+          else f)
+        case (acc, _) => acc
+      })
+  }
+
+  private def emptyOf(spark: SparkSession,
+      schema: org.apache.spark.sql.types.StructType): DataFrame =
     spark.createDataFrame(
       spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
+
+  /** The table's declared schema, `_schema.ddl` (written by the SQL
+    * catalog's CREATE and staged REPLACE); fails loudly when absent.
+    */
+  private def declaredSchema(spark: SparkSession,
+      dir: String): org.apache.spark.sql.types.StructType = {
+    val fs = fsOf(spark, dir)
+    val p = new org.apache.hadoop.fs.Path(dir, "_schema.ddl")
+    if (!fs.exists(p))
+      throw new IllegalStateException(
+        s"$dir lists no data files and no _schema.ddl describes its shape")
+    org.apache.spark.sql.types.StructType.fromDDL(readTextFile(fs, p))
   }
 
   /** The latest committed version. */
@@ -1519,8 +1531,7 @@ object Versioned {
       oldName: String, newName: String): Long =
     commitManifest(spark, dir) { base =>
       require(base.entries.nonEmpty, s"renameColumn: $dir has no current version")
-      val logical = readEntries(spark, dir, base.changes, base.entries)
-        .schema.fieldNames.toSet
+      val logical = schemaOf(spark, dir, base).fieldNames.toSet
       require(logical.contains(oldName),
         s"renameColumn: no column '$oldName' (have ${logical.mkString(", ")})")
       require(!logical.contains(newName),
@@ -1544,8 +1555,7 @@ object Versioned {
       // validate the DDL up front — a bad type string must fail the
       // commit, not every future read
       org.apache.spark.sql.types.DataType.fromDDL(typeDdl)
-      val logical = readEntries(spark, dir, base.changes, base.entries)
-        .schema.fieldNames.toSet
+      val logical = schemaOf(spark, dir, base).fieldNames.toSet
       require(!logical.contains(name),
         s"addColumn: column '$name' already exists")
       Manifest(base.changes :+ ((base.changes.size + 1, "add", name, typeDdl)),
@@ -1562,8 +1572,7 @@ object Versioned {
   def dropColumn(spark: SparkSession, dir: String, name: String): Long =
     commitManifest(spark, dir) { base =>
       require(base.entries.nonEmpty, s"dropColumn: $dir has no current version")
-      val logical = readEntries(spark, dir, base.changes, base.entries)
-        .schema.fieldNames.toSet
+      val logical = schemaOf(spark, dir, base).fieldNames.toSet
       require(logical.contains(name),
         s"dropColumn: no column '$name' (have ${logical.mkString(", ")})")
       Manifest(base.changes :+ ((base.changes.size + 1, "drop", name, "")),
@@ -1620,7 +1629,7 @@ object Versioned {
     commitManifest(spark, dir) { base =>
       require(base.entries.nonEmpty, s"widenColumn: $dir has no current version")
       val newT = org.apache.spark.sql.types.DataType.fromDDL(newTypeDdl)
-      val cur = readEntries(spark, dir, base.changes, base.entries).schema
+      val cur = schemaOf(spark, dir, base)
       require(cur.fieldNames.contains(name),
         s"widenColumn: no column '$name' (have ${cur.fieldNames.mkString(", ")})")
       val oldT = cur(name).dataType
@@ -2034,9 +2043,9 @@ object Versioned {
     val shapeEntries = if (mTo.entries.nonEmpty) mTo.entries else mFrom.entries
     require(shapeEntries.nonEmpty,
       s"versions $vFrom and $vTo of $dir both list no files")
-    val shape = readEntries(spark, dir, schemaChanges, shapeEntries).limit(0)
-    val payload = shape.columns.filter(_ != keyCol).toSeq
-    val typeOf = shape.schema.map(f => f.name -> f.dataType).toMap
+    val shape = schemaOf(spark, dir, Manifest(schemaChanges, shapeEntries))
+    val payload = shape.fieldNames.filter(_ != keyCol).toSeq
+    val typeOf = shape.map(f => f.name -> f.dataType).toMap
     def nulls(prefix: String): Seq[Column] =
       payload.map(c => lit(null).cast(typeOf(c)).as(s"$prefix$c"))
     val schemaRenames = schemaChanges.collect {
@@ -2061,7 +2070,7 @@ object Versioned {
     }
     (side(mFrom, toFiles, "old_"), side(mTo, fromFiles, "new_")) match {
       case (None, None) =>
-        shape.select(lit(null).cast("string").as("change_type") +:
+        emptyOf(spark, shape).select(lit(null).cast("string").as("change_type") +:
           col(keyCol) +: (nulls("old_") ++ nulls("new_")): _*)
       case (Some(o), None) =>
         o.select(lit("delete").as("change_type") +: col(keyCol) +:
@@ -2661,8 +2670,8 @@ object Versioned {
     * sidecars apply, so a deleted row never resurrects through a
     * pruned path), `fileCol` keeping each row's data-file name (the
     * `_file` metadata column). Returns (frame, filesKept, filesTotal).
-    * A zero-entry manifest reads as its declared-schema empty frame
-    * ([[emptyFrame]], `fileCol` ""); a prune that keeps nothing reads
+    * A zero-entry manifest reads as an empty frame under its
+    * [[schemaOf]] (`fileCol` ""); a prune that keeps nothing reads
     * the full live frame with `limit(0)`, so the shape is the
     * manifest's either way. Prunes are necessary conditions only: the
     * caller re-applies its full filter.
@@ -3040,13 +3049,12 @@ object Versioned {
       // base schema underneath the delta's files.
       if (base.changes.take(branchBase.changes.size) != branchBase.changes)
         lineageConflict("the change lists diverge")
-      val cur = versions(spark, dir).last
-      val curFields = readVersion(spark, dir, cur).schema.fields.toSeq
+      val curFields = schemaOf(spark, dir, base).fields.toSeq
       val mapped = eraRecipes(base.changes,
         curFields.map(f => (f.name, f.dataType)))(branchBase.changes.size)
         .filter(_._2.nonEmpty) // columns added after the cut read NULL
         .map(r => r._2 -> r._3).toMap
-      val want = readVersion(spark, dir, baseV).schema.fields.toSeq
+      val want = schemaOf(spark, dir, branchBase).fields.toSeq
         .map(f => f.name -> f.dataType.catalogString).toMap
       if (mapped.keySet != want.keySet ||
         !want.forall { case (n, t) =>

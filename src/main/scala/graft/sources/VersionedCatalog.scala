@@ -527,6 +527,18 @@ object VersionedSqlTable {
       override def comment(): String = "data file name (manifest entry)"
     })
 
+  /** The LOGICAL schema of `lineage` at the `pinned` point, else at its
+    * head — before main's first commit, point 0's: the declared
+    * `_schema.ddl` ([[Versioned.schemaOf]]). Main and branch tables
+    * cache it once per table instance: Spark fixes a relation's output
+    * at analysis, while each query's scan still resolves its own
+    * snapshot ([[VersionedScanBuilder]]).
+    */
+  private[v2] def schemaAt(spark: SparkSession, dir: String,
+      lineage: Versioned.Lineage, pinned: Option[Long]): StructType =
+    Versioned.schemaOf(spark, dir, lineage.manifestAt(spark, dir,
+      pinned.orElse(lineage.headPoint(spark, dir)).getOrElse(0L)))
+
   /** Read a table's persisted `graft.*` TBLPROPERTIES —
     * [[Versioned.readControlFile]]'s swap-crash recovery contract, so
     * a crash mid-rewrite never silently degrades a MOR table to COW.
@@ -675,30 +687,21 @@ final class VersionedSqlTable(tableName: String, dir: String,
   override def name(): String =
     pinnedVersion.fold(tableName)(v => s"$tableName@v$v")
 
-  /** Latest (or pinned) version's LOGICAL schema; before the first
-    * commit, the declared `_schema.ddl`. On a merge-on-read table the
-    * declared key surfaces NON-NULLABLE — the keyed-unique contract
-    * forbids null keys anyway, and Spark's delta row-level rewrite
-    * requires non-nullable row-id attributes.
+  /** Latest (or pinned) version's LOGICAL schema
+    * ([[VersionedSqlTable.schemaAt]], once per table instance). On a
+    * merge-on-read table the declared key surfaces NON-NULLABLE — the
+    * keyed-unique contract forbids null keys anyway, and Spark's delta
+    * row-level rewrite requires non-nullable row-id attributes.
     */
-  override def schema(): StructType = {
-    val latest = Versioned.latestVersion(spark, dir)
-    val base = pinnedVersion.orElse(latest) match {
-      case Some(v) => Versioned.readVersion(spark, dir, v).schema
-      case None =>
-        val p = new Path(dir, "_schema.ddl")
-        val fsys = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        val in = fsys.open(p)
-        val ddl =
-          try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-          finally in.close()
-        StructType.fromDDL(ddl)
-    }
+  private lazy val schemaNow: StructType = {
+    val base = VersionedSqlTable.schemaAt(spark, dir, Versioned.Main,
+      pinnedVersion)
     if (!graftProps.get("graft.merge.mode").contains("mor")) base
     else graftProps.get("graft.key").fold(base)(k => StructType(
       base.fields.toSeq.map(f =>
         if (f.name == k) f.copy(nullable = false) else f)))
   }
+  override def schema(): StructType = schemaNow
 
   override def capabilities(): util.Set[TableCapability] =
     util.EnumSet.of(TableCapability.BATCH_READ,
@@ -737,7 +740,7 @@ final class VersionedSqlTable(tableName: String, dir: String,
   override def newWriteBuilder(info: LogicalWriteInfo): WriteBuilder = {
     require(pinnedVersion.isEmpty,
       s"cannot write to time-travel read $name — writes go to the table head")
-    new VersionedWriteBuilder(dir, info, () => schema(),
+    new VersionedWriteBuilder(dir, info, schema(),
       graftProps.get("graft.partition").toSeq
         .flatMap(s => Versioned.PartField.parse(s)))
   }
@@ -880,11 +883,8 @@ final class VersionedBranchTable(tableName: String, dir: String,
   private def spark: SparkSession = SparkSession.active
 
   override def name(): String = tableName
-  // CACHED per table instance: analysis calls schema() repeatedly, and
-  // building the branch frame costs a manifest walk + a parquet footer
-  // per era — once per loadTable is the right price
-  private lazy val schemaNow: StructType =
-    Versioned.readBranch(spark, dir, branch).schema
+  private lazy val schemaNow: StructType = VersionedSqlTable.schemaAt(spark,
+    dir, Versioned.Branch(branch), None)
   override def schema(): StructType = schemaNow
   override def capabilities(): util.Set[TableCapability] =
     util.EnumSet.of(TableCapability.BATCH_READ, TableCapability.V1_BATCH_WRITE,
@@ -1106,7 +1106,7 @@ final class VersionedScanBuilder(dir: String, lineage: Versioned.Lineage,
 
   private var required: StructType = full
   private var accepted: Array[Filter] = Array.empty
-  private var pushedAggs: Seq[VersionedScan.PushedAgg] = Seq.empty
+  private var pushedAggs: Seq[(VersionedScan.PushedAgg, Option[Any])] = Seq.empty
 
   override def pruneColumns(requiredSchema: StructType): Unit =
     required = requiredSchema
@@ -1118,48 +1118,37 @@ final class VersionedScanBuilder(dir: String, lineage: Versioned.Lineage,
 
   override def pushedFilters(): Array[Filter] = accepted
 
-  /** A grouping-free COUNT(*)/MIN/MAX list answers from the MANIFEST
-    * ([[VersionedScan]]'s agg path). MIN/MAX push ONLY when every live
-    * file's stats make the answer provably exact at analysis time
-    * ([[VersionedScan.minMaxPushable]]): integral/decimal column (fp
-    * REFUSED — parquet envelopes are NaN-blind and Spark orders NaN
-    * above +Inf, so a stats answer could silently drop a NaN extreme;
-    * strings REFUSED — their bounds are truncated), no delete sidecars
-    * (a sidecar row could tombstone the extreme), a usable stat on
-    * every era-resolving entry. Anything else falls back to the real
-    * scan, which Spark plans automatically when this returns false.
-    * Residual filters disable the offer on Spark's side, as with the
-    * q290 count.
+  /** The query's snapshot, (manifest, point), resolved ONCE: the
+    * aggregate verdict, the statistics estimate and the read all use
+    * it, so a pushed value is the one its manifest proved. None before
+    * main's first commit.
+    */
+  private lazy val snapshot: Option[(Versioned.Manifest, Long)] =
+    VersionedScan.resolve(SparkSession.active, dir, lineage, pinned)
+
+  /** A grouping-free COUNT(*)/COUNT(col)/MIN/MAX list answers from the
+    * MANIFEST ([[VersionedScan]]'s agg path): COUNT(*) always, the
+    * others only when the snapshot's stats prove the value exact
+    * ([[VersionedScan.statsValue]]). Anything else falls back to the
+    * real scan, which Spark plans automatically when this returns
+    * false. Residual filters disable the offer on Spark's side, as with
+    * the q290 count.
     */
   // Spark calls supportCompletePushDown and then pushAggregation with
-  // the same Aggregation; the verdict needs the manifest (a full
-  // parse, shard reads included at manifest-of-manifests scale), so
-  // both the manifest and the per-Aggregation verdict memoize —
-  // planning pays ONE metadata read here, not one per callback
-  private lazy val manifestNow: Option[Versioned.Manifest] =
-    VersionedScan.resolve(SparkSession.active, dir, lineage, pinned).map(_._1)
+  // the same Aggregation, so the per-Aggregation verdict memoizes
   private var lastAgg: AnyRef = _
-  private var lastVerdict: Option[Seq[VersionedScan.PushedAgg]] = None
+  private var lastVerdict: Option[Seq[(VersionedScan.PushedAgg, Option[Any])]] = None
 
   private def verdict(
       agg: org.apache.spark.sql.connector.expressions.aggregate.Aggregation)
-      : Option[Seq[VersionedScan.PushedAgg]] = {
+      : Option[Seq[(VersionedScan.PushedAgg, Option[Any])]] = {
     if (!(agg eq lastAgg)) {
       lastAgg = agg
-      lastVerdict = VersionedScan.translateAggs(agg).filter { aggs =>
-        aggs.forall {
-          case VersionedScan.MinOf(c) =>
-            manifestNow.exists(VersionedScan.minMaxPushable(_, c, full))
-          case VersionedScan.MaxOf(c) =>
-            manifestNow.exists(VersionedScan.minMaxPushable(_, c, full))
-          // COUNT(col): pushable iff rows − nulls is provably exact
-          // (no sidecars, every entry's null count recorded)
-          case VersionedScan.CountCol(c) =>
-            full.fieldNames.contains(c) && manifestNow.exists(m =>
-              Versioned.statsNonNullCount(m, c).isDefined)
-          case VersionedScan.CountAll => true
-        }
-      }
+      lastVerdict = VersionedScan.translateAggs(agg)
+        .map(_.map(a => a -> snapshot.flatMap(s =>
+          VersionedScan.statsValue(s._1, a, full))))
+        .filter(_.forall { case (a, v) =>
+          a == VersionedScan.CountAll || v.isDefined })
     }
     lastVerdict
   }
@@ -1176,11 +1165,11 @@ final class VersionedScanBuilder(dir: String, lineage: Versioned.Lineage,
   }
 
   override def build(): Scan =
-    new VersionedScan(dir, lineage, pinned,
+    new VersionedScan(dir, lineage, pinned, snapshot,
       // with aggregates pushed, the scan's output IS the aggregate
       // schema (Spark zips the relation output positionally)
       if (pushedAggs.nonEmpty)
-        StructType(pushedAggs.map {
+        StructType(pushedAggs.map(_._1).map {
           case VersionedScan.CountAll =>
             org.apache.spark.sql.types.StructField("count_star",
               org.apache.spark.sql.types.LongType, nullable = false)
@@ -1208,8 +1197,9 @@ final class VersionedScanBuilder(dir: String, lineage: Versioned.Lineage,
   * parquet scan.
   */
 final class VersionedScan(dir: String, lineage: Versioned.Lineage,
-    pinned: Option[Long], required: StructType, accepted: Array[Filter],
-    pushedAggs: Seq[VersionedScan.PushedAgg] = Seq.empty,
+    pinned: Option[Long], snapshot: Option[(Versioned.Manifest, Long)],
+    required: StructType, accepted: Array[Filter],
+    pushedAggs: Seq[(VersionedScan.PushedAgg, Option[Any])] = Seq.empty,
     options: CaseInsensitiveStringMap = CaseInsensitiveStringMap.empty(),
     tagRanges: Seq[(String, Long, Long)] = Seq.empty)
     extends V1Scan
@@ -1235,11 +1225,9 @@ final class VersionedScan(dir: String, lineage: Versioned.Lineage,
   override def estimateStatistics()
       : org.apache.spark.sql.connector.read.Statistics = estimated
 
-  // stats visitors may ask repeatedly during one query's planning; the
-  // scan instance is per-query, so one manifest read serves them all
+  // stats visitors may ask repeatedly during one query's planning
   private lazy val estimated: org.apache.spark.sql.connector.read.Statistics = {
-    val spark = SparkSession.active
-    val (rows, width) = VersionedScan.resolve(spark, dir, lineage, pinned) match {
+    val (rows, width) = snapshot match {
       case None => (0L, 1L)
       case Some((m, _)) =>
         val kept = Versioned.prunedEntries(m)(
@@ -1302,7 +1290,7 @@ final class VersionedScan(dir: String, lineage: Versioned.Lineage,
       : org.apache.spark.sql.connector.read.streaming.MicroBatchStream = {
     require(pinned.isEmpty,
       s"cannot stream a time-travel read of $dir — streams follow the head")
-    val (head, _) = lineage.head(SparkSession.active, dir).getOrElse(
+    val (head, _) = snapshot.getOrElse(
       throw new IllegalStateException(
         s"$dir has no committed version to stream from"))
     required.fields.foreach { f =>
@@ -1326,7 +1314,7 @@ final class VersionedScan(dir: String, lineage: Versioned.Lineage,
   override def description(): String =
     s"graft-versioned $dir${lineage.label}" +
       pinned.fold("")(v => s" VERSION AS OF $v") +
-      (if (pushedAggs.isEmpty) "" else pushedAggs.map {
+      (if (pushedAggs.isEmpty) "" else pushedAggs.map(_._1).map {
         case VersionedScan.CountAll => "COUNT(*)"
         case VersionedScan.CountCol(c) => s"COUNT($c)"
         case VersionedScan.MinOf(c) => s"MIN($c)"
@@ -1342,14 +1330,12 @@ final class VersionedScan(dir: String, lineage: Versioned.Lineage,
       override def schema: StructType = required
       override def buildScan(): RDD[Row] = {
         val spark = context.sparkSession
-        VersionedScan.resolve(spark, dir, lineage, pinned) match {
+        snapshot match {
           case None if countStar =>
-            // a created-but-never-committed table: COUNT=0 and
-            // MIN/MAX=NULL are the exact SQL answers
-            spark.sparkContext.parallelize(Seq(Row(pushedAggs.map {
-              case VersionedScan.CountAll | VersionedScan.CountCol(_) => 0L
-              case _ => null
-            }: _*)), 1)
+            // a created-but-never-committed table pushes COUNT(*) only
+            // (nothing else is proven without a manifest): 0 is exact
+            spark.sparkContext.parallelize(
+              Seq(Row(pushedAggs.map(_ => 0L): _*)), 1)
           case None => // created, never committed: a legitimate empty table
             spark.sparkContext.emptyRDD[Row]
           case Some((m, v)) if countStar =>
@@ -1358,39 +1344,12 @@ final class VersionedScan(dir: String, lineage: Versioned.Lineage,
             // `history` reports — entry rows minus the sidecar deletes
             // that target live entries, exact on ANY on-disk lineage;
             // pure driver arithmetic with zero jobs when the version
-            // has no sidecars, else one cached sidecar-only job.
-            // MIN/MAX: the stats envelope extremes ([[Versioned
-            // .statsExtreme]]); pushability was proven at analysis
-            // time, but the manifest is RE-read here, so a commit
-            // racing the query (a MOR delete landing between analysis
-            // and execution could tombstone the extreme) re-checks —
-            // if stats no longer answer exactly, the value is computed
-            // by a real scan instead: the plan stays "pushed", the
-            // answer stays EXACT, only the zero-IO property degrades
-            // for that race window.
-            // one shared fallback frame for any agg the re-check
-            // refuses (race window only)
-            lazy val liveDf = Versioned.readManifest(spark, dir, m)
+            // has no sidecars, else one cached sidecar-only job. The
+            // others: the values the verdict proved on this manifest.
             val values: Seq[Any] = pushedAggs.map {
-              case VersionedScan.CountAll =>
+              case (VersionedScan.CountAll, _) =>
                 Versioned.exactRowCounts(spark, dir, Seq(v -> m))(v)
-              case VersionedScan.CountCol(c) =>
-                // rows − null counts; the same execution-time re-check
-                // discipline as MIN/MAX — a racing sidecar commit
-                // degrades to the real count, never to a wrong answer
-                Versioned.statsNonNullCount(m, c).getOrElse(
-                  liveDf.agg(org.apache.spark.sql.functions.count(col(c)))
-                    .head.getLong(0))
-              case VersionedScan.MinOf(c) =>
-                Versioned.statsExtreme(m, c, required(s"min_$c").dataType,
-                  isMin = true).getOrElse(
-                  liveDf.agg(org.apache.spark.sql.functions.min(col(c)))
-                    .head.get(0))
-              case VersionedScan.MaxOf(c) =>
-                Versioned.statsExtreme(m, c, required(s"max_$c").dataType,
-                  isMin = false).getOrElse(
-                  liveDf.agg(org.apache.spark.sql.functions.max(col(c)))
-                    .head.get(0))
+              case (_, proven) => proven.get
             }
             spark.sparkContext.parallelize(Seq(Row(values: _*)), 1)
           case Some((m, _)) =>
@@ -1554,12 +1513,26 @@ object VersionedScan {
       case _ => None
     }.distinct
 
-  /** Can MIN/MAX of `column` be answered EXACTLY from the manifest? */
-  private[v2] def minMaxPushable(m: Versioned.Manifest, column: String,
-      full: StructType): Boolean =
-    full.fieldNames.contains(column) &&
-      Versioned.statsExtreme(m, column, full(column).dataType,
-        isMin = true).isDefined
+  /** A pushed COUNT(col)/MIN/MAX of a column of `full`, answered
+    * EXACTLY from manifest `m`'s stats: COUNT(col) as rows − nulls
+    * ([[Versioned.statsNonNullCount]] — no sidecars, every entry's
+    * null count recorded), MIN/MAX as the envelope extreme in the
+    * direction pushed ([[Versioned.statsExtreme]] — integral/decimal
+    * only: fp is NaN-blind, string bounds are truncated; no sidecars,
+    * which could tombstone the extreme). None when the stats cannot
+    * prove it, and for COUNT(*), which [[Versioned.exactRowCounts]]
+    * answers at execution.
+    */
+  private[v2] def statsValue(m: Versioned.Manifest, agg: PushedAgg,
+      full: StructType): Option[Any] = agg match {
+    case CountCol(c) if full.fieldNames.contains(c) =>
+      Versioned.statsNonNullCount(m, c)
+    case MinOf(c) if full.fieldNames.contains(c) =>
+      Versioned.statsExtreme(m, c, full(c).dataType, isMin = true)
+    case MaxOf(c) if full.fieldNames.contains(c) =>
+      Versioned.statsExtreme(m, c, full(c).dataType, isMin = false)
+    case _ => None
+  }
 
   /** The v1 `Filter` shapes the inner DataFrame can re-express; `None`
     * leaves the filter entirely to Spark (it re-checks everything
@@ -1848,7 +1821,8 @@ private[v2] object GraftProcedures {
       (spark, in) =>
         val dir = cat.dirForName(in.getUTF8String(0).toString)
         val keyCol = in.getUTF8String(1).toString
-        val keyType = Versioned.read(spark, dir).schema(keyCol).dataType
+        val keyType = VersionedSqlTable.schemaAt(spark, dir, Versioned.Main,
+          None)(keyCol).dataType
         import spark.implicits._
         val raw = in.getUTF8String(2).toString.split(",").toSeq.map(_.trim)
         val keys = raw.toDF(keyCol)
@@ -1969,7 +1943,7 @@ private[v2] object GraftProcedures {
   * rejection, Delta's stance.
   */
 final class VersionedWriteBuilder(dir: String, info: LogicalWriteInfo,
-    tableSchema: () => StructType,
+    tableSchema: StructType,
     partitionSpec: Seq[Versioned.PartField] = Seq.empty) extends WriteBuilder
     with SupportsTruncate
     with org.apache.spark.sql.connector.write.SupportsOverwrite {
@@ -2044,7 +2018,7 @@ final class VersionedWriteBuilder(dir: String, info: LogicalWriteInfo,
       // validation sees no manifest — hold the stream to the DECLARED
       // schema here, so the first commit cannot silently diverge from
       // the CREATE TABLE statement
-      val declared = tableSchema().fields
+      val declared = tableSchema.fields
         .map(f => f.name -> f.dataType.catalogString).toSet
       val got = info.schema().fields
         .map(f => f.name -> f.dataType.catalogString).toSet

@@ -106,7 +106,7 @@ sealed class GraftRowLevelOperation(tableName: String, dir: String,
   // before main's first commit: the SQL table's declared schema
   private[v2] val currentSchema: StructType = snapshot.fold(
     new VersionedSqlTable(tableName, dir, None).schema())(
-    Versioned.readManifest(spark, dir, _).schema)
+    Versioned.schemaOf(spark, dir, _))
 
   /** Set by [[RowLevelScan.planInputPartitions]]: the data files the
     * scan actually read after runtime group filtering — exactly the

@@ -69,9 +69,11 @@ final class VersionedStreamSource extends TableProvider with DataSourceRegister 
   private def lineageOf(branch: String): Versioned.Lineage =
     Option(branch).fold[Versioned.Lineage](Versioned.Main)(Versioned.Branch)
 
-  override def inferSchema(options: CaseInsensitiveStringMap): StructType =
-    VersionedStreamTable.streamSchema(
-      SparkSession.active, dirOf(options), lineageOf(options.get("branch")))
+  override def inferSchema(options: CaseInsensitiveStringMap): StructType = {
+    val dir = dirOf(options)
+    VersionedStreamTable.streamSchema(SparkSession.active, dir,
+      lineageOf(options.get("branch")).head(SparkSession.active, dir).map(_._1))
+  }
 
   // the WRITE path hands us the query's schema (a sink to a fresh dir
   // has no table to infer from); the READ path still infers
@@ -107,11 +109,14 @@ object VersionedStreamTable {
     classOf[BooleanType], classOf[StringType], classOf[BinaryType],
     classOf[DateType], classOf[TimestampType], classOf[TimestampNTZType])
 
+  /** The change stream's schema over the `head` manifest: its logical
+    * columns, each of the flat interchange set, then [[MetaCols]].
+    * Fails when there is no head (no committed version).
+    */
   def streamSchema(spark: SparkSession, dir: String,
-      lineage: Versioned.Lineage = Versioned.Main): StructType = {
-    val (head, _) = lineage.head(spark, dir).getOrElse(
-      throw new IllegalStateException(s"$dir is not a versioned table"))
-    val logical = Versioned.readManifest(spark, dir, head).schema
+      head: Option[Versioned.Manifest]): StructType = {
+    val logical = Versioned.schemaOf(spark, dir, head.getOrElse(
+      throw new IllegalStateException(s"$dir is not a versioned table")))
     logical.fields.foreach { f =>
       require(Supported.exists(_.isInstance(f.dataType)),
         s"graft-versioned cannot stream column '${f.name}' of type " +
@@ -141,11 +146,11 @@ final class VersionedStreamTable(dir: String, startingVersion: Option[Long],
     throw new IllegalStateException(s"$dir is not a versioned table"))
   override def name(): String =
     s"graft-versioned(`$dir`)" + lineage.label
-  override def schema(): StructType =
-    if (lineage.headPoint(SparkSession.active, dir).isDefined)
-      VersionedStreamTable.streamSchema(SparkSession.active, dir, lineage)
-    else externalSchema.getOrElse(throw new IllegalStateException(
-      s"$dir is not a versioned table"))
+  override def schema(): StructType = {
+    val head = lineage.head(SparkSession.active, dir).map(_._1)
+    externalSchema.filter(_ => head.isEmpty).getOrElse(
+      VersionedStreamTable.streamSchema(SparkSession.active, dir, head))
+  }
   override def capabilities(): util.Set[TableCapability] =
     util.EnumSet.of(TableCapability.MICRO_BATCH_READ,
       TableCapability.BATCH_READ, TableCapability.STREAMING_WRITE)
@@ -535,9 +540,9 @@ final class VersionedStreamingWrite(dir: String, writeSchema: StructType,
   private val token = java.util.UUID.randomUUID.toString.take(8)
 
   // validate once, driver-side, at write construction
-  Versioned.latestVersion(spark, dir) match {
-    case Some(v) =>
-      val cur = Versioned.readVersion(spark, dir, v).schema
+  Versioned.Main.head(spark, dir) match {
+    case Some((head, _)) =>
+      val cur = Versioned.schemaOf(spark, dir, head)
       val have = cur.fields.map(f => f.name -> f.dataType.catalogString).toSet
       val got = writeSchema.fields.map(f => f.name -> f.dataType.catalogString).toSet
       require(got == have,

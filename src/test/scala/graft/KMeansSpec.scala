@@ -94,6 +94,18 @@ class KMeansSpec extends AnyFunSuite {
     assert(got.exists(_._4), "no semantic dup found at tau=0.35 — dead test")
   }
 
+  test("a zero-row embeddings table fails q102 and q144 with the seed contract") {
+    val empty = graft.engine.Staging.scratch("graft-kmeans-spec", "empty")
+      .getAbsolutePath
+    Tables.embeddings(spark, sfDir).limit(0)
+      .write.mode("overwrite").parquet(s"$empty/embeddings.parquet")
+    for (q <- Seq(Clustering.q102KmeansTrain, Clustering.q144SemDedup)) {
+      val e = intercept[IllegalArgumentException](q.run(spark, empty).collect())
+      assert(e.getMessage.contains("seeds its centroids from embeddings vec_id 0..7"),
+        e.getMessage)
+    }
+  }
+
   test("q102 assignment is a projection: no crossJoin row blowup") {
     val plan = Clustering.q102KmeansTrain.run(spark, sfDir)
       .queryExecution.executedPlan.toString

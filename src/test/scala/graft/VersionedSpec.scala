@@ -483,6 +483,35 @@ class VersionedSpec extends AnyFunSuite {
     // pre-widen ADD type
     assert(Versioned.readVersion(spark, dir, 2)
       .schema("score").dataType.typeName == "integer")
+    // every version's manifest-planned schema is its read's, nullability
+    // included
+    for (v <- 1L to 5L)
+      assert(Versioned.schemaOf(spark, dir, Versioned.manifestOf(spark, dir, v)) ==
+        Versioned.readVersion(spark, dir, v).schema, s"v$v")
+  }
+
+  test("schemaOf is the read's schema on nested columns, a branch head and a zero-entry REPLACE") {
+    import org.apache.spark.sql.types.StructType
+    val dir = freshDir("schemaof")
+    Versioned.create(Seq((1L, (2, "x"), Seq(3L, 4L))).toDF("k", "s", "arr"), dir) // v1
+    Versioned.addColumn(spark, dir, "extra", "struct<_1:int,_2:array<string>>") // v2
+    Versioned.append(Seq((5L, (6, "y"), Seq(7L), (8, Seq("z"))))
+      .toDF("k", "s", "arr", "extra"), dir)                                // v3, era 1
+    Versioned.createBranch(spark, dir, "audit")
+    Versioned.appendToBranch(Seq((9L, (10, "w"), Seq.empty[Long], (11, Seq("v"))))
+      .toDF("k", "s", "arr", "extra"), dir, "audit")
+    assert(Versioned.schemaOf(spark, dir, Versioned.branchHead(spark, dir, "audit")._1) ==
+      Versioned.readBranch(spark, dir, "audit").schema)
+    // a staged REPLACE without rows commits a zero-entry manifest under
+    // the declared schema
+    Versioned.commitStagedState(spark, dir, Seq.empty, Seq.empty,
+      StructType.fromDDL("id BIGINT, tags ARRAY<STRING>, p STRUCT<a: INT, b: DOUBLE>"))(
+      () => ())                                                            // v4
+    assert(Versioned.manifestOf(spark, dir, 4).entries.isEmpty)
+    assert(Versioned.readVersion(spark, dir, 4).columns.toSeq == Seq("id", "tags", "p"))
+    for (v <- 1L to 4L)
+      assert(Versioned.schemaOf(spark, dir, Versioned.manifestOf(spark, dir, v)) ==
+        Versioned.readVersion(spark, dir, v).schema, s"v$v")
   }
 
   test("deleteKeysMor: sidecar only (no data rewrite), COW-equivalent, optimize retires") {
