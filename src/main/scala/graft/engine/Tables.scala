@@ -68,13 +68,9 @@ object Tables {
     // file-listing/footer caches) a constant, not per-query, cost.
     val perDir = eventsSchemaCache.computeIfAbsent(spark,
       _ => scala.collection.concurrent.TrieMap.empty)
-    val schema = perDir.getOrElseUpdate(sfDir, {
-      val key = "spark.sql.legacy.parquet.nanosAsLong"
-      val prior = spark.conf.get(key, "false")
-      spark.conf.set(key, "true")
-      try table(spark, sfDir, "events").schema
-      finally spark.conf.set(key, prior)
-    })
+    val schema = perDir.getOrElseUpdate(sfDir,
+      ScopedConf(spark, "spark.sql.legacy.parquet.nanosAsLong" -> "true")(
+        table(spark, sfDir, "events").schema))
     val raw = spark.read.schema(schema).parquet(s"$sfDir/events.parquet")
     val ts = raw.schema("ts").dataType match {
       case LongType => timestamp_micros(expr("ts div 1000")) // nanos-as-long

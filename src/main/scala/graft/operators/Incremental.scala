@@ -4,7 +4,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.{Column, DataFrame}
 
-import graft.engine.{CatalogGate, QueryDef, Tables}
+import graft.engine.{CatalogGate, QueryDef, ScopedConf, Tables}
 
 /** Incremental aggregation [EXT, north star]: the partial-aggregate
   * merge pattern. At 100 TB no pipeline re-reads history to refresh a
@@ -351,10 +351,7 @@ object Incremental {
       |FROM u GROUP BY 1 ORDER BY 1""".stripMargin) { (s, d) =>
     val dir = graft.engine.Staging.scratch("graft-layout-gate", "q270_shards")
       .getAbsolutePath
-    val prev = s.conf.getOption("graft.versioned.shardEntries")
-    val prevTfb = s.conf.getOption("graft.versioned.targetFileBytes")
-    s.conf.set("graft.versioned.shardEntries", "2")
-    try {
+    ScopedConf(s, "graft.versioned.shardEntries" -> "2") {
       val part = CatalogGate.partCents(s, d).toDF("p_partkey", "cents")
       graft.sources.Versioned.create(
         part.filter(col("p_partkey") % 3 =!= 0).repartition(5), dir)
@@ -366,14 +363,15 @@ object Incremental {
       // would explode into hundreds of files at the larger SFs
       val dataBytes = Option(new java.io.File(dir, "data").listFiles())
         .map(_.map(_.length).sum).getOrElse(0L)
-      s.conf.set("graft.versioned.targetFileBytes",
-        math.max(1L, dataBytes / 4).toString)
-      graft.sources.Versioned.upsert(s, dir, "p_partkey",
-        part.filter(col("p_partkey") % 3 =!= 0 && col("p_partkey") % 5 === 0)
-          .withColumn("cents", col("cents") + 100000)
-          .unionByName(part.filter(col("p_partkey") % 3 === 0)))
-      graft.sources.Versioned.deleteKeys(s, dir, "p_partkey",
-        part.filter(col("p_partkey") % 7 === 0).select("p_partkey"))
+      ScopedConf(s, "graft.versioned.targetFileBytes" ->
+          math.max(1L, dataBytes / 4).toString) {
+        graft.sources.Versioned.upsert(s, dir, "p_partkey",
+          part.filter(col("p_partkey") % 3 =!= 0 && col("p_partkey") % 5 === 0)
+            .withColumn("cents", col("cents") + 100000)
+            .unionByName(part.filter(col("p_partkey") % 3 === 0)))
+        graft.sources.Versioned.deleteKeys(s, dir, "p_partkey",
+          part.filter(col("p_partkey") % 7 === 0).select("p_partkey"))
+      }
       // the tripwire: every manifest must actually be sharded
       val manifests = new java.io.File(dir, "_manifests").listFiles()
         .filter(_.getName.endsWith(".manifest")).sortBy(_.getName)
@@ -391,15 +389,6 @@ object Incremental {
             col("max_key"), lit(if (allSharded) 1L else 0L).as("sharded"))
       }.reduce(_ unionByName _)
         .orderBy("version")
-    } finally {
-      prev match {
-        case Some(p) => s.conf.set("graft.versioned.shardEntries", p)
-        case None => s.conf.unset("graft.versioned.shardEntries")
-      }
-      prevTfb match {
-        case Some(p) => s.conf.set("graft.versioned.targetFileBytes", p)
-        case None => s.conf.unset("graft.versioned.targetFileBytes")
-      }
     }
   }
 
@@ -1931,12 +1920,10 @@ object Incremental {
     s.sql("CREATE TABLE graft_cat.nd (n_nationkey BIGINT, n_name STRING)")
     s.sql("INSERT INTO graft_cat.nd SELECT n_nationkey, n_name FROM q298_nation")
     val fact = CatalogGate.partCents(s, d)
-    val threshold = s.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    try {
-      // 2 kB: the dim's manifest estimate (25 rows × 28 B) is under
-      // it; ANY parquet file is over it — a BroadcastHashJoin in the
-      // initial plan can only be the catalog estimate speaking
-      s.conf.set("spark.sql.autoBroadcastJoinThreshold", "2048")
+    // 2 kB: the dim's manifest estimate (25 rows × 28 B) is under
+    // it; ANY parquet file is over it — a BroadcastHashJoin in the
+    // initial plan can only be the catalog estimate speaking
+    ScopedConf(s, "spark.sql.autoBroadcastJoinThreshold" -> "2048") {
       val joined = fact.join(s.table("graft_cat.nd"),
         fact("k") % 25 === col("n_nationkey"))
         .groupBy(col("n_name").as("nation"))
@@ -1948,8 +1935,7 @@ object Incremental {
         "the 25-row catalog dim must broadcast from its manifest " +
           "estimate in the INITIAL plan")
       joined
-    } finally
-      s.conf.set("spark.sql.autoBroadcastJoinThreshold", threshold)
+    }
   }
 
   // q299 — SQL `PARTITIONED BY` (closing q293's authoring gap: the SQL
@@ -2301,7 +2287,7 @@ object Incremental {
         s"${m1.entries.size} entries, ${m1.ptags.size} tags")
     // spec EVOLUTION: a later band-only era — old files keep their
     // 2-axis tags, new files tag band alone (the q281/q293 discipline)
-    graft.sources.Versioned.appendPartitionedSpec(
+    graft.sources.Versioned.append(
       df.filter(col("k") % 2 === 1), dir,
       Seq(graft.sources.Versioned.PartField.Identity("band")))           // v2
     // 15 two-axis files + 3 band-era files on disk

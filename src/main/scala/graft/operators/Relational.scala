@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 
-import graft.engine.{QueryDef, Tables}
+import graft.engine.{QueryDef, ScopedConf, Tables}
 
 /** Relational operator set (SURVEY.md §2.3 q01–q02, q06–q15, q17).
   *
@@ -516,19 +516,13 @@ object Relational {
         |  AND o_orderdate < TIMESTAMP_NTZ '1997-01-01'
         |GROUP BY n_name
         |ORDER BY revenue DESC, n_name""".stripMargin
-    val prevCbo = s.conf.get("spark.sql.cbo.enabled")
-    val prevReorder = s.conf.get("spark.sql.cbo.joinReorder.enabled")
-    s.conf.set("spark.sql.cbo.enabled", "true")
-    s.conf.set("spark.sql.cbo.joinReorder.enabled", "true")
-    try {
+    ScopedConf(s, "spark.sql.cbo.enabled" -> "true",
+        "spark.sql.cbo.joinReorder.enabled" -> "true") {
       val df = s.sql(sql)
       // force logical optimization (where join reorder happens) while
       // the flags are on; the cached QueryExecution carries the tree
       df.queryExecution.executedPlan
       df
-    } finally {
-      s.conf.set("spark.sql.cbo.enabled", prevCbo)
-      s.conf.set("spark.sql.cbo.joinReorder.enabled", prevReorder)
     }
   }
 

@@ -4,7 +4,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.TimestampNTZType
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-import graft.engine.{CatalogGate, QueryDef, Tables}
+import graft.engine.{CatalogGate, QueryDef, ScopedConf, Tables}
 
 /** Structured Streaming paths on the driver's DuckDB correctness gate.
   *
@@ -102,15 +102,8 @@ object StreamQueries {
     * restores the conf either way.
     */
   private[operators] def withEphemeralCheckpoint[A](
-      s: org.apache.spark.sql.SparkSession)(body: => A): A = {
-    val key = "spark.sql.streaming.checkpoint.fileChecksum.enabled"
-    val prev = s.conf.getOption(key)
-    s.conf.set(key, "false")
-    try body finally prev match {
-      case Some(p) => s.conf.set(key, p)
-      case None => s.conf.unset(key)
-    }
-  }
+      s: org.apache.spark.sql.SparkSession)(body: => A): A =
+    ScopedConf(s, "spark.sql.streaming.checkpoint.fileChecksum.enabled" -> "false")(body)
 
   private def runToParquet(df: DataFrame, outDir: String, ckDir: String,
       rocksDb: Boolean = false): Unit = {
@@ -119,13 +112,9 @@ object StreamQueries {
     // multi-variable state + timer layout is a RocksDB column-family
     // schema); every other gate stream stays on the default HDFS-backed
     // provider, so the flag scopes the conf to the one query and the
-    // finally below restores it either way.
-    val pKey = "spark.sql.streaming.stateStore.providerClass"
-    val prevProvider = spark.conf.getOption(pKey)
-    if (rocksDb) spark.conf.set(pKey,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    val key = "spark.sql.shuffle.partitions"
-    val prev = spark.conf.get(key)
+    // scope restores it either way.
+    val provider = "spark.sql.streaming.stateStore.providerClass" ->
+      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
     // Stateful operators allocate one state-store instance per shuffle
     // partition, pinned at the checkpoint's first run — with a
     // single-file source that is pure fixed setup cost per query (a
@@ -133,23 +122,17 @@ object StreamQueries {
     // streams parallel while cutting instance setup 4×; a production
     // deployment sizes this to its real key cardinality instead. The
     // batch read-back below does not depend on the conf, which is
-    // restored in finally (the readEventsAuto lesson: never leak a
+    // restored by the scope (the readEventsAuto lesson: never leak a
     // conf change out of a query).
-    spark.conf.set(key, "8")
-    try withEphemeralCheckpoint(spark)(df.writeStream
-      .format("parquet")
-      .option("path", outDir)
-      .option("checkpointLocation", ckDir)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-      .awaitTermination())
-    finally {
-      spark.conf.set(key, prev)
-      if (rocksDb) prevProvider match {
-        case Some(p) => spark.conf.set(pKey, p)
-        case None => spark.conf.unset(pKey)
-      }
-    }
+    ScopedConf(spark, Seq("spark.sql.shuffle.partitions" -> "8") ++
+        Option.when(rocksDb)(provider): _*)(
+      withEphemeralCheckpoint(spark)(df.writeStream
+        .format("parquet")
+        .option("path", outDir)
+        .option("checkpointLocation", ckDir)
+        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+        .start()
+        .awaitTermination()))
   }
 
   // q150 — the continuous curation front door
@@ -578,22 +561,10 @@ object StreamQueries {
       .orderBy("user_id")
   }
 
-  // q273 — INCREMENTAL CDC CONSUMPTION of the versioned table
-  // (`EventStream.followVersionedChanges` — the read half of q219's
-  // stream→table write; Delta's streaming readChangeFeed in
-  // AvailableNow form): a durable cursor file remembers the consumer's
-  // last version; each drain processes every newer version pair via
-  // changesBetween (scan cost ∝ changed files) and advances the cursor
-  // only AFTER the consumer returns (at-least-once; idempotent
-  // consumers get exactly-once). The gate replays the q211 history
-  // with a drain BETWEEN commits — the second drain must RESUME from
-  // the durable cursor, not reprocess pair (1,2) — and accumulates
-  // per-pair change-type aggregates; the closed-form oracle hash-fails
-  // on a reprocessed, skipped, or misclassified pair. (The empty
-  // first drain also exercises the fresh-consumer seed: the initial
-  // state is not a change, the Delta convention.)
-  val q273CdcFollow: QueryDef = QueryDef.sql(
-    "q273_cdc_follow",
+  // The closed-form oracle of the q211 history's change feed — the
+  // per-pair insert/update/delete aggregates q273, q279, q280 and q289
+  // all hash-match (one history, four consumption surfaces).
+  private val CdcHistoryOracle =
     """WITH p AS (SELECT p_partkey AS k,
       |             CAST(CAST(p_retailprice AS DECIMAL(12,2)) * 100 AS BIGINT)
       |               AS cents
@@ -616,7 +587,38 @@ object StreamQueries {
       |       change_type, CAST(n AS BIGINT) AS n, sum_old, sum_new
       |FROM (SELECT * FROM d12 UNION ALL SELECT * FROM d23)
       |WHERE n > 0
-      |ORDER BY from_v, to_v, change_type""".stripMargin) { (s, d) =>
+      |ORDER BY from_v, to_v, change_type""".stripMargin
+
+  // The closed-form oracle of three range-sliced versions (k % 3 = 0,
+  // k % 3 <= 1, every k) — the q286 sink's and q297's stream-to-table
+  // versions alike.
+  private val PhaseSlicesOracle =
+    """WITH p AS (SELECT p_partkey AS k,
+      |             CAST(CAST(p_retailprice AS DECIMAL(12,2)) * 100 AS BIGINT)
+      |               AS cents
+      |           FROM part),
+      |u AS (
+      |  SELECT 'v1' AS phase, COUNT(*) AS n, SUM(cents) AS s FROM p WHERE k % 3 = 0
+      |  UNION ALL SELECT 'v2', COUNT(*), SUM(cents) FROM p WHERE k % 3 <= 1
+      |  UNION ALL SELECT 'v3', COUNT(*), SUM(cents) FROM p)
+      |SELECT phase, CAST(n AS BIGINT) AS n, CAST(s AS BIGINT) AS sum_cents
+      |FROM u ORDER BY phase""".stripMargin
+
+  // q273 — INCREMENTAL CDC CONSUMPTION of the versioned table
+  // (`EventStream.followVersionedChanges` — the read half of q219's
+  // stream→table write; Delta's streaming readChangeFeed in
+  // AvailableNow form): a durable cursor file remembers the consumer's
+  // last version; each drain processes every newer version pair via
+  // changesBetween (scan cost ∝ changed files) and advances the cursor
+  // only AFTER the consumer returns (at-least-once; idempotent
+  // consumers get exactly-once). The gate replays the q211 history
+  // with a drain BETWEEN commits — the second drain must RESUME from
+  // the durable cursor, not reprocess pair (1,2) — and accumulates
+  // per-pair change-type aggregates; the closed-form oracle hash-fails
+  // on a reprocessed, skipped, or misclassified pair. (The empty
+  // first drain also exercises the fresh-consumer seed: the initial
+  // state is not a change, the Delta convention.)
+  val q273CdcFollow: QueryDef = QueryDef.sql("q273_cdc_follow", CdcHistoryOracle) { (s, d) =>
     val root = graft.engine.Staging.scratch("graft-stream-gate", "q273_follow")
     val dir = new java.io.File(root, "table").getAbsolutePath
     val cursor = new java.io.File(root, "cursor").getAbsolutePath
@@ -664,31 +666,8 @@ object StreamQueries {
   // closed-form oracle as q273. No idempotence is demanded of the
   // transform; the sink's version-keyed dirs carry the arbitration
   // (the Delta/Kafka txn-id pattern).
-  val q279CdcExactlyOnce: QueryDef = QueryDef.sql(
-    "q279_cdc_exactly_once",
-    """WITH p AS (SELECT p_partkey AS k,
-      |             CAST(CAST(p_retailprice AS DECIMAL(12,2)) * 100 AS BIGINT)
-      |               AS cents
-      |           FROM part),
-      |d12 AS (SELECT 1 AS from_v, 2 AS to_v, 'insert' AS change_type,
-      |               count(*) AS n, CAST(0 AS BIGINT) AS sum_old,
-      |               CAST(sum(cents) AS BIGINT) AS sum_new
-      |        FROM p WHERE k % 3 = 0
-      |        UNION ALL
-      |        SELECT 1, 2, 'update', count(*),
-      |               CAST(sum(cents) AS BIGINT),
-      |               CAST(sum(cents + 100000) AS BIGINT)
-      |        FROM p WHERE k % 3 <> 0 AND k % 5 = 0),
-      |d23 AS (SELECT 2, 3, 'delete', count(*),
-      |               CAST(sum(CASE WHEN k % 3 <> 0 AND k % 5 = 0
-      |                             THEN cents + 100000 ELSE cents END) AS BIGINT),
-      |               CAST(0 AS BIGINT)
-      |        FROM p WHERE k % 7 = 0)
-      |SELECT CAST(from_v AS BIGINT) AS from_v, CAST(to_v AS BIGINT) AS to_v,
-      |       change_type, CAST(n AS BIGINT) AS n, sum_old, sum_new
-      |FROM (SELECT * FROM d12 UNION ALL SELECT * FROM d23)
-      |WHERE n > 0
-      |ORDER BY from_v, to_v, change_type""".stripMargin) { (s, d) =>
+  val q279CdcExactlyOnce: QueryDef =
+    QueryDef.sql("q279_cdc_exactly_once", CdcHistoryOracle) { (s, d) =>
     val root = graft.engine.Staging.scratch("graft-stream-gate", "q279_txn")
     val dir = new java.io.File(root, "table").getAbsolutePath
     val consumer = new java.io.File(root, "consumer").getAbsolutePath
@@ -751,31 +730,8 @@ object StreamQueries {
   // (old-only=delete, new-only=insert, differing=update, identical
   // carries dropped — changesBetween's arbitration, distributed), and
   // hash-matches q273's closed-form oracle.
-  val q280VersionedStreamSource: QueryDef = QueryDef.sql(
-    "q280_versioned_stream_source",
-    """WITH p AS (SELECT p_partkey AS k,
-      |             CAST(CAST(p_retailprice AS DECIMAL(12,2)) * 100 AS BIGINT)
-      |               AS cents
-      |           FROM part),
-      |d12 AS (SELECT 1 AS from_v, 2 AS to_v, 'insert' AS change_type,
-      |               count(*) AS n, CAST(0 AS BIGINT) AS sum_old,
-      |               CAST(sum(cents) AS BIGINT) AS sum_new
-      |        FROM p WHERE k % 3 = 0
-      |        UNION ALL
-      |        SELECT 1, 2, 'update', count(*),
-      |               CAST(sum(cents) AS BIGINT),
-      |               CAST(sum(cents + 100000) AS BIGINT)
-      |        FROM p WHERE k % 3 <> 0 AND k % 5 = 0),
-      |d23 AS (SELECT 2, 3, 'delete', count(*),
-      |               CAST(sum(CASE WHEN k % 3 <> 0 AND k % 5 = 0
-      |                             THEN cents + 100000 ELSE cents END) AS BIGINT),
-      |               CAST(0 AS BIGINT)
-      |        FROM p WHERE k % 7 = 0)
-      |SELECT CAST(from_v AS BIGINT) AS from_v, CAST(to_v AS BIGINT) AS to_v,
-      |       change_type, CAST(n AS BIGINT) AS n, sum_old, sum_new
-      |FROM (SELECT * FROM d12 UNION ALL SELECT * FROM d23)
-      |WHERE n > 0
-      |ORDER BY from_v, to_v, change_type""".stripMargin) { (s, d) =>
+  val q280VersionedStreamSource: QueryDef =
+    QueryDef.sql("q280_versioned_stream_source", CdcHistoryOracle) { (s, d) =>
     val root = graft.engine.Staging.scratch("graft-stream-gate", "q280_source")
     val dir = new java.io.File(root, "table").getAbsolutePath
     val ck = new java.io.File(root, "ck").getAbsolutePath
@@ -832,18 +788,7 @@ object StreamQueries {
   // → exactly three versions, REQUIREd; a second drain commits
   // nothing; every version then hash-checks against the closed-form
   // slices — through the SAME catalog/library read path as any table.
-  val q286StreamSink: QueryDef = QueryDef.sql(
-    "q286_stream_sink",
-    """WITH p AS (SELECT p_partkey AS k,
-      |             CAST(CAST(p_retailprice AS DECIMAL(12,2)) * 100 AS BIGINT)
-      |               AS cents
-      |           FROM part),
-      |u AS (
-      |  SELECT 'v1' AS phase, COUNT(*) AS n, SUM(cents) AS s FROM p WHERE k % 3 = 0
-      |  UNION ALL SELECT 'v2', COUNT(*), SUM(cents) FROM p WHERE k % 3 <= 1
-      |  UNION ALL SELECT 'v3', COUNT(*), SUM(cents) FROM p)
-      |SELECT phase, CAST(n AS BIGINT) AS n, CAST(s AS BIGINT) AS sum_cents
-      |FROM u ORDER BY phase""".stripMargin) { (s, d) =>
+  val q286StreamSink: QueryDef = QueryDef.sql("q286_stream_sink", PhaseSlicesOracle) { (s, d) =>
     val root = graft.engine.Staging.scratch("graft-stream-gate", "q286_sink")
     val stage = new java.io.File(root, "stage").getAbsolutePath
     val dir = new java.io.File(root, "table").getAbsolutePath
@@ -888,31 +833,8 @@ object StreamQueries {
   // evolution, unknown versions) — the machinery is shared code, not a
   // parallel implementation. The gate replays q280's exact scenario and
   // hash-matches the SAME oracle, pinning batch/stream agreement.
-  val q289BatchChangeRead: QueryDef = QueryDef.sql(
-    "q289_batch_change_read",
-    """WITH p AS (SELECT p_partkey AS k,
-      |             CAST(CAST(p_retailprice AS DECIMAL(12,2)) * 100 AS BIGINT)
-      |               AS cents
-      |           FROM part),
-      |d12 AS (SELECT 1 AS from_v, 2 AS to_v, 'insert' AS change_type,
-      |               count(*) AS n, CAST(0 AS BIGINT) AS sum_old,
-      |               CAST(sum(cents) AS BIGINT) AS sum_new
-      |        FROM p WHERE k % 3 = 0
-      |        UNION ALL
-      |        SELECT 1, 2, 'update', count(*),
-      |               CAST(sum(cents) AS BIGINT),
-      |               CAST(sum(cents + 100000) AS BIGINT)
-      |        FROM p WHERE k % 3 <> 0 AND k % 5 = 0),
-      |d23 AS (SELECT 2, 3, 'delete', count(*),
-      |               CAST(sum(CASE WHEN k % 3 <> 0 AND k % 5 = 0
-      |                             THEN cents + 100000 ELSE cents END) AS BIGINT),
-      |               CAST(0 AS BIGINT)
-      |        FROM p WHERE k % 7 = 0)
-      |SELECT CAST(from_v AS BIGINT) AS from_v, CAST(to_v AS BIGINT) AS to_v,
-      |       change_type, CAST(n AS BIGINT) AS n, sum_old, sum_new
-      |FROM (SELECT * FROM d12 UNION ALL SELECT * FROM d23)
-      |WHERE n > 0
-      |ORDER BY from_v, to_v, change_type""".stripMargin) { (s, d) =>
+  val q289BatchChangeRead: QueryDef =
+    QueryDef.sql("q289_batch_change_read", CdcHistoryOracle) { (s, d) =>
     val root = graft.engine.Staging.scratch("graft-stream-gate", "q289_batch")
     val dir = new java.io.File(root, "table").getAbsolutePath
     CatalogGate.q211History(s, d, dir)
@@ -1016,18 +938,8 @@ object StreamQueries {
   // Gate: three one-file epochs → exactly three versions by name, a
   // re-drain commits nothing, every version hash-checks closed-form
   // THROUGH THE CATALOG (time travel over a streamed-in table).
-  val q297StreamToTable: QueryDef = QueryDef.sql(
-    "q297_stream_to_table",
-    """WITH p AS (SELECT p_partkey AS k,
-      |             CAST(CAST(p_retailprice AS DECIMAL(12,2)) * 100 AS BIGINT)
-      |               AS cents
-      |           FROM part),
-      |u AS (
-      |  SELECT 'v1' AS phase, COUNT(*) AS n, SUM(cents) AS s FROM p WHERE k % 3 = 0
-      |  UNION ALL SELECT 'v2', COUNT(*), SUM(cents) FROM p WHERE k % 3 <= 1
-      |  UNION ALL SELECT 'v3', COUNT(*), SUM(cents) FROM p)
-      |SELECT phase, CAST(n AS BIGINT) AS n, CAST(s AS BIGINT) AS sum_cents
-      |FROM u ORDER BY phase""".stripMargin) { (s, d) =>
+  val q297StreamToTable: QueryDef =
+    QueryDef.sql("q297_stream_to_table", PhaseSlicesOracle) { (s, d) =>
     val g = CatalogGate(s, "q297_totable", "graft-stream-gate")
     val stage = new java.io.File(g.root, "stage").getAbsolutePath
     val ck = new java.io.File(g.root, "ck").getAbsolutePath

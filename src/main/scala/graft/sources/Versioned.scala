@@ -21,7 +21,13 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
   *     byte-identical) into NEW files; the next manifest points at
   *     rewritten + untouched + fresh appends. Untouched files are
   *     SHARED between manifests — an upsert's storage cost is the
-  *     affected files, not the table.
+  *     affected files, not the table. Every COW writer — [[upsert]],
+  *     [[deleteKeys]], [[deleteWhere]], [[overwriteWhere]] and the SQL
+  *     row-level [[commitReplace]] — shares one hit scan
+  *     ([[hitScan]]), one sized rewrite of the touched files
+  *     ([[cowRewrite]]) and one retire-and-add manifest
+  *     ([[cowManifest]]); every write of fresh rows goes through one
+  *     layout writer ([[writeFresh]]).
   *   - Writers serialize through [[Lake.withCommit]]'s optimistic
   *     claim/commit ledger (atomic create-if-absent); the manifest
   *     rename itself is tmp-then-rename, so a crashed writer leaves at
@@ -521,19 +527,17 @@ object Versioned {
     readManifest(spark, dir, manifestOf(spark, dir, v))
 
   /** The live rows of one resolved manifest (a main version or a
-    * branch point): a zero-entry manifest reads as an empty frame under
-    * its [[schemaOf]], a dv-free one as a plain era-aware read, anything
-    * else through its delete sidecars. `fileCol`, when set, keeps each
-    * row's data-file name ("" on the empty frame).
+    * branch point): a dv-free one as a plain era-aware read, anything
+    * else as the [[readPruned]] read of every entry — a zero-entry
+    * manifest reads as an empty frame under its [[schemaOf]].
+    * `fileCol`, when set, keeps each row's data-file name ("" on the
+    * empty frame).
     */
   private[graft] def readManifest(spark: SparkSession, dir: String,
       m: Manifest, fileCol: Option[String] = None): DataFrame =
-    if (m.entries.isEmpty) {
-      val empty = emptyOf(spark, schemaOf(spark, dir, m))
-      fileCol.fold(empty)(fc => empty.withColumn(fc, lit("")))
-    } else if (m.dvs.isEmpty && fileCol.isEmpty)
+    if (m.entries.nonEmpty && m.dvs.isEmpty && fileCol.isEmpty)
       readEntries(spark, dir, m.changes, m.entries)
-    else readLive(spark, dir, m, m.entries, fileCol)
+    else readPruned(spark, dir, m, m.entries, fileCol)._1
 
   /** The LOGICAL schema [[readManifest]] reads `m` under, planned from
     * the manifest without a read of its files. A zero-entry manifest
@@ -1126,7 +1130,7 @@ object Versioned {
   /** REPLACE-DATA commit for the SQL row-level operations (UPDATE /
     * MERGE / group-based DELETE, [[graft.sources.v2.GraftRowLevelOperation]]):
     * retire the files the operation's scan read, add the files its
-    * write staged, reconcile delete sidecars ([[retireDvRows]]).
+    * write staged ([[cowManifest]], the library COW verbs' manifest).
     * Concurrency: the staged rows were computed OUTSIDE this OCC block
     * (Spark's ReplaceData executes scan + write before the commit), so
     * a retry cannot re-derive them — instead the commit verifies the
@@ -1151,11 +1155,7 @@ object Versioned {
       lineage: Lineage = Main): Long =
     commitManifest(spark, dir, lineage) { base =>
       requireSnapshotCompatible(dir, base, snapshot)
-      Manifest(base.changes,
-        base.entries.filterNot(e => replaced(e._1)) ++
-          tagged(added, base.changes),
-        dvs = retireDvRows(spark, dir, base.dvs, replaced),
-        ptags = base.ptags.filterNot(t => replaced(t._1)) ++ addedTags)
+      cowManifest(spark, dir, base, replaced, added, addedTags)
     }
 
   /** WRITE-DELTA commit for the merge-on-read row-level operations
@@ -1220,26 +1220,42 @@ object Versioned {
       manifestOf(spark, dir, v).txns.getOrElse(queryId, Long.MinValue)
         >= epochId)
 
-  /** Create (or fully replace) the table: version = all of `df`. */
-  def create(df: DataFrame, dir: String): Long = {
-    val entries = writeData(df, dir)
+  /** Create (or fully replace) the table: version = all of `df`,
+    * written through [[writeFresh]] under `spec` (empty: untagged).
+    */
+  def create(df: DataFrame, dir: String,
+      spec: Seq[PartField] = Seq.empty): Long = {
+    val (entries, tags) = writeFresh(df, dir, spec)
     // a full replace writes the CURRENT logical schema physically, so
     // the rename lineage carries forward and the new files are
     // current-era
     commitManifest(df.sparkSession, dir)(base =>
-      Manifest(base.changes, tagged(entries, base.changes)))
+      Manifest(base.changes, tagged(entries, base.changes), ptags = tags))
   }
 
-  /** Append-only commit: previous files plus `df`'s new ones. Delete
-    * sidecars carry forward — they bind to the OLD files by name, so a
+  /** Append-only commit on `lineage`: the head's files plus `df`'s new
+    * ones, written through [[writeFresh]] under `spec`. Delete sidecars
+    * carry forward — they bind to the OLD files by name, so a
     * re-inserted key in the fresh files is never shadowed.
     */
-  def append(df: DataFrame, dir: String): Long = {
-    val entries = writeData(df, dir)
-    commitManifest(df.sparkSession, dir)(base =>
+  def append(df: DataFrame, dir: String, spec: Seq[PartField] = Seq.empty,
+      lineage: Lineage = Main): Long = {
+    val (entries, tags) = writeFresh(df, dir, spec)
+    commitManifest(df.sparkSession, dir, lineage)(base =>
       Manifest(base.changes, base.entries ++ tagged(entries, base.changes),
-        dvs = base.dvs, ptags = base.ptags))
+        dvs = base.dvs, ptags = base.ptags ++ tags))
   }
+
+  /** The one writer of FRESH rows: [[writeData]] for an empty spec,
+    * else [[writeDataPartitioned]] (one `#pfile` tag line per file and
+    * spec field). Fresh rows reject NULL partition values loudly; only
+    * a rewrite of existing rows falls back ([[writeDataLayout]]).
+    */
+  private[graft] def writeFresh(df: DataFrame, dir: String,
+      spec: Seq[PartField])
+      : (Seq[(String, Long)], Seq[(String, String, String)]) =
+    if (spec.isEmpty) (writeData(df, dir), Seq.empty)
+    else writeDataPartitioned(df, dir, spec)
 
   /** PARTITIONED write (Iceberg-shape, not hive-shape: the PARTITION
     * TAG lives in the manifest as a `#pfile` line per data file, the
@@ -1247,7 +1263,10 @@ object Versioned {
     * the files — the manifest IS the partition index). One Spark job:
     * the frame is clustered by `partCol` and written `partitionBy` into
     * staging, so each landed file is single-valued for the column; the
-    * walk then records (file, partCol, value) tags.
+    * walk then records (file, partCol, value) tags. [[append]] and
+    * [[create]] take a FULL PARTITION SPEC — any mix of identity
+    * columns and temporal transforms, one tag line per field, each
+    * queried axis pruned independently (conjuncts compose).
     *
     * PARTITION EVOLUTION falls out of per-file tags (the Iceberg
     * argument): a later [[appendPartitioned]] under a DIFFERENT column
@@ -1266,31 +1285,11 @@ object Versioned {
     * right at gate scale).
     */
   def appendPartitioned(df: DataFrame, dir: String, partCol: String): Long =
-    appendPartitionedSpec(df, dir, Seq(PartField.Identity(partCol)))
-
-  /** [[appendPartitioned]] generalized to a FULL PARTITION SPEC — any
-    * mix of identity columns and temporal transforms: each file gets
-    * one `#pfile` tag line PER FIELD, and the readers prune each
-    * queried axis independently (conjuncts compose).
-    */
-  private[graft] def appendPartitionedSpec(df: DataFrame, dir: String,
-      fields: Seq[PartField]): Long = {
-    val (entries, tags) = writeDataPartitioned(df, dir, fields)
-    commitManifest(df.sparkSession, dir)(base =>
-      Manifest(base.changes, base.entries ++ tagged(entries, base.changes),
-        dvs = base.dvs, ptags = base.ptags ++ tags))
-  }
+    append(df, dir, Seq(PartField.Identity(partCol)))
 
   /** Create (full replace) with partition tags — see [[appendPartitioned]]. */
   def createPartitioned(df: DataFrame, dir: String, partCol: String): Long =
-    createPartitionedSpec(df, dir, Seq(PartField.Identity(partCol)))
-
-  private[graft] def createPartitionedSpec(df: DataFrame, dir: String,
-      fields: Seq[PartField]): Long = {
-    val (entries, tags) = writeDataPartitioned(df, dir, fields)
-    commitManifest(df.sparkSession, dir)(base =>
-      Manifest(base.changes, tagged(entries, base.changes), ptags = tags))
-  }
+    create(df, dir, Seq(PartField.Identity(partCol)))
 
   /** The table's DECLARED partition spec (the persisted
     * `graft.partition` property) — empty for unpartitioned tables.
@@ -1417,7 +1416,7 @@ object Versioned {
     val spark = df.sparkSession
     require(fields.nonEmpty, "partitioned write: empty partition spec")
     // the SQL path is guarded by validateProps; library callers
-    // (appendPartitionedSpec et al.) must fail HERE with the named
+    // ([[append]]/[[create]] with a spec) must fail HERE with the named
     // guard — a repeated field would collapse in pvOf (a Map keyed by
     // PartField) and surface as a confusing staging-walk error
     require(fields.map(_.tagCol).distinct.size == fields.size,
@@ -1642,12 +1641,12 @@ object Versioned {
         base.entries, dvs = base.dvs, ptags = base.ptags)
     }
 
-  /** The COW-REWRITE write half, layout-aware (q317): on a declared
-    * PARTITIONED BY layout the surviving rows re-cluster through the
-    * partitioned writer and RE-TAG — a rewrite (upsert, DELETE,
-    * replaceWhere's hit class, the SQL row-level rewrite) previously
-    * landed untagged files, so every row-level verb slowly untagged
-    * the table and partition pruning silently degraded. Soundness is
+  /** The COW-REWRITE write half: [[writeFresh]] under the declared
+    * layout (q317). On a PARTITIONED BY layout the surviving rows
+    * re-cluster through the partitioned writer and RE-TAG — a rewrite
+    * (upsert, DELETE, replaceWhere's hit class, the SQL row-level
+    * rewrite) previously landed untagged files, so every row-level verb
+    * slowly untagged the table and partition pruning silently degraded. Soundness is
     * free: tags are computed from the rewritten rows' ACTUAL values,
     * so even an UPDATE that moves a row across partition values tags
     * correctly. One deliberate asymmetry vs the INSERT path: a NULL
@@ -1660,14 +1659,12 @@ object Versioned {
   private def writeDataLayout(df: DataFrame, dir: String,
       spec: Seq[PartField])
       : (Seq[(String, Long)], Seq[(String, String, String)]) =
-    if (spec.isEmpty) (writeData(df, dir), Seq.empty)
+    if (spec.isEmpty) writeFresh(df, dir, spec)
     else {
       df.persist()
       try {
-        val anyNull = spec.map(f => col(f.source).isNull)
-          .reduce(_ || _)
-        if (df.filter(anyNull).isEmpty) writeDataPartitioned(df, dir, spec)
-        else (writeData(df, dir), Seq.empty)
+        val anyNull = spec.map(f => col(f.source).isNull).reduce(_ || _)
+        writeFresh(df, dir, if (df.filter(anyNull).isEmpty) spec else Seq.empty)
       } finally df.unpersist()
     }
 
@@ -1696,20 +1693,73 @@ object Versioned {
     }
   }
 
-  /** The data-file names whose LIVE rows contain one of `keys` — the
-    * COW/MOR hit-detection scan. The file name is captured AT THE SCAN
-    * (readLive's fileCol) because an input_file_name above the DV
-    * anti-join would read blank post-shuffle; already-DV-deleted rows
-    * do not count as hits (deleting a dead row must not rewrite/mark a
-    * file).
+  /** The COW HIT SCAN: the names of the `entries` files whose LIVE
+    * rows `matching` keeps — a key join (upsert, deleteKeys) or a
+    * predicate's TRUE rows (deleteWhere, overwriteWhere's candidates).
+    * The file name is captured AT THE SCAN (readLive's fileCol) because
+    * an input_file_name above the DV anti-join would read blank
+    * post-shuffle; already-DV-deleted rows do not count as hits
+    * (deleting a dead row must not rewrite/mark a file). No entries,
+    * no job.
     */
-  private def hitFiles(spark: SparkSession, dir: String, base: Manifest,
-      keyCol: String, k: DataFrame): Set[String] =
-    if (base.entries.isEmpty) Set.empty
-    else readLive(spark, dir, base, base.entries, Some("__graft_hit_f"))
-      .join(broadcast(k), keyCol)
+  private def hitScan(spark: SparkSession, dir: String, base: Manifest,
+      entries: Seq[(String, Long, Int)])(
+      matching: DataFrame => DataFrame): Set[String] =
+    if (entries.isEmpty) Set.empty
+    else matching(readLive(spark, dir, base, entries, Some("__graft_hit_f")))
       .select("__graft_hit_f").distinct().collect()
       .map(_.getString(0)).toSet
+
+  /** The COW REWRITE of the `touched` files: their LIVE rows
+    * (era-aware renames, delete sidecars applied — a rewrite must not
+    * resurrect MOR-deleted rows) filtered by `keep`, unioned by name
+    * with the `incoming` rows (upsert's changes), sized by
+    * [[sizedRewrite]] (`extraBytes` estimates the incoming rows) and
+    * written by [[writeDataLayout]] under the current schema era.
+    * Zero-row output files drop with their tags — an all-matching file
+    * rewrites to nothing — except that a rewrite of EVERY file of
+    * `base` keeps one, so the emptied table still reads under its
+    * shape, unless the commit adds other files (`othersAdded`).
+    * Nothing touched and nothing incoming: no job, no file.
+    */
+  private def cowRewrite(spark: SparkSession, dir: String, base: Manifest,
+      touched: Set[String], spec: Seq[PartField],
+      incoming: Option[DataFrame] = None, extraBytes: Long = 0L,
+      othersAdded: Boolean = false)(
+      keep: DataFrame => DataFrame)
+      : (Seq[(String, Long)], Seq[(String, String, String)]) = {
+    val old = if (touched.isEmpty) None
+      else Some(keep(readLive(spark, dir, base,
+        base.entries.filter(e => touched(e._1)))))
+    (old ++ incoming).reduceOption((o, i) =>
+      o.unionByName(i.select(o.columns.map(col): _*))
+    ).fold((Seq.empty[(String, Long)], Seq.empty[(String, String, String)])) {
+      rows =>
+        val (files, tags) = writeDataLayout(
+          sizedRewrite(spark, dir, touched, extraBytes, spec)(rows), dir, spec)
+        val nonEmpty = files.filter(_._2 > 0)
+        val out =
+          if (nonEmpty.nonEmpty || othersAdded ||
+            base.entries.exists(e => !touched(e._1))) nonEmpty
+          else files.take(1)
+        (out, tags.filter(t => out.exists(_._1 == t._1)))
+    }
+  }
+
+  /** The one COPY-ON-WRITE manifest: `base` minus the `retired` files
+    * plus the `added` ones (current era, [[tagged]]), delete sidecars
+    * reconciled with the retirement ([[retireDvRows]]) and the retired
+    * files' `#pfile` tags swapped for `addedTags`. [[commitReplace]]
+    * and the library verbs ([[upsert]], [[deleteKeys]],
+    * [[deleteWhere]], [[overwriteWhere]]) all commit through it.
+    */
+  private def cowManifest(spark: SparkSession, dir: String, base: Manifest,
+      retired: Set[String], added: Seq[(String, Long)],
+      addedTags: Seq[(String, String, String)]): Manifest =
+    Manifest(base.changes,
+      base.entries.filterNot(e => retired(e._1)) ++ tagged(added, base.changes),
+      dvs = retireDvRows(spark, dir, base.dvs, retired),
+      ptags = base.ptags.filterNot(t => retired(t._1)) ++ addedTags)
 
   /** Reconcile MOR delete sidecars with a COW commit that retires
     * (rewrites or replaces) target data files: sidecar rows targeting a
@@ -1724,7 +1774,7 @@ object Versioned {
     * either side is empty — append-only and dv-free commits pay
     * nothing.
     */
-  private[graft] def retireDvRows(spark: SparkSession, dir: String,
+  private def retireDvRows(spark: SparkSession, dir: String,
       dvs: Seq[DvRef], retired: Set[String]): Seq[DvRef] =
     if (dvs.isEmpty || retired.isEmpty) dvs
     else dvs.flatMap { ref =>
@@ -1773,7 +1823,8 @@ object Versioned {
   /** COW MERGE commit: same-key rows replaced, `deleteFlag` rows
     * removed, new keys appended — only files CONTAINING a matched key
     * are rewritten (new files), everything else is carried by
-    * reference. `changes` must hold at most one row per key: DataFrames
+    * reference ([[hitScan]], [[cowRewrite]], [[cowManifest]]).
+    * `changes` must hold at most one row per key: DataFrames
     * carry no row order, so "last change wins" cannot be decided here;
     * compact the change source per key (by its own offset/ts) first, as
     * [[graft.streaming.EventStream.cdcApplyVersionedStream]] does. A
@@ -1784,9 +1835,8 @@ object Versioned {
     changes.persist()
     try commitManifest(spark, dir) { base =>
       val keys = changes.select(keyCol).distinct()
-      val touched = hitFiles(spark, dir, base, keyCol, keys)
-      val survivors = deleteFlag.fold(changes)(notDeleted(changes, _))
-      val spec = partitionSpecOf(spark, dir)
+      val touched = hitScan(spark, dir, base, base.entries)(
+        _.join(broadcast(keys), keyCol))
       // COW-rewrite output sizing (guide §6 — small files hurt twice):
       // without it the rewrite's file count is its LINEAGE partitioning
       // — one task per touched file PLUS the batch's shuffle partitions
@@ -1800,55 +1850,26 @@ object Versioned {
       // scale-adaptive, never a core-count constant; the partitioned
       // writer lays out by value and is left alone.
       val rowW = changes.schema.map(_.dataType.defaultSize).sum + 16
-      def sized(df: DataFrame): DataFrame =
-        sizedRewrite(spark, dir, touched,
-          changes.count() * rowW.toLong, spec)(df)
-      val (rewritten, rtags) =
-        if (touched.isEmpty) writeDataLayout(sized(survivors), dir, spec)
-        else {
-          // LIVE logical read of the touched files (era-aware renames,
-          // delete sidecars applied — a rewrite must not resurrect
-          // MOR-deleted rows), so the rewrite lands under the current
-          // schema era with only the surviving rows
-          val old = readLive(spark, dir, base,
-            base.entries.filter(e => touched(e._1)))
-            .join(broadcast(keys), Seq(keyCol), "left_anti")
-          writeDataLayout(
-            sized(old.unionByName(survivors.select(old.columns.map(col): _*))),
-            dir, spec)
-        }
-      // DV refs to untouched files stay live; rows targeting rewritten
-      // files are retired WITH the rewrite so history's nDel stays
-      // exact ([[retireDvRows]])
-      Manifest(base.changes,
-        base.entries.filterNot(e => touched(e._1)) ++
-          tagged(rewritten, base.changes),
-          dvs = retireDvRows(spark, dir, base.dvs, touched),
-          ptags = base.ptags.filterNot(t => touched(t._1)) ++ rtags)
+      val (rewritten, rtags) = cowRewrite(spark, dir, base, touched,
+        partitionSpecOf(spark, dir),
+        Some(deleteFlag.fold(changes)(notDeleted(changes, _))),
+        changes.count() * rowW.toLong)(
+        _.join(broadcast(keys), Seq(keyCol), "left_anti"))
+      cowManifest(spark, dir, base, touched, rewritten, rtags)
     } finally changes.unpersist()
   }
 
-  /** Delete by key — COW like [[upsert]], rewriting only affected files
-    * (rewrite output sized by [[sizedRewrite]], same discipline). */
+  /** Delete by key — COW like [[upsert]], rewriting only affected files. */
   def deleteKeys(spark: SparkSession, dir: String, keyCol: String,
       keys: DataFrame): Long =
     commitManifest(spark, dir) { base =>
       val k = keys.select(keyCol).distinct()
-      val touched = hitFiles(spark, dir, base, keyCol, k)
-      val spec = partitionSpecOf(spark, dir)
-      val (rewritten, rtags) =
-        if (touched.isEmpty) (Seq.empty, Seq.empty)
-        else writeDataLayout(
-          sizedRewrite(spark, dir, touched, 0L, spec)(
-            readLive(spark, dir, base,
-              base.entries.filter(e => touched(e._1)))
-              .join(broadcast(k), Seq(keyCol), "left_anti")), dir,
-          spec)
-      Manifest(base.changes,
-        base.entries.filterNot(e => touched(e._1)) ++
-          tagged(rewritten, base.changes),
-          dvs = retireDvRows(spark, dir, base.dvs, touched),
-          ptags = base.ptags.filterNot(t => touched(t._1)) ++ rtags)
+      val touched = hitScan(spark, dir, base, base.entries)(
+        _.join(broadcast(k), keyCol))
+      val (rewritten, rtags) = cowRewrite(spark, dir, base, touched,
+        partitionSpecOf(spark, dir))(
+        _.join(broadcast(k), Seq(keyCol), "left_anti"))
+      cowManifest(spark, dir, base, touched, rewritten, rtags)
     }
 
   /** Predicate delete (SQL `DELETE FROM ... WHERE cond`) — COW like
@@ -1861,24 +1882,12 @@ object Versioned {
   def deleteWhere(spark: SparkSession, dir: String, cond: Column): Long =
     commitManifest(spark, dir) { base =>
       require(base.entries.nonEmpty, s"deleteWhere: $dir has no current version")
-      val touched: Set[String] =
-        readLive(spark, dir, base, base.entries, Some("__graft_hit_f"))
-          .filter(cond) // TRUE rows only — NULL never deletes
-          .select("__graft_hit_f").distinct().collect()
-          .map(_.getString(0)).toSet
-      val spec = partitionSpecOf(spark, dir)
-      val (rewritten, rtags) =
-        if (touched.isEmpty) (Seq.empty, Seq.empty)
-        else writeDataLayout(
-          sizedRewrite(spark, dir, touched, 0L, spec)(
-            readLive(spark, dir, base, base.entries.filter(e => touched(e._1)))
-              .filter(!(cond <=> lit(true)))), dir, // keep FALSE and NULL
-          spec)
-      Manifest(base.changes,
-        base.entries.filterNot(e => touched(e._1)) ++
-          tagged(rewritten, base.changes),
-        dvs = retireDvRows(spark, dir, base.dvs, touched),
-        ptags = base.ptags.filterNot(t => touched(t._1)) ++ rtags)
+      val touched = hitScan(spark, dir, base, base.entries)(
+        _.filter(cond)) // TRUE rows only — NULL never deletes
+      val (rewritten, rtags) = cowRewrite(spark, dir, base, touched,
+        partitionSpecOf(spark, dir))(
+        _.filter(!(cond <=> lit(true)))) // keep FALSE and NULL
+      cowManifest(spark, dir, base, touched, rewritten, rtags)
     }
 
   /** PARTITION-SCOPED OVERWRITE (Delta's `replaceWhere` / Iceberg's
@@ -1896,9 +1905,9 @@ object Versioned {
     *     carried by reference, never read.
     *   - the remainder (untagged files, other-era tags, range
     *     predicates crossing file envelopes): scanned for actual
-    *     hits; hit files are COW-rewritten WITHOUT their matching rows
-    *     (the [[deleteWhere]] discipline — FALSE and NULL rows kept,
-    *     SQL three-valued logic).
+    *     hits ([[hitScan]]); hit files are COW-rewritten WITHOUT their
+    *     matching rows ([[cowRewrite]], the [[deleteWhere]] discipline —
+    *     FALSE and NULL rows kept, SQL three-valued logic).
     * NEW rows must all SATISFY `cond` (checked up front, loudly) —
     * Delta's replaceWhere constraint: a backfill that writes outside
     * its declared region is the classic silent-corruption bug. `cond`
@@ -1928,35 +1937,18 @@ object Versioned {
         // of the rest, only files whose stats envelope AND partition
         // tags admit a matching row are scanned for hits (both prunes
         // are necessary-condition filters — sound whatever cond does)
-        val candidates = prunedEntries(base)(bounds, eqValues, entries = rest)
-        val touched: Set[String] =
-          if (candidates.isEmpty) Set.empty
-          else readLive(spark, dir, base, candidates, Some("__graft_hit_f"))
-            .filter(cond) // TRUE rows only — NULL never deletes
-            .select("__graft_hit_f").distinct().collect()
-            .map(_.getString(0)).toSet
-        val (rewritten0, rtags) =
-          if (touched.isEmpty) (Seq.empty, Seq.empty)
-          else writeDataLayout(
-            readLive(spark, dir, base, base.entries.filter(e => touched(e._1)))
-              .filter(!(cond <=> lit(true))), dir, // keep FALSE and NULL
-            partSpec)
-        // an all-matching file rewrites to nothing
-        val rewritten = rewritten0.filter(_._2 > 0)
-        val (added, newTags) =
-          if (partSpec.nonEmpty) writeDataPartitioned(df, dir, partSpec)
-          else (writeData(df, dir), Seq.empty)
-        val retired = fullHit.map(_._1).toSet ++ touched
-        Manifest(base.changes,
-          base.entries.filterNot(e => retired(e._1)) ++
-            tagged(rewritten, base.changes) ++ tagged(added, base.changes),
-          dvs = retireDvRows(spark, dir, base.dvs, retired),
-          // fully-retired tags drop with their files; boundary files
-          // RE-TAG through the partitioned rewrite (q317 — previously
-          // their tags dropped and pruning failed open); the new data
-          // tags through the writer
-          ptags = base.ptags.filterNot(t => retired(t._1)) ++
-            rtags.filter(t => rewritten.exists(_._1 == t._1)) ++ newTags)
+        val touched = hitScan(spark, dir, base,
+          prunedEntries(base)(bounds, eqValues, entries = rest))(
+          _.filter(cond)) // TRUE rows only — NULL never deletes
+        // boundary files RE-TAG through the partitioned rewrite (q317);
+        // fully-retired tags drop with their files; the new data tags
+        // through the writer
+        val (rewritten, rtags) = cowRewrite(spark, dir, base, touched,
+          partSpec, othersAdded = true)(
+          _.filter(!(cond <=> lit(true)))) // keep FALSE and NULL
+        val (added, newTags) = writeFresh(df, dir, partSpec)
+        cowManifest(spark, dir, base, fullHit.map(_._1).toSet ++ touched,
+          rewritten ++ added, rtags ++ newTags)
       }
     } finally df.unpersist()
   }
@@ -2253,26 +2245,19 @@ object Versioned {
       (hit.size, touched)
     }
 
-  /** The STAGED-WRITE halves of atomic CREATE/REPLACE TABLE [AS
-    * SELECT] ([[graft.sources.v2.GraftStagedTable]]): data files land
-    * under `dir/data/` WITHOUT a commit (a crash before the staged
-    * commit leaves vacuum-aged orphans, the same guarantee every
-    * writer has), then [[commitStagedState]] publishes them as ONE
-    * manifest whose schema lineage is RESET (a REPLACE's schema need
-    * not relate to the old one; old manifests keep their own change
-    * lists, so time travel across the replace boundary still reads
-    * every version under its own schema). Streaming `#txn` watermarks
-    * carry forward — a replace must not reopen exactly-once windows.
-    */
-  private[graft] def stageData(df: DataFrame, dir: String): Seq[(String, Long)] =
-    writeData(df, dir)
-
-  private[graft] def stageDataPartitioned(df: DataFrame, dir: String,
-      fields: Seq[PartField])
-      : (Seq[(String, Long)], Seq[(String, String, String)]) =
-    writeDataPartitioned(df, dir, fields)
-
-  /** `prepare` runs INSIDE the ledger slot, after any concurrent
+  /** The COMMIT half of atomic CREATE/REPLACE TABLE [AS SELECT]
+    * ([[graft.sources.v2.GraftStagedTable]]): the staged table's
+    * insert lands its data files under `dir/data/` through
+    * [[writeFresh]] WITHOUT a commit (a crash before this commit leaves
+    * vacuum-aged orphans, the same guarantee every writer has), then
+    * this publishes them as ONE manifest whose schema lineage is RESET
+    * (a REPLACE's schema need not relate to the old one; old manifests
+    * keep their own change lists, so time travel across the replace
+    * boundary still reads every version under its own schema).
+    * Streaming `#txn` watermarks carry forward — a replace must not
+    * reopen exactly-once windows.
+    *
+    * `prepare` runs INSIDE the ledger slot, after any concurrent
     * commit has settled and before the manifest lands — the staged
     * table's mode revalidation and metadata rewrite go here, so a
     * racing CREATE/DROP is genuinely serialized (check-then-act
@@ -2670,19 +2655,19 @@ object Versioned {
     * sidecars apply, so a deleted row never resurrects through a
     * pruned path), `fileCol` keeping each row's data-file name (the
     * `_file` metadata column). Returns (frame, filesKept, filesTotal).
-    * A zero-entry manifest reads as an empty frame under its
-    * [[schemaOf]] (`fileCol` ""); a prune that keeps nothing reads
-    * the full live frame with `limit(0)`, so the shape is the
-    * manifest's either way. Prunes are necessary conditions only: the
-    * caller re-applies its full filter.
+    * Keeping nothing — a prune that rules out every file, or a
+    * zero-entry manifest — reads no file: an empty frame under the
+    * manifest's [[schemaOf]] (`fileCol` ""). Prunes are necessary
+    * conditions only: the caller re-applies its full filter.
     */
   private[graft] def readPruned(spark: SparkSession, dir: String,
       m: Manifest, kept: Seq[(String, Long, Int)],
       fileCol: Option[String] = None): (DataFrame, Int, Int) = {
     val df =
-      if (m.entries.isEmpty) readManifest(spark, dir, m, fileCol)
-      else if (kept.isEmpty) readLive(spark, dir, m, m.entries, fileCol).limit(0)
-      else readLive(spark, dir, m, kept, fileCol)
+      if (kept.isEmpty) {
+        val empty = emptyOf(spark, schemaOf(spark, dir, m))
+        fileCol.fold(empty)(fc => empty.withColumn(fc, lit("")))
+      } else readLive(spark, dir, m, kept, fileCol)
     (df, kept.size, m.entries.size)
   }
 
@@ -2924,26 +2909,17 @@ object Versioned {
       fileCol: Option[String] = None): DataFrame =
     readManifest(spark, dir, branchHead(spark, dir, name)._1, fileCol)
 
-  /** Append-only branch commit — the main append's manifest publish
-    * ([[commitManifest]]) on the branch lineage: main readers cannot
-    * see it. Returns the branch-local sequence number.
+  /** Append-only branch commit — [[append]] on the branch lineage:
+    * main readers cannot see it. A PARTITIONED BY table's branch
+    * staging writes under the declared spec (q316): staged files carry
+    * `#pfile` tags in the BRANCH manifest, so audits prune while
+    * reading the branch AND the published files prune on main — without
+    * this, a fast_forward/cherry_pick would silently lay untagged files
+    * into the declared layout (the exact hole q308 closed for
+    * streaming). Returns the branch-local sequence number.
     */
-  def appendToBranch(df: DataFrame, dir: String, name: String): Long = {
-    val spark = df.sparkSession
-    // a PARTITIONED BY table's branch staging routes through the
-    // partitioned writer (q316): staged files carry `#pfile` tags in
-    // the BRANCH manifest, so audits prune while reading the branch
-    // AND the published files prune on main — without this, a
-    // fast_forward/cherry_pick would silently lay untagged files into
-    // the declared layout (the exact hole q308 closed for streaming)
-    val (entries, tags) = partitionSpecOf(spark, dir) match {
-      case spec if spec.nonEmpty => writeDataPartitioned(df, dir, spec)
-      case _ => (writeData(df, dir), Seq.empty)
-    }
-    commitManifest(spark, dir, Branch(name))(head =>
-      Manifest(head.changes, head.entries ++ tagged(entries, head.changes),
-        dvs = head.dvs, ptags = head.ptags ++ tags))
-  }
+  def appendToBranch(df: DataFrame, dir: String, name: String): Long =
+    append(df, dir, partitionSpecOf(df.sparkSession, dir), Branch(name))
 
   private final class AlreadyPublished(val v: Long) extends RuntimeException
 

@@ -226,7 +226,7 @@ final class GraftCatalog extends TableCatalog with SupportsNamespaces
     * mix of IDENTITY columns and the TEMPORAL transforms days/months —
     * persists as the `graft.partition` property: every INSERT then
     * routes through the partitioned writer
-    * ([[Versioned.appendPartitionedSpec]]), whose per-file `#pfile`
+    * ([[Versioned.append]] with the spec), whose per-file `#pfile`
     * tags (one line per spec field) drive the SQL scan's partition
     * pruning — equality values per identity axis (q293), RANGES over
     * the source column per temporal axis (a ts predicate prunes
@@ -808,10 +808,7 @@ final class GraftStagedTable(cat: GraftCatalog, ident: Identifier,
         override def toInsertableRelation: InsertableRelation =
           new InsertableRelation {
             override def insert(data: DataFrame, ov: Boolean): Unit =
-              staged =
-                if (partitionSpec.nonEmpty)
-                  Versioned.stageDataPartitioned(data, dir, partitionSpec)
-                else (Versioned.stageData(data, dir), Seq.empty)
+              staged = Versioned.writeFresh(data, dir, partitionSpec)
           }
       }
     }
@@ -1989,14 +1986,9 @@ final class VersionedWriteBuilder(dir: String, info: LogicalWriteInfo,
                 VersionedScan.eqValuesOf(fs),
                 tags => VersionedScan.provedByTags(fs, tags),
                 partitionSpec)
-            case None => (overwrite || ov, partitionSpec.nonEmpty) match {
-              case (true, true) =>
-                Versioned.createPartitionedSpec(data, dir, partitionSpec)
-              case (true, false) => Versioned.create(data, dir)
-              case (false, true) =>
-                Versioned.appendPartitionedSpec(data, dir, partitionSpec)
-              case (false, false) => Versioned.append(data, dir)
-            }
+            case None =>
+              if (overwrite || ov) Versioned.create(data, dir, partitionSpec)
+              else Versioned.append(data, dir, partitionSpec)
           }
       }
 

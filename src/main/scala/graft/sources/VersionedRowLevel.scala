@@ -64,8 +64,8 @@ import graft.sources.Versioned
   * names (uncommitted files are unreachable orphans; vacuum's age
   * window protects in-flight writers), and whose driver-side commit is
   * ONE manifest commit through the OCC ledger: retire the scanned
-  * files, add the staged files, reconcile delete sidecars
-  * ([[Versioned.retireDvRows]]).
+  * files, add the staged files, reconcile delete sidecars — the
+  * library COW verbs' manifest ([[Versioned.commitReplace]]).
   *
   * ISOLATION: the operation pins the table SNAPSHOT (version, schema
   * changes, dv lines) when Spark builds it. At commit, concurrent

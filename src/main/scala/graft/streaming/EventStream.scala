@@ -692,13 +692,9 @@ object EventStream {
     // declare explicit schemas and never consult it. Leaking it on
     // would make a later unrelated nanos-parquet inference silently
     // yield raw longs instead of the loud failure the caller expects.
-    val key = "spark.sql.legacy.parquet.nanosAsLong"
-    val prior = spark.conf.getOption(key)
-    def restore(): Unit = prior.fold(spark.conf.unset(key))(spark.conf.set(key, _))
-    spark.conf.set(key, "true")
-    val isNanos =
-      try spark.read.parquet(dir).schema("ts").dataType == LongType
-      finally restore()
+    val isNanos = graft.engine.ScopedConf(spark,
+        "spark.sql.legacy.parquet.nanosAsLong" -> "true")(
+      spark.read.parquet(dir).schema("ts").dataType == LongType)
     if (isNanos) readEventsNanos(spark, dir) else readEvents(spark, dir)
   }
 }

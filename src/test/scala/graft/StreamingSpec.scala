@@ -1230,7 +1230,7 @@ class StreamingSpec extends AnyFunSuite {
     val root = graft.engine.Staging.scratch("graft-stream-spec", "vpartreplay")
     val dir = new java.io.File(root, "table").getAbsolutePath
     val spec = Seq(Versioned.PartField.Identity("cat"))
-    Versioned.createPartitionedSpec(
+    Versioned.create(
       Seq((1L, "x"), (2L, "y")).toDF("k", "cat"), dir, spec)           // v1
     val schema = org.apache.spark.sql.types.StructType.fromDDL(
       "k BIGINT, cat STRING")

@@ -164,6 +164,45 @@ class VersionedSpec extends AnyFunSuite {
       + ((7L, "CHANGED")) + ((100L, "NEW"))))
   }
 
+  test("overwriteWhere sizes its boundary rewrite: one file for several touched files") {
+    val dir = freshDir("owsized")
+    table(dir)                                                     // v1: 4 files
+    val v1 = Versioned.manifestOf(spark, dir, 1).entries.map(_._1).toSet
+    Versioned.overwriteWhere(Seq((5L, "NEW")).toDF("k", "payload").coalesce(1),
+      dir, col("k") <= 10L, Seq.empty, Seq.empty, _ => false)      // v2
+    val m2 = Versioned.manifestOf(spark, dir, 2)
+    val retired = v1 -- m2.entries.map(_._1)
+    assert(retired.size > 1, s"the condition must cross several files: $retired")
+    val (fresh, rewrite) = m2.entries.filterNot(e => v1(e._1)).partition(e =>
+      spark.read.parquet(s"$dir/data/${e._1}")
+        .filter(col("payload") === "NEW").count() > 0)
+    assert(fresh.size == 1)
+    assert(rewrite.size == 1,
+      s"${retired.size} touched files must rewrite into one sized file: $rewrite")
+    assert(Versioned.read(spark, dir).as[(Long, String)].collect().toSet ===
+      ((11L to 40L).map(k => (k, s"v$k")).toSet + ((5L, "NEW"))))
+  }
+
+  test("deleteWhere commits no zero-row entry; emptying the table keeps its shape") {
+    val dir = freshDir("delempty")
+    def rows(lo: Long, hi: Long) =
+      (lo to hi).map(k => (k, s"v$k")).toDF("k", "payload").coalesce(1)
+    Versioned.create(rows(1L, 10L), dir)                           // v1
+    Versioned.append(rows(11L, 40L), dir)                          // v2
+    val v2 = Versioned.manifestOf(spark, dir, 2).entries
+    Versioned.deleteWhere(spark, dir, col("k") <= 10L)             // v3
+    val m3 = Versioned.manifestOf(spark, dir, 3)
+    assert(m3.entries == v2.tail,
+      s"the emptied file retires without a zero-row rewrite: ${m3.entries}")
+    assert(Versioned.read(spark, dir).count() == 30L)
+    Versioned.deleteWhere(spark, dir, col("k") > 0L)               // v4
+    val m4 = Versioned.manifestOf(spark, dir, 4)
+    assert(m4.entries.size == 1 && m4.entries.head._2 == 0L,
+      s"a delete of every row keeps one zero-row file: ${m4.entries}")
+    val empty = Versioned.read(spark, dir)
+    assert(empty.columns.toSeq == Seq("k", "payload") && empty.count() == 0L)
+  }
+
   test("history counts versions, files, and rows without scanning data") {
     val dir = freshDir("hist")
     table(dir)
