@@ -156,12 +156,12 @@ object Avro {
   }
 
   /** Write `df` as one OCF per partition under `dir`; returns the file
-    * names. File names carry a commit-unique token (the writeData
-    * discipline), so successive writes APPEND new containers — possibly
-    * under an evolved schema, which [[readAvroResolved]] resolves
-    * per-file. Every partition writes a file (an empty partition yields
-    * a schema-only container), so the schema survives even an empty
-    * frame.
+    * names. File names carry a commit-unique token (the versioned
+    * table's staged-writer discipline), so successive writes APPEND new
+    * containers — possibly under an evolved schema, which
+    * [[readAvroResolved]] resolves per-file. Every partition writes a
+    * file (an empty partition yields a schema-only container), so the
+    * schema survives even an empty frame.
     */
   def writeAvro(df: DataFrame, dir: String): Seq[String] = {
     val schema = df.schema

@@ -302,19 +302,41 @@ object Lake {
     * opportunity; within such a bucket, THIS sort is the layout.
     */
   def zorderWrite(df: DataFrame, outDir: String,
-      colA: String, colB: String, nFiles: Int): Unit = {
+      colA: String, colB: String, nFiles: Int): Unit =
+    zorderClustered(df, zorderKeyOf(df, colA, colB), nFiles)
+      .write.mode("overwrite").parquet(outDir)
+
+  /** The linear [[zorderKey]] of `df` over (colA, colB): one min/max
+    * aggregate gives the bucket bounds; an all-NULL column has none and
+    * fails loudly. The key of [[zorderWrite]] and of the versioned
+    * table's z-order compaction ([[Versioned.optimizeZorder]]).
+    */
+  private[graft] def zorderKeyOf(df: DataFrame,
+      colA: String, colB: String): Column = {
     val bounds = df.agg(
       min(col(colA)).cast("double"), max(col(colA)).cast("double"),
       min(col(colB)).cast("double"), max(col(colB)).cast("double")).head()
     require(!bounds.anyNull, s"z-order bounds need non-null $colA/$colB stats")
-    val z = zorderKey(
+    zorderKey(
       col(colA), bounds.getDouble(0), bounds.getDouble(1),
       col(colB), bounds.getDouble(2), bounds.getDouble(3))
-    df.withColumn("__z", z)
-      .repartitionByRange(nFiles, col("__z"))
-      .sortWithinPartitions("__z")
-      .drop("__z")
-      .write.mode("overwrite").parquet(outDir)
+  }
+
+  /** The one Z-ORDER CLUSTERING: `df` range-partitioned into `nFiles`
+    * by the Morton key `z` and sorted by it within each partition. The
+    * key rides a temp column named so that no column of `df` holds the
+    * name — a fixed name would OVERWRITE a same-named user column
+    * (withColumn) and the trailing drop would erase it — and never
+    * reaches the output.
+    */
+  private[graft] def zorderClustered(df: DataFrame, z: Column,
+      nFiles: Int): DataFrame = {
+    val zc = Iterator.from(0).map(i => if (i == 0) "__z" else s"__z$i")
+      .find(n => !df.columns.contains(n)).get
+    df.withColumn(zc, z)
+      .repartitionByRange(nFiles, col(zc))
+      .sortWithinPartitions(zc)
+      .drop(zc)
   }
 
   /** Quantile-bucketed z-order rewrite — the skew-resistant form of
@@ -344,11 +366,7 @@ object Lake {
     val bB = boundaries(colB)
     val z = spread16(qbucket(col(colA), bA))
       .bitwiseOR(shiftleft(spread16(qbucket(col(colB), bB)), 1))
-    df.withColumn("__z", z)
-      .repartitionByRange(nFiles, col("__z"))
-      .sortWithinPartitions("__z")
-      .drop("__z")
-      .write.mode("overwrite").parquet(outDir)
+    zorderClustered(df, z, nFiles).write.mode("overwrite").parquet(outDir)
   }
 
   /** JSONL training-data export — the delivery format most training

@@ -27,7 +27,10 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
   *     ([[hitScan]]), one sized rewrite of the touched files
   *     ([[cowRewrite]]) and one retire-and-add manifest
   *     ([[cowManifest]]); every write of fresh rows goes through one
-  *     layout writer ([[writeFresh]]).
+  *     layout writer ([[writeFresh]]). [[optimize]] and
+  *     [[optimizeZorder]] are one compaction ([[compact]]) committing
+  *     through the same [[cowManifest]], and every data or sidecar file
+  *     lands through one staged writer ([[writeStaged]]).
   *   - Writers serialize through [[Lake.withCommit]]'s optimistic
   *     claim/commit ledger (atomic create-if-absent); the manifest
   *     rename itself is tmp-then-rename, so a crashed writer leaves at
@@ -380,7 +383,7 @@ object Versioned {
       org.apache.parquet.HadoopReadOptions.builder(conf, path).build())
 
   /** Spark-SQL schema of one parquet data file, read from its FOOTER on
-    * the driver (the [[writeData]] metadata-read discipline, through
+    * the driver (the [[writeStaged]] metadata-read discipline, through
     * Spark's own parquet→Catalyst converter under the session's conf).
     * Internal readers pass it to `spark.read.schema(...)`: a bare
     * `spark.read.parquet(paths)` INFERS the schema through a Spark job
@@ -690,41 +693,8 @@ object Versioned {
     ms.map { case (v, m) => (v, m.entries.size, rows(v)) }
   }
 
-  /** Write `df` as immutable data files; returns (file, rows) entries.
-    * Files land under `dir/data/` named `<token>-part-*.parquet` — the
-    * commit-unique token keeps concurrent writers' files disjoint.
-    */
-  private def writeData(df: DataFrame, dir: String): Seq[(String, Long)] = {
-    val spark = df.sparkSession
-    val fs = fsOf(spark, dir)
-    val token = java.util.UUID.randomUUID.toString.take(8)
-    val tmp = new org.apache.hadoop.fs.Path(dir, s"_staging-$token")
-    df.write.mode("overwrite").parquet(tmp.toString)
-    val dataDir = new org.apache.hadoop.fs.Path(dir, "data")
-    fs.mkdirs(dataDir)
-    val entries = fs.listStatus(tmp).toSeq
-      .filter(s => s.isFile && s.getPath.getName.endsWith(".parquet"))
-      .map { s =>
-        val name = s"$token-${s.getPath.getName}"
-        require(fs.rename(s.getPath, new org.apache.hadoop.fs.Path(dataDir, name)),
-          s"staging rename failed for ${s.getPath}")
-        name
-      }
-    fs.delete(tmp, true)
-    // per-file row counts from parquet FOOTERS — a driver-side metadata
-    // read (ParquetFileReader.getRecordCount), not a Spark job per file:
-    // with one commit per streaming micro-batch (q219) the per-file job
-    // launch dominated the whole upsert
-    val conf = spark.sparkContext.hadoopConfiguration
-    entries.map { name =>
-      val reader = openFooter(conf,
-        new org.apache.hadoop.fs.Path(dataDir, name))
-      try (name, reader.getRecordCount) finally reader.close()
-    }
-  }
-
   /** One file's column stats from its parquet FOOTER (a driver-side
-    * metadata read, the [[writeData]] row-count discipline): per
+    * metadata read, the [[writeStaged]] row-count discipline): per
     * top-level primitive column, the min/max envelope across row
     * groups, encoded for the manifest entry line. Four kinds, each
     * compared in its own EXACT domain ([[statsOverlap]]):
@@ -1246,16 +1216,17 @@ object Versioned {
         dvs = base.dvs, ptags = base.ptags ++ tags))
   }
 
-  /** The one writer of FRESH rows: [[writeData]] for an empty spec,
-    * else [[writeDataPartitioned]] (one `#pfile` tag line per file and
-    * spec field). Fresh rows reject NULL partition values loudly; only
-    * a rewrite of existing rows falls back ([[writeDataLayout]]).
+  /** The one writer of FRESH rows, for callers outside this object (the
+    * catalog's INSERT, the streaming sink's partitioned epoch): the
+    * staged writer [[writeStaged]] under `spec` (empty: untagged),
+    * with no within-file sort. Fresh rows reject NULL partition values
+    * loudly; only a rewrite of existing rows falls back
+    * ([[writeDataLayout]]).
     */
   private[graft] def writeFresh(df: DataFrame, dir: String,
       spec: Seq[PartField])
       : (Seq[(String, Long)], Seq[(String, String, String)]) =
-    if (spec.isEmpty) (writeData(df, dir), Seq.empty)
-    else writeDataPartitioned(df, dir, spec)
+    writeStaged(df, dir, spec)
 
   /** PARTITIONED write (Iceberg-shape, not hive-shape: the PARTITION
     * TAG lives in the manifest as a `#pfile` line per data file, the
@@ -1410,42 +1381,57 @@ object Versioned {
     }
   }
 
-  private[graft] def writeDataPartitioned(df: DataFrame, dir: String,
-      fields: Seq[PartField], zsort: Option[String] = None)
+  /** The one STAGED WRITE of the table's files (data files and MOR
+    * sidecars alike): `df` lands in `dir/_staging-<token>` through ONE
+    * Spark write job, the leaf walk moves its parquet files into the
+    * flat `dir/data/` under the commit-unique token (concurrent
+    * writers' files stay disjoint), the staging dir goes, and each
+    * file's row count comes from its parquet FOOTER — a driver-side
+    * metadata read, not a Spark job per file (with one commit per
+    * streaming micro-batch, q219, the per-file job launch dominated the
+    * whole upsert). Returns (file, rows) entries and `#pfile` tags.
+    *
+    * Zero partition `fields`: files land as `<token>-part-*.parquet`,
+    * untagged. Otherwise the frame is clustered by its partition values
+    * and written `partitionBy` them, so each leaf file is single-valued
+    * for every field; the walk records one (file, field, value) tag
+    * per file and field, and a NULL value fails loudly (see
+    * [[appendPartitioned]] for the tag format). `zsort` sorts each
+    * task's rows by (partition values..., zsort) before the write — the
+    * z-order compaction within a declared layout ([[compact]]), each
+    * leaf file landing z-clustered so its parquet ROW-GROUP envelopes
+    * tighten.
+    */
+  private def writeStaged(df: DataFrame, dir: String,
+      fields: Seq[PartField], zsort: Option[Column] = None)
       : (Seq[(String, Long)], Seq[(String, String, String)]) = {
     val spark = df.sparkSession
-    require(fields.nonEmpty, "partitioned write: empty partition spec")
     // the SQL path is guarded by validateProps; library callers
     // ([[append]]/[[create]] with a spec) must fail HERE with the named
-    // guard — a repeated field would collapse in pvOf (a Map keyed by
-    // PartField) and surface as a confusing staging-walk error
+    // guard — a repeated field would surface as a confusing
+    // staging-walk error
     require(fields.map(_.tagCol).distinct.size == fields.size,
       s"partitioned write: repeated partition field in spec " +
         s"(${fields.map(_.tagCol).mkString(", ")})")
     val fs = fsOf(spark, dir)
     val token = java.util.UUID.randomUUID.toString.take(8)
     val tmp = new org.apache.hadoop.fs.Path(dir, s"_staging-$token")
-    val pvOf: Map[PartField, String] = {
+    val pvs: Seq[String] = {
       val free = Iterator.from(0).map(i => s"__pv$i")
         .filterNot(df.columns.contains)
-      fields.map(f => f -> free.next()).toMap
+      fields.map(_ => free.next())
     }
     // cluster by the partition values so each leaf gets ONE file per
     // upstream partition; __pv* are copies/derivations, so the real
     // columns stay in the data files (partitionBy drops only the
-    // directory columns). `zsort` (q315 OPTIMIZE ZORDER): sort within
-    // tasks by (pv..., zsort) before the write — each leaf file then
-    // lands z-clustered, tightening parquet ROW-GROUP envelopes inside
-    // the one-file-per-value layout; the sort column is dropped before
-    // the write (a projection preserves row order)
-    val staged0 = fields.foldLeft(df)((acc, f) =>
-      acc.withColumn(pvOf(f), partValueColumn(df, f)))
-      .repartition(fields.map(f => col(pvOf(f))): _*)
-    val sorted = zsort.fold(staged0)(zc => staged0
-      .sortWithinPartitions((fields.map(f => col(pvOf(f))) :+ col(zc)): _*)
-      .drop(zc))
-    sorted
-      .write.partitionBy(fields.map(pvOf): _*)
+    // directory columns)
+    val keyed = fields.zip(pvs).foldLeft(df) { case (acc, (f, pv)) =>
+      acc.withColumn(pv, partValueColumn(df, f))
+    }
+    val clustered =
+      if (fields.isEmpty) keyed else keyed.repartition(pvs.map(col): _*)
+    zsort.fold(clustered)(z => clustered.sortWithinPartitions(pvs.map(col) :+ z: _*))
+      .write.partitionBy(pvs: _*)
       .mode("overwrite").parquet(tmp.toString)
     val dataDir = new org.apache.hadoop.fs.Path(dir, "data")
     fs.mkdirs(dataDir)
@@ -1457,27 +1443,28 @@ object Versioned {
           .filter(s => s.isFile && s.getPath.getName.endsWith(".parquet"))
           .map(s => (s.getPath, values))
       else {
-        val f = fields(depth)
-        val prefix = s"${pvOf(f)}="
+        val prefix = s"${pvs(depth)}="
         fs.listStatus(p).toSeq
           .filter(s => s.isDirectory && s.getPath.getName.startsWith(prefix))
           .flatMap { leaf =>
             val value = leaf.getPath.getName.stripPrefix(prefix)
             require(value != "__HIVE_DEFAULT_PARTITION__",
               s"partitioned write: NULL partition values are not " +
-                s"supported (field '${f.tagCol}')")
+                s"supported (field '${fields(depth).tagCol}')")
             walk(leaf.getPath, depth + 1, values :+ value)
           }
       }
-    val staged = walk(tmp, 0, Seq.empty)
-    // the leaf index disambiguates: one task writing several leaves
-    // emits the SAME part-N-<uuid> name under each, so the flat data/
-    // rename needs more than the original file name
-    val moved = staged.zipWithIndex.map { case ((src, values), i) =>
-      val name = f"$token-p$i%04d-${src.getName}"
-      require(fs.rename(src, new org.apache.hadoop.fs.Path(dataDir, name)),
-        s"staging rename failed for $src")
-      (name, values)
+    // the leaf index disambiguates partitioned files: one task writing
+    // several leaves emits the SAME part-N-<uuid> name under each, so
+    // the flat data/ rename needs more than the original file name
+    val moved = walk(tmp, 0, Seq.empty).zipWithIndex.map {
+      case ((src, values), i) =>
+        val name =
+          if (fields.isEmpty) s"$token-${src.getName}"
+          else f"$token-p$i%04d-${src.getName}"
+        require(fs.rename(src, new org.apache.hadoop.fs.Path(dataDir, name)),
+          s"staging rename failed for $src")
+        (name, values)
     }
     fs.delete(tmp, true)
     val conf = spark.sparkContext.hadoopConfiguration
@@ -1749,16 +1736,21 @@ object Versioned {
   /** The one COPY-ON-WRITE manifest: `base` minus the `retired` files
     * plus the `added` ones (current era, [[tagged]]), delete sidecars
     * reconciled with the retirement ([[retireDvRows]]) and the retired
-    * files' `#pfile` tags swapped for `addedTags`. [[commitReplace]]
-    * and the library verbs ([[upsert]], [[deleteKeys]],
-    * [[deleteWhere]], [[overwriteWhere]]) all commit through it.
+    * files' `#pfile` tags swapped for `addedTags`. [[commitReplace]],
+    * the library verbs ([[upsert]], [[deleteKeys]], [[deleteWhere]],
+    * [[overwriteWhere]]) and the compaction ([[compact]]) all commit
+    * through it. A commit retiring EVERY file of `base` drops every
+    * `#dv` line without reading a sidecar: each sidecar row targets a
+    * retired file, so the drop is exact and costs no job.
     */
   private def cowManifest(spark: SparkSession, dir: String, base: Manifest,
       retired: Set[String], added: Seq[(String, Long)],
       addedTags: Seq[(String, String, String)]): Manifest =
     Manifest(base.changes,
       base.entries.filterNot(e => retired(e._1)) ++ tagged(added, base.changes),
-      dvs = retireDvRows(spark, dir, base.dvs, retired),
+      dvs =
+        if (base.entries.forall(e => retired(e._1))) Seq.empty
+        else retireDvRows(spark, dir, base.dvs, retired),
       ptags = base.ptags.filterNot(t => retired(t._1)) ++ addedTags)
 
   /** Reconcile MOR delete sidecars with a COW commit that retires
@@ -1783,7 +1775,7 @@ object Versioned {
       val n = survivors.count()
       if (n == ref.nDel) Some(ref) // no stale rows — sidecar carries as is
       else if (n == 0L) None // fully stale — the #dv line vanishes
-      else writeData(survivors.repartition(1), dir)
+      else writeStaged(survivors.repartition(1), dir, Nil)._1
         .headOption.map { case (f, cnt) => ref.copy(file = f, nDel = cnt) }
     }
 
@@ -1956,18 +1948,20 @@ object Versioned {
   /** MERGE-ON-READ delete (Iceberg equality deletes / Delta deletion
     * vectors, the missing scale axis beside the COW path): the commit
     * writes ONE sidecar parquet of (__target data file, __key) pairs —
-    * the keys actually live in each file — and a `#dv` manifest line;
+    * the keys actually live in each file — through the staged writer
+    * ([[writeStaged]]) and a `#dv` manifest line;
     * NO data file is rewritten. Reads apply the sidecar as an anti-join
     * ([[applyDvs]]; AQE broadcasts the deleted-keys side), so a one-key
     * delete on a 100 TB table costs one tiny sidecar instead of
     * rewriting every touched gigabyte — that asymmetry is the whole
-    * feature. [[optimize]]/[[optimizeZorder]] compact the DVs away (the
-    * rewrite reads live rows and drops the lines); time travel,
+    * feature. The compaction ([[compact]], behind [[optimize]] and
+    * [[optimizeZorder]]) retires the DVs (it rewrites the live rows and
+    * [[cowManifest]] drops every `#dv` line); time travel,
     * [[vacuum]], CDC ([[changesBetween]]) and [[purgeKeys]] all compose
     * (sidecars version like data files). Sidecars bind to files BY
     * NAME, so appends and key re-inserts are never shadowed, and a
-    * later COW rewrite of a target file silently retires the stale
-    * rows. Returns the new version.
+    * later COW rewrite of a target file retires the stale rows
+    * ([[retireDvRows]]). Returns the new version.
     */
   def deleteKeysMor(spark: SparkSession, dir: String, keyCol: String,
       keys: DataFrame): Long =
@@ -1984,7 +1978,7 @@ object Versioned {
         .select(col("__graft_dv_f").as("__target"),
           col(keyCol).as("__key"))
         .distinct()
-      val files = writeData(pairs.repartition(1), dir).filter(_._2 > 0)
+      val files = writeStaged(pairs.repartition(1), dir, Nil)._1.filter(_._2 > 0)
       Manifest(base.changes, base.entries, dvs = base.dvs ++
         files.map { case (f, n) =>
           DvRef(base.changes.size, keyCol, f, n)
@@ -2112,8 +2106,10 @@ object Versioned {
     * matched key is rewritten ONCE (1:1, coalesced) and every manifest
     * that referenced it is repointed in place — version NUMBERS and all
     * untouched files survive, so audit lineage and file sharing are
-    * preserved; emptied files drop out of their manifests; the old
-    * bytes are deleted last. Runs inside the OCC ledger like any
+    * preserved; emptied files drop out of their manifests, except that
+    * a version whose every file empties keeps one zero-row replacement
+    * ([[cowRewrite]]'s rule), so it still reads under its own shape;
+    * the old bytes are deleted last. Runs inside the OCC ledger like any
     * writer. Manifest replacement is delete+rename with the content
     * already safely in the tmp file — a crash between the two leaves a
     * missing manifest whose `.tmp` sibling holds the full content
@@ -2148,16 +2144,18 @@ object Versioned {
       // rewrite each hit file once IN ITS OWN ERA's physical schema —
       // the replacement inherits the era, so every referencing version
       // (each applying its own rename view) reads it unchanged; empty
-      // results drop from manifests
-      val replacement: Map[String, Seq[(String, Long, Int)]] = hit.map { f =>
+      // results drop from manifests (`replacement`), but stay `written`
+      // for a version that would otherwise list no file at all
+      val written: Map[String, Seq[(String, Long, Int)]] = hit.map { f =>
         val era = fileEra(f)
         val pk = physicalName(keyCol, era, renames)
         val cleaned = readDataFiles(spark, dir, Seq(f))
           .join(broadcast(k.withColumnRenamed(keyCol, pk)), Seq(pk), "left_anti")
           .coalesce(1)
-        f -> writeData(cleaned, dir).filter(_._2 > 0)
+        f -> writeStaged(cleaned, dir, Nil)._1
           .map { case (nf, n) => (nf, n, era) }
       }.toMap
+      val replacement = written.map { case (f, rs) => f -> rs.filter(_._2 > 0) }
       // DELETE SIDECARS are part of history too: a purged key's VALUE
       // may sit in a DV file's __key column (it was MOR-deleted
       // earlier) — erasure law reaches it there as well; and a hit data
@@ -2197,7 +2195,7 @@ object Versioned {
               else targetDropped.na.replace("__target", renamedTargets))
               .coalesce(1)
             Some(ref.file ->
-              writeData(cleaned, dir).filter(_._2 > 0).headOption)
+              writeStaged(cleaned, dir, Nil)._1.filter(_._2 > 0).headOption)
           }
       }.toMap
       def purgedDvs(m: Manifest): Seq[DvRef] = m.dvs.flatMap { dv =>
@@ -2213,9 +2211,12 @@ object Versioned {
         val newDvs = purgedDvs(m)
         if (m.entries.exists(e => hit(e._1)) || newDvs != m.dvs) {
           touched += 1
-          val updated = m.entries.flatMap { case e @ (f, _, _) =>
+          val kept = m.entries.flatMap { case e @ (f, _, _) =>
             if (hit(f)) replacement(f) else Seq(e)
           }
+          val updated =
+            if (kept.nonEmpty) kept
+            else m.entries.flatMap(e => written.getOrElse(e._1, Nil)).take(1)
           // re-shard against the version's OWN shard structure: shards
           // untouched by the purge are reused byte-identical, only the
           // shards holding hit files rewrite (orphaned originals fall to
@@ -2321,93 +2322,62 @@ object Versioned {
     }
 
   /** OPTIMIZE: rewrite the current version's data into `nFiles` compact
-    * files and commit the result as a new, logically-identical version
-    * (append/upsert accretion leaves a long-lived table as thousands of
-    * small files; this is the Delta OPTIMIZE analog). Old versions keep
-    * reading their original small files — compaction is just another
-    * commit, so time travel, concurrency, and [[vacuum]] all apply to
-    * it unchanged.
+    * files, committed as a new, logically-identical version — see
+    * [[compact]].
     */
   def optimize(spark: SparkSession, dir: String, nFiles: Int): Long =
-    // the rewrite happens INSIDE the commit's build, against the slot's
-    // own base — computing it outside would let a concurrent committer
-    // land between read and claim and have its change silently compacted
-    // away (lost update)
-    commitManifest(spark, dir) { base =>
-      require(base.entries.nonEmpty, s"optimize: $dir has no current version")
-      // LIVE read: the rewrite physically sheds MOR-deleted rows, and
-      // the new manifest carries no #dv lines — compaction is how
-      // deletion vectors get retired (the Delta OPTIMIZE contract)
-      val live = readLive(spark, dir, base, base.entries)
-      partitionSpecOf(spark, dir) match {
-        case spec if spec.nonEmpty =>
-          // a PARTITIONED BY table compacts THROUGH the partitioned
-          // writer (q315): streamed-in/multi-commit accretion (N files
-          // per value) collapses to the layout invariant — ONE tagged
-          // file per partition value — instead of nFiles untagged hash
-          // files that would silently destroy partition pruning for
-          // the whole table. nFiles is ignored (the spec IS the
-          // file-count policy; size-targeted splitting within a value
-          // is a follow-up the manifest format already permits —
-          // multiple `#pfile` lines per value are read correctly)
-          val (entries, tags) = writeDataPartitioned(live, dir, spec)
-          Manifest(base.changes, tagged(entries, base.changes),
-            ptags = tags)
-        case _ =>
-          Manifest(base.changes, tagged(writeData(
-            live.repartition(nFiles), dir), base.changes))
-      }
-    }
+    compact(spark, dir, nFiles, None)
 
-  /** OPTIMIZE … ZORDER BY (colA, colB): [[optimize]]'s compaction with
-    * the rewrite range-partitioned and sorted by the 32-bit Morton
-    * interleave ([[Lake.zorderKey]]), so the files' min/max stats
-    * envelopes tighten on BOTH columns and [[readRangeSkipping]] prunes
-    * on either — Delta's OPTIMIZE ZORDER, expressed as one commit. The
-    * sort key never reaches the files; old versions keep their files
-    * (COW), the new version is logically identical, and like
-    * [[optimize]] the rewrite runs INSIDE the commit's build so a
-    * concurrent writer's change cannot be compacted away.
-    */
+  /** OPTIMIZE … ZORDER BY (colA, colB) — see [[compact]]. */
   def optimizeZorder(spark: SparkSession, dir: String, nFiles: Int,
       colA: String, colB: String): Long =
+    compact(spark, dir, nFiles, Some((colA, colB)))
+
+  /** The one COMPACTION behind [[optimize]] and [[optimizeZorder]]
+    * (append/upsert accretion leaves a long-lived table as thousands of
+    * small files; this is Delta's OPTIMIZE [ZORDER BY]): the current
+    * version's LIVE rows rewritten and committed as a new,
+    * logically-identical version. The live read physically sheds
+    * MOR-deleted rows and the commit retires every file of the base
+    * through [[cowManifest]], so the new manifest carries no `#dv` line
+    * — compaction is how deletion vectors get retired (the Delta
+    * OPTIMIZE contract). Old versions keep reading their original
+    * files (COW), so time travel, concurrency and [[vacuum]] all apply
+    * unchanged; the rewrite runs INSIDE the commit's build, against the
+    * slot's own base, so a concurrent committer landing between read
+    * and claim cannot have its change silently compacted away.
+    *
+    * Clustering, through the staged writer ([[writeStaged]]) under the
+    * fresh-row rule (a NULL partition value fails loudly):
+    *   - no declared spec: `nFiles` hash-partitioned files, or, with
+    *     `zorder` = (colA, colB), `nFiles` range partitions sorted by
+    *     the 32-bit Morton interleave ([[Lake.zorderClustered]]), so the
+    *     files' stats envelopes tighten on BOTH columns and
+    *     [[readRangeSkipping]] prunes on either. The sort key never
+    *     reaches the files.
+    *   - a PARTITIONED BY spec (q315): the rows route through the
+    *     partitioned writer — streamed-in/multi-commit accretion (N
+    *     files per value) collapses to the layout invariant, ONE tagged
+    *     file per partition value, instead of untagged files that would
+    *     silently destroy partition pruning for the whole table. `nFiles`
+    *     is ignored (the spec IS the file-count policy; multiple `#pfile`
+    *     lines per value are read correctly, so size-targeted splitting
+    *     within a value stays open). With `zorder`, each file is z-sorted
+    *     within its value so parquet ROW-GROUP envelopes tighten on both
+    *     columns (the Iceberg sort-order-per-partition shape).
+    */
+  private def compact(spark: SparkSession, dir: String, nFiles: Int,
+      zorder: Option[(String, String)]): Long =
     commitManifest(spark, dir) { base =>
-      require(base.entries.nonEmpty,
-        s"optimizeZorder: $dir has no current version")
-      val df = readLive(spark, dir, base, base.entries)
-      val bounds = df.agg(
-        min(col(colA)).cast("double"), max(col(colA)).cast("double"),
-        min(col(colB)).cast("double"), max(col(colB)).cast("double")).head()
-      require(!bounds.anyNull,
-        s"optimizeZorder: z-order bounds need non-null $colA/$colB stats")
-      val z = Lake.zorderKey(
-        col(colA), bounds.getDouble(0), bounds.getDouble(1),
-        col(colB), bounds.getDouble(2), bounds.getDouble(3))
-      // the temp sort key must not shadow a user column — withColumn
-      // would silently OVERWRITE it and the trailing drop would erase
-      // that column's data from the "logically identical" rewrite
-      val zc = Iterator.from(0).map(i => if (i == 0) "__z" else s"__z$i")
-        .find(n => !df.columns.contains(n)).get
-      partitionSpecOf(spark, dir) match {
-        case spec if spec.nonEmpty =>
-          // PARTITIONED BY + ZORDER (q315): z-cluster WITHIN the
-          // declared layout — one tagged file per partition value,
-          // each internally z-sorted so parquet ROW-GROUP envelopes
-          // tighten on both columns (file-level pruning stays the
-          // partition axes' job; the Iceberg sort-order-per-partition
-          // shape). A global z-range write here would untag the table
-          // and silently destroy partition pruning.
-          val (entries, tags) = writeDataPartitioned(
-            df.withColumn(zc, z), dir, spec, zsort = Some(zc))
-          Manifest(base.changes, tagged(entries, base.changes),
-            ptags = tags)
-        case _ =>
-          Manifest(base.changes, tagged(writeData(
-            df.withColumn(zc, z)
-              .repartitionByRange(nFiles, col(zc))
-              .sortWithinPartitions(zc)
-              .drop(zc), dir), base.changes))
-      }
+      require(base.entries.nonEmpty, s"optimize: $dir has no current version")
+      val live = readLive(spark, dir, base, base.entries)
+      val z = zorder.map { case (a, b) => Lake.zorderKeyOf(live, a, b) }
+      val spec = partitionSpecOf(spark, dir)
+      val (added, tags) =
+        if (spec.nonEmpty) writeStaged(live, dir, spec, zsort = z)
+        else writeStaged(z.fold(live.repartition(nFiles))(
+          Lake.zorderClustered(live, _, nFiles)), dir, Nil)
+      cowManifest(spark, dir, base, base.entries.map(_._1).toSet, added, tags)
     }
 
   /** Per-entry lookup of logical `column`'s manifest [[ColStat]],

@@ -512,9 +512,9 @@ final class VersionedChangeReaderFactory(
   *
   * PARTITIONED BY tables (q308, `partitionSpec` non-empty): the epoch's
   * task files land as RAW STAGING, and the driver-side commit reads
-  * them back through the partitioned writer
-  * ([[Versioned.writeDataPartitioned]]) — the same clustering +
-  * `#pfile` tagging every batch INSERT gets — before the tagged commit.
+  * them back through the versioned layer's fresh-row writer
+  * ([[Versioned.writeFresh]]) — the same clustering + `#pfile`
+  * tagging every batch INSERT gets — before the tagged commit.
   * The epoch pays one extra read+write OF ITSELF (never of the table),
   * in exchange for the layout invariant the format's pruning rests on:
   * one file per partition value per commit, each tagged. The
@@ -580,7 +580,7 @@ final class VersionedStreamingWrite(dir: String, writeSchema: StructType,
         discard(messages)
     } else {
       // PARTITIONED epoch: cluster + tag the raw task files through the
-      // partitioned writer, commit the CLUSTERED files, and drop the
+      // fresh-row writer, commit the CLUSTERED files, and drop the
       // raw staging either way (no manifest ever references it). The
       // watermark pre-check skips the rewrite on an obvious replay; the
       // OCC re-check stays authoritative against a zombie driver racing
@@ -588,8 +588,7 @@ final class VersionedStreamingWrite(dir: String, writeSchema: StructType,
       if (!Versioned.epochCommitted(spark, dir, queryId, epochId)) {
         val df = Versioned.readDataFiles(spark, dir, added.map(_._1),
           Some(writeSchema))
-        val (entries, tags) =
-          Versioned.writeDataPartitioned(df, dir, partitionSpec)
+        val (entries, tags) = Versioned.writeFresh(df, dir, partitionSpec)
         if (Versioned.commitStreamingEpoch(spark, dir, queryId, epochId,
           entries, tags).isEmpty) {
           // lost the replay race inside the OCC block: the clustered

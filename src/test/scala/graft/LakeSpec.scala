@@ -171,6 +171,18 @@ class LakeSpec extends AnyFunSuite {
     assert(spark.read.parquet(dir).count() == 20000)
   }
 
+  test("z-order write keeps a user column named __z") {
+    // the temp sort key must pick a name no input column holds, or
+    // withColumn would overwrite __z and the trailing drop erase it
+    val df = (1L to 64L).map(k => (k, k % 8, s"z$k")).toDF("a", "b", "__z")
+    val dir = java.nio.file.Files.createTempDirectory("graft-zorder-col").toString + "/z"
+    Lake.zorderWrite(df, dir, "a", "b", nFiles = 4)
+    val back = spark.read.parquet(dir)
+    assert(back.columns.toSeq === Seq("a", "b", "__z"))
+    assert(back.as[(Long, Long, String)].collect().toSet ===
+      df.as[(Long, Long, String)].collect().toSet)
+  }
+
   test("quantile z-order clusters both dimensions under heavy skew") {
     import org.apache.spark.sql.functions.{max => smax, min => smin}
     // dimension a is heavy-tailed (linear buckets would collapse), b uniform

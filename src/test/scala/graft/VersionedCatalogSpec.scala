@@ -621,7 +621,7 @@ class VersionedCatalogSpec extends AnyFunSuite {
     assert(Versioned.versions(spark, s"$wh/t").isEmpty)
     spark.sql(s"DROP TABLE $cat.t")
     // order A — the DROP wins the slot while a writer has already
-    // staged its files (writeData runs before the writer's slot):
+    // staged its files (the staged write runs before the writer's slot):
     // simulate the interleaving by running the drop's ledger half
     // without the final shell delete (the crash window), then letting
     // the writer try to commit

@@ -305,6 +305,28 @@ class VersionedSpec extends AnyFunSuite {
     assert(!allOnDisk.contains(7L) && !allOnDisk.contains(20L))
   }
 
+  test("purgeKeys emptying every file keeps one zero-row file: the version still reads under its shape") {
+    // a library table (no _schema.ddl): a zero-entry manifest has no
+    // file to read the shape from
+    val dir = freshDir("purgeall")
+    val rows = (1L to 5L).map(k => (k, s"v$k")).toDF("k", "payload")
+    Versioned.create(rows, dir)
+    Versioned.purgeKeys(spark, dir, "k", (1L to 5L).toDF("k"))
+    val after = Versioned.read(spark, dir)
+    assert(after.columns.toSeq === Seq("k", "payload"))
+    assert(after.count() === 0L)
+    assert(Versioned.manifestOf(spark, dir, 1).entries.map(_._2) === Seq(0L))
+    // after a rename, the kept file's era maps it to the current name
+    val dir2 = freshDir("purgeallrename")
+    Versioned.create(rows, dir2)
+    Versioned.renameColumn(spark, dir2, "payload", "p2")
+    Versioned.purgeKeys(spark, dir2, "k", (1L to 5L).toDF("k"))
+    val renamed = Versioned.read(spark, dir2)
+    assert(renamed.columns.toSeq === Seq("k", "p2"))
+    assert(renamed.count() === 0L)
+    assert(Versioned.readVersion(spark, dir2, 1).columns.toSeq === Seq("k", "payload"))
+  }
+
   test("two concurrent appenders serialize into two distinct versions, no lost rows") {
     val dir = freshDir("race")
     table(dir)
@@ -551,6 +573,35 @@ class VersionedSpec extends AnyFunSuite {
     for (v <- 1L to 4L)
       assert(Versioned.schemaOf(spark, dir, Versioned.manifestOf(spark, dir, v)) ==
         Versioned.readVersion(spark, dir, v).schema, s"v$v")
+  }
+
+  test("optimizeZorder compacts two MOR sidecars away: no #dv line, exact history, old version reads through its sidecars") {
+    val dir = freshDir("zmor")
+    val rows = (1L to 256L).map(k => (k, (k * 2654435761L) % 256L, s"v$k"))
+      .toDF("a", "b", "payload")
+    Versioned.create(rows.repartition(4), dir)                          // v1
+    Versioned.deleteKeysMor(spark, dir, "a",
+      (1L to 256L).filter(_ % 7 == 0).toDF("a"))                        // v2
+    Versioned.deleteKeysMor(spark, dir, "a",
+      (1L to 256L).filter(_ % 5 == 0).toDF("a"))                        // v3
+    assert(Versioned.manifestOf(spark, dir, 3).dvs.size === 2)
+    val before = Versioned.read(spark, dir)
+      .as[(Long, Long, String)].collect().toSet
+    assert(before.size === 256 - (1 to 256).count(k => k % 7 == 0 || k % 5 == 0))
+    val v4 = Versioned.optimizeZorder(spark, dir, nFiles = 4, "a", "b")
+    assert(v4 === 4L)
+    val text = new String(java.nio.file.Files.readAllBytes(
+      java.nio.file.Paths.get(dir, "_manifests", f"v$v4%09d.manifest")), "UTF-8")
+    assert(!text.linesIterator.exists(_.startsWith("#dv")), text)
+    assert(Versioned.manifestOf(spark, dir, v4).dvs.isEmpty)
+    val live = Versioned.read(spark, dir).as[(Long, Long, String)].collect().toSet
+    assert(live === before)
+    assert(Versioned.history(spark, dir).last === ((v4, Versioned.manifestOf(
+      spark, dir, v4).entries.size, live.size.toLong)))
+    // v3 keeps its files and both sidecars (COW)
+    assert(Versioned.manifestOf(spark, dir, 3).dvs.size === 2)
+    assert(Versioned.readVersion(spark, dir, 3)
+      .as[(Long, Long, String)].collect().toSet === before)
   }
 
   test("deleteKeysMor: sidecar only (no data rewrite), COW-equivalent, optimize retires") {
