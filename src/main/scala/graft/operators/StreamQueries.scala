@@ -716,6 +716,31 @@ object StreamQueries {
       .orderBy("from_v", "to_v", "change_type")
   }
 
+  /** The CDC consumer's classification of a q211-history change feed
+    * (q280's micro-batches, q289's batch read): old and new rows
+    * full-outer joined per (pair, p_partkey) — old-only = delete,
+    * new-only = insert, differing cents = update, identical COW carries
+    * dropped — then (from_v, to_v, change_type, n, sum_old, sum_new)
+    * per pair and type.
+    */
+  private def cdcPairCounts(feed: DataFrame): DataFrame = {
+    val keys = Seq("_from_v", "_to_v", "p_partkey")
+    def side(name: String) = feed.filter(col("_change_side") === name)
+      .select(keys.map(col) :+ col("cents").as(s"${name}_cents"): _*)
+      .withColumn(s"_in_$name", lit(true))
+    side("old").join(side("new"), keys, "full_outer")
+      .withColumn("change_type",
+        when(col("_in_old").isNull, "insert")
+          .when(col("_in_new").isNull, "delete")
+          .when(!(col("old_cents") <=> col("new_cents")), "update"))
+      .filter(col("change_type").isNotNull) // identical carries drop
+      .groupBy(col("_from_v").as("from_v"), col("_to_v").as("to_v"),
+        col("change_type"))
+      .agg(count(lit(1)).as("n"),
+        coalesce(sum("old_cents"), lit(0L)).cast("long").as("sum_old"),
+        coalesce(sum("new_cents"), lit(0L)).cast("long").as("sum_new"))
+  }
+
   // q280 — THE VERSIONED TABLE AS A STREAMING SOURCE (round-13 item
   // #5, completing the table format's streaming story end-to-end): a
   // real `MicroBatchStream` over the manifest log
@@ -742,23 +767,7 @@ object StreamQueries {
       .option("path", dir).option("startingVersion", 1).load()
       .writeStream
       .foreachBatch { (batch: DataFrame, _: Long) =>
-        val keys = Seq("_from_v", "_to_v", "p_partkey")
-        val o = batch.filter(col("_change_side") === "old")
-          .select(keys.map(col) :+ col("cents").as("old_cents"): _*)
-          .withColumn("_in_old", lit(true))
-        val n = batch.filter(col("_change_side") === "new")
-          .select(keys.map(col) :+ col("cents").as("new_cents"): _*)
-          .withColumn("_in_new", lit(true))
-        o.join(n, keys, "full_outer")
-          .withColumn("change_type",
-            when(col("_in_old").isNull, "insert")
-              .when(col("_in_new").isNull, "delete")
-              .when(!(col("old_cents") <=> col("new_cents")), "update"))
-          .filter(col("change_type").isNotNull) // identical carries drop
-          .groupBy("_from_v", "_to_v", "change_type")
-          .agg(count(lit(1)).as("n"),
-            coalesce(sum("old_cents"), lit(0L)).cast("long").as("sum_old"),
-            coalesce(sum("new_cents"), lit(0L)).cast("long").as("sum_new"))
+        cdcPairCounts(batch)
           .collect() // ≤ 3 rows per pair — the consumer's own report
           .foreach(r => buf += ((r.getLong(0), r.getLong(1), r.getString(2),
             r.getLong(3), r.getLong(4), r.getLong(5))))
@@ -838,26 +847,8 @@ object StreamQueries {
     val root = graft.engine.Staging.scratch("graft-stream-gate", "q289_batch")
     val dir = new java.io.File(root, "table").getAbsolutePath
     CatalogGate.q211History(s, d, dir)
-    val batch = s.read.format("graft-versioned").option("path", dir)
-      .option("changesFrom", 1).option("changesTo", 3).load()
-    val keys = Seq("_from_v", "_to_v", "p_partkey")
-    val o = batch.filter(col("_change_side") === "old")
-      .select(keys.map(col) :+ col("cents").as("old_cents"): _*)
-      .withColumn("_in_old", lit(true))
-    val n = batch.filter(col("_change_side") === "new")
-      .select(keys.map(col) :+ col("cents").as("new_cents"): _*)
-      .withColumn("_in_new", lit(true))
-    o.join(n, keys, "full_outer")
-      .withColumn("change_type",
-        when(col("_in_old").isNull, "insert")
-          .when(col("_in_new").isNull, "delete")
-          .when(!(col("old_cents") <=> col("new_cents")), "update"))
-      .filter(col("change_type").isNotNull) // identical carries drop
-      .groupBy(col("_from_v").as("from_v"), col("_to_v").as("to_v"),
-        col("change_type"))
-      .agg(count(lit(1)).as("n"),
-        coalesce(sum("old_cents"), lit(0L)).cast("long").as("sum_old"),
-        coalesce(sum("new_cents"), lit(0L)).cast("long").as("sum_new"))
+    cdcPairCounts(s.read.format("graft-versioned").option("path", dir)
+      .option("changesFrom", 1).option("changesTo", 3).load())
       .orderBy("from_v", "to_v", "change_type")
   }
 

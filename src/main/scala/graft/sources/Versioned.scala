@@ -31,6 +31,14 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
   *     [[optimizeZorder]] are one compaction ([[compact]]) committing
   *     through the same [[cowManifest]], and every data or sidecar file
   *     lands through one staged writer ([[writeStaged]]).
+  *   - SCHEMA EVOLUTION is metadata-only: the four ALTER verbs
+  *     ([[renameColumn]], [[addColumn]], [[dropColumn]],
+  *     [[widenColumn]]) share one commit ([[alterSchema]]) appending
+  *     one change to the manifest, and one forward change-list walk
+  *     ([[eraFrame]]) is the only code turning a file era's physical
+  *     columns into the logical schema — every read ([[readEntries]])
+  *     and [[schemaOf]] project each era through it. [[eraRecipes]]
+  *     is its reverse, for executor-side decodes and physical names.
   *   - Writers serialize through [[Lake.withCommit]]'s optimistic
   *     claim/commit ledger (atomic create-if-absent); the manifest
   *     rename itself is tmp-then-rename, so a crashed writer leaves at
@@ -100,9 +108,11 @@ object Versioned {
     *   - ("drop", name, ""): the column vanishes from this version on,
     *     NON-retroactively (time travel before the drop still shows it;
     *     the bytes stay until a purge/rewrite — drop is metadata-only).
+    *   - ("widen", name, typeDdl): the column casts up to `typeDdl`.
     * Physical column layouts are frozen at write time; reading applies
-    * every change with generation > era in generation order, so old
-    * files surface under the current logical schema with zero rewrite.
+    * every change with generation > era in generation order (the
+    * forward walk, [[eraFrame]]), so old files surface under the
+    * current logical schema with zero rewrite.
     *
     * `shards`: MANIFEST-OF-MANIFESTS structure (the 100 TB scaling move
     * the header names — a million-file table cannot rewrite a
@@ -148,7 +158,7 @@ object Versioned {
       ptags: Seq[(String, String, String)] = Seq.empty,
       fstats: Map[String, String] = Map.empty,
       txns: Map[String, Long] = Map.empty) {
-    /** Rename pairs only — the name-mapping subset [[physicalName]] walks. */
+    /** Rename pairs only — the name-mapping subset [[currentName]] walks. */
     def renames: Seq[(Int, String, String)] =
       changes.collect { case (g, "rename", o, n) => (g, o, n) }
   }
@@ -420,54 +430,70 @@ object Versioned {
       .parquet(paths: _*)
   }
 
+  /** THE FORWARD WALK — the one rule turning a frame of schema era
+    * `era` (a file's physical columns) into the LOGICAL schema of
+    * `changes`. Every change newer than the era applies in GENERATION
+    * order (a later rename may chain onto an earlier one's new name, a
+    * rename may target an added column, a drop may remove a renamed
+    * one):
+    *   - "rename" relabels the column;
+    *   - "add" replaces a present column in place with NULL of the
+    *     declared type, or appends one (pre-add files);
+    *   - "drop" removes the column (column pruning pushes the non-read
+    *     into the parquet scan);
+    *   - "widen" applies to EVERY era, not just pre-widen ones: the cast
+    *     is idempotent on already-widened files (Catalyst elides
+    *     same-type casts), and always applying it guarantees the
+    *     declared logical type even when a library-API writer appended
+    *     a file under the old physical type AFTER the widen commit. A
+    *     widen whose recorded name no longer resolves (it predates a
+    *     rename, so post-rename eras already carry the type) is a no-op.
+    * The result is ONE `select`, resolving source columns by exact
+    * (backtick-quoted) name; an era the walk leaves unchanged returns
+    * `df` itself. [[readEntries]] walks each era's files, [[schemaOf]]
+    * an empty frame under each era's footer; [[eraRecipes]] is the
+    * reverse walk for the executor-side decode.
+    */
+  private def eraFrame(changes: Seq[(Int, String, String, String)],
+      era: Int, df: DataFrame): DataFrame = {
+    // (logical name, expression, untouched source column?)
+    val start = df.columns.toVector.map(n =>
+      (n, col("`" + n.replace("`", "``") + "`"), true))
+    val out = changes.filter(c => c._1 > era || c._2 == "widen").sortBy(_._1)
+      .foldLeft(start) {
+        case (acc, (_, "rename", o, n)) =>
+          acc.map(s => if (s._1 == o) (n, s._2, false) else s)
+        case (acc, (_, "add", name, ddl)) =>
+          val added = (name, lit(null).cast(ddl), false)
+          if (acc.exists(_._1 == name)) acc.map(s => if (s._1 == name) added else s)
+          else acc :+ added
+        case (acc, (_, "drop", name, _)) => acc.filterNot(_._1 == name)
+        case (acc, (_, "widen", name, ddl)) =>
+          acc.map(s => if (s._1 == name) (name, s._2.cast(ddl), false) else s)
+        case (_, other) =>
+          throw new IllegalStateException(s"unknown change: $other")
+      }
+    if (out.forall(_._3) && out.size == start.size) df
+    else df.select(out.map { case (n, c, same) => if (same) c else c.as(n) }: _*)
+  }
+
   /** Read a set of manifest entries under the LOGICAL schema of
-    * `changes`: per era, read that era's files and apply every change
-    * with generation > era in GENERATION order (later renames may chain
-    * onto earlier ones' new names, a rename may target an added column,
-    * a drop may remove a renamed one), then unionByName across eras.
-    * An "add" projects NULL of the declared type over pre-add files; a
-    * "drop" prunes the column from the era view (column pruning pushes
-    * the non-read into the parquet scan). Era count is the number of
-    * schema evolutions ever made (tiny), so the union fan-in is bounded
-    * by history, not data.
+    * `changes`: each era's files (one footer speaks for the era — see
+    * [[footerSchema]]) through the forward walk ([[eraFrame]]), then
+    * unionByName across eras. Era count is the number of schema
+    * evolutions ever made (tiny), so the union fan-in is bounded by
+    * history, not data.
     */
   private def readEntries(spark: SparkSession, dir: String,
       changes: Seq[(Int, String, String, String)],
-      entries: Seq[(String, Long, Int)]): DataFrame = {
-    val byEra = entries.groupBy(_._3).toSeq.sortBy(_._1)
-    byEra.map { case (era, es) =>
-      // explicit footer schema: skips the per-read inference job (see
-      // [[footerSchema]]); one footer speaks for the era, and the widen
-      // foldLeft below normalizes any physically-mixed stragglers
-      val df = readDataFiles(spark, dir, es.map(_._1))
-      // widen applies to EVERY era, not just pre-widen ones: the cast is
-      // idempotent on already-widened files (Catalyst elides same-type
-      // casts), and always applying it guarantees the declared logical
-      // type even when a library-API writer appended a file under the
-      // old physical type AFTER the widen commit. The exists-guard
-      // covers the one stale case (the widen predates a rename, so its
-      // recorded name no longer resolves in post-rename eras — those
-      // files already carry the widened type physically).
-      changes.filter(c => c._1 > era || c._2 == "widen").sortBy(_._1)
-        .foldLeft(df) {
-          case (acc, (_, "rename", o, n)) => acc.withColumnRenamed(o, n)
-          case (acc, (_, "add", name, ddl)) =>
-            acc.withColumn(name, lit(null).cast(ddl))
-          case (acc, (_, "drop", name, _)) => acc.drop(name)
-          case (acc, (_, "widen", name, ddl)) =>
-            if (acc.columns.contains(name))
-              acc.withColumn(name, col(name).cast(ddl))
-            else acc
-          case (_, other) =>
-            throw new IllegalStateException(s"unknown change: $other")
-        }
+      entries: Seq[(String, Long, Int)]): DataFrame =
+    entries.groupBy(_._3).toSeq.sortBy(_._1).map { case (era, es) =>
+      eraFrame(changes, era, readDataFiles(spark, dir, es.map(_._1)))
     }.reduce(_.unionByName(_))
-  }
 
   /** A logical column's name under renames NEWER than `gen`, applied
-    * forward — the inverse walk of [[physicalName]], used to map a DV
-    * sidecar's key column (recorded at delete time) into the current
-    * logical schema.
+    * forward, used to map a DV sidecar's key column (recorded at
+    * delete time) into the current logical schema.
     */
   private[graft] def currentName(name: String, gen: Int,
       renames: Seq[(Int, String, String)]): String =
@@ -543,35 +569,29 @@ object Versioned {
     else readPruned(spark, dir, m, m.entries, fileCol)._1
 
   /** The LOGICAL schema [[readManifest]] reads `m` under, planned from
-    * the manifest without a read of its files. A zero-entry manifest
-    * carries its own shape: the staged path records the declared schema
-    * as metadata-only adds, so its change list is walked in order (later
-    * renames/drops/widens apply); a legacy zero-entry manifest without
-    * changes — and main's point 0, before the first commit — takes the
-    * table's [[declaredSchema]]. Any other manifest's schema is the
-    * era-aware read of the FIRST entry of each era: [[readEntries]]
-    * reads every era under that file's footer, so the per-era frames and
-    * their unionByName are the full read's, nullability included.
+    * the manifest and one footer per era, without resolving a relation:
+    * the forward walk ([[eraFrame]]) over an empty frame under each
+    * era's first-file footer schema (made nullable, as a parquet
+    * relation reads it), unioned by name as [[readEntries]] unions the
+    * full read — nullability merge included. A zero-entry manifest
+    * walks an empty frame at era 0: the staged path records the
+    * declared schema as metadata-only adds, so its change list builds
+    * the shape from no columns (later renames/drops/widens apply); a
+    * legacy zero-entry manifest without changes — and main's point 0,
+    * before the first commit — takes the table's [[declaredSchema]].
     */
   private[graft] def schemaOf(spark: SparkSession, dir: String,
       m: Manifest): org.apache.spark.sql.types.StructType = {
-    import org.apache.spark.sql.types.{DataType, StructField, StructType}
-    if (m.entries.nonEmpty)
-      readEntries(spark, dir, m.changes,
-        m.entries.groupBy(_._3).values.map(_.head).toSeq).schema
-    else if (m.changes.isEmpty) declaredSchema(spark, dir)
-    else StructType(m.changes.sortBy(_._1)
-      .foldLeft(Vector.empty[StructField]) {
-        case (acc, (_, "add", n, ddl)) =>
-          acc :+ StructField(n, DataType.fromDDL(ddl))
-        case (acc, (_, "rename", o, n)) =>
-          acc.map(f => if (f.name == o) f.copy(name = n) else f)
-        case (acc, (_, "drop", n, _)) => acc.filterNot(_.name == n)
-        case (acc, (_, "widen", n, ddl)) => acc.map(f =>
-          if (f.name == n) f.copy(dataType = DataType.fromDDL(ddl))
-          else f)
-        case (acc, _) => acc
-      })
+    val eras =
+      if (m.entries.nonEmpty)
+        m.entries.groupBy(_._3).toSeq.sortBy(_._1).map { case (era, es) =>
+          era -> org.apache.spark.sql.graftshim.GraftSqlShim.asNullable(
+            footerSchema(spark, s"$dir/data/${es.head._1}"))
+        }
+      else if (m.changes.isEmpty) Seq(0 -> declaredSchema(spark, dir))
+      else Seq(0 -> new org.apache.spark.sql.types.StructType())
+    eras.map { case (era, s) => eraFrame(m.changes, era, emptyOf(spark, s)) }
+      .reduce(_.unionByName(_)).schema
   }
 
   private def emptyOf(spark: SparkSession,
@@ -1057,9 +1077,10 @@ object Versioned {
   /** Per-era recipes for executor-side Group-API decode: for each
     * requested (logical name, type), the PHYSICAL column name in files
     * of the given era ("" if the column was added after that era —
-    * reads as NULL) plus the logical type's DDL. The reverse walk of
-    * the change list — shared by the streaming source (q280) and the
-    * row-level operation scan.
+    * reads as NULL) plus the logical type's DDL. The reverse of the
+    * forward walk ([[eraFrame]]) — shared by the streaming source
+    * (q280), the row-level operation scan, the stats prune and
+    * [[purgeKeys]]' per-era key column.
     */
   private[graft] def eraRecipes(
       changes: Seq[(Int, String, String, String)],
@@ -1271,11 +1292,8 @@ object Versioned {
     */
   private[graft] def partitionSpecOf(spark: SparkSession,
       dir: String): Seq[PartField] =
-    readControlFile(spark, dir, "_props.tsv").toSeq
-      .flatMap(_.split("\n")).filter(_.nonEmpty)
-      .collectFirst { case l if l.startsWith("graft.partition\t") =>
-        PartField.parse(l.stripPrefix("graft.partition\t"))
-      }.getOrElse(Seq.empty)
+    readProps(spark, dir).get("graft.partition").fold(Seq.empty[PartField])(
+      PartField.parse)
 
   /** One field of a PARTITIONED BY spec. `source` is the data column;
     * `tagCol` is the name `#pfile` tags carry — the source name for
@@ -1503,6 +1521,23 @@ object Versioned {
     (df.filter(col(column).cast("string") === lit(value)), kept, total)
   }
 
+  /** The ONE commit body of the four METADATA-ONLY schema verbs
+    * ([[renameColumn]], [[addColumn]], [[dropColumn]], [[widenColumn]]):
+    * require a current version, run the verb's own `check` against the
+    * head's logical schema ([[schemaOf]]), and append one change
+    * generation to the same files, sidecars and tags. Reads apply it
+    * through the forward walk ([[eraFrame]]); no data byte moves.
+    */
+  private def alterSchema(spark: SparkSession, dir: String, verb: String,
+      change: (String, String, String))(
+      check: org.apache.spark.sql.types.StructType => Unit): Long =
+    commitManifest(spark, dir) { base =>
+      require(base.entries.nonEmpty, s"$verb: $dir has no current version")
+      check(schemaOf(spark, dir, base))
+      val (kind, a, b) = change
+      base.copy(changes = base.changes :+ ((base.changes.size + 1, kind, a, b)))
+    }
+
   /** METADATA-ONLY column rename (schema evolution without rewrite —
     * the capability q225's drift audit measures the LACK of): commits a
     * new version whose manifest carries the same files plus one more
@@ -1515,16 +1550,12 @@ object Versioned {
     */
   def renameColumn(spark: SparkSession, dir: String,
       oldName: String, newName: String): Long =
-    commitManifest(spark, dir) { base =>
-      require(base.entries.nonEmpty, s"renameColumn: $dir has no current version")
-      val logical = schemaOf(spark, dir, base).fieldNames.toSet
+    alterSchema(spark, dir, "renameColumn", ("rename", oldName, newName)) { cur =>
+      val logical = cur.fieldNames.toSet
       require(logical.contains(oldName),
         s"renameColumn: no column '$oldName' (have ${logical.mkString(", ")})")
       require(!logical.contains(newName),
         s"renameColumn: column '$newName' already exists")
-      Manifest(base.changes :+
-          ((base.changes.size + 1, "rename", oldName, newName)),
-        base.entries, dvs = base.dvs, ptags = base.ptags)
     }
 
   /** METADATA-ONLY column ADD: commits a new version whose manifest
@@ -1536,16 +1567,12 @@ object Versioned {
     */
   def addColumn(spark: SparkSession, dir: String,
       name: String, typeDdl: String): Long =
-    commitManifest(spark, dir) { base =>
-      require(base.entries.nonEmpty, s"addColumn: $dir has no current version")
+    alterSchema(spark, dir, "addColumn", ("add", name, typeDdl)) { cur =>
       // validate the DDL up front — a bad type string must fail the
       // commit, not every future read
       org.apache.spark.sql.types.DataType.fromDDL(typeDdl)
-      val logical = schemaOf(spark, dir, base).fieldNames.toSet
-      require(!logical.contains(name),
+      require(!cur.fieldNames.contains(name),
         s"addColumn: column '$name' already exists")
-      Manifest(base.changes :+ ((base.changes.size + 1, "add", name, typeDdl)),
-        base.entries, dvs = base.dvs, ptags = base.ptags)
     }
 
   /** METADATA-ONLY column DROP: the column vanishes from this version
@@ -1556,13 +1583,10 @@ object Versioned {
     * physically shedding dropped columns).
     */
   def dropColumn(spark: SparkSession, dir: String, name: String): Long =
-    commitManifest(spark, dir) { base =>
-      require(base.entries.nonEmpty, s"dropColumn: $dir has no current version")
-      val logical = schemaOf(spark, dir, base).fieldNames.toSet
+    alterSchema(spark, dir, "dropColumn", ("drop", name, "")) { cur =>
+      val logical = cur.fieldNames.toSet
       require(logical.contains(name),
         s"dropColumn: no column '$name' (have ${logical.mkString(", ")})")
-      Manifest(base.changes :+ ((base.changes.size + 1, "drop", name, "")),
-        base.entries, dvs = base.dvs, ptags = base.ptags)
     }
 
   /** Is `from` → `to` a LOSSLESS widening? The Delta/Iceberg type-
@@ -1612,10 +1636,8 @@ object Versioned {
     */
   def widenColumn(spark: SparkSession, dir: String,
       name: String, newTypeDdl: String): Long =
-    commitManifest(spark, dir) { base =>
-      require(base.entries.nonEmpty, s"widenColumn: $dir has no current version")
+    alterSchema(spark, dir, "widenColumn", ("widen", name, newTypeDdl)) { cur =>
       val newT = org.apache.spark.sql.types.DataType.fromDDL(newTypeDdl)
-      val cur = schemaOf(spark, dir, base)
       require(cur.fieldNames.contains(name),
         s"widenColumn: no column '$name' (have ${cur.fieldNames.mkString(", ")})")
       val oldT = cur(name).dataType
@@ -1623,9 +1645,6 @@ object Versioned {
         s"widenColumn: ${oldT.catalogString} -> ${newT.catalogString} is not " +
           "a lossless widening (rejecting loudly: a narrowing or lossy " +
           "conversion would silently corrupt old-era reads)")
-      Manifest(base.changes :+
-          ((base.changes.size + 1, "widen", name, newTypeDdl)),
-        base.entries, dvs = base.dvs, ptags = base.ptags)
     }
 
   /** The COW-REWRITE write half: [[writeFresh]] under the declared
@@ -2009,9 +2028,8 @@ object Versioned {
     val mTo = manifestOf(spark, dir, vTo)
     val fromFiles = mFrom.entries.map(_._1).toSet
     val toFiles = mTo.entries.map(_._1).toSet
-    val schemaChanges =
-      if (mTo.changes.size >= mFrom.changes.size) mTo.changes
-      else mFrom.changes
+    val schemaM = if (mTo.changes.size >= mFrom.changes.size) mTo else mFrom
+    val schemaChanges = schemaM.changes
     // a data file SHARED by both versions is byte-identical, but its
     // LIVE rows still differ if a delete sidecar was added (or purged)
     // between them — collect the targets of the differing #dv lines
@@ -2034,9 +2052,6 @@ object Versioned {
     val typeOf = shape.map(f => f.name -> f.dataType).toMap
     def nulls(prefix: String): Seq[Column] =
       payload.map(c => lit(null).cast(typeOf(c)).as(s"$prefix$c"))
-    val schemaRenames = schemaChanges.collect {
-      case (g, "rename", o, n) => (g, o, n)
-    }
     def side(m: Manifest, other: Set[String],
         prefix: String): Option[DataFrame] = {
       // shared AND dv-unchanged files cannot differ — skip them; a file
@@ -2049,7 +2064,7 @@ object Versioned {
         val fc = "__graft_cdc_f"
         val raw = readEntries(spark, dir, schemaChanges, unique)
           .withColumn(fc, element_at(split(input_file_name(), "/"), -1))
-        val df = applyDvs(spark, dir, m.dvs, schemaRenames, raw, fc).drop(fc)
+        val df = applyDvs(spark, dir, m.dvs, schemaM.renames, raw, fc).drop(fc)
         df.columns.filter(_ != keyCol).foldLeft(df)((acc, c) =>
           acc.withColumnRenamed(c, s"$prefix$c"))
       }
@@ -2089,16 +2104,6 @@ object Versioned {
     }
   }
 
-  /** A logical column's PHYSICAL name in files of schema era `era`:
-    * walk the renames newer than the era backwards (a later rename may
-    * chain onto an earlier one's new name).
-    */
-  private def physicalName(logical: String, era: Int,
-      renames: Seq[(Int, String, String)]): String =
-    renames.filter(_._1 > era).sortBy(-_._1).foldLeft(logical) {
-      case (name, (_, o, n)) => if (name == n) o else name
-    }
-
   /** RIGHT-TO-BE-FORGOTTEN purge: remove `keys` from EVERY version —
     * the one operation that may rewrite HISTORY, because erasure law
     * outranks the immutability contract (time travel must stop
@@ -2109,7 +2114,9 @@ object Versioned {
     * preserved; emptied files drop out of their manifests, except that
     * a version whose every file empties keeps one zero-row replacement
     * ([[cowRewrite]]'s rule), so it still reads under its own shape;
-    * the old bytes are deleted last. Runs inside the OCC ledger like any
+    * the old bytes are deleted last, together with every file the purge
+    * wrote that no rewritten manifest references (an emptied
+    * replacement or sidecar rewrite). Runs inside the OCC ledger like any
     * writer. Manifest replacement is delete+rename with the content
     * already safely in the tmp file — a crash between the two leaves a
     * missing manifest whose `.tmp` sibling holds the full content
@@ -2125,15 +2132,22 @@ object Versioned {
       val manifests = vs.map(v => v -> manifestOf(spark, dir, v)).toMap
       // renames are append-only, so the latest manifest's list is the
       // authority for mapping the CURRENT logical keyCol into any era
-      val renames = vs.lastOption.map(manifests(_).renames).getOrElse(Seq.empty)
+      val latest = vs.lastOption.fold(Manifest(Seq.empty, Seq.empty))(manifests)
+      val renames = latest.renames
+      // the key's PHYSICAL name per era ("" where it was added later —
+      // such files cannot hold a key); the type is unused here
+      val keyRecipe = eraRecipes(latest.changes,
+        Seq(keyCol -> org.apache.spark.sql.types.LongType))
+      def physicalKey(era: Int): String = keyRecipe(era).head._2
       val fileEra: Map[String, Int] =
         manifests.values.flatMap(_.entries.map(e => e._1 -> e._3)).toMap
       val k = keys.select(keyCol).distinct()
       // hit detection PER ERA — the key column's physical name differs
       // across schema eras
       val hit: Set[String] = fileEra.toSeq.groupBy(_._2).flatMap {
+        case (era, _) if physicalKey(era).isEmpty => Nil
         case (era, files) =>
-          val pk = physicalName(keyCol, era, renames)
+          val pk = physicalKey(era)
           readDataFiles(spark, dir, files.map(_._1))
             .select(col(pk), input_file_name().as("_f"))
             .join(broadcast(k.withColumnRenamed(keyCol, pk)), pk)
@@ -2148,7 +2162,7 @@ object Versioned {
       // for a version that would otherwise list no file at all
       val written: Map[String, Seq[(String, Long, Int)]] = hit.map { f =>
         val era = fileEra(f)
-        val pk = physicalName(keyCol, era, renames)
+        val pk = physicalKey(era)
         val cleaned = readDataFiles(spark, dir, Seq(f))
           .join(broadcast(k.withColumnRenamed(keyCol, pk)), Seq(pk), "left_anti")
           .coalesce(1)
@@ -2171,7 +2185,7 @@ object Versioned {
       val droppedTargets: Set[String] = replacement.collect {
         case (f, rs) if rs.isEmpty => f
       }.toSet
-      val dvRewrite: Map[String, Option[(String, Long)]] = allDvRefs.flatMap {
+      val dvRewrite: Map[String, Seq[(String, Long)]] = allDvRefs.flatMap {
         ref =>
           val df = readDataFiles(spark, dir, Seq(ref.file))
           val keyApplies = currentName(ref.keyName, ref.gen, renames) == keyCol
@@ -2194,18 +2208,16 @@ object Versioned {
             val cleaned = (if (renamedTargets.isEmpty) targetDropped
               else targetDropped.na.replace("__target", renamedTargets))
               .coalesce(1)
-            Some(ref.file ->
-              writeStaged(cleaned, dir, Nil)._1.filter(_._2 > 0).headOption)
+            Some(ref.file -> writeStaged(cleaned, dir, Nil)._1)
           }
       }.toMap
+      // an untouched sidecar carries; an emptied one's line drops
       def purgedDvs(m: Manifest): Seq[DvRef] = m.dvs.flatMap { dv =>
-        dvRewrite.get(dv.file) match {
-          case None => Some(dv) // sidecar untouched
-          case Some(Some((nf, n))) => Some(dv.copy(file = nf, nDel = n))
-          case Some(None) => None // sidecar emptied — line drops
-        }
+        dvRewrite.get(dv.file).fold(Option(dv))(_.find(_._2 > 0)
+          .map { case (nf, n) => dv.copy(file = nf, nDel = n) })
       }
       var touched = 0
+      var referenced = Set.empty[String]
       vs.foreach { v =>
         val m = manifests(v)
         val newDvs = purgedDvs(m)
@@ -2217,6 +2229,7 @@ object Versioned {
           val updated =
             if (kept.nonEmpty) kept
             else m.entries.flatMap(e => written.getOrElse(e._1, Nil)).take(1)
+          referenced ++= updated.map(_._1) ++ newDvs.map(_.file)
           // re-shard against the version's OWN shard structure: shards
           // untouched by the purge are reused byte-identical, only the
           // shards holding hit files rewrite (orphaned originals fall to
@@ -2238,10 +2251,12 @@ object Versioned {
             replace = true)
         }
       }
-      // the purged bytes leave the disk only after no manifest points at them
-      hit.foreach(f =>
-        fs.delete(new org.apache.hadoop.fs.Path(dir, s"data/$f"), false))
-      dvRewrite.keys.foreach(f =>
+      // the purged bytes leave the disk only after no manifest points at
+      // them, with every file this purge wrote that no rewritten
+      // manifest references (an emptied replacement or sidecar rewrite)
+      val unreferenced = (written.values.flatten.map(_._1) ++
+        dvRewrite.values.flatten.map(_._1)).filterNot(referenced)
+      (hit ++ dvRewrite.keys ++ unreferenced).foreach(f =>
         fs.delete(new org.apache.hadoop.fs.Path(dir, s"data/$f"), false))
       (hit.size, touched)
     }
@@ -2713,6 +2728,27 @@ object Versioned {
         require(fs.rename(tmp, p), s"$name rewrite failed for $dir")
     }
   }
+
+  /** The table's persisted `graft.*` TBLPROPERTIES, `_props.tsv` (one
+    * `key<TAB>value` line each) under the control-file contract — so
+    * a crash mid-rewrite never silently degrades a MOR table to COW.
+    * Empty for a table without properties.
+    */
+  private[graft] def readProps(spark: SparkSession,
+      dir: String): Map[String, String] =
+    readControlFile(spark, dir, "_props.tsv").fold(Map.empty[String, String])(
+      _.split("\n").filter(_.nonEmpty).map { l =>
+        val Array(k, v) = l.split("\t", 2); k -> v
+      }.toMap)
+
+  /** The write half of [[readProps]]: lines sorted by key; an empty map
+    * deletes the file.
+    */
+  private[graft] def writeProps(spark: SparkSession, dir: String,
+      props: Map[String, String]): Unit =
+    writeControlFile(spark, dir, "_props.tsv",
+      if (props.isEmpty) None
+      else Some(props.toSeq.sorted.map { case (k, v) => s"$k\t$v" }.mkString("\n")))
 
   // ---- drop (ledger-serialized) -------------------------------------
 

@@ -257,17 +257,8 @@ final class GraftCatalog extends TableCatalog with SupportsNamespaces
   override def createTable(ident: Identifier, schema: StructType,
       partitions: Array[Transform], properties: util.Map[String, String]): Table = {
     if (tableExists(ident)) throw new TableAlreadyExistsException(ident)
-    val partitionSpec = parsePartitionSpec(partitions)
-    // TBLPROPERTIES: only the graft.* namespace persists (Spark itself
-    // injects provider/owner/etc). 'graft.key' + 'graft.merge.mode'
-    // select the q287 merge-on-read row-level path; validated HERE so
-    // a typo fails the CREATE, not the first UPDATE.
-    val graftProps = {
-      import scala.jdk.CollectionConverters._
-      properties.asScala.toMap.filter(_._1.startsWith("graft."))
-    } ++ (if (partitionSpec.isEmpty) Map.empty
-      else Map("graft.partition" -> Versioned.PartField.render(partitionSpec)))
-    VersionedSqlTable.validateProps(graftProps, schema)
+    val graftProps = VersionedSqlTable.declaredProps(properties,
+      parsePartitionSpec(partitions), schema)
     // the existence check re-runs INSIDE the ledger, so a staged
     // commit or another CREATE racing this one is serialized — not a
     // check-then-act clobber
@@ -291,10 +282,7 @@ final class GraftCatalog extends TableCatalog with SupportsNamespaces
     fs.mkdirs(p)
     val out = fs.create(new Path(p, "_schema.ddl"), true)
     try out.write(schema.toDDL.getBytes("UTF-8")) finally out.close()
-    Versioned.writeControlFile(spark, p.toString, "_props.tsv",
-      if (graftProps.isEmpty) None
-      else Some(graftProps.toSeq.sorted
-        .map { case (k, v) => s"$k\t$v" }.mkString("\n")))
+    Versioned.writeProps(spark, p.toString, graftProps)
   }
 
   /** ATOMIC CREATE/REPLACE TABLE [AS SELECT] — Spark routes CTAS and
@@ -374,10 +362,7 @@ final class GraftCatalog extends TableCatalog with SupportsNamespaces
     val table = loadTable(ident).asInstanceOf[VersionedSqlTable]
     val next = f(table.graftProps).filter(_._1.startsWith("graft."))
     VersionedSqlTable.validateProps(next, table.schema())
-    Versioned.writeControlFile(spark, tablePath(ident).toString, "_props.tsv",
-      if (next.isEmpty) None
-      else Some(next.toSeq.sorted
-        .map { case (k, v) => s"$k\t$v" }.mkString("\n")))
+    Versioned.writeProps(spark, tablePath(ident).toString, next)
   }
 
   /** DROP TABLE through the OCC ledger (q312): the drop serializes
@@ -539,17 +524,23 @@ object VersionedSqlTable {
     Versioned.schemaOf(spark, dir, lineage.manifestAt(spark, dir,
       pinned.orElse(lineage.headPoint(spark, dir)).getOrElse(0L)))
 
-  /** Read a table's persisted `graft.*` TBLPROPERTIES —
-    * [[Versioned.readControlFile]]'s swap-crash recovery contract, so
-    * a crash mid-rewrite never silently degrades a MOR table to COW.
+  /** The `graft.*` TBLPROPERTIES a CREATE or staged CREATE/REPLACE
+    * declares: only the graft.* namespace persists (Spark itself injects
+    * provider/owner/etc), plus `graft.partition` for a PARTITIONED BY
+    * spec. 'graft.key' + 'graft.merge.mode' select the q287
+    * merge-on-read row-level path; validated HERE so a typo fails the
+    * CREATE, not the first UPDATE.
     */
-  private[v2] def propsOf(spark: SparkSession, dir: String)
-      : Map[String, String] =
-    Versioned.readControlFile(spark, dir, "_props.tsv")
-      .fold(Map.empty[String, String])(text =>
-        text.split("\n").filter(_.nonEmpty).map { l =>
-          val Array(k, v) = l.split("\t"); k -> v
-        }.toMap)
+  private[v2] def declaredProps(properties: util.Map[String, String],
+      partitionSpec: Seq[Versioned.PartField],
+      schema: StructType): Map[String, String] = {
+    import scala.jdk.CollectionConverters._
+    val props = properties.asScala.toMap.filter(_._1.startsWith("graft.")) ++
+      (if (partitionSpec.isEmpty) Map.empty
+      else Map("graft.partition" -> Versioned.PartField.render(partitionSpec)))
+    validateProps(props, schema)
+    props
+  }
 
   /** The `graft.*` property keys CREATE/ALTER accept, with their
     * value validation — shared so a typo fails the DDL statement, not
@@ -619,7 +610,7 @@ final class VersionedSqlTable(tableName: String, dir: String,
 
   /** The persisted `graft.*` TBLPROPERTIES (empty for plain tables). */
   private[v2] lazy val graftProps: Map[String, String] =
-    VersionedSqlTable.propsOf(spark, dir)
+    Versioned.readProps(spark, dir)
 
   override def properties(): util.Map[String, String] = {
     import scala.jdk.CollectionConverters._
@@ -779,12 +770,8 @@ final class GraftStagedTable(cat: GraftCatalog, ident: Identifier,
   private val declaredSchema: StructType = info.schema()
   private val partitionSpec: Seq[Versioned.PartField] =
     cat.parsePartitionSpec(info.partitions())
-  private val graftProps: Map[String, String] = {
-    import scala.jdk.CollectionConverters._
-    info.properties().asScala.toMap.filter(_._1.startsWith("graft."))
-  } ++ (if (partitionSpec.isEmpty) Map.empty
-    else Map("graft.partition" -> Versioned.PartField.render(partitionSpec)))
-  VersionedSqlTable.validateProps(graftProps, declaredSchema)
+  private val graftProps: Map[String, String] = VersionedSqlTable
+    .declaredProps(info.properties(), partitionSpec, declaredSchema)
 
   // the CTAS write's staged output — set by insert, read by commit
   @volatile private var staged
@@ -1779,7 +1766,7 @@ private[v2] object GraftProcedures {
         val dir = cat.dirForName(tableArg)
         val keep =
           if (in.isNullAt(1)) // omitted: the table's declared policy
-            VersionedSqlTable.propsOf(spark, dir)
+            Versioned.readProps(spark, dir)
               .get("graft.retention.versions").map(_.toInt)
               .getOrElse(throw new IllegalArgumentException(
                 s"vacuum('$tableArg') without keep_versions needs " +

@@ -26,24 +26,30 @@ import graft.sources.Versioned
   * `dvFilters`: per key column, its recipe under this file's era plus
   * every sidecar path ([[VersionedFileReader.dvFilters]]); the reader
   * builds its own file's deleted-key sets ([[ParquetGroups.dvKeySet]]),
-  * so driver memory stays O(paths), never O(deleted keys). `dvOnly`
-  * flips the filter (q318): emit ONLY the deleted rows — the old-side
-  * DELETE events of a MOR commit.
+  * so driver memory stays O(paths), never O(deleted keys).
+  * `otherDvFilters`, when non-empty, are the OTHER side's sidecar
+  * filters of a change-feed pair (q318): emit ONLY the rows they delete
+  * and `dvFilters` do not — one side of the pair's sidecar diff, read
+  * as rows.
   */
 private[v2] final class VersionedFileReader(conf: Configuration,
     path: String, fields: Array[(String, String, String)],
     dvFilters: Array[((String, String, String), Array[String])],
-    dvOnly: Boolean, constants: Array[Any]) extends PartitionReader[InternalRow] {
+    otherDvFilters: Array[((String, String, String), Array[String])],
+    constants: Array[Any]) extends PartitionReader[InternalRow] {
 
   private val reader: ParquetReader[Group] = ParquetReader
     .builder(new GroupReadSupport(), new Path(path))
     .withConf(conf)
     .build()
   private val types = fields.map(f => DataType.fromDDL(f._3))
-  private val dvSets = dvFilters.map { case ((_, phys, ddl), paths) =>
-    val dt = DataType.fromDDL(ddl)
-    (phys, dt, ParquetGroups.dvKeySet(conf, paths, new Path(path).getName, dt))
-  }
+  private def keySets(filters: Array[((String, String, String), Array[String])]) =
+    filters.map { case ((_, phys, ddl), paths) =>
+      val dt = DataType.fromDDL(ddl)
+      (phys, dt, ParquetGroups.dvKeySet(conf, paths, new Path(path).getName, dt))
+    }
+  private val dvSets = keySets(dvFilters)
+  private val otherSets = keySets(otherDvFilters)
   private var cur: InternalRow = _
 
   // absent (added after this file's era) or NULL physical field → null
@@ -56,16 +62,20 @@ private[v2] final class VersionedFileReader(conf: Configuration,
     }
 
   // a null key never matches — a dv key is a real value by construction
-  private def deleted(g: Group): Boolean =
-    dvSets.exists { case (phys, dt, set) =>
+  private def deleted(g: Group, sets: Array[(String, DataType, Set[Any])]): Boolean =
+    sets.exists { case (phys, dt, set) =>
       val v = decode(g, phys, dt)
       v != null && set.contains(v)
     }
 
+  // skip this side's deleted rows; with other-side filters, keep only
+  // the rows those delete
+  private def skip(g: Group): Boolean =
+    deleted(g, dvSets) || (otherSets.nonEmpty && !deleted(g, otherSets))
+
   override def next(): Boolean = {
     var g = reader.read()
-    // dvOnly: keep exactly the deleted rows; otherwise skip them
-    while (g != null && deleted(g) != dvOnly) g = reader.read()
+    while (g != null && skip(g)) g = reader.read()
     if (g == null) { cur = null; false }
     else {
       val n = fields.length

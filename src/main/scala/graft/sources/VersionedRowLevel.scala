@@ -289,7 +289,7 @@ final class RowLevelReaderFactory(conf: SerializableConfiguration)
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] = {
     val p = partition.asInstanceOf[RowLevelPartition]
     new VersionedFileReader(conf.value, p.path, p.fields, p.dvFilters,
-      dvOnly = false,
+      Array.empty,
       if (p.wantFile) Array(UTF8String.fromString(p.name)) else Array.empty)
   }
 }

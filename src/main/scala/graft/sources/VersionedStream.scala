@@ -49,9 +49,11 @@ import graft.sources.Versioned
   * streaming-source tradition:
   *   - a schema-evolution commit AFTER stream start fails the stream
   *     (restart to pick up the new schema);
-  *   - MOR delete sidecars STREAM as delete events (q318): a pair
-  *     that adds `#dv` rows emits exactly the deleted rows old-side
-  *     (each decoded through its file's own era recipe), file diffs
+  *   - MOR delete sidecars STREAM by the rows they delete (q318): a
+  *     pair diffs its two sidecar sets SYMMETRICALLY — rows a new
+  *     sidecar deletes emit old-side (a MOR delete), rows a dropped
+  *     sidecar deleted emit new-side (a restore re-inserting them),
+  *     each decoded through its file's own era recipe — and file diffs
   *     emit each side's LIVE rows (the side's sidecars applied — a
   *     compaction after deletes never re-emits a delete);
   *   - column types outside the flat interchange set (integral, fp,
@@ -345,7 +347,7 @@ final class VersionedChangeStream(dir: String, startingVersion: Option[Long],
         case p: VersionedChangePartition if p.side == "old" =>
           throw new IllegalStateException(
             s"version pair (${p.fromV}, ${p.toV}) of $dir removes " +
-              (if (p.dvOnly) "rows (a MOR delete)" else "data files " +
+              (if (p.otherDvFilters.nonEmpty) "rows (a MOR delete)" else "data files " +
                 "(a compaction / rewrite / overwrite)") +
               " — readStream.table streams appends only; restart from " +
               "a later startingVersion, or consume the change feed via " +
@@ -376,21 +378,23 @@ private[v2] object VersionedChanges {
     * the reader converts by the file's own primitive and the column's
     * LOGICAL type.
     *
-    * MOR-AWARE (q318 — previously any dv-carrying pair failed with
-    * "not readable as file diffs"): each side emits its LIVE rows —
-    * file-diff partitions carry the side's own sidecar paths, and the
-    * executor skips rows whose key sits in a sidecar set targeting its
-    * file ([[VersionedFileReader]], the decode the row-level scan
-    * shares) — and a pair that ADDS sidecar rows additionally emits
-    * those rows as `old`-side DELETE events
-    * ([[VersionedChangePartition.dvOnly]]: read the targeted file, emit
-    * ONLY rows whose key the new sidecars delete). Scan cost stays ∝
-    * changed data: dv-free pairs (the steady state) attach nothing; a
-    * dv pair costs the targeted files + sidecar reads.
-    * Compaction-after-deletes pairs (OPTIMIZE retiring dvs) now stream
-    * correctly: the old side's raw rows are filtered by the OLD side's
-    * sidecars, so an already-deleted row never re-emits as a second
-    * delete.
+    * MOR-AWARE (q318): each side emits its LIVE rows — file-diff
+    * partitions carry the side's own sidecar paths, and the executor
+    * skips rows whose key sits in a sidecar set targeting its file
+    * ([[VersionedFileReader]], the decode the row-level scan shares).
+    * A file live on BOTH sides whose sidecars differ emits the diff by
+    * the rows it deletes, symmetrically
+    * ([[VersionedChangePartition.otherDvFilters]]): old-side the rows
+    * the TO side's added sidecars delete and the FROM side's do not (a
+    * MOR delete), new-side the rows the FROM side's dropped sidecars
+    * deleted and the TO side's do not (a restore). A sidecar that a COW
+    * commit rewrote ([[Versioned]]'s retireDvRows) deletes the same
+    * rows on both sides and emits nothing. Scan cost stays ∝ changed
+    * data: dv-free pairs (the steady state) attach nothing; a dv pair
+    * costs the targeted files + sidecar reads. Compaction-after-deletes
+    * pairs (OPTIMIZE retiring dvs) stream correctly: the old side's raw
+    * rows are filtered by the OLD side's sidecars, so an
+    * already-deleted row never re-emits as a second delete.
     */
   def partitions(spark: SparkSession, dir: String, from: Long, to: Long,
       changes0: Seq[(Int, String, String, String)],
@@ -423,34 +427,39 @@ private[v2] object VersionedChanges {
             "to adopt the new schema")
         val aFiles = mA.entries.map(_._1).toSet
         val bFiles = mB.entries.map(_._1).toSet
-        def parts(m: Versioned.Manifest, other: Set[String], side: String) = {
-          val dvFilters = dvFiltersOf(m, m.dvs)
-          m.entries.filterNot(en => other(en._1)).map { case (f, _, era) =>
+        // one partition per entry of `m` that `pick` keeps, read LIVE
+        // under m's own sidecars; with `other` sidecars (of `mo`, the
+        // other side), only the rows those delete
+        def parts(m: Versioned.Manifest, side: String,
+            other: Seq[Versioned.DvRef] = Nil, mo: Versioned.Manifest = mA)(
+            pick: String => Boolean) = {
+          val own = dvFiltersOf(m, m.dvs)
+          val others = dvFiltersOf(mo, other)
+          m.entries.filter(e => pick(e._1)).map { case (f, _, era) =>
             VersionedChangePartition(s"$dir/data/$f", side, prev, v,
-              recipeFor(era), dvFilters(era))
+              recipeFor(era), own(era), others(era))
           }
         }
-        // sidecar rows ADDED at this pair: the MOR deletes — emit the
-        // deleted rows of each targeted live file as old-side events.
-        // One small driver read resolves which files the new sidecars
-        // target (they are deleted-keys-sized).
-        val aDvs = mA.dvs.toSet
-        val newDvs = mB.dvs.filterNot(aDvs)
-        val dvParts =
-          if (newDvs.isEmpty) Seq.empty
-          else {
-            val targets = Versioned.readDataFiles(spark, dir,
-                newDvs.map(_.file).distinct)
-              .select("__target").distinct().collect()
-              .map(_.getString(0)).toSet
-            val dvFilters = dvFiltersOf(mB, newDvs)
-            mB.entries.filter(e => targets(e._1)).map { case (f, _, era) =>
-              VersionedChangePartition(s"$dir/data/$f", "old", prev, v,
-                recipeFor(era), dvFilters(era), dvOnly = true)
-            }
-          }
-        (v, acc ++ parts(mA, bFiles, "old") ++ parts(mB, aFiles, "new")
-          ++ dvParts)
+        // the data files a sidecar set targets — one small driver read
+        // (sidecars are deleted-keys-sized); none for no sidecars
+        def targets(refs: Seq[Versioned.DvRef]): Set[String] =
+          if (refs.isEmpty) Set.empty
+          else Versioned.readDataFiles(spark, dir, refs.map(_.file).distinct)
+            .select("__target").distinct().collect()
+            .map(_.getString(0)).toSet
+        // the SIDECAR DIFF, by the rows it deletes: a file live on both
+        // sides emits old-side the rows the TO side's new sidecars delete
+        // (a MOR delete) and new-side the rows the FROM side's dropped
+        // sidecars deleted (a restore) — each net of its own side's
+        // sidecars, so a rewritten sidecar deleting the same rows (a COW
+        // commit's retireDvRows) emits nothing
+        val added = mB.dvs.filterNot(mA.dvs.toSet)
+        val dropped = mA.dvs.filterNot(mB.dvs.toSet)
+        val (addedT, droppedT) = (targets(added), targets(dropped))
+        (v, acc ++ parts(mA, "old")(f => !bFiles(f)) ++
+          parts(mB, "new")(f => !aFiles(f)) ++
+          parts(mA, "old", added, mB)(f => bFiles(f) && addedT(f)) ++
+          parts(mB, "new", dropped, mA)(f => aFiles(f) && droppedT(f)))
     })._2.toArray
   }
 }
@@ -459,14 +468,16 @@ private[v2] object VersionedChanges {
   * the era recipe: (logical name, physical name or "", logical DDL).
   * `dvFilters`: per key column, its recipe under THIS file's era plus
   * the sidecar paths whose rows (targeting this file) are EXCLUDED
-  * from the emission — the side's live-row semantics. `dvOnly` flips
-  * the filter (q318): emit ONLY the rows those sidecars delete — the
-  * old-side DELETE events of a MOR commit.
+  * from the emission — the side's live-row semantics.
+  * `otherDvFilters`, the same shape for the OTHER side's sidecars,
+  * non-empty only for a file live on both sides: emit ONLY the rows
+  * those delete (and this side's do not) — the pair's sidecar diff as
+  * row events (q318).
   */
 final case class VersionedChangePartition(file: String, side: String,
     fromV: Long, toV: Long, fields: Array[(String, String, String)],
     dvFilters: Array[((String, String, String), Array[String])] = Array.empty,
-    dvOnly: Boolean = false)
+    otherDvFilters: Array[((String, String, String), Array[String])] = Array.empty)
   extends InputPartition
 
 final class VersionedChangeReaderFactory(
@@ -477,7 +488,7 @@ final class VersionedChangeReaderFactory(
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] = {
     val p = partition.asInstanceOf[VersionedChangePartition]
     new VersionedFileReader(conf.value, p.file, p.fields, p.dvFilters,
-      p.dvOnly,
+      p.otherDvFilters,
       if (includeMeta) Array(UTF8String.fromString(p.side), p.fromV, p.toV)
       else Array.empty)
   }

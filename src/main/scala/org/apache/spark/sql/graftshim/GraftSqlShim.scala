@@ -22,6 +22,12 @@ object GraftSqlShim {
   /** Unwrap a (classic) Column to its Catalyst expression. */
   def expression(c: Column): Expression = ExpressionUtils.expression(c)
 
+  /** `schema` with every field, nested ones included, nullable — the
+    * schema a parquet relation reads a file under.
+    */
+  def asNullable(schema: org.apache.spark.sql.types.StructType)
+      : org.apache.spark.sql.types.StructType = schema.asNullable
+
   /** Wrap a logical plan as a DataFrame — how custom operators
     * ([[graft.plans.AsOfJoinPlan]]) enter the declarative pipeline; the
     * same `Dataset.ofRows` Spark's own DataFrame APIs call.

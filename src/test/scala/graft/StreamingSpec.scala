@@ -980,6 +980,43 @@ class StreamingSpec extends AnyFunSuite {
       s"MOR delete streams as a delete event: $dvFeed")
   }
 
+  test("graft-versioned batch change read diffs delete sidecars by the rows they delete") {
+    import graft.sources.Versioned
+    // pair (2, 3) of the batch change read, classified per key the way a
+    // consumer does, must equal changesBetween's answer for the pair
+    def assertPairMatches(dir: String): Unit = {
+      val feed = spark.read.format("graft-versioned").option("path", dir)
+        .option("changesFrom", "2").option("changesTo", "3").load()
+        .select("_change_side", "k", "v").as[(String, Long, String)].collect()
+      val olds = feed.filter(_._1 == "old").map(t => t._2 -> t._3).toMap
+      val news = feed.filter(_._1 == "new").map(t => t._2 -> t._3).toMap
+      val classified = (news.keySet -- olds.keySet).map("insert" -> _) ++
+        (olds.keySet -- news.keySet).map("delete" -> _) ++
+        (olds.keySet intersect news.keySet).filter(k => olds(k) != news(k))
+          .map("update" -> _)
+      val expected = Versioned.changesBetween(spark, dir, "k", 2L, 3L)
+        .select("change_type", "k").as[(String, Long)].collect().toSet
+      assert(classified == expected, s"feed ${feed.toSeq} vs changesBetween $expected")
+    }
+    val root = graft.engine.Staging.scratch("graft-stream-spec", "vdvdiff")
+    val rows = (1L to 8L).map(k => (k, s"a$k")).toDF("k", "v")
+    // a restore drops the MOR sidecar: its deleted rows come back as inserts
+    val restored = new java.io.File(root, "restore").getAbsolutePath
+    Versioned.create(rows, restored)                                        // v1
+    Versioned.deleteKeysMor(spark, restored, "k", Seq(2L, 7L).toDF("k"))     // v2
+    Versioned.restore(spark, restored, 1)                                   // v3
+    assertPairMatches(restored)
+    // a COW upsert rewrites the sidecar without its retired file's rows:
+    // the other file's deleted key stays deleted, no second delete
+    val rewritten = new java.io.File(root, "rewrite").getAbsolutePath
+    Versioned.create(rows.repartitionByRange(2, col("k")), rewritten)       // v1
+    Versioned.deleteKeysMor(spark, rewritten, "k", Seq(2L, 7L).toDF("k"))    // v2
+    Versioned.upsert(spark, rewritten, "k", Seq((3L, "CH")).toDF("k", "v"))  // v3
+    assert(Versioned.manifestOf(spark, rewritten, 3).dvs !=
+      Versioned.manifestOf(spark, rewritten, 2).dvs, "the sidecar is rewritten")
+    assertPairMatches(rewritten)
+  }
+
   test("graft-versioned source: maxVersionsPerTrigger bounds each micro-batch") {
     import graft.sources.Versioned
     import org.apache.spark.sql.streaming.Trigger

@@ -1291,4 +1291,40 @@ class VersionedSpec extends AnyFunSuite {
     assert(Versioned.read(spark, dir).count() == 2L)
     assert(fGone >= 0)
   }
+
+  test("schema evolution on a dotted column name: widen, rename and append read back by exact name") {
+    val dir = freshDir("dotted")
+    Versioned.create(Seq((1L, 10), (2L, 20)).toDF("k", "a.b"), dir)  // v1: a.b int
+    Versioned.widenColumn(spark, dir, "a.b", "bigint")                  // v2
+    Versioned.renameColumn(spark, dir, "a.b", "c.d")                    // v3
+    Versioned.append(Seq((3L, 3000000000L)).toDF("k", "c.d"), dir)      // v4, era 2
+    val now = Versioned.read(spark, dir)
+    assert(now.columns.toSeq == Seq("k", "c.d"))
+    assert(now.schema("c.d").dataType.typeName == "long")
+    assert(now.orderBy("k").as[(Long, Long)].collect().toSeq ==
+      Seq((1L, 10L), (2L, 20L), (3L, 3000000000L)))
+    assert(Versioned.readVersion(spark, dir, 2).schema("a.b").dataType.typeName == "long")
+    for (v <- 1L to 4L)
+      assert(Versioned.schemaOf(spark, dir, Versioned.manifestOf(spark, dir, v)) ==
+        Versioned.readVersion(spark, dir, v).schema, s"v$v")
+  }
+
+  test("purgeKeys leaves no file behind that no manifest references") {
+    val dir = freshDir("purgeorphans")
+    // 40 keys range-partitioned into 4 files; key 5's MOR delete gives
+    // the purge a sidecar to empty
+    Versioned.create((1L to 40L).map(k => (k, s"v$k")).toDF("k", "payload")
+      .repartitionByRange(4, col("k")), dir)                          // v1
+    Versioned.deleteKeysMor(spark, dir, "k", Seq(5L).toDF("k"))       // v2
+    Versioned.purgeKeys(spark, dir, "k", (1L to 10L).toDF("k"))
+    val onDisk = new java.io.File(dir, "data").listFiles().map(_.getName)
+      .filter(n => !n.startsWith(".") && !n.startsWith("_")).toSet
+    val referenced = Versioned.versions(spark, dir).flatMap { v =>
+      val m = Versioned.manifestOf(spark, dir, v)
+      m.entries.map(_._1) ++ m.dvs.map(_.file)
+    }.toSet
+    assert(onDisk == referenced, s"on disk: $onDisk, referenced: $referenced")
+    assert(Versioned.manifestOf(spark, dir, 1).entries.size == 3)
+    assert(Versioned.read(spark, dir).count() == 30L)
+  }
 }
